@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.conf import session_cache
 from w_userflow_featurestore_spark.functions import (
     epoch_ms, exact_avg, exact_sum, fround,
 )
@@ -63,21 +64,23 @@ _REQUIRED_CONF = {
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
 }
 
-#: sessions already configured — _ensure_conf runs inside EVERY queries()
-#: callable, and 8 conf.set py4j roundtrips per construction add up over
-#: a 156-query bench (the conf is session-sticky; one pass suffices).
-_CONF_APPLIED: set[int] = set()
+#: session_cache flag for sessions already configured — _ensure_conf runs
+#: inside EVERY queries() callable, and 8 conf.set py4j roundtrips per
+#: construction add up over a 156-query bench (the conf is
+#: session-sticky; one pass suffices).
+_CONF_APPLIED = "entry.conf_applied"
 
 
 def _ensure_conf(spark: SparkSession) -> SparkSession:
-    if id(spark) in _CONF_APPLIED:
+    memo = session_cache(spark)
+    if memo.get(_CONF_APPLIED):
         return spark
     for k, v in _REQUIRED_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:   # noqa: BLE001 — a locked conf: keep going
             pass
-    _CONF_APPLIED.add(id(spark))
+    memo[_CONF_APPLIED] = True
     return spark
 
 

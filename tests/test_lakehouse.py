@@ -423,30 +423,35 @@ def test_rewrite_changes_content_atomically_and_pins_old_readers(
     table.append(_df(spark, [(1, D1, "a"), (2, D1, "b")]))
     table.append(_df(spark, [(1, D1, "c"), (3, D2, "d")]))
     pre = table.latest_snapshot_id()
-    rolled = (table.read().groupBy("k", "datetime")
+    rolled = (table.read(pre).groupBy("k", "datetime")
               .agg(F.count(F.lit(1)).cast("string").alias("v")))
-    table.rewrite(rolled)
+    table.rewrite(rolled, pre)
     assert table.snapshots()[-1].operation == "replace"
     assert rows(table.read(), "k", "v") == [
         (1, "2"), (2, "1"), (3, "1")]            # rows CHANGED (rolled up)
     assert table.read().count() == 3
     assert table.read(pre).count() == 4          # old snapshot untouched
-    # rewrite validates its base: a commit that lands in between fails
-    # the rewrite instead of losing that commit's rows
-    import pytest as _pt
-    from w_userflow_featurestore_spark.sources.lakehouse import (
-        ConcurrentCommitError,
-    )
-    stale_base = table.latest_snapshot_id()
-    table.append(_df(spark, [(9, D2, "z")]))
-    staged = table.read().limit(1)
-    orig = table.latest_snapshot_id
-    table.latest_snapshot_id = lambda: stale_base   # stale derivation
-    try:
-        with _pt.raises(ConcurrentCommitError):
-            table.rewrite(staged)
-    finally:
-        table.latest_snapshot_id = orig
+
+
+def test_rewrite_validates_the_snapshot_its_input_was_read_from(
+        spark, table):
+    """A rival commit landing between the read a rewrite derives from
+    and the rewrite itself must fail the rewrite — validating against
+    the table as it is at rewrite time would commit the stale frame
+    and silently drop the rival's rows."""
+    from w_userflow_featurestore_spark.sources import ConcurrentCommitError
+    table.append(_df(spark, [(1, D1, "a")]))
+    base = table.latest_snapshot_id()
+    df = table.read(base)
+    table.append(_df(spark, [(2, D2, "b")]))        # the rival
+    with pytest.raises(ConcurrentCommitError):
+        table.rewrite(df, base)
+    assert [s.snapshot_id for s in table.snapshots()] == [1, 2]
+    assert rows(table.read(), "k") == [(1,), (2,)]
+    # re-derived from the current snapshot, the rewrite commits
+    base = table.latest_snapshot_id()
+    assert table.rewrite(table.read(base), base) == 3
+    assert rows(table.read(), "k") == [(1,), (2,)]
 
 
 def test_run_daily_features_log_format_matches_parquet(spark, tmp_path):
@@ -1711,3 +1716,239 @@ def test_concurrent_writers_disjoint_keys_linearize(spark, tmp_path):
     assert all(s.parent_id == (s.snapshot_id - 1 if s.snapshot_id > 1
                                else None)
                for s in snaps), "forked or re-parented chain"
+
+
+# ------------------------------------------------- commit publish safety
+#
+# Every LogTable commit goes through sources.lakehouse._publish_exclusive:
+# tmp write + fsync, then one os.link onto the sequence name (O_EXCL
+# create on filesystems without hard links). These tests drive it
+# through _commit with empty file lists — no Spark job runs.
+
+
+def _bare_table(spark, tmp_path) -> LogTable:
+    return LogTable.create(spark, str(tmp_path / "commits"))
+
+
+def _log_names(t: LogTable) -> list[str]:
+    return sorted(os.listdir(os.path.join(t.path, "_txn_log")))
+
+
+def test_commit_readers_never_see_partial_commits(spark, tmp_path):
+    """Readers calling snapshots() while writers race a 30-commit chain
+    must never parse a half-written commit file: a bare
+    open('x') + json.dump exposes the create-to-write window."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from w_userflow_featurestore_spark.sources import ConcurrentCommitError
+
+    t = _bare_table(spark, tmp_path)
+    stop = threading.Event()
+    reader_errors: list[Exception] = []
+
+    def reader():
+        while not stop.is_set():
+            try:
+                for s in t.snapshots():
+                    assert s.operation == "append"
+            except Exception as exc:  # noqa: BLE001 — the assertion
+                reader_errors.append(exc)
+                return
+
+    def writer():
+        while (t.latest_snapshot_id() or 0) < 30:
+            try:
+                t._commit("append", [], [])
+            except ConcurrentCommitError:
+                continue
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)           # interleave threads finely
+    try:
+        with ThreadPoolExecutor(max_workers=7) as ex:
+            readers = [ex.submit(reader) for _ in range(3)]
+            writers = [ex.submit(writer) for _ in range(4)]
+            try:
+                for w in writers:
+                    w.result(timeout=120)
+            finally:
+                stop.set()
+            for r in readers:
+                r.result(timeout=60)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not reader_errors, reader_errors[:1]
+    ids = [s.snapshot_id for s in t.snapshots()]
+    assert ids == list(range(1, len(ids) + 1)) and len(ids) >= 30
+    assert not [n for n in _log_names(t) if n.endswith(".tmp")]
+
+
+def test_commit_crash_between_tmp_write_and_link(spark, tmp_path,
+                                                 monkeypatch):
+    """A writer dying between its tmp write and the link publishes
+    nothing: readers still see only complete commits, the retry
+    commits cleanly, and vacuum reclaims an orphaned tmp."""
+    t = _bare_table(spark, tmp_path)
+    assert t._commit("append", [], []) == 1
+
+    def dying_link(src, dst, **kw):
+        raise KeyboardInterrupt("simulated crash before publish")
+
+    monkeypatch.setattr(os, "link", dying_link)
+    with pytest.raises(KeyboardInterrupt):
+        t._commit("append", [], [])
+    monkeypatch.undo()
+    assert t.latest_snapshot_id() == 1
+    # an in-process raise still runs the tmp cleanup; a hard kill does
+    # not — plant the orphan a hard kill leaves: torn bytes under a
+    # name no reader matches
+    assert not [n for n in _log_names(t) if n.endswith(".tmp")]
+    with open(os.path.join(t.path, "_txn_log",
+                           f"{2:020d}.json.dead.tmp"), "w") as fh:
+        fh.write('{"snapshot_id"')
+    assert t.latest_snapshot_id() == 1
+    assert t._commit("append", [], []) == 2
+    assert t.vacuum(retention_seconds=0) == 1
+    assert _log_names(t) == [f"{1:020d}.json", f"{2:020d}.json",
+                             "_meta.json"]
+
+
+def test_vacuum_sweeps_only_aged_txn_log_tmp_files(spark, tmp_path):
+    """Orphaned publish tmps older than the retention window are
+    deleted; younger ones may be a commit about to link and stay."""
+    import time as _time
+    t = _bare_table(spark, tmp_path)
+    t._commit("append", [], [])
+    log = os.path.join(t.path, "_txn_log")
+    old, young = (os.path.join(log, f"{2:020d}.json.{tag}.tmp")
+                  for tag in ("old", "young"))
+    for p in (old, young):
+        with open(p, "w") as fh:
+            fh.write("{")
+    aged = _time.time() - 7200
+    os.utime(old, (aged, aged))
+    assert t.vacuum(retention_seconds=3600) == 1
+    assert not os.path.exists(old) and os.path.exists(young)
+    assert t.latest_snapshot_id() == 1
+
+
+def test_commit_falls_back_when_hard_links_unsupported(spark, tmp_path,
+                                                       monkeypatch):
+    """Without hard links the publish degrades to O_CREAT|O_EXCL: the
+    exclusive-create race still decides the winner, no tmp leaks, and
+    only link-capability errnos take the fallback — an unrelated
+    OSError surfaces and publishes nothing."""
+    import errno
+    import json as _json
+
+    from w_userflow_featurestore_spark.sources.lakehouse import (
+        _publish_exclusive,
+    )
+
+    t = _bare_table(spark, tmp_path)
+
+    def no_links(src, dst, **kw):
+        raise OSError(errno.EPERM, "hard links not supported")
+
+    monkeypatch.setattr(os, "link", no_links)
+    assert t._commit("append", [], []) == 1
+    assert [s.snapshot_id for s in t.snapshots()] == [1]
+    assert not [n for n in _log_names(t) if n.endswith(".tmp")]
+    first = os.path.join(t.path, "_txn_log", f"{1:020d}.json")
+    with pytest.raises(FileExistsError):      # the lost race
+        _publish_exclusive(first, {"snapshot_id": 1, "rival": True})
+    with open(first) as fh:
+        assert "rival" not in _json.load(fh)
+    assert t._commit("append", [], []) == 2
+
+    def disk_full(src, dst, **kw):
+        raise OSError(errno.ENOSPC, "no space")
+
+    monkeypatch.setattr(os, "link", disk_full)
+    with pytest.raises(OSError, match="no space"):
+        t._commit("append", [], [])
+    assert t.latest_snapshot_id() == 2
+    assert not [n for n in _log_names(t) if n.endswith(".tmp")]
+
+
+def test_commit_enosys_link_failure_takes_the_fallback_path(
+        spark, tmp_path, monkeypatch):
+    """Several FUSE/network filesystems report an unimplemented os.link
+    as ENOSYS; that errno must take the fallback path too."""
+    import errno
+    t = _bare_table(spark, tmp_path)
+
+    def no_syscall(src, dst, **kw):
+        raise OSError(errno.ENOSYS, "function not implemented")
+
+    monkeypatch.setattr(os, "link", no_syscall)
+    assert t._commit("append", [], []) == 1
+    assert t._commit("append", [], []) == 2
+    assert [s.snapshot_id for s in t.snapshots()] == [1, 2]
+
+
+def test_commit_fallback_write_failure_retracts_the_published_name(
+        spark, tmp_path, monkeypatch):
+    """On the no-hardlink path the O_EXCL create publishes the name
+    before the body is written; a write failure must retract the torn
+    file, or every later read fails to parse and every retry
+    misreports a lost race."""
+    import errno
+    import json as _json
+    t = _bare_table(spark, tmp_path)
+
+    def no_links(src, dst, **kw):
+        raise OSError(errno.EPERM, "hard links not supported")
+
+    monkeypatch.setattr(os, "link", no_links)
+    assert t._commit("append", [], []) == 1
+    real_dump = _json.dump
+    calls = {"n": 0}
+
+    def dump_fails_on_target(obj, fh, **kw):
+        # dump #1 writes the private tmp, dump #2 the published target
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise OSError(errno.ENOSPC, "no space left on device")
+        return real_dump(obj, fh, **kw)
+
+    monkeypatch.setattr(_json, "dump", dump_fails_on_target)
+    with pytest.raises(OSError, match="no space"):
+        t._commit("append", [], [])
+    monkeypatch.setattr(_json, "dump", real_dump)
+    assert not os.path.exists(os.path.join(t.path, "_txn_log",
+                                           f"{2:020d}.json"))
+    assert [s.snapshot_id for s in t.snapshots()] == [1]
+    assert t._commit("append", [], []) == 2
+
+
+def test_rewrite_cas_exactly_one_winner_under_real_threads(spark,
+                                                           tmp_path):
+    """Eight threads race a rewrite commit from the same base through
+    one barrier: exactly one wins, every loser gets
+    ConcurrentCommitError, and the log holds the winner's commit."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from w_userflow_featurestore_spark.sources import ConcurrentCommitError
+
+    t = _bare_table(spark, tmp_path)
+    t._commit("append", ["base"], [])
+    barrier = threading.Barrier(8)
+
+    def worker(i):
+        barrier.wait()
+        try:
+            t._commit("replace", [f"w{i}"], ["base"], expected_base=1)
+            return i
+        except ConcurrentCommitError:
+            return None
+
+    with ThreadPoolExecutor(max_workers=8) as ex:
+        outcomes = list(ex.map(worker, range(8)))
+    wins = [i for i in outcomes if i is not None]
+    assert len(wins) == 1
+    assert [s.snapshot_id for s in t.snapshots()] == [1, 2]
+    assert t.files() == [f"w{wins[0]}"]

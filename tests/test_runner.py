@@ -207,10 +207,9 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
     """The leakage-split ledger's persistence loop: three batches ingest
     through run_split_ledger_update (persist -> reload -> extend), and
     after every commit the ledger equals component_ledger rebuilt from
-    scratch on everything ingested so far — state never drifts. The
-    _current pointer moves only after each write lands (versions 1..3),
-    so a crashed run would leave the prior version live."""
-    import json
+    scratch on everything ingested so far — state never drifts. Each
+    version is one LogTable snapshot (ids 1..3) that lands only after
+    its write, so a crashed run would leave the prior version live."""
     import os
     from w_userflow_featurestore_spark.operators.sampling import (
         component_ledger,
@@ -218,6 +217,7 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
     from w_userflow_featurestore_spark.runner import (
         read_split_ledger, run_split_ledger_update,
     )
+    from w_userflow_featurestore_spark.sources import LogTable
     ledger_dir = str(tmp_path / "split_ledger")
     os.makedirs(ledger_dir)
     # batch i brings docs 10i..10i+9; pairs touch earlier batches so
@@ -238,10 +238,10 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
         assert res.mode == ("initial" if i == 1 else "incremental")
         seen_docs.extend(ids)
         seen_pairs.extend(prs)
-        # on-disk protocol: commit i is ONE O_EXCL sequence file
-        with open(os.path.join(ledger_dir, "_ptr",
-                               f"{i:020d}.json")) as fh:
-            assert json.load(fh)["version"] == i
+        # on-disk protocol: version i is the ledger table's snapshot i
+        assert [s.snapshot_id for s in
+                LogTable(spark, ledger_dir).snapshots()] == \
+            list(range(1, i + 1))
         got = {tuple(r) for r in read_split_ledger(spark, ledger_dir)
                .collect()}
         all_docs = spark.createDataFrame([(d,) for d in seen_docs],
@@ -257,6 +257,13 @@ def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):
     final = dict(got)
     assert {final[d] for d in (0, 3, 12)} == {0}
     assert {final[d] for d in (4, 7, 10, 11, 20)} == {4}
+    # retention is the table's own: expire the history, reclaim the
+    # superseded versions' files, and the current version reads the same
+    lt = LogTable(spark, ledger_dir)
+    assert lt.expire_snapshots(keep_last=1) == 2
+    assert lt.vacuum(retention_seconds=0) >= 2
+    assert {tuple(r) for r in read_split_ledger(spark, ledger_dir)
+            .collect()} == got
 
 
 def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
@@ -266,7 +273,6 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
     ledger equals shingle_ledger rebuilt from everything ingested so
     far, and each score equals incremental_novelty against an inline
     ledger of the prior batches — persistence never drifts state."""
-    import json
     import os
     import pytest as _pt
     from w_userflow_featurestore_spark.operators.dedup import (
@@ -276,6 +282,7 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
         read_novelty_ledger, run_novelty_ledger_update,
         score_batch_novelty,
     )
+    from w_userflow_featurestore_spark.sources import LogTable
     ledger_dir = str(tmp_path / "novelty_ledger")
     os.makedirs(ledger_dir)
     with _pt.raises(FileNotFoundError):
@@ -303,9 +310,9 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
         assert res.version == i
         assert res.mode == ("initial" if i == 1 else "incremental")
         seen.extend(ids)
-        with open(os.path.join(ledger_dir, "_ptr",
-                               f"{i:020d}.json")) as fh:
-            assert json.load(fh)["version"] == i
+        assert [s.snapshot_id for s in
+                LogTable(spark, ledger_dir).snapshots()] == \
+            list(range(1, i + 1))
         got_l = {tuple(r) for r in
                  read_novelty_ledger(spark, ledger_dir).collect()}
         want_l = {tuple(r) for r in shingle_ledger(mk(seen)).collect()}
@@ -318,463 +325,60 @@ def test_novelty_ledger_score_then_ingest_three_batches(spark, tmp_path):
 
 
 def test_ledger_pointer_cas_rejects_the_losing_concurrent_writer(
-        spark, tmp_path):
-    """Round-9 ADVICE: two concurrent ingests that both read base N
-    must NOT both land — the loser's commit would silently erase the
-    winner's counts from the additive ledger. The CAS raises
-    ConcurrentLedgerError for the writer whose read went stale, and
-    the committed ledger still holds exactly the winner's history."""
+        spark, tmp_path, monkeypatch):
+    """Two concurrent ingests that both read version N must NOT both
+    land — the loser's commit would silently erase the winner's counts
+    from the additive ledger. A rival commits between this run's read
+    of its base and its rewrite; the stale run raises
+    ConcurrentCommitError, the committed ledger holds exactly the
+    winner's history, and a re-run commits the next version."""
     import os
     import pytest as _pt
+    from w_userflow_featurestore_spark.operators import dedup
     from w_userflow_featurestore_spark.operators.dedup import (
         shingle_ledger,
     )
     from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, InMemoryLedgerPointerStore,
         read_novelty_ledger, run_novelty_ledger_update,
     )
-
-    class FrozenCurrentStore:
-        """Wraps a real store but serves a frozen current entry —
-        models a writer whose base read happened before a rival
-        committed."""
-
-        def __init__(self, inner):
-            self.inner, self.frozen = inner, None
-
-        def current_entry(self, d):
-            return dict(self.frozen) if self.frozen is not None \
-                else self.inner.current_entry(d)
-
-        def current(self, d):
-            e = self.current_entry(d)
-            return None if e is None else e["version"]
-
-        def commit(self, d, v, base, entry=None):
-            self.inner.commit(d, v, base, entry)
-
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
+    )
     ledger_dir = str(tmp_path / "novelty_cas")
     os.makedirs(ledger_dir)
-    inner = InMemoryLedgerPointerStore()
-    store = FrozenCurrentStore(inner)
     texts = {1: "a b c d e", 2: "f g h i j", 3: "k l m n o"}
     mk = lambda ids: spark.createDataFrame(
         [(d, texts[d]) for d in ids], "doc_id long, text string")
-    assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([1]), pointer_store=store).version == 1
-    store.frozen = inner.current_entry(ledger_dir)  # rival A's stale base
-    # rival B commits v2 first (it read base 1 too — via the freeze)
-    assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([2]), pointer_store=store).version == 2
-    # rival A now merges against v1 and tries to commit v2: CAS loses
-    with _pt.raises(ConcurrentLedgerError):
-        run_novelty_ledger_update(spark, ledger_dir, mk([3]),
-                                  pointer_store=store)
+    assert run_novelty_ledger_update(spark, ledger_dir, mk([1])).version == 1
+
+    real_merge = dedup.merge_shingle_ledger
+    rival: dict = {}
+
+    def merge_then_rival_commits(prev, batch):
+        # runs after this ingest read version 1: the rival (batch {2})
+        # reads version 1 too and commits version 2 first
+        if "version" not in rival:
+            rival["version"] = None      # the rival's own merge skips this
+            rival["version"] = run_novelty_ledger_update(
+                spark, ledger_dir, mk([2])).version
+        return real_merge(prev, batch)
+
+    monkeypatch.setattr(dedup, "merge_shingle_ledger",
+                        merge_then_rival_commits)
+    with _pt.raises(ConcurrentCommitError):
+        run_novelty_ledger_update(spark, ledger_dir, mk([3]))
+    monkeypatch.setattr(dedup, "merge_shingle_ledger", real_merge)
+    assert rival["version"] == 2
     # the winner's history is intact: ledger == batches {1} + {2}
-    store.frozen = None
-    got = {tuple(r) for r in
-           read_novelty_ledger(spark, ledger_dir,
-                               pointer_store=store).collect()}
-    want = {tuple(r) for r in shingle_ledger(mk([1, 2])).collect()}
-    assert got == want
-    # and the re-run against the fresh base succeeds as v3
-    assert run_novelty_ledger_update(
-        spark, ledger_dir, mk([3]), pointer_store=store).version == 3
-
-
-def test_ledger_pointer_file_store_cas_and_legacy_upgrade(tmp_path):
-    """The default file backend: O_EXCL sequence files ARE the CAS
-    (dense versions -> the filename race), and a pre-round-10 ledger
-    whose pointer is the legacy single _current file is read in place
-    and upgraded by its next commit."""
-    import json
-    import os
-    import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    assert store.current(d) is None
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 2, 1)           # stale base: nothing committed yet
-    store.commit(d, 1, None)
-    assert store.current(d) == 1
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 1, None)        # losing the filename race
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 3, 2)           # pre-write check: base moved
-    store.commit(d, 2, 1)
-    assert store.current(d) == 2
-    # legacy layout: _current only, no _ptr sequence files
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(legacy)
-    with open(os.path.join(legacy, "_current"), "w") as fh:
-        json.dump({"version": 5}, fh)
-    assert store.current(legacy) == 5
-    store.commit(legacy, 6, 5)          # upgrade in place
-    assert store.current(legacy) == 6
-    assert os.path.exists(os.path.join(legacy, "_ptr",
-                                       f"{6:020d}.json"))
-
-
-def test_split_ledger_protocol_holds_on_a_swapped_pointer_backend(
-        spark, tmp_path):
-    """Round-9 verdict #4 'done' criterion: the split-ledger protocol
-    runs unchanged with the pointer routed through a non-filesystem
-    backend (the catalog-backed object-store deployment shape) — no
-    _current/_ptr file ever touches disk."""
-    import os
-    from w_userflow_featurestore_spark.operators.sampling import (
-        component_ledger,
-    )
-    from w_userflow_featurestore_spark.runner import (
-        InMemoryLedgerPointerStore, read_split_ledger,
-        run_split_ledger_update,
-    )
-    ledger_dir = str(tmp_path / "split_mem")
-    os.makedirs(ledger_dir)
-    store = InMemoryLedgerPointerStore()
-    mk_docs = lambda ids: spark.createDataFrame(
-        [(d,) for d in ids], "doc_id long")
-    mk_pairs = lambda prs: spark.createDataFrame(
-        prs, "doc_a long, doc_b long")
-    batches = [([0, 1, 2], [(0, 1)]),
-               ([3, 4], [(1, 3)]),
-               ([5], [])]
-    seen_docs: list[int] = []
-    seen_pairs: list[tuple[int, int]] = []
-    for i, (ids, prs) in enumerate(batches, start=1):
-        res = run_split_ledger_update(spark, ledger_dir, mk_docs(ids),
-                                      mk_pairs(prs),
-                                      pointer_store=store)
-        assert res.version == i
-        seen_docs.extend(ids)
-        seen_pairs.extend(prs)
-        got = {tuple(r) for r in
-               read_split_ledger(spark, ledger_dir,
-                                 pointer_store=store).collect()}
-        want = {tuple(r) for r in
-                component_ledger(mk_docs(seen_docs),
-                                 mk_pairs(seen_pairs)).collect()}
-        assert got == want
-    # the pointer never touched the filesystem
-    assert not os.path.exists(os.path.join(ledger_dir, "_ptr"))
-    assert not os.path.exists(os.path.join(ledger_dir, "_current"))
-
-
-def test_file_pointer_store_exactly_one_winner_under_real_threads(
-        tmp_path):
-    """The O_EXCL filename race IS the CAS: 8 threads that all read
-    base 1 race to commit v2 through one barrier — exactly one wins,
-    every loser gets ConcurrentLedgerError, and the committed entry is
-    the winner's (its staged dir name survives verbatim)."""
-    import json
-    import os
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    store.commit(d, 1, None, {"dir": "v1-base"})
-    barrier = threading.Barrier(8)
-
-    def worker(i):
-        barrier.wait()
-        try:
-            store.commit(d, 2, 1, {"dir": f"v2-w{i}"})
-            return ("win", i)
-        except ConcurrentLedgerError:
-            return ("lose", i)
-
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        outcomes = list(ex.map(worker, range(8)))
-    wins = [i for o, i in outcomes if o == "win"]
-    assert len(wins) == 1
-    assert len([1 for o, _ in outcomes if o == "lose"]) == 7
-    entry = store.current_entry(d)
-    assert entry["version"] == 2
-    assert entry["dir"] == f"v2-w{wins[0]}"
-    # and the pointer dir holds exactly the two committed sequence files
-    assert sorted(os.listdir(os.path.join(d, "_ptr"))) == [
-        f"{1:020d}.json", f"{2:020d}.json"]
-    with open(os.path.join(d, "_ptr", f"{2:020d}.json")) as fh:
-        assert json.load(fh)["dir"] == f"v2-w{wins[0]}"
-
-
-def test_vacuum_ledger_reclaims_orphans_keeps_recent_versions(
-        spark, tmp_path):
-    """vacuum_ledger removes staged-but-never-committed directories
-    (crash/lost-race orphans) and superseded versions beyond
-    keep_last, never the retained versions or the pointer history —
-    and the ledger reads identically afterwards."""
-    import os
-    import pytest as _pt
-    from w_userflow_featurestore_spark.operators.dedup import (
-        shingle_ledger,
-    )
-    from w_userflow_featurestore_spark.runner import (
-        read_novelty_ledger, run_novelty_ledger_update, vacuum_ledger,
-    )
-    ledger_dir = str(tmp_path / "nl")
-    os.makedirs(ledger_dir)
-    texts = {1: "a b c d e", 2: "f g h i j", 3: "k l m n o"}
-    mk = lambda ids: spark.createDataFrame(
-        [(d, texts[d]) for d in ids], "doc_id long, text string")
-    for i, ids in enumerate(([1], [2], [3]), start=1):
-        assert run_novelty_ledger_update(
-            spark, ledger_dir, mk(ids)).version == i
-    # plant a crash orphan: staged dir no pointer entry names
-    os.makedirs(os.path.join(ledger_dir, "v4-deadbeef"))
-    # default retention (24 h) protects only UNNAMED young dirs — the
-    # orphan is indistinguishable from a concurrent writer's live
-    # staging dir (round-10 ADVICE: deleting that dir would let the
-    # writer publish a pointer to a vanished directory). v1's dir is
-    # NAMED by pointer history — provably committed, just superseded —
-    # so the keep_last contract reclaims it immediately, no 24h wait.
-    removed = vacuum_ledger(ledger_dir, keep_last=2)
-    assert any(n.startswith("v1-") for n in removed)
-    assert len(removed) == 1               # the young orphan survived
-    # retention 0 = the documented "no concurrent writers" mode
-    removed = vacuum_ledger(ledger_dir, keep_last=2,
-                            retention_seconds=0)
-    assert removed == ["v4-deadbeef"]
-    live = [n for n in os.listdir(ledger_dir) if n.startswith("v")]
-    assert len(live) == 2
-    # pointer history intact (still 3 sequence files), reads unchanged
-    assert len(os.listdir(os.path.join(ledger_dir, "_ptr"))) == 3
+    assert [s.snapshot_id for s in
+            LogTable(spark, ledger_dir).snapshots()] == [1, 2]
     got = {tuple(r) for r in
            read_novelty_ledger(spark, ledger_dir).collect()}
-    want = {tuple(r) for r in shingle_ledger(mk([1, 2, 3])).collect()}
+    want = {tuple(r) for r in shingle_ledger(mk([1, 2])).collect()}
     assert got == want
-    with _pt.raises(ValueError):
-        vacuum_ledger(ledger_dir, keep_last=0)
-    # an empty (uncommitted) ledger dir refuses to guess
-    empty = str(tmp_path / "empty")
-    os.makedirs(empty)
-    os.makedirs(os.path.join(empty, "v1-aaaa"))
-    assert vacuum_ledger(empty) == []
-
-
-def test_file_pointer_store_readers_never_see_partial_commits(tmp_path):
-    """The write-then-link publish contract: concurrent readers
-    hammering current_entry() while writers race a 30-version CAS
-    chain must never observe a half-written commit file (the bare
-    open('x')+dump implementation failed exactly here under
-    full-suite load: a reader parsed a created-but-not-yet-written
-    sequence file into JSONDecodeError)."""
-    import os
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    stop = threading.Event()
-    reader_errors: list[Exception] = []
-
-    def reader():
-        while not stop.is_set():
-            try:
-                e = store.current_entry(d)
-                assert e is None or "version" in e
-            except Exception as exc:  # noqa: BLE001 — the assertion
-                reader_errors.append(exc)
-                return
-
-    def writer():
-        # race the chain forward with CAS retries until v30 commits
-        while not stop.is_set():
-            cur = store.current(d)
-            if cur is not None and cur >= 30:
-                return
-            base = cur
-            try:
-                store.commit(d, (base or 0) + 1, base,
-                             {"dir": f"v{(base or 0) + 1}-x"})
-            except ConcurrentLedgerError:
-                continue
-
-    with ThreadPoolExecutor(max_workers=7) as ex:
-        readers = [ex.submit(reader) for _ in range(3)]
-        writers = [ex.submit(writer) for _ in range(4)]
-        for w in writers:
-            w.result(timeout=60)
-        stop.set()
-        for r in readers:
-            r.result(timeout=60)
-    assert not reader_errors, reader_errors[:1]
-    assert store.current(d) >= 30
-    # every published sequence file parses (no torn commits on disk)
-    import json
-    for name in os.listdir(os.path.join(d, "_ptr")):
-        with open(os.path.join(d, "_ptr", name)) as fh:
-            assert "version" in json.load(fh)
-
-
-def test_file_pointer_store_crash_between_write_and_link(tmp_path,
-                                                         monkeypatch):
-    """Crash injection (round-10 verdict #4): a writer dying between
-    its private tmp write and the atomic link publish must leave NO
-    visible commit — readers still see only complete commits, a rerun
-    of the same commit succeeds cleanly, and vacuum_ledger's
-    _ptr/*.tmp sweep reclaims the orphaned tmp."""
-    import os
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore, vacuum_ledger,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-    store.commit(d, 1, None, {"dir": "v1-base"})
-    os.makedirs(os.path.join(d, "v1-base"))
-
-    real_link = os.link
-
-    def dying_link(src, dst, **kw):
-        raise KeyboardInterrupt("simulated crash before publish")
-
-    monkeypatch.setattr(os, "link", dying_link)
-    try:
-        store.commit(d, 2, 1, {"dir": "v2-crashed"})
-    except KeyboardInterrupt:
-        pass
-    monkeypatch.setattr(os, "link", real_link)
-    # the crash is invisible: v2 never published, reads are complete
-    assert store.current(d) == 1
-    ptr = os.path.join(d, "_ptr")
-    # an in-process raise still runs the finally-unlink; a HARD kill
-    # (SIGKILL / power loss) does not — plant the orphan exactly as a
-    # hard kill between write and link leaves it: torn content under a
-    # name no reader's {version:020d}.json pattern matches
-    assert [n for n in os.listdir(ptr) if n.endswith(".tmp")] == []
-    with open(os.path.join(ptr, f"{2:020d}.json.dead.tmp"), "w") as fh:
-        fh.write('{"version"')
-    # readers never parse tmp files
-    assert store.current_entry(d)["version"] == 1
-    # the rerun commits cleanly over the orphan
-    store.commit(d, 2, 1, {"dir": "v2-retry"})
-    assert store.current_entry(d)["dir"] == "v2-retry"
-    # vacuum reclaims the orphaned tmp (age guard lifted), never the
-    # published sequence files
-    removed = vacuum_ledger(d, keep_last=2, retention_seconds=0)
-    assert any(n.endswith(".tmp") for n in removed)
-    left = os.listdir(ptr)
-    assert sorted(left) == [f"{1:020d}.json", f"{2:020d}.json"]
-
-
-def test_file_pointer_store_falls_back_when_hard_links_unsupported(
-        tmp_path, monkeypatch):
-    """Filesystems without hard links (some NFS/FUSE/object-store
-    mounts) must degrade to bare O_CREAT|O_EXCL — the CAS contract
-    holds (winner commits, loser gets ConcurrentLedgerError), only
-    the torn-read guarantee narrows (round-10 ADVICE)."""
-    import errno
-    import os
-    import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        ConcurrentLedgerError, FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-
-    def no_links(src, dst, **kw):
-        raise OSError(errno.EPERM, "hard links not supported")
-
-    monkeypatch.setattr(os, "link", no_links)
-    store.commit(d, 1, None, {"dir": "v1-a"})
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
-    # no tmp leaks on the fallback path either
-    assert [n for n in os.listdir(os.path.join(d, "_ptr"))
-            if n.endswith(".tmp")] == []
-    # the filename race still loses cleanly through the fallback
-    with _pt.raises(ConcurrentLedgerError):
-        store.commit(d, 1, None, {"dir": "v1-b"})
-    store.commit(d, 2, 1, {"dir": "v2-a"})
-    assert store.current(d) == 2
-    # an UNRELATED OSError still surfaces (only link-capability
-    # errnos trigger the fallback)
-
-    def disk_full(src, dst, **kw):
-        raise OSError(errno.ENOSPC, "no space")
-
-    monkeypatch.setattr(os, "link", disk_full)
-    with _pt.raises(OSError):
-        store.commit(d, 3, 2, {"dir": "v3-a"})
-
-
-def test_enosys_link_failure_takes_the_fallback_path(
-        tmp_path, monkeypatch):
-    """Round-11 ADVICE #2: several FUSE/network filesystems raise
-    ENOSYS (not EPERM/EOPNOTSUPP) for an unimplemented os.link — that
-    errno must classify as link-unsupported and degrade to the
-    O_CREAT|O_EXCL path instead of dying with an unclassified
-    OSError."""
-    import errno
-    import os
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-
-    def no_syscall(src, dst, **kw):
-        raise OSError(errno.ENOSYS, "function not implemented")
-
-    monkeypatch.setattr(os, "link", no_syscall)
-    store.commit(d, 1, None, {"dir": "v1-a"})
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
-
-
-def test_fallback_write_failure_retracts_the_published_name(
-        tmp_path, monkeypatch):
-    """On the no-hardlink fallback path the O_EXCL create PUBLISHES the
-    sequence name before the body is written — a write failure
-    (ENOSPC/EIO) must retract the torn file, or every subsequent read
-    json-decode-crashes and every retry misreports a lost CAS race."""
-    import errno
-    import json
-    import os
-    import pytest as _pt
-    from w_userflow_featurestore_spark.runner import (
-        FileLedgerPointerStore,
-    )
-    d = str(tmp_path / "led")
-    os.makedirs(d)
-    store = FileLedgerPointerStore()
-
-    def no_links(src, dst, **kw):
-        raise OSError(errno.EPERM, "hard links not supported")
-
-    monkeypatch.setattr(os, "link", no_links)
-    store.commit(d, 1, None, {"dir": "v1-a"})
-    real_dump = json.dump
-    state = {"n": 0}
-
-    def dump_fails_on_target(obj, fh, **kw):
-        # per commit: dump #1 writes the private tmp, dump #2 the
-        # O_EXCL-published target — fail the published one
-        state["n"] += 1
-        if state["n"] == 2:
-            raise OSError(errno.ENOSPC, "no space left on device")
-        return real_dump(obj, fh, **kw)
-
-    monkeypatch.setattr(json, "dump", dump_fails_on_target)
-    with _pt.raises(OSError, match="no space"):
-        store.commit(d, 2, 1, {"dir": "v2-torn"})
-    monkeypatch.setattr(json, "dump", real_dump)
-    # the torn publish was retracted: reads are whole, v2's name free
-    assert store.current_entry(d) == {"dir": "v1-a", "version": 1}
-    assert not os.path.exists(os.path.join(d, "_ptr",
-                                           f"{2:020d}.json"))
-    # the retry commits cleanly instead of a phantom lost-race error
-    store.commit(d, 2, 1, {"dir": "v2-retry"})
-    assert store.current_entry(d) == {"dir": "v2-retry", "version": 2}
+    # and the re-run against the fresh base commits version 3
+    assert run_novelty_ledger_update(spark, ledger_dir, mk([3])).version == 3
+    got = {tuple(r) for r in
+           read_novelty_ledger(spark, ledger_dir).collect()}
+    assert got == {tuple(r)
+                   for r in shingle_ledger(mk([1, 2, 3])).collect()}

@@ -205,3 +205,35 @@ def test_entry_type_carry_matches_min_by_reference(spark):
     assert by_user[1] == [None, "view"]
     assert by_user[2] == [None]
     assert by_user[3] == ["view", "click"]
+
+
+def test_backtick_column_names_give_the_same_sessions(spark):
+    """User, timestamp and tie-break names are spliced into parsed SQL
+    fragments; an embedded backtick is escaped, so renamed columns give
+    exactly the sessions of the plain-named data."""
+    ev = _events(spark, [
+        (1, "2024-01-01 10:00:00", 1, "view", 1.0, '{"k": 1}'),
+        (2, "2024-01-01 10:10:00", 1, "click", 2.0, '{"k": 2}'),
+        (3, "2024-01-01 10:41:00", 1, "view", 3.0, '{"k": 2}'),
+        (4, "2024-01-01 10:05:00", 2, "purchase", 9.0, '{"k": 3}'),
+        (5, "2024-01-01 10:05:00", 2, "view", 1.0, '{"k": 3}'),
+    ])
+    odd = (ev.withColumnRenamed("user_id", "u`id")
+             .withColumnRenamed("ts", "t``s")
+             .withColumnRenamed("event_id", "e`) id"))
+    plain = assign_sessions(ev)
+    got = assign_sessions(odd, user_col="u`id", ts_col="t``s",
+                          order_tiebreak="e`) id")
+    assert rows(got.withColumnRenamed("e`) id", "event_id"),
+                "event_id", "session_id", "_first_event_type") == \
+        rows(plain, "event_id", "session_id", "_first_event_type")
+    cols = ("session_id", "user_id", "start_time", "end_time",
+            "n_events", "entry_event_type")
+    got = got.withColumnRenamed("e`) id", "event_id")
+    # both rollup paths: the entry-type carry and the generic min_by
+    for drop in ([], ["_first_event_type"]):
+        want = rows(rollup_sessions(plain.drop(*drop)), *cols)
+        rolled = rollup_sessions(got.drop(*drop), user_col="u`id",
+                                 ts_col="t``s")
+        assert rows(rolled.withColumnRenamed("u`id", "user_id"),
+                    *cols) == want

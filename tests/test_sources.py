@@ -440,30 +440,34 @@ def test_fan_out_falls_back_without_input_files(spark):
 def test_fan_out_memo_caches_per_plan(spark):
     """Repeated constructions of the same plan (bench warm-up + timed
     repeats) must hit the memo, not re-stat the files."""
+    from w_userflow_featurestore_spark.conf import session_cache
     from w_userflow_featurestore_spark.sources import parquet as P
     docs = read_table(spark, SF0001, "documents").select("doc_id")
-    key = (id(spark), docs.semanticHash())
-    P._FANOUT_PARTS_MEMO.pop(key, None)
+    key = docs.semanticHash()
+    memo = session_cache(spark).setdefault(P._FANOUT_PARTS_MEMO, {})
+    memo.pop(key, None)
     P.fan_out(read_table(spark, SF0001, "documents").select("doc_id"))
-    assert key in P._FANOUT_PARTS_MEMO
+    assert key in memo
     # a second, structurally identical frame reuses the entry
-    before = dict(P._FANOUT_PARTS_MEMO)
+    before = dict(memo)
     P.fan_out(read_table(spark, SF0001, "documents").select("doc_id"))
-    assert P._FANOUT_PARTS_MEMO == before
+    assert memo == before
 
 
 def test_read_table_schema_memo_pins_identical_relation(spark):
-    """Round 13: read_table memoizes the inferred parquet schema per
+    """read_table memoizes the inferred parquet schema per
     (session, path) and pins it via .schema(...) on later calls —
     skipping footer re-inference (~40-80 ms driver time per call, paid
     inside every timed query). The pinned relation must be IDENTICAL
     to the inferred one: same schema (incl. the nanos->timestamp
     normalization), same rows."""
+    from w_userflow_featurestore_spark.conf import session_cache
     from w_userflow_featurestore_spark.sources import parquet as P
-    key = (id(spark), f"{SF0001}/events.parquet")
-    P._SCHEMA_MEMO.pop(key, None)
+    key = f"{SF0001}/events.parquet"
+    memo = session_cache(spark).setdefault(P._SCHEMA_MEMO, {})
+    memo.pop(key, None)
     inferred = read_table(spark, SF0001, "events")
-    assert key in P._SCHEMA_MEMO           # first call populated the memo
+    assert key in memo                     # first call populated the memo
     pinned = read_table(spark, SF0001, "events")
     assert pinned.schema == inferred.schema
     a = rows(inferred, "event_id", "user_id", "ts")
@@ -472,3 +476,42 @@ def test_read_table_schema_memo_pins_identical_relation(spark):
     # pruned variants still push down through the pinned schema
     pr = read_table(spark, SF0001, "events", columns=["event_id"])
     assert pr.columns == ["event_id"]
+
+
+def test_session_cache_entries_die_with_their_session(spark):
+    """The read_table / fan_out / _ensure_conf memos live in one cache
+    keyed weakly on the session object: a new session starts empty, and
+    its entries disappear once it is collected — no later session can
+    inherit them through a reused id()."""
+    import gc
+    import weakref
+
+    from pyspark.sql.session import _monkey_patch_RDD
+
+    import __spark_entry__ as entry_mod
+    from w_userflow_featurestore_spark.conf import (
+        _SESSION_CACHE, session_cache,
+    )
+    from w_userflow_featurestore_spark.sources import parquet as P
+
+    entry_mod._ensure_conf(spark)
+    other = spark.newSession()
+    try:
+        assert session_cache(other) == {}
+        entry_mod._ensure_conf(other)
+        df = read_table(other, SF0001, "events")
+        P.fan_out(df.select("event_id"))
+        assert set(session_cache(other)) == {
+            entry_mod._CONF_APPLIED, P._SCHEMA_MEMO, P._FANOUT_PARTS_MEMO}
+        assert session_cache(other) is not session_cache(spark)
+        ref = weakref.ref(other)
+        n_before = len(_SESSION_CACHE)
+        del other, df
+    finally:
+        # SparkSession() re-points RDD.toDF at the newest session; hand
+        # it back so only this test's references keep `other` alive
+        _monkey_patch_RDD(spark)
+    gc.collect()
+    assert ref() is None
+    assert len(_SESSION_CACHE) == n_before - 1
+    assert session_cache(spark)[entry_mod._CONF_APPLIED] is True

@@ -9,6 +9,7 @@ bench, driver — gets identical, scale-ready settings.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -27,10 +28,10 @@ _DEFAULTS = {
     # estimates) only materialize at real scale; at fixture scale the
     # rule declines and the conf is inert, so enabling is pure upside.
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # Join strategy (guide §3.1/§9): let the planner choose shuffled-
-    # hash over sort-merge when its build-side size conditions hold
-    # (measured round 12: 1.2-1.7x on this engine's equi-join shapes —
-    # the sort dominates small-to-mid per-partition builds), and let
+    # Join strategy: let the planner choose shuffled-hash over
+    # sort-merge when its build-side size conditions hold (1.2-1.7x on
+    # this engine's equi-join shapes — the sort dominates small-to-mid
+    # per-partition builds), and let
     # AQE convert SMJ->SHJ at runtime from ACTUAL post-shuffle
     # partition sizes (64m per-partition build ceiling — conservative
     # against executor heaps; sort-merge remains the fallback whenever
@@ -83,3 +84,17 @@ def get_spark(app_name: str = "w-userflow-featurestore-spark", master: str | Non
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+#: session -> that session's memo dict. Weakly keyed on the session
+#: OBJECT, so an entry dies with its session: a later session can never
+#: inherit one, as it could from a memo keyed on a reused ``id()``.
+_SESSION_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def session_cache(spark: SparkSession) -> dict:
+    """The memo dict scoped to ``spark``. Holds plan METADATA only
+    (inferred schemas, split estimates, applied confs) — never row data
+    or results, the same class of state Spark's own FileStatusCache
+    keeps per session."""
+    return _SESSION_CACHE.setdefault(spark, {})

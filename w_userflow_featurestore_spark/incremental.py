@@ -97,9 +97,10 @@ class IncrementalPlanner:
         # MERGE makes reprocessing idempotent — regression is safe,
         # nothing is lost. The additive split/novelty ledgers in
         # runner.py are the opposite (a lost commit silently erases a
-        # batch's counts) and carry the CAS pointer-store seam; swap
-        # this open()/os.replace for that seam only if a deployment
-        # needs the watermark on a rename-free object store.
+        # batch's counts), so they are LogTables committing by
+        # compare-and-swap; keep this watermark in a LogTable the same
+        # way only if a deployment needs it on a rename-free object
+        # store.
         def commit(files=current):
             os.makedirs(os.path.dirname(self.ledger_path) or ".", exist_ok=True)
             tmp = self.ledger_path + ".tmp"

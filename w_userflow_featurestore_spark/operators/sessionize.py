@@ -34,6 +34,13 @@ DEFAULT_TIMEOUT_MS = 600 * 1000          # reference: 600 s idle => TIMEOUT_EXIT
 DEFAULT_COMPLETE_THRESHOLD = 50.0        # analog of scroll_ratio >= 0.95 (:128)
 
 
+def _ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier for the parsed
+    fragments below; an embedded backtick is doubled, so no column
+    name can end the quoting early."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def assign_sessions(events: DataFrame, user_col: str = "user_id",
                     ts_col: str = "ts", order_tiebreak: str = "event_id",
                     gap_ms: int = DEFAULT_GAP_MS) -> DataFrame:
@@ -59,7 +66,7 @@ def assign_sessions(events: DataFrame, user_col: str = "user_id",
     an external sink that selects ``*``. Do not fabricate the column
     yourself: :func:`rollup_sessions` trusts it to be session-constant
     and a non-constant value silently splits a session into duplicate
-    rollup rows (round-13 ADVICE note).
+    rollup rows.
     """
     if gap_ms < 1000:
         raise ValueError(
@@ -68,33 +75,33 @@ def assign_sessions(events: DataFrame, user_col: str = "user_id",
             "start two sessions of one user within the same second and "
             "silently merge them under one id (corrupting MERGE upserts)")
     # The whole window chain renders as SQL fragments parsed by ONE
-    # F.expr per output column (round 13, guide §7.3): the Column-API
-    # form cost ~80 ms of py4j roundtrips per construction, paid inside
-    # every one of the ~20 session-derived timed queries. The parsed
-    # trees are the same Catalyst expressions (verified optimizedPlan-
-    # identical against the Column form when landing this), so runtime
-    # plans and values are unchanged. The lag fragment is written out
-    # twice below; the analyzer collapses equal window expressions, so
-    # one Window operator (and one user-keyed exchange) remains.
-    order_sql = (f"PARTITION BY `{user_col}` ORDER BY `{ts_col}` ASC,"
-                 f" `{order_tiebreak}` ASC")
+    # F.expr per output column: the Column-API form costs ~80 ms of
+    # py4j roundtrips per construction, paid inside every
+    # session-derived query. The parsed trees are the same Catalyst
+    # expressions as the Column form, so runtime plans and values are
+    # unchanged. The lag fragment is written out twice below; the
+    # analyzer collapses equal window expressions, so one Window
+    # operator (and one user-keyed exchange) remains.
+    user, ts = _ident(user_col), _ident(ts_col)
+    order_sql = (f"PARTITION BY {user} ORDER BY {ts} ASC,"
+                 f" {_ident(order_tiebreak)} ASC")
     cum_sql = (f"{order_sql} ROWS BETWEEN UNBOUNDED PRECEDING"
                f" AND CURRENT ROW")
-    lag_sql = f"lag(unix_millis(`{ts_col}`)) OVER ({order_sql})"
+    lag_sql = f"lag(unix_millis({ts})) OVER ({order_sql})"
     is_new_sql = (f"(CASE WHEN (({lag_sql}) IS NULL"
-                  f" OR (unix_millis(`{ts_col}`) - ({lag_sql})"
+                  f" OR (unix_millis({ts}) - ({lag_sql})"
                   f" > {int(gap_ms)})) THEN 1 ELSE 0 END)")
     # running last-boundary timestamp: same single (user) exchange as
     # the lag — no extra shuffle for the session-start lookup
     start_sql = (f"max(CASE WHEN {is_new_sql} = 1 THEN"
-                 f" unix_millis(`{ts_col}`) END) OVER ({cum_sql})")
+                 f" unix_millis({ts}) END) OVER ({cum_sql})")
     out = events.withColumn(
         "session_id",
-        F.expr(f"CAST(`{user_col}` * 10000000000 +"
+        F.expr(f"CAST({user} * 10000000000 +"
                f" floor(({start_sql}) / 1000) AS BIGINT)"))
     if "event_type" in events.columns:
         # The session's ENTRY event type, carried forward from the
-        # boundary row over the SAME window frame (round 12): every row
+        # boundary row over the SAME window frame: every row
         # of a session then holds its session's first event's type, so
         # rollup_sessions can GROUP on it instead of aggregating it
         # with min_by(event_type, struct(ts, event_id)) — a struct
@@ -130,23 +137,22 @@ def rollup_sessions(events_with_sessions: DataFrame,
     min_by path, which derives the entry type itself.
     """
     e = events_with_sessions
-    # Aggregates render as SQL fragments parsed by one F.expr each
-    # (round 13, guide §7.3 — the Column-API list cost ~100 ms of py4j
-    # per construction across ~20 session-derived queries). Fragments
+    # Aggregates render as SQL fragments parsed by one F.expr each (the
+    # Column-API list costs ~100 ms of py4j per construction). Fragments
     # mirror functions.exact_sum / fround / presence_flag EXACTLY
     # (double literals suffixed D so the parser does not widen to
-    # DECIMAL); parsed trees verified optimizedPlan-identical to the
-    # Column form when landing this.
+    # DECIMAL), so the parsed trees equal the Column form's.
     def _seen(v: str) -> str:
         return (f"max(CASE WHEN `event_type` = '{v}' THEN 1 ELSE 0 END)")
 
     # fround(x, 2) == (FLOOR(x * 100.0D + 0.5D) / 100.0D)
     _sum_scaled = "sum(CAST(FLOOR(`value` * 100.0D + 0.5D) AS BIGINT))"
+    ts = _ident(ts_col)
     aggs = [
-        F.expr(f"min(`{ts_col}`)").alias("start_time"),
-        F.expr(f"max(`{ts_col}`)").alias("end_time"),
-        F.expr(f"unix_millis(max(`{ts_col}`)) -"
-               f" unix_millis(min(`{ts_col}`))").alias("duration_ms"),
+        F.expr(f"min({ts})").alias("start_time"),
+        F.expr(f"max({ts})").alias("end_time"),
+        F.expr(f"unix_millis(max({ts})) -"
+               f" unix_millis(min({ts}))").alias("duration_ms"),
         F.expr("count(1)").alias("n_events"),
         F.expr(f"FLOOR(({_sum_scaled} / 100.0D) * 100.0D + 0.5D)"
                " / 100.0D").alias("sum_value"),
@@ -172,12 +178,13 @@ def rollup_sessions(events_with_sessions: DataFrame,
         # with the min_by struct gone every aggregate has a mutable
         # buffer and the rollup plans as a HashAggregate instead of
         # Sort + SortAggregate on every session-derived query
-        # (round 12, guide §2.4; value-identical, oracle-pinned).
-        g = (e.groupBy(F.col("session_id"), F.col(user_col),
+        # (value-identical, oracle-pinned).
+        user = F.col(_ident(user_col))
+        g = (e.groupBy(F.col("session_id"), user,
                        F.col("_first_event_type")
                         .alias("entry_event_type"))
              .agg(*aggs))
-        cols = ["session_id", user_col, "start_time", "end_time",
+        cols = ["session_id", user, "start_time", "end_time",
                 "duration_ms", "n_events", "entry_event_type",
                 "sum_value", "max_value", "n_items", "seen_purchase",
                 "seen_error", "seen_click", "seen_view"]
@@ -186,10 +193,10 @@ def rollup_sessions(events_with_sessions: DataFrame,
     # generic path for callers that assigned session ids elsewhere:
     # min_by over the (ts, id) struct pins the same tie-break
     entry = F.expr(f"min_by(`event_type`, named_struct("
-                   f"'{ts_col}', `{ts_col}`, 'event_id', `event_id`))") \
+                   f"'ts', {ts}, 'event_id', `event_id`))") \
         .alias("entry_event_type")
     return (
-        e.groupBy("session_id", user_col)
+        e.groupBy(F.col("session_id"), F.col(_ident(user_col)))
          .agg(*aggs[:4], entry, *aggs[4:])
          .withColumn("datetime", F.to_date("start_time"))
     )
@@ -211,8 +218,8 @@ def classify_sessions(sessions: DataFrame, now: str,
     (:139-141). Rule order is load-bearing: a session with both purchase
     and error is COMPLETE, matching the reference's when-chain.
     """
-    # one parsed expr per output column (round 13, guide §7.3); the
-    # when-chain fragment mirrors the Column form exactly — float
+    # one parsed expr per output column (cheaper to construct than the
+    # Column form); the when-chain fragment mirrors the Column form exactly — float
     # threshold suffixed D, ``now`` single-quote-escaped
     now_lit = str(now).replace("'", "''")
     state_sql = (

@@ -21,6 +21,14 @@ dagster however they like.
                           written with dynamic partition overwrite (the
                           reference's idempotent recovery unit).
 
+- ``run_split_ledger_update`` / ``run_novelty_ledger_update`` — the
+                          leakage-split component ledger and the
+                          shingle-novelty ledger, each a LogTable whose
+                          snapshot id is the ledger version; a batch
+                          commits one compare-and-swap ``rewrite``.
+                          Retention is ``LogTable.expire_snapshots``
+                          then ``LogTable.vacuum``.
+
 Every step is re-runnable: a crashed run leaves the ledger uncommitted
 (next run replays the increment) and partition overwrite converges.
 """
@@ -238,397 +246,69 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
                         int(obs_out.get["rows"]))
 
 
-class ConcurrentLedgerError(RuntimeError):
-    """A ledger commit lost a compare-and-swap race: another writer
-    moved the pointer past the version this run derived its merge
-    from. The loser's staged parquet reflects stale state AND — for
-    the additive ledgers — its batch would have been double- or
-    un-counted; re-run the whole update against the new current
-    version (round-9 ADVICE: the last ``_ledger_commit`` must not
-    silently discard the other batch's counts)."""
+def _read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
+    """The latest snapshot of a ledger's LogTable; ``FileNotFoundError``
+    before the first commit."""
+    from w_userflow_featurestore_spark.sources import LogTable
+    lt = LogTable(spark, ledger_dir)
+    base = lt.latest_snapshot_id() if LogTable.is_log_table(ledger_dir) \
+        else None
+    if base is None:
+        raise FileNotFoundError(f"no committed ledger in {ledger_dir}")
+    return lt.read(base)
 
 
-class FileLedgerPointerStore:
-    """Default pointer backend: the committed version is the highest
-    sequence file in ``<ledger_dir>/_ptr/`` — each commit is ONE
-    ``_ptr/{version:020d}.json`` created with O_EXCL, the same
-    commit primitive :class:`~w_userflow_featurestore_spark.sources.lakehouse.LogTable`'s
-    ``_txn_log`` uses (round-9 verdict #4: reuse that discipline
-    instead of ``os.replace``, so the pointer needs only
-    create-if-absent — which object stores offer as a conditional
-    PUT — never atomic rename). Two writers that both derived
-    version N+1 from base N race on the same filename; exactly one
-    ``open(..., "x")`` wins and the loser gets
-    :class:`ConcurrentLedgerError` — versions are dense by
-    construction (always base+1), so the filename race IS the CAS.
-
-    The entry body names the version's DATA DIRECTORY (writers stage
-    into unique token-suffixed directories, so a losing writer's
-    staged parquet can never have clobbered the winner's — the same
-    reason LogTable stages uniquely-named files and commits by log
-    record). Reads fall back to the legacy single ``_current``
-    pointer file (pre-round-10 layout, data in plain ``v{N}`` dirs)
-    when no ``_ptr`` sequence file exists, so existing ledgers
-    upgrade in place on their next commit.
-
-    Storage contract: the torn-read-free publish path additionally
-    uses one hard link (write private tmp, ``os.link`` onto the
-    sequence name). On filesystems without hard-link support the
-    commit degrades automatically to bare ``O_CREAT|O_EXCL`` +
-    write + fsync — the CAS still holds; only the no-torn-read
-    guarantee narrows back to the original window."""
-
-    def current_entry(self, ledger_dir: str) -> dict | None:
-        import json as _json
-        import os as _os
-        ptr_dir = _os.path.join(ledger_dir, "_ptr")
-        best: int | None = None
-        if _os.path.isdir(ptr_dir):
-            for name in _os.listdir(ptr_dir):
-                if name.endswith(".json"):
-                    try:
-                        v = int(name[:-5])
-                    except ValueError:
-                        continue
-                    best = v if best is None or v > best else best
-        if best is not None:
-            with open(_os.path.join(ptr_dir, f"{best:020d}.json")) as fh:
-                return _json.load(fh)
-        legacy = _os.path.join(ledger_dir, "_current")
-        if _os.path.exists(legacy):
-            with open(legacy) as fh:
-                return _json.load(fh)
-        return None
-
-    def current(self, ledger_dir: str) -> int | None:
-        entry = self.current_entry(ledger_dir)
-        return None if entry is None else entry["version"]
-
-    def commit(self, ledger_dir: str, version: int,
-               expected_base: int | None,
-               entry: dict | None = None) -> None:
-        import json as _json
-        import os as _os
-        cur = self.current(ledger_dir)
-        if cur != expected_base:
-            raise ConcurrentLedgerError(
-                f"ledger {ledger_dir} moved to v{cur} since this run "
-                f"read v{expected_base} — re-run against the current "
-                "version")
-        import uuid as _uuid
-        ptr_dir = _os.path.join(ledger_dir, "_ptr")
-        _os.makedirs(ptr_dir, exist_ok=True)
-        target = _os.path.join(ptr_dir, f"{version:020d}.json")
-        body = dict(entry or {})
-        body["version"] = version
-        # write-then-PUBLISH: the body lands in a private tmp file and
-        # the commit is one atomic os.link onto the sequence name —
-        # exclusive-create semantics identical to open("x") (EEXIST =
-        # lost race), but a concurrent reader can never observe a
-        # half-written commit file (a bare open("x") + dump exposes
-        # the window between create and write — caught by the threaded
-        # race test under full-suite load). The tmp never matches the
-        # reader's {version:020d}.json pattern, so a crash between
-        # write and link leaves invisible garbage, not a bad commit.
-        tmp = target + f".{_uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(body, fh)
-            fh.flush()
-            _os.fsync(fh.fileno())   # the PUBLISHED bytes must be
-            #                          durable BEFORE the link lands —
-            #                          a post-link power loss must not
-            #                          leave a torn reader-visible file
-        try:
-            _os.link(tmp, target)       # atomic exclusive publish
-        except FileExistsError:
-            raise ConcurrentLedgerError(
-                f"ledger {ledger_dir} lost the commit race for "
-                f"v{version} — another writer committed from the same "
-                "base; re-run against the current version") from None
-        except OSError as exc:
-            # Hard links are a STRONGER requirement than exclusive
-            # create and are unsupported on some filesystems the bare
-            # open('x') path worked on (certain NFS configs,
-            # FUSE/object-store mounts, FAT). Fall back to
-            # O_CREAT|O_EXCL + write + fsync there — same CAS
-            # semantics, re-accepting the narrow torn-read window
-            # ONLY on filesystems that cannot do better (round-10
-            # ADVICE: degrade cleanly instead of an unclassified
-            # OSError).
-            import errno as _errno
-            link_unsupported = (_errno.EPERM, _errno.EACCES,
-                                getattr(_errno, "ENOTSUP", -1),
-                                getattr(_errno, "EOPNOTSUPP", -1),
-                                getattr(_errno, "EMLINK", -1),
-                                # several FUSE/network filesystems
-                                # report an unimplemented os.link as
-                                # ENOSYS, not EOPNOTSUPP
-                                getattr(_errno, "ENOSYS", -1))
-            if exc.errno not in link_unsupported:
-                raise
-            try:
-                fd = _os.open(target,
-                              _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
-            except FileExistsError:
-                raise ConcurrentLedgerError(
-                    f"ledger {ledger_dir} lost the commit race for "
-                    f"v{version} — another writer committed from the "
-                    "same base; re-run against the current "
-                    "version") from None
-            try:
-                with _os.fdopen(fd, "w") as fh:
-                    _json.dump(body, fh)
-                    fh.flush()
-                    _os.fsync(fh.fileno())
-            except BaseException:
-                # a write failure here has already PUBLISHED a torn
-                # file under the name readers match — it would poison
-                # every subsequent read (JSONDecodeError) and make
-                # retries misreport ConcurrentLedgerError. Retract it.
-                try:
-                    _os.unlink(target)
-                except OSError:
-                    pass
-                raise
-        finally:
-            _os.unlink(tmp)
-
-
-class InMemoryLedgerPointerStore:
-    """Pointer backend for tests and for modeling a catalog-backed
-    deployment (the pointer lives in a metastore / DynamoDB-style
-    conditional-write table while the version data stays on the
-    object store). Same CAS contract as the file store."""
-
-    def __init__(self) -> None:
-        import threading as _threading
-        self._entries: dict[str, dict] = {}
-        self._lock = _threading.Lock()
-
-    def current_entry(self, ledger_dir: str) -> dict | None:
-        with self._lock:
-            e = self._entries.get(ledger_dir)
-            return dict(e) if e is not None else None
-
-    def current(self, ledger_dir: str) -> int | None:
-        entry = self.current_entry(ledger_dir)
-        return None if entry is None else entry["version"]
-
-    def commit(self, ledger_dir: str, version: int,
-               expected_base: int | None,
-               entry: dict | None = None) -> None:
-        with self._lock:
-            cur_e = self._entries.get(ledger_dir)
-            cur = None if cur_e is None else cur_e["version"]
-            if cur != expected_base:
-                raise ConcurrentLedgerError(
-                    f"ledger {ledger_dir} moved to v{cur} since this "
-                    f"run read v{expected_base} — re-run against the "
-                    "current version")
-            body = dict(entry or {})
-            body["version"] = version
-            self._entries[ledger_dir] = body
-
-
-# the process-wide default backend; swap with a catalog-backed store
-# for object-store deployments (every ledger function also takes a
-# per-call ``pointer_store=``)
-_DEFAULT_POINTER_STORE = FileLedgerPointerStore()
-
-
-def vacuum_ledger(ledger_dir: str, keep_last: int = 2,
-                  pointer_store=None,
-                  retention_seconds: float = 24 * 3600.0) -> list[str]:
-    """Delete ledger data directories that no retained pointer entry
-    names — the :meth:`LogTable.vacuum` analogue for the versioned
-    split/novelty ledgers: staged-but-never-committed directories
-    (crashes, lost CAS races) and superseded old versions both
-    accumulate as ``v*`` directories only the pointer history can
-    distinguish from live data.
-
-    Retention: the data directories of the newest ``keep_last``
-    committed versions survive (the file store reads its full
-    ``_ptr`` history; a catalog-backed store without history retains
-    at least the current entry); every OTHER ``v*`` directory under
-    ``ledger_dir`` is removed and returned. Time-travel reads of
-    versions older than ``keep_last`` break after a vacuum — the same
-    trade LogTable.vacuum documents. The pointer sequence files are
-    never touched: history stays auditable, only data is reclaimed.
-    ``keep_last`` must be >= 1 (the current version is never
-    deletable).
-
-    UNNAMED directories (no pointer entry in history) younger than
-    ``retention_seconds`` are kept: a CONCURRENT writer's
-    uniquely-named staging directory (parquet written, CAS commit not
-    yet landed) is indistinguishable from a crash orphan by name
-    alone, and deleting it would let the writer's commit publish a
-    pointer to a vanished directory — permanently breaking reads. The
-    mtime window is the same guard :meth:`LogTable.vacuum` applies to
-    staged data files (round-10 ADVICE). Pass ``0`` only when no
-    concurrent writer can exist. Directories a pointer entry NAMES
-    are provably committed (their CAS landed), so superseded versions
-    beyond ``keep_last`` reclaim immediately regardless of age — the
-    keep_last contract is not deferred 24h for known-dead data.
-    Orphaned ``_ptr/*.tmp`` files (a writer that crashed between its
-    private tmp write and the atomic link publish — invisible to
-    readers by design) are swept under the same age guard and
-    returned as ``_ptr/<name>`` entries."""
-    import os as _os
-    import re as _re_mod
-    import shutil as _shutil
-    import time as _time
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    cutoff = _time.time() - retention_seconds
-    store = pointer_store or _DEFAULT_POINTER_STORE
-    entries: list[dict] = []
-    ptr_dir = _os.path.join(ledger_dir, "_ptr")
-    if _os.path.isdir(ptr_dir):
-        for name in sorted(_os.listdir(ptr_dir)):
-            if name.endswith(".json"):
-                import json as _json
-                try:
-                    with open(_os.path.join(ptr_dir, name)) as fh:
-                        entries.append(_json.load(fh))
-                except (ValueError, OSError):
-                    continue
-    cur = store.current_entry(ledger_dir)
-    if cur is not None and cur not in entries:
-        entries.append(cur)
-    if not entries:
-        return []                     # nothing committed: refuse to guess
-    entries.sort(key=lambda e: e["version"])
-    named = {e.get("dir", f"v{e['version']}") for e in entries}
-    keep = {e.get("dir", f"v{e['version']}")
-            for e in entries[-keep_last:]}
-    removed: list[str] = []
-    pat = _re_mod.compile(r"^v\d+(-[0-9a-f]+)?$")
-    for name in sorted(_os.listdir(ledger_dir)):
-        full = _os.path.join(ledger_dir, name)
-        if (pat.match(name) and name not in keep
-                and _os.path.isdir(full)):
-            try:
-                if name not in named and _os.path.getmtime(full) > cutoff:
-                    continue     # possibly a live writer's staging dir
-                _shutil.rmtree(full)
-            except OSError:
-                continue         # vanished mid-scan: someone else's
-            removed.append(name)
-    if _os.path.isdir(ptr_dir):
-        for name in sorted(_os.listdir(ptr_dir)):
-            if not name.endswith(".tmp"):
-                continue
-            full = _os.path.join(ptr_dir, name)
-            try:
-                if _os.path.getmtime(full) > cutoff:
-                    continue     # possibly a commit in flight
-                _os.unlink(full)
-            except OSError:
-                continue
-            removed.append(_os.path.join("_ptr", name))
-    return removed
-
-
-def _ledger_current_entry(ledger_dir: str,
-                          pointer_store=None) -> dict | None:
-    """The committed pointer entry ({"version", "dir"}), or None
-    before the first commit. See :func:`read_split_ledger` for the
-    pointer-vs-data storage contract shared by every versioned ledger
-    in this module."""
-    store = pointer_store or _DEFAULT_POINTER_STORE
-    return store.current_entry(ledger_dir)
-
-
-def _ledger_current_version(ledger_dir: str,
-                            pointer_store=None) -> int | None:
-    entry = _ledger_current_entry(ledger_dir, pointer_store)
-    return None if entry is None else entry["version"]
-
-
-def _ledger_data_path(ledger_dir: str, entry: dict) -> str:
-    """The parquet directory a pointer entry names. Legacy entries
-    (pre-round-10 ``_current`` files) carry no ``dir`` — their data
-    lives in the plain ``v{version}`` directory."""
-    import os as _os
-    return _os.path.join(ledger_dir,
-                         entry.get("dir", f"v{entry['version']}"))
-
-
-def _ledger_commit(ledger_dir: str, version: int,
-                   expected_base: int | None, data_dir: str,
-                   pointer_store=None) -> None:
-    """Move the pointer to ``version`` naming ``data_dir`` — THE
-    commit point: called only after the version's parquet write
-    landed, so a crash at any earlier moment leaves the previous
-    version live and the run re-entrant. Compare-and-swap: raises
-    :class:`ConcurrentLedgerError` if the pointer moved past
-    ``expected_base`` (the version this run's merge read) — a lost
-    race means the staged merge is stale and silently committing it
-    would drop the winner's batch from the additive ledgers (round-9
-    ADVICE). Writers stage into UNIQUE token-suffixed directories, so
-    the loser's staged parquet never clobbered the winner's data; a
-    lost race (or a crash before commit) leaves an orphan staging
-    directory, garbage-collectable by listing directories no pointer
-    entry names — LogTable's orphan-file story exactly."""
-    store = pointer_store or _DEFAULT_POINTER_STORE
-    store.commit(ledger_dir, version, expected_base, {"dir": data_dir})
+def _commit_ledger(spark: SparkSession, ledger_dir: str,
+                   build) -> tuple[int, str, int]:
+    """Commit the next ledger version: ``build(prev)`` derives it from
+    the pinned current version (``None`` on an empty table) and ONE
+    ``rewrite`` commit replaces that version, validated against the
+    snapshot ``prev`` was read from. A rival commit after the read
+    raises ``ConcurrentCommitError`` instead of silently dropping the
+    rival's batch; a crash before the commit leaves the previous
+    version live. Returns (snapshot id, mode, rows committed)."""
+    from w_userflow_featurestore_spark.sources import LogTable
+    lt = LogTable.create(spark, ledger_dir)
+    base = lt.latest_snapshot_id()
+    prev = None if base is None else lt.read(base)
+    obs = Observation()
+    merged = build(prev).observe(obs, F.count(F.lit(1)).alias("rows"))
+    version = lt.rewrite(merged, base)
+    return (version, "initial" if base is None else "incremental",
+            int(obs.get["rows"]))
 
 
 @dataclass
 class SplitLedgerResult:
-    version: int         # committed ledger version after this run
+    version: int         # committed ledger snapshot id after this run
     mode: str            # initial | incremental
     n_docs: int          # rows in the committed ledger
 
 
-def read_split_ledger(spark: SparkSession, ledger_dir: str,
-                      pointer_store=None) -> DataFrame:
-    """The CURRENT committed component ledger (doc_id, group_key) — the
-    version the pointer names; uncommitted/crashed writes are
-    invisible by construction.
-
-    Storage contract (round-9 verdict #4): the version directories are
-    Spark parquet writes to ``ledger_dir``; the pointer goes through
-    the pluggable :class:`FileLedgerPointerStore` /
-    :class:`InMemoryLedgerPointerStore` seam (``pointer_store=``, or
-    the module default). The default file store needs only
-    CREATE-IF-ABSENT on the pointer directory — the LogTable
-    ``_txn_log`` O_EXCL discipline, which object stores offer as a
-    conditional PUT — so a deployment on s3://, hdfs:// etc. either
-    points the default store at the same URI (when the filesystem
-    client supports exclusive create) or swaps in a catalog-backed
-    store; the data path never changes."""
-    entry = _ledger_current_entry(ledger_dir, pointer_store)
-    if entry is None:
-        raise FileNotFoundError(f"no committed ledger in {ledger_dir}")
-    return spark.read.parquet(_ledger_data_path(ledger_dir, entry))
+def read_split_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
+    """The CURRENT committed component ledger (doc_id, group_key): the
+    latest snapshot of the ledger's LogTable, so uncommitted or crashed
+    writes are invisible by construction. Raises ``FileNotFoundError``
+    before the first commit. Retention is the table's own:
+    ``LogTable.expire_snapshots`` then ``LogTable.vacuum``."""
+    return _read_ledger(spark, ledger_dir)
 
 
 def run_split_ledger_update(spark: SparkSession, ledger_dir: str,
                             batch_docs: DataFrame, batch_pairs: DataFrame,
                             id_col: str = "doc_id",
                             pair_a: str = "doc_a",
-                            pair_b: str = "doc_b",
-                            pointer_store=None) -> SplitLedgerResult:
+                            pair_b: str = "doc_b") -> SplitLedgerResult:
     """Ingest a batch into the persisted leakage-split component ledger
     — the state behind ``operators/sampling.py::
-    incremental_leakage_split``, persisted with the silver watermark
-    discipline (run_silver commits its read ledger only AFTER the table
-    write lands): the new ledger is written to a fresh versioned
-    directory, and the pointer moves to it via compare-and-swap only
-    after the parquet write completed. A crash at any earlier point
-    leaves the previous version live and the run re-entrant —
+    incremental_leakage_split`` — as the next snapshot of the ledger's
+    LogTable (see :func:`_commit_ledger`). A crashed run is re-entrant:
     replaying the batch converges on the same content
-    (merge_component_ledger is deterministic); a half-written staging
-    directory is invisible (no pointer names it) and becomes vacuum
-    garbage, never a read target. A
-    CONCURRENT writer that committed first moves the pointer past the
-    version this run read, so the CAS raises
-    :class:`ConcurrentLedgerError` instead of silently discarding the
-    winner's batch (round-9 ADVICE) — re-run against the new current
-    version.
+    (merge_component_ledger is deterministic); a run that loses a
+    commit race raises ``ConcurrentCommitError`` and re-runs against
+    the new current version.
 
-    First run (no pointer) builds the ledger from the batch alone;
+    First run (empty table) builds the ledger from the batch alone;
     later runs extend via :func:`~w_userflow_featurestore_spark.operators.sampling.merge_component_ledger`,
     so corpus-internal pairs are never recomputed. ``batch_pairs`` =
     pairs touching >= 1 batch doc (an LSH probe of the batch), per the
@@ -636,71 +316,42 @@ def run_split_ledger_update(spark: SparkSession, ledger_dir: str,
 
     Scale note: each commit rewrites the full (doc_id, group_key)
     ledger — ~16 bytes/doc, the deliberate cost of an always-consistent
-    snapshot (the gram ledger pays the same via its re-aggregate). A
-    deployment hot enough to feel that rewrite should bucket the ledger
-    by hash(doc_id) and rewrite only buckets holding changed rows — the
-    versioned-pointer seam here accommodates that without API change.
-
-    See :func:`read_split_ledger` for the pointer-vs-data storage
-    contract (``pointer_store=`` swaps the pointer backend).
+    snapshot. A deployment hot enough to feel that rewrite should
+    bucket the ledger by hash(doc_id) and rewrite only buckets holding
+    changed rows (a ``LogTable.merge`` on doc_id).
     """
-    import os as _os
-    import uuid as _uuid
     from w_userflow_featurestore_spark.operators.sampling import (
         component_ledger, merge_component_ledger,
     )
-    entry = _ledger_current_entry(ledger_dir, pointer_store)
-    if entry is not None:
-        base = entry["version"]
-        prev = spark.read.parquet(_ledger_data_path(ledger_dir, entry))
-        merged = merge_component_ledger(prev, batch_docs, batch_pairs,
-                                        id_col, pair_a, pair_b)
-        mode = "incremental"
-    else:
-        base = None
-        merged = component_ledger(batch_docs, batch_pairs,
-                                  id_col, pair_a, pair_b)
-        mode = "initial"
-    version = (base or 0) + 1
-    # one materialization: the rows-written count rides the write and
-    # the frame is lineage-free before any directory is touched.
-    # Staged into a UNIQUE directory: a concurrent writer racing from
-    # the same base can never overwrite this run's parquet (the CAS
-    # decides whose directory the pointer names).
-    obs = Observation()
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    data_dir = f"v{version}-{_uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(
-        _os.path.join(ledger_dir, data_dir))
-    n = int(obs.get["rows"])
-    _ledger_commit(ledger_dir, version, base, data_dir, pointer_store)
-    return SplitLedgerResult(version, mode, n)
+
+    def build(prev):
+        if prev is None:
+            return component_ledger(batch_docs, batch_pairs,
+                                    id_col, pair_a, pair_b)
+        return merge_component_ledger(prev, batch_docs, batch_pairs,
+                                      id_col, pair_a, pair_b)
+
+    return SplitLedgerResult(*_commit_ledger(spark, ledger_dir, build))
 
 
 @dataclass
 class NoveltyLedgerResult:
-    version: int         # committed ledger version after this run
+    version: int         # committed ledger snapshot id after this run
     mode: str            # initial | incremental
     n_shingles: int      # distinct shingle hashes in the committed ledger
 
 
-def read_novelty_ledger(spark: SparkSession, ledger_dir: str,
-                        pointer_store=None) -> DataFrame:
+def read_novelty_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     """The CURRENT committed shingle-df ledger (sh, n_docs) — the
     corpus-history state :func:`score_batch_novelty` probes. Same
-    versioned-pointer commit protocol and storage contract as
-    :func:`read_split_ledger`."""
-    entry = _ledger_current_entry(ledger_dir, pointer_store)
-    if entry is None:
-        raise FileNotFoundError(f"no committed ledger in {ledger_dir}")
-    return spark.read.parquet(_ledger_data_path(ledger_dir, entry))
+    LogTable storage and retention as :func:`read_split_ledger`."""
+    return _read_ledger(spark, ledger_dir)
 
 
 def score_batch_novelty(spark: SparkSession, ledger_dir: str,
                         batch_docs: DataFrame, n: int = 3,
                         text_col: str = "text",
-                        id_col: str = "doc_id",
-                        pointer_store=None) -> DataFrame:
+                        id_col: str = "doc_id") -> DataFrame:
     """Novelty-score an incoming batch against the corpus HISTORY in
     the persisted ledger — run BEFORE :func:`run_novelty_ledger_update`
     ingests the same batch: ``incremental_novelty`` counts batch
@@ -711,68 +362,38 @@ def score_batch_novelty(spark: SparkSession, ledger_dir: str,
         incremental_novelty,
     )
     return incremental_novelty(
-        batch_docs,
-        read_novelty_ledger(spark, ledger_dir, pointer_store),
+        batch_docs, read_novelty_ledger(spark, ledger_dir),
         n, text_col, id_col)
 
 
 def run_novelty_ledger_update(spark: SparkSession, ledger_dir: str,
                               batch_docs: DataFrame, n: int = 3,
                               text_col: str = "text",
-                              id_col: str = "doc_id",
-                              pointer_store=None
+                              id_col: str = "doc_id"
                               ) -> NoveltyLedgerResult:
     """Ingest a batch into the persisted shingle-df ledger — the state
-    behind :func:`score_batch_novelty`, committed with the same
-    versioned-pointer discipline as :func:`run_split_ledger_update`:
-    the merged ledger lands in a fresh uniquely-named staging
-    directory and the pointer moves via compare-and-swap only after
-    the parquet write completed, so a crash leaves the previous
-    version live and the replay converges (``merge_shingle_ledger``
-    is a deterministic re-aggregate; an unreferenced half-written
-    directory is vacuum garbage, never a read target).
+    behind :func:`score_batch_novelty` — with the commit protocol of
+    :func:`run_split_ledger_update`.
 
     Batches must be doc-DISJOINT from prior ingests (the additivity
     precondition ``merge_shingle_ledger`` documents) — replaying the
     SAME batch would double its counts; production keys ingestion by
     snapshot range (``LakehousePlanner``) exactly to guarantee this.
-    The CAS commit enforces the SERIAL half of that precondition
-    mechanically: two concurrent ingests both reading base N cannot
-    both win v{N+1} — the loser raises
-    :class:`ConcurrentLedgerError` instead of silently erasing the
-    winner's counts (round-9 ADVICE), and re-runs its merge against
-    the new current version.
-
-    Scale note: each commit rewrites the full (sh, n_docs) ledger —
-    ~16 bytes per distinct shingle, the same always-consistent-snapshot
-    trade the component ledger makes; bucket by ``sh`` and rewrite
-    changed buckets when the rewrite itself becomes hot.
+    The compare-and-swap commit enforces the SERIAL half of that
+    precondition: two concurrent ingests that both read snapshot N
+    cannot both commit — the loser raises ``ConcurrentCommitError``.
+    Each commit rewrites the full (sh, n_docs) ledger, the same
+    always-consistent-snapshot trade the component ledger makes.
     """
-    import os as _os
-    import uuid as _uuid
     from w_userflow_featurestore_spark.operators.dedup import (
         merge_shingle_ledger, shingle_ledger,
     )
     batch = shingle_ledger(batch_docs, n, text_col, id_col)
-    entry = _ledger_current_entry(ledger_dir, pointer_store)
-    if entry is not None:
-        base = entry["version"]
-        prev = spark.read.parquet(_ledger_data_path(ledger_dir, entry))
-        merged = merge_shingle_ledger(prev, batch)
-        mode = "incremental"
-    else:
-        base = None
-        merged = batch
-        mode = "initial"
-    version = (base or 0) + 1
-    obs = Observation()
-    merged = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
-    data_dir = f"v{version}-{_uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(
-        _os.path.join(ledger_dir, data_dir))
-    n_rows = int(obs.get["rows"])
-    _ledger_commit(ledger_dir, version, base, data_dir, pointer_store)
-    return NoveltyLedgerResult(version, mode, n_rows)
+
+    def build(prev):
+        return batch if prev is None else merge_shingle_ledger(prev, batch)
+
+    return NoveltyLedgerResult(*_commit_ledger(spark, ledger_dir, build))
 
 
 # feature jobs in dependency order; item_daily feeds top_item_per_day the

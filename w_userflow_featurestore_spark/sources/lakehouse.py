@@ -34,16 +34,20 @@ only the files that actually contain matched keys (file-granular
 copy-on-write, strictly finer than the parquet fallback's
 partition-granular rewrite).
 
-Commit protocol: a commit is ONE file ``_txn_log/<seq>.json`` created
-with O_EXCL — concurrent committers race on the same sequence number
-and exactly one wins (optimistic concurrency, as in Delta). A crashed
-writer leaves only orphaned staging files, never a partial commit.
+Commit protocol: a commit is ONE file ``_txn_log/<seq>.json`` published
+exclusively (:func:`_publish_exclusive`) — concurrent committers race
+on the same sequence number and exactly one wins (optimistic
+concurrency, as in Delta). The body is written and fsynced to a private
+tmp file before one ``os.link`` publishes it, so a reader never parses
+a half-written commit, and a crashed writer leaves only orphaned tmp
+and staging files (``vacuum`` reclaims both), never a partial commit.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
+import errno as _errno
 import json
 import math as _math
 import os
@@ -60,6 +64,59 @@ __all__ = ["LogTable", "BrokenLineageError", "ConcurrentCommitError",
 
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
+
+# os.link errnos meaning "this filesystem has no hard links" (some
+# NFS configs, FUSE/object-store mounts, FAT; several FUSE and network
+# filesystems report an unimplemented link as ENOSYS)
+_LINK_UNSUPPORTED = {getattr(_errno, n, None) for n in (
+    "EPERM", "EACCES", "ENOTSUP", "EOPNOTSUPP", "EMLINK", "ENOSYS")} - {None}
+
+
+def _dump_durable(fh, body: dict) -> None:
+    json.dump(body, fh)
+    fh.flush()
+    os.fsync(fh.fileno())
+
+
+def _replace_json(target: str, body: dict) -> None:
+    """Write ``target`` as JSON via a uuid-suffixed tmp + ``os.replace``
+    (atomic overwrite; concurrent writers never share a tmp)."""
+    tmp = f"{target}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(body, fh)
+    os.replace(tmp, target)
+
+
+def _publish_exclusive(target: str, body: dict) -> None:
+    """Create ``target`` holding ``body`` as JSON, or raise
+    :class:`FileExistsError` if it exists — the log's commit primitive.
+    The fsynced tmp + ``os.link`` is as exclusive as ``open(target,
+    "x")``, but no reader ever sees the name before its bytes are
+    complete. Without hard links it degrades to ``O_CREAT|O_EXCL`` +
+    write + fsync (exclusivity holds; the no-torn-read guarantee
+    narrows to the create-to-write window), and a write failure there
+    retracts the published name so a torn file never poisons reads or
+    makes a retry misreport a lost race."""
+    tmp = f"{target}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        _dump_durable(fh, body)
+    try:
+        os.link(tmp, target)
+    except OSError as exc:
+        if exc.errno not in _LINK_UNSUPPORTED:
+            raise               # FileExistsError = lost race; or a real error
+        fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        try:
+            with os.fdopen(fd, "w") as fh:
+                _dump_durable(fh, body)
+        except BaseException:
+            try:
+                os.unlink(target)
+            except OSError:
+                pass
+            raise
+    finally:
+        os.unlink(tmp)
 
 
 def _stat_value(v):
@@ -345,11 +402,8 @@ class LogTable:
         os.makedirs(t._data_path, exist_ok=True)
         meta = os.path.join(t._log_path, "_meta.json")
         if not os.path.exists(meta):
-            tmp = meta + f".{uuid.uuid4().hex}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"partition_by": partition_by or [],
-                           "stats_columns": stats_columns or []}, fh)
-            os.replace(tmp, meta)
+            _replace_json(meta, {"partition_by": partition_by or [],
+                                 "stats_columns": stats_columns or []})
         return t
 
     @property
@@ -394,11 +448,7 @@ class LogTable:
         if not types:
             return
         meta["partition_types"] = types
-        target = os.path.join(self._log_path, "_meta.json")
-        tmp = f"{target}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(tmp, target)
+        _replace_json(os.path.join(self._log_path, "_meta.json"), meta)
 
     def snapshots(self) -> list[Snapshot]:
         """All commits in log order (the ``snapshots`` metadata table,
@@ -521,8 +571,7 @@ class LogTable:
                         # stats_column of such a type must degrade to
                         # "no stats for this file" (pruning is an
                         # optimization), never crash the COMMIT that
-                        # harvests it (round-12 randomized pruning
-                        # harness caught an append dying here)
+                        # harvests it
                         st = None
                     if st is None:
                         ok = nulls_ok = False
@@ -547,7 +596,7 @@ class LogTable:
                         # the .min/.max ACCESSORS for types it cannot
                         # cast statistics for — same degrade rule:
                         # skip the column's stats, never crash the
-                        # commit (round-12 randomized pruning harness)
+                        # commit
                         ok = False
                         continue
                     if mn is None or mx is None:
@@ -569,8 +618,8 @@ class LogTable:
                 remove: list[str], parent_id: int | None = None,
                 txn: str | None = None, expected_base=_UNSET,
                 _retries: int = 20) -> int:
-        """Atomically append one commit; O_EXCL create means two racing
-        writers of the same sequence number cannot both win.
+        """Atomically append one commit; the exclusive publish means two
+        racing writers of the same sequence number cannot both win.
 
         Optimistic concurrency (Delta's conflict rules, simplified):
         an APPEND has no read-dependency, so losing a race just means
@@ -617,8 +666,7 @@ class LogTable:
                     "stats": stats}
             target = os.path.join(self._log_path, f"{seq:020d}.json")
             try:
-                with open(target, "x") as fh:   # exclusive create = commit
-                    json.dump(body, fh)
+                _publish_exclusive(target, body)
                 return seq
             except FileExistsError:
                 if validate_base:
@@ -817,12 +865,11 @@ class LogTable:
         is both lossy (a fractional-seconds timestamp value falls back
         to string; '0001' in a string-typed partition becomes the
         double 1.0, silently corrupting the value AND dodging a
-        residual equality filter) and file-list-dependent (the round-12
-        randomized pruning harness caught a pruned read and an
-        unpruned read of the same table returning DIFFERENT types for
-        the same column). An explicit schema makes Spark parse each
-        dir string directly as the declared type — exact for strings
-        (no numeric reinterpretation), exact for fractional
+        residual equality filter) and file-list-dependent (a pruned
+        read and an unpruned read of the same table can return
+        DIFFERENT types for the same column). An explicit schema makes
+        Spark parse each dir string directly as the declared type —
+        exact for strings (no numeric reinterpretation), exact for fractional
         timestamps — and identical for every file subset. Partition
         pushdown is unaffected (partition columns are still recognized
         from the dirs). Tables created before types were stamped keep
@@ -874,6 +921,26 @@ class LogTable:
         df = self._read_files(rel, merge_schema)
         return self._apply_filters(df, filters) if filters else df
 
+    def _commits_between(self, start_snapshot_id: int | None,
+                         end_snapshot_id: int | None) -> list[Snapshot]:
+        """Commits strictly after ``start`` up to and including ``end``
+        (default latest) along ``end``'s parent chain; ``start=None``
+        means from the root. :class:`BrokenLineageError` when the table
+        is empty or ``start`` is not an ancestor of ``end``."""
+        if end_snapshot_id is None:
+            end_snapshot_id = self.latest_snapshot_id()
+        if end_snapshot_id is None:
+            raise BrokenLineageError("empty table has no snapshots")
+        chain = self._chain(end_snapshot_id)
+        if start_snapshot_id is None:
+            return chain
+        ids = [s.snapshot_id for s in chain]
+        if start_snapshot_id not in ids:
+            raise BrokenLineageError(
+                f"snapshot {start_snapshot_id} is not an ancestor of "
+                f"{end_snapshot_id}")
+        return chain[ids.index(start_snapshot_id) + 1:]
+
     def read_increment(self, start_snapshot_id: int | None,
                        end_snapshot_id: int | None = None,
                        filters: list[tuple] | None = None) -> DataFrame:
@@ -885,22 +952,7 @@ class LogTable:
         overwrite), in which case "rows added since" is not
         well-defined and the caller must replan a full read, exactly
         like the reference's broken-ancestry fallback."""
-        if end_snapshot_id is None:
-            end_snapshot_id = self.latest_snapshot_id()
-        if end_snapshot_id is None:
-            raise BrokenLineageError("empty table has no snapshots")
-        chain = self._chain(end_snapshot_id)
-        if start_snapshot_id is None:
-            start_idx = 0
-        else:
-            idx = [i for i, s in enumerate(chain)
-                   if s.snapshot_id == start_snapshot_id]
-            if not idx:
-                raise BrokenLineageError(
-                    f"snapshot {start_snapshot_id} is not an ancestor of "
-                    f"{end_snapshot_id}")
-            start_idx = idx[0] + 1
-        inc = chain[start_idx:]
+        inc = self._commits_between(start_snapshot_id, end_snapshot_id)
         non_append = [s for s in inc if s.operation != "append"]
         if non_append:
             raise BrokenLineageError(
@@ -946,24 +998,9 @@ class LogTable:
         free to delete once they leave the current timeline — read
         the feed within the vacuum retention window, or vacuum with a
         retention that covers your longest feed lag."""
-        if end_snapshot_id is None:
-            end_snapshot_id = self.latest_snapshot_id()
-        if end_snapshot_id is None:
-            raise BrokenLineageError("empty table has no snapshots")
-        chain = self._chain(end_snapshot_id)
-        if start_snapshot_id is None:
-            start_idx = 0
-        else:
-            idx = [i for i, s in enumerate(chain)
-                   if s.snapshot_id == start_snapshot_id]
-            if not idx:
-                raise BrokenLineageError(
-                    f"snapshot {start_snapshot_id} is not an ancestor "
-                    f"of {end_snapshot_id}")
-            start_idx = idx[0] + 1
         added: set[str] = set()
         removed: set[str] = set()
-        for s in chain[start_idx:]:
+        for s in self._commits_between(start_snapshot_id, end_snapshot_id):
             for f in s.add:
                 # re-added after removal in range -> cancels
                 if f in removed:
@@ -1008,8 +1045,7 @@ class LogTable:
                     # bits — it can emit both 'c=0.0' and 'c=-0.0'
                     # dirs for values every query treats as one key,
                     # and COLLIDES with itself when one task writes
-                    # both (FileAlreadyExistsException — caught by the
-                    # round-12 randomized pruning harness). +0.0
+                    # both (FileAlreadyExistsException). +0.0
                     # canonicalizes -0.0 to 0.0 per IEEE 754 and
                     # leaves every other value (NaN, infinities)
                     # bit-identical.
@@ -1296,21 +1332,22 @@ class LogTable:
         adds = self._stage_write(df)
         return self._commit("replace", adds, live, expected_base=base)
 
-    def rewrite(self, df: DataFrame, target_files: int = 1) -> int:
+    def rewrite(self, df: DataFrame, base: int | None,
+                target_files: int = 1) -> int:
         """Atomic whole-table CONTENT rewrite: replace the live file
-        set with ``df`` as ONE ``replace`` commit. Where
-        :meth:`compact` preserves rows and only merges files, rewrite
-        changes the row set — the roll-up compaction an
-        additive-delta ledger needs (sum the deltas, replace the
-        deltas with their sums: row count drops to the distinct-key
-        count, the group-sum view is unchanged). ``df`` may be derived
-        from reading this table — staging writes the new files while
-        the live set is still intact, and the commit validates
-        ``expected_base`` so a concurrent commit fails this rewrite
-        instead of losing rows. Readers pinned to older snapshots are
-        untouched; incremental readers crossing the replace commit
-        replan a full read, exactly as for :meth:`compact`."""
-        base = self.latest_snapshot_id()
+        set of snapshot ``base`` with ``df`` as ONE ``replace`` commit.
+        Where :meth:`compact` preserves rows and only merges files,
+        rewrite changes the row set — a delta ledger's roll-up (the
+        deltas replaced by their sums) or a state table's next version.
+
+        ``base`` is the snapshot ``df`` was derived from (``None`` for
+        an empty table): derive from ``read(base)`` and pass the same
+        id. The commit validates it, so a commit that landed after that
+        read — even before ``rewrite`` was called — fails this rewrite
+        with :class:`ConcurrentCommitError` instead of silently losing
+        its rows. Readers pinned to older snapshots are untouched;
+        incremental readers crossing the replace commit replan a full
+        read, exactly as for :meth:`compact`."""
         live = self.files(base)
         adds = self._stage_write(df.repartition(target_files))
         return self._commit("replace", adds, live, expected_base=base)
@@ -1370,16 +1407,9 @@ class LogTable:
                 "operation": "checkpoint", "add": sorted(full),
                 "remove": [], "txn": oldest.txn,
                 "stats": {f: stats.get(f, {}) for f in full}}
-        target = os.path.join(self._log_path,
-                              f"{oldest.snapshot_id:020d}.json")
-        # uuid-suffixed tmp, like every other tmp write in this file:
-        # two concurrent expires sharing a bare '.tmp' name could
-        # publish one writer's half-written bytes via the other's
-        # os.replace, bricking the log
-        tmp = f"{target}.{uuid.uuid4().hex}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-        os.replace(tmp, target)
+        _replace_json(os.path.join(self._log_path,
+                                   f"{oldest.snapshot_id:020d}.json"),
+                      body)
         n = 0
         for snap in expired:
             p = os.path.join(self._log_path,
@@ -1393,7 +1423,8 @@ class LogTable:
 
     def vacuum(self, retention_seconds: float = 24 * 3600.0) -> int:
         """Delete data files unreferenced by the CURRENT timeline (all
-        snapshots reachable from latest). Returns files deleted.
+        snapshots reachable from latest), and orphaned ``_txn_log``
+        publish tmp files. Returns files deleted.
         Time travel to dead forks stops working — as with any
         format's vacuum, retention is a policy decision.
 
@@ -1402,7 +1433,8 @@ class LogTable:
         the commit publishes them, so a zero-retention vacuum racing an
         in-flight append/merge would delete the writer's staged files
         and the winning commit would then reference nonexistent files,
-        permanently breaking reads of that snapshot. The window is the
+        permanently breaking reads of that snapshot; a young publish
+        tmp may likewise be a commit about to link. The window is the
         same guard as Delta VACUUM's retention period; pass ``0`` only
         when no concurrent writer can exist."""
         latest = self.latest_snapshot_id()
@@ -1411,6 +1443,19 @@ class LogTable:
         keep = {f for s in self._chain(latest) for f in s.add}
         cutoff = time.time() - retention_seconds
         n = 0
+        for f in os.listdir(self._log_path):
+            # a publish tmp outlives its commit only when the writer
+            # died between the tmp write and the link
+            if not f.endswith(".tmp"):
+                continue
+            p = os.path.join(self._log_path, f)
+            try:
+                if os.path.getmtime(p) > cutoff:
+                    continue               # possibly a commit in flight
+                os.remove(p)
+            except FileNotFoundError:
+                continue
+            n += 1
         for root, _dirs, fs in os.walk(self._data_path):
             for f in fs:
                 p = os.path.join(root, f)

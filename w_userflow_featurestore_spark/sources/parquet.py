@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from w_userflow_featurestore_spark.conf import session_cache
+
 # Timestamp columns in the fixture tables. They are stored as parquet
 # TIMESTAMP(NANOS); with spark.sql.legacy.parquet.nanosAsLong=true they
 # arrive as nanosecond BIGINTs and are normalized here to TimestampType at
@@ -38,16 +40,13 @@ _NANO_TS_COLS = {
     "lineitem": ["l_shipdate"],
 }
 
-#: (session id, table path) -> inferred StructType. Plan METADATA only
-#: (what Spark's own footer inference would return), never row data or
-#: results — the same class as _FANOUT_PARTS_MEMO below. Re-inferring
+#: session_cache key: {table path: inferred StructType}. Re-inferring
 #: the schema costs a footer read + datasource resolution per call
-#: (~40-80 ms driver time, measured round 13 guide §7.3); pinning the
-#: memoized schema via .schema(...) skips it while producing the
-#: IDENTICAL relation (fixture tables are immutable within a session;
-#: a regenerated fixture needs a new session, as with Spark's own
-#: FileStatusCache). Bounded: one StructType per table per process.
-_SCHEMA_MEMO: dict[tuple[int, str], T.StructType] = {}
+#: (~40-80 ms per call); pinning the memoized schema via .schema(...)
+#: skips it while producing the IDENTICAL relation (fixture tables are
+#: immutable within a session; a regenerated fixture needs a new
+#: session, as with Spark's own FileStatusCache).
+_SCHEMA_MEMO = "parquet.schema"
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str,
@@ -73,11 +72,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     Spark's vectorized reader rejects parquet TIMESTAMP(NANOS).)
     """
     path = f"{sf_dir}/{name}.parquet"
-    key = (id(spark), path)
-    schema = _SCHEMA_MEMO.get(key)
+    memo = session_cache(spark).setdefault(_SCHEMA_MEMO, {})
+    schema = memo.get(path)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
+        memo[path] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     if ts_filter is not None:
@@ -121,12 +120,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     return df
 
 
-#: (session id, analyzed-plan semanticHash) -> partition-count estimate.
-#: Plan METADATA only (how many splits a scan yields), never row data or
-#: query results — the same class of information Spark's own
-#: FileStatusCache keeps per session. Bounded: one small int per distinct
-#: plan shape per process.
-_FANOUT_PARTS_MEMO: dict[tuple[int, int], int] = {}
+#: session_cache key: {analyzed-plan semanticHash: partition-count
+#: estimate}. Plan METADATA only (how many splits a scan yields).
+_FANOUT_PARTS_MEMO = "parquet.fanout_parts"
 
 
 def _conf_bytes(v: str) -> int:
@@ -143,7 +139,7 @@ def _estimated_scan_splits(df: DataFrame) -> int | None:
 
     ``df.rdd.getNumPartitions()`` answers this exactly but runs full
     physical planning + RDD DAG construction of the whole subtree —
-    ~100 ms of driver time per call (measured, guide §7.3 class), paid
+    ~100 ms per call, paid
     inside every timed query that calls :func:`fan_out`. The estimate
     instead lists the frame's input files (analysis-only metadata call)
     and replays Spark's split formula (``FilePartition``: splits ≈
@@ -232,7 +228,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     The partition count is read through a memoized file-size estimate
     (:func:`_estimated_scan_splits`) rather than
     ``df.rdd.getNumPartitions()``: the exact check runs the physical
-    planner over the subtree on the driver (~100 ms/call, guide §7.3),
+    planner over the subtree (~100 ms/call),
     which dominated sub-second queries that fan out two or three
     inputs. The decision is identical — both compare the scan's split
     count against the target — and the memo key is the analyzed plan's
@@ -241,18 +237,19 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
+    memo = session_cache(spark).setdefault(_FANOUT_PARTS_MEMO, {})
     try:
-        key = (id(spark), df.semanticHash())
+        key = df.semanticHash()
     except Exception:  # noqa: BLE001 — unanalyzable: size it the slow way
         key = None
-    if key is not None and key in _FANOUT_PARTS_MEMO:
-        n = _FANOUT_PARTS_MEMO[key]
+    if key is not None and key in memo:
+        n = memo[key]
     else:
         n = _estimated_scan_splits(df)
         if n is None:
             n = df.rdd.getNumPartitions()
         if key is not None:
-            _FANOUT_PARTS_MEMO[key] = n
+            memo[key] = n
     if n >= target:
         return df
     return df.repartition(target)

@@ -293,8 +293,9 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
             t.append(inc, txn=f"drift:{checkpoint}:{batch_id}")
             if compact_every and (batch_id + 1) % compact_every == 0:
                 # roll-up: deltas -> their group-sum, one replace commit
-                t.rewrite(read_drift_ledger(batch.sparkSession,
-                                            table_path))
+                # validated against the snapshot the sum was read from
+                base = t.latest_snapshot_id()
+                t.rewrite(_drift_sums(t.read(base)), base)
 
     writer = (events.writeStream
               .foreachBatch(_sink)
@@ -311,8 +312,11 @@ def read_drift_ledger(spark: SparkSession, table_path: str) -> DataFrame:
     ``streaming_drift_monitor`` delta table: sum the per-batch deltas —
     equals one groupBy-count over the full ingested event history."""
     from w_userflow_featurestore_spark.sources import LogTable
-    return (LogTable(spark, table_path).read()
-            .groupBy("datetime", "category")
+    return _drift_sums(LogTable(spark, table_path).read())
+
+
+def _drift_sums(deltas: DataFrame) -> DataFrame:
+    return (deltas.groupBy("datetime", "category")
             .agg(F.sum("n").cast("long").alias("n")))
 
 
@@ -479,7 +483,7 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
     the scores land in an append-only LogTable, and the batch's own
     shingle-df counts append to a DELTA ledger. Both appends carry a
     per-batch txn token, so checkpoint recovery's re-delivered batch is
-    a no-op at both tables — exactly-once without a pointer protocol.
+    a no-op at both tables — exactly-once from the tokens alone.
 
     The ledger is stored as additive DELTAS (one tiny file per batch,
     ``streaming_drift_monitor``'s discipline): per-doc-distinct shingle
@@ -491,8 +495,8 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
     against itself twice (the score-then-ingest order the batch runner
     documents).
 
-    ROLL-UP COMPACTION (round-9 ADVICE: without it, per-batch cost and
-    file count grow unboundedly with stream lifetime): every
+    ROLL-UP COMPACTION (without it, per-batch cost and file count grow
+    unboundedly with stream lifetime): every
     ``compact_every`` batches the sink replaces the accumulated delta
     rows with their group-sum in ONE atomic ``LogTable.rewrite``
     commit — the summed view is unchanged by construction (sum of
@@ -538,7 +542,9 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
                   txn=f"nov-ledger:{checkpoint}:{batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
             # roll-up: deltas -> their group-sum, one replace commit
-            lt.rewrite(read_streaming_novelty_ledger(spark, ledger_path))
+            # validated against the snapshot the sum was read from
+            base = lt.latest_snapshot_id()
+            lt.rewrite(_novelty_sums(lt.read(base)), base)
 
     writer = (docs.writeStream
               .foreachBatch(_sink)
@@ -556,6 +562,9 @@ def read_streaming_novelty_ledger(spark: SparkSession,
     ``streaming_novelty_monitor`` delta table: sum the per-batch
     deltas — equals ``shingle_ledger`` over everything ingested."""
     from w_userflow_featurestore_spark.sources import LogTable
-    return (LogTable(spark, ledger_path).read()
-            .groupBy("sh")
+    return _novelty_sums(LogTable(spark, ledger_path).read())
+
+
+def _novelty_sums(deltas: DataFrame) -> DataFrame:
+    return (deltas.groupBy("sh")
             .agg(F.sum("n_docs").cast("long").alias("n_docs")))
