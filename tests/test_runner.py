@@ -178,8 +178,9 @@ def test_open_tail_lookback_propagates_read_failures(spark, tmp_path):
     inc = spark.read.parquet(events)
 
     # missing table -> first-run path, increment passes through
-    out = _extend_with_open_tails(spark, inc, silver, events, "parquet")
-    assert out.count() == inc.count()
+    out, retire = _extend_with_open_tails(spark, inc, silver, events,
+                                          "parquet")
+    assert out.count() == inc.count() and retire is None
 
     # corrupted table (a non-parquet file at the path) -> must raise
     import os
@@ -188,19 +189,191 @@ def test_open_tail_lookback_propagates_read_failures(spark, tmp_path):
         fh.write("this is not parquet")
     with _pt.raises(Exception) as ei:
         _extend_with_open_tails(
-            spark, inc, silver, events, "parquet").count()
+            spark, inc, silver, events, "parquet")[0].count()
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
     # LogTable format: zero-commit table -> first-run; corrupt log -> raise
     logdir = str(tmp_path / "logsilver")
-    out = _extend_with_open_tails(spark, inc, logdir, events, "log")
-    assert out.count() == inc.count()
+    out, retire = _extend_with_open_tails(spark, inc, logdir, events, "log")
+    assert out.count() == inc.count() and retire is None
     os.makedirs(os.path.join(logdir, "_txn_log"), exist_ok=True)
     with open(os.path.join(logdir, "_txn_log", "00000000000000000001.json"),
               "w") as fh:
         fh.write("{corrupt json")
     with _pt.raises(Exception):
-        _extend_with_open_tails(spark, inc, logdir, events, "log").count()
+        _extend_with_open_tails(spark, inc, logdir, events, "log")[0].count()
+
+
+def _land(spark, path, data, fmt):
+    """Deliver ``data`` to an events table in ``fmt``: a parquet
+    directory (IncrementalPlanner) or a LogTable (LakehousePlanner)."""
+    if fmt == "log":
+        from w_userflow_featurestore_spark.sources import LogTable
+        LogTable.create(spark, path).append(
+            spark.createDataFrame(data, EVENTS_DDL))
+    else:
+        _write(spark, path, data)
+
+
+def _read_silver(spark, path, fmt):
+    if fmt == "log":
+        from w_userflow_featurestore_spark.sources import LogTable
+        return LogTable(spark, path).read()
+    return spark.read.parquet(path)
+
+
+def _incremental_and_full(spark, tmp_path, slices, fmt):
+    """Run silver once per arrival slice, and once over every delivered
+    event; returns the incremental silver frame and both tables as
+    sorted row lists."""
+    events, silver, ref = (str(tmp_path / p)
+                           for p in ("events", "silver", "silver_ref"))
+    for data in slices:
+        _land(spark, events, data, fmt)
+        run_silver(spark, events, silver, str(tmp_path / "ledger.json"),
+                   NOW, table_format=fmt)
+    run_silver(spark, events, ref, str(tmp_path / "ledger_ref.json"), NOW,
+               table_format=fmt)
+    inc = _read_silver(spark, silver, fmt)
+    full = _read_silver(spark, ref, fmt)
+    cols = sorted(full.columns)
+    return inc, rows(inc, *cols), rows(full, *cols)
+
+
+#: (first delivery, late delivery) pairs where the late event changes a
+#: stored session's start, and with it the content-derived session id.
+SUPERSEDED = {
+    # within the gap before the session's start, on the same day: the
+    # 10:00 session becomes the 09:50 session
+    "same_day": (
+        [_ev(1, "2024-01-01 10:00:00", 1), _ev(2, "2024-01-01 10:05:00", 1),
+         _ev(3, "2024-01-01 12:00:00", 2)],
+        [_ev(4, "2024-01-01 09:50:00", 1)]),
+    # across midnight: the session moves to the previous day and leaves
+    # its old day partition with no rows
+    "across_midnight": (
+        [_ev(1, "2024-01-02 00:05:00", 1), _ev(2, "2024-01-02 00:10:00", 1),
+         _ev(3, "2024-01-01 12:00:00", 2)],
+        [_ev(4, "2024-01-01 23:55:00", 1)]),
+    # bridging: two sessions 45 minutes apart fuse under the first id,
+    # and the second session's row must go
+    "bridging": (
+        [_ev(1, "2024-01-01 10:00:00", 1), _ev(2, "2024-01-01 10:05:00", 1),
+         _ev(3, "2024-01-01 10:50:00", 1), _ev(4, "2024-01-01 10:55:00", 1),
+         _ev(5, "2024-01-01 10:30:00", 2)],
+        [_ev(6, "2024-01-01 10:28:00", 1)]),
+}
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "log"])
+@pytest.mark.parametrize("case", sorted(SUPERSEDED))
+def test_incremental_silver_retires_superseded_sessions(
+        spark, tmp_path, case, fmt):
+    """A late event that moves a session's start changes its id; the
+    incremental merge must retire the stored session it re-derived, so
+    silver equals a full recompute: one session for user 1."""
+    import os
+
+    inc, got, want = _incremental_and_full(spark, tmp_path,
+                                           SUPERSEDED[case], fmt)
+    assert got == want
+    assert inc.where("user_id = 1").count() == 1
+    if fmt == "parquet" and case == "across_midnight":
+        assert not os.path.exists(
+            os.path.join(str(tmp_path / "silver"), "datetime=2024-01-02"))
+
+
+def _random_arrivals(seed: int, n_slices: int = 4):
+    """A seeded event set cut into arrival slices by time, with some
+    session heads and interior events delivered late and some events
+    delivered twice. Also returns the late session heads that land
+    after the rest of their session (the start-moving case)."""
+    import random
+
+    rng = random.Random(seed)
+    sessions, eid = [], 0
+    for uid in range(1, 8):
+        t = dt.datetime(2024, 1, 1, 20) + dt.timedelta(
+            minutes=rng.randrange(240))
+        for _ in range(rng.randint(2, 4)):
+            sess = []
+            for _ in range(rng.randint(2, 5)):
+                eid += 1
+                sess.append(_ev(eid, t.isoformat(sep=" "), uid,
+                                rng.choice(["view", "click", "purchase"]),
+                                float(rng.randint(1, 50))))
+                # a missing interior event can open a gap over 30 min
+                t += dt.timedelta(minutes=rng.randint(1, 25))
+            sessions.append(sess)
+            t += dt.timedelta(minutes=rng.randint(31, 120))
+    ordered = sorted((e for s in sessions for e in s), key=lambda e: e[1])
+    size = -(-len(ordered) // n_slices)
+    slot = {e[0]: i // size for i, e in enumerate(ordered)}
+    heads = [s[0] for s in sessions]
+    interior = [e for s in sessions for e in s[1:-1]]
+    late = rng.sample(heads, 3) + rng.sample(interior, 3)
+    for e in late:
+        slot[e[0]] = min(n_slices - 1, slot[e[0]] + rng.randint(1, 2))
+    slices = [[e for e in ordered if slot[e[0]] == i]
+              for i in range(n_slices)]
+    for e in rng.sample(ordered, 4):          # re-deliveries
+        slices[min(n_slices - 1, slot[e[0]] + 1)].append(e)
+    moved = [s[0] for s in sessions
+             if s[0] in late and slot[s[0][0]] > slot[s[1][0]]]
+    return slices, moved
+
+
+@pytest.mark.parametrize("fmt,seed", [("parquet", 3), ("parquet", 11),
+                                      ("log", 5)])
+def test_incremental_silver_equals_full_on_random_arrivals(
+        spark, tmp_path, fmt, seed):
+    """Incremental run_silver over seeded arrival slices (duplicates,
+    interior late events, start-moving late events) equals one full
+    run_silver. Every row also keeps its day partition equal to the
+    date of the start second inside its id — the property that lets
+    the silver merge key on (session_id, datetime) with no key ever
+    changing partition."""
+    from pyspark.sql import functions as F
+
+    slices, moved = _random_arrivals(seed)
+    assert moved, "the seed must deliver a session head late"
+    inc, got, want = _incremental_and_full(spark, tmp_path, slices, fmt)
+    assert got == want
+    start_day = F.to_date(F.timestamp_seconds(
+        F.col("session_id") % F.lit(10_000_000_000)))
+    assert inc.where(F.col("datetime") != start_day).count() == 0
+
+
+@pytest.mark.parametrize("fmt,budget", [("parquet", 17), ("log", 21)])
+def test_incremental_silver_tick_job_budget(spark, tmp_path, fmt, budget):
+    """One steady-state incremental tick with an open-tail lookback runs
+    at most ``budget`` Spark jobs. A second scan of silver for the
+    lookback, or a partition-blind victim scan and emptied-partition
+    collect in the parquet merge, adds jobs and fails this."""
+    events, silver, ledger = (str(tmp_path / p)
+                              for p in ("events", "silver", "ledger.json"))
+    _land(spark, events, [
+        _ev(i, f"2024-01-0{1 + i % 3} {10 + i % 8}:{i % 6}0:00", i % 7)
+        for i in range(40)], fmt)
+    run_silver(spark, events, silver, ledger, NOW, table_format=fmt)
+    for tick in range(3):
+        # each tick extends user 1's day-3 session (last event 15:50)
+        # and opens a session for a new user
+        _land(spark, events, [
+            _ev(100 + tick, f"2024-01-03 16:{10 + 10 * tick}:00", 1),
+            _ev(200 + tick, f"2024-01-03 0{tick}:00:00", 9)], fmt)
+        group = f"silver-tick-budget-{fmt}-{tick}"
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            r = run_silver(spark, events, silver, ledger, NOW,
+                           table_format=fmt)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert r.mode == "incremental" and r.input_rows > 2   # lookback
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= budget, jobs
 
 
 def test_split_ledger_persist_reload_extend_three_batches(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF0001, rows
@@ -218,10 +219,12 @@ def test_merge_upsert_retires_key_moved_across_partitions(spark, tmp_path):
     retire the key's old row even though its partition is absent from
     the staged batch — parity with LogTable.merge, whose file-granular
     victim scan is partition-blind. Before the victim-partition scan
-    landed, the old row survived and the merge yielded a duplicate key
-    (the runner's silver merge — keys=[session_id],
-    partition_by=[datetime] — hits exactly this when a late earlier
-    event shifts a session's start date)."""
+    landed, the old row survived and the merge yielded a duplicate key.
+    Any caller whose merge key omits the partition column can move a
+    key this way. The runner's silver merge cannot: it keys on
+    (session_id, datetime), and a late event that shifts a session's
+    start changes the content-derived session id instead, so the old
+    session is retired by key (``retire``), not moved."""
     path = str(tmp_path / "t")
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
     merge_upsert(spark, path, _frame(spark, [(1, d1, "a"), (2, d1, "b")]),
@@ -248,6 +251,34 @@ def test_merge_upsert_null_partition_keeps_unmatched_rows(spark, tmp_path):
     merge_upsert(spark, path, staged, keys=["k"], partition_by=["p"])
     got = rows(spark.read.parquet(path), "k", "v")
     assert got == [(1, "a"), (2, "B")]
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "log"])
+def test_merge_upsert_retire_deletes_unstaged_keys_and_empty_partitions(
+        spark, tmp_path, fmt):
+    """``retire`` deletes the target rows whose key the staged batch
+    does not carry; a retired key that is also staged is updated, and a
+    partition left with no rows is gone (parquet: its directory)."""
+    import os
+
+    from w_userflow_featurestore_spark.sources import LogTable
+
+    path = str(tmp_path / "t")
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    kw = dict(keys=["k", "datetime"], partition_by=["datetime"],
+              format="log" if fmt == "log" else "auto")
+    merge_upsert(spark, path,
+                 _frame(spark, [(1, d1, "a"), (2, d1, "b"), (3, d2, "c")]),
+                 **kw)
+    merge_upsert(spark, path, _frame(spark, [(2, d1, "B"), (4, d1, "d")]),
+                 retire=_frame(spark, [(2, d1, None), (3, d2, None)]),
+                 **kw)
+    got = (LogTable(spark, path).read() if fmt == "log"
+           else spark.read.parquet(path))
+    assert rows(got, "k", "datetime", "v") == [
+        (1, d1, "a"), (2, d1, "B"), (4, d1, "d")]
+    if fmt == "parquet":
+        assert not os.path.exists(os.path.join(path, "datetime=2024-01-02"))
 
 
 def test_compact_partitions_compacts_the_null_partition(spark, tmp_path):
@@ -476,6 +507,24 @@ def test_read_table_schema_memo_pins_identical_relation(spark):
     # pruned variants still push down through the pinned schema
     pr = read_table(spark, SF0001, "events", columns=["event_id"])
     assert pr.columns == ["event_id"]
+
+
+def test_read_table_schema_memo_follows_a_rewritten_table(spark, tmp_path):
+    """A table rewritten at the same path with a different column type
+    (as a randomized test rewrites its instance between examples) must
+    be read with its new schema, not the memoized one: the stale INT
+    schema fails the scan of a DOUBLE column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "bal": [10, 20]}), path)
+    assert rows(read_table(spark, str(tmp_path), "t"), "bal") == [
+        (10,), (20,)]
+    pq.write_table(pa.table({"k": [1, 2], "bal": [1.5, None]}), path)
+    got = read_table(spark, str(tmp_path), "t")
+    assert str(got.schema["bal"].dataType) == "DoubleType()"
+    assert rows(got, "bal") == [(1.5,), (None,)]
 
 
 def test_session_cache_entries_die_with_their_session(spark):

@@ -176,6 +176,35 @@ def test_incremental_planner_broken_lineage_full_reread(spark, tmp_path):
     assert rows(plan.df, "event_id") == [(2,)]
 
 
+def test_incremental_planner_plans_a_50k_file_ledger_in_linear_time(
+        spark, tmp_path, monkeypatch):
+    """A bronze table fed every 10 minutes reaches tens of thousands of
+    files. Planning over ~50 k recorded files plus one new file is one
+    set lookup per listed file; rebuilding the recorded set for every
+    listed file (O(files²)) takes over a minute here."""
+    import time
+
+    from w_userflow_featurestore_spark import incremental
+
+    table = str(tmp_path / "t")
+    _write_events(spark, table, [_batch(1, "2024-01-01 10:00:00", 1)])
+    real = incremental._list_data_files(table)
+    recorded = [f"datetime=2024-01-01/part-{i:05d}.parquet"
+                for i in range(50_000)]
+    p = IncrementalPlanner(table, str(tmp_path / "ledger.json"))
+    monkeypatch.setattr(incremental, "_list_data_files",
+                        lambda path: recorded)
+    p.plan_read(spark).commit()
+    monkeypatch.setattr(incremental, "_list_data_files",
+                        lambda path: sorted(recorded + real))
+    t0 = time.perf_counter()
+    plan = p.plan_read(spark)
+    elapsed = time.perf_counter() - t0
+    assert plan.mode == "incremental" and plan.reason == "1 new file(s)"
+    assert rows(plan.df, "event_id") == [(1,)]
+    assert elapsed < 10.0, elapsed
+
+
 def test_stateful_sessionize_emits_classified_closed_sessions(spark, tmp_path):
     from w_userflow_featurestore_spark.operators.sessionize import sessionize
     from w_userflow_featurestore_spark.streaming import stateful_sessionize

@@ -114,14 +114,15 @@ class IncrementalPlanner:
         if recorded is None:
             return ReadPlan("full", "no ledger (first run)",
                             full_df(), commit)
-        missing = set(recorded) - set(current)
+        seen = set(recorded)
+        missing = seen.difference(current)
         if missing:
             # a recorded file vanished: history was rewritten (compaction,
             # rollback, vacuum) — the increment is not well-defined
             return ReadPlan("full",
                             f"lineage broken: {len(missing)} recorded "
                             f"file(s) missing", full_df(), commit)
-        new = [f for f in current if f not in set(recorded)]
+        new = [f for f in current if f not in seen]
         if not new:
             return ReadPlan("empty", "no new files", None, commit)
         paths = [os.path.join(self.table_path, f) for f in new]

@@ -107,12 +107,25 @@ class SilverResult:
 
 def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
                             silver_path: str, events_path: str,
-                            table_format: str) -> DataFrame:
-    """run_silver's continuation lookback (see its docstring): union the
-    increment with the raw events of still-open tail sessions so
-    re-sessionization merges across the increment boundary. One
-    driver-side scalar (the earliest affected tail start — the bound
-    that makes the re-read prunable) is the only collect."""
+                            table_format: str,
+                            ) -> tuple[DataFrame, DataFrame | None]:
+    """run_silver's continuation lookback (see its docstring).
+
+    Returns ``(events, retire)``: the increment unioned with the raw
+    events of its users' open tail sessions, and the ``(session_id,
+    datetime)`` keys of the stored sessions those events re-derive
+    (None when no stored session qualifies).
+
+    A tail of user u is a stored session whose end_time lies within the
+    session gap of u's first new event; sessions of one user never
+    overlap, so these are exactly u's sessions starting at or after
+    ``_tail_start``, the earliest tail start. One eager pass
+    materializes them, one row per user (a few sessions each), and
+    observes the earliest tail start on the way. That scalar bounds
+    the events re-read (partition/stat-prunable), the per-user tail
+    start is a broadcast join, and the retire keys are the stored
+    sessions, so neither silver nor the increment is scanned again.
+    """
     from w_userflow_featurestore_spark.operators.sessionize import (
         DEFAULT_GAP_MS,
     )
@@ -128,45 +141,53 @@ def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
     # corruption instead of a visible failed run.
     try:
         if table_format == "log":
-            tails = LogTable(spark, silver_path).read()
+            silver = LogTable(spark, silver_path).read()
         else:
-            tails = spark.read.parquet(silver_path)
+            silver = spark.read.parquet(silver_path)
     except FileNotFoundError:  # LogTable dir never created
-        return increment
+        return increment, None
     except ValueError as exc:
         if "has no commits" not in str(exc):
             raise
-        return increment
+        return increment, None
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" not in str(exc) and \
                 "Path does not exist" not in str(exc):
             raise
-        return increment
+        return increment, None
     first_new = (increment.groupBy("user_id")
                  .agg(F.min("ts").alias("_new_ts")))
-    cand = (tails.join(first_new, "user_id")
-                 .where(F.col("end_time") >=
-                        F.col("_new_ts")
-                        - F.expr(f"interval {DEFAULT_GAP_MS // 1000} seconds"))
-                 .groupBy("user_id")
-                 .agg(F.min("start_time").alias("_tail_start")))
-    bound = cand.agg(F.min("_tail_start")).collect()[0][0]
+    earliest = Observation()
+    tails = (silver.join(first_new, "user_id")
+                   .where(F.col("end_time") >=
+                          F.col("_new_ts")
+                          - F.expr(f"interval {DEFAULT_GAP_MS // 1000} "
+                                   "seconds"))
+                   .groupBy("user_id")
+                   .agg(F.min("start_time").alias("_tail_start"),
+                        F.collect_list(F.struct("session_id", "datetime"))
+                        .alias("_sessions"))
+                   .observe(earliest, F.min("_tail_start").alias("ts"))
+                   .localCheckpoint(eager=True))
+    bound = earliest.get["ts"]
     if bound is None:
-        return increment
+        return increment, None
     if table_format == "log":
         hist = LogTable(spark, events_path).read(
             filters=[("ts", ">=", bound)])
     else:
-        hist = (spark.read.parquet(events_path)
+        # the increment's schema is the table's: no footer-read job
+        hist = (spark.read.schema(increment.schema).parquet(events_path)
                      .where(F.col("ts") >= F.lit(bound)))
     # the global bound only PRUNES the scan; membership is per-user —
     # ts >= that user's own qualifying tail start. A global-min cut
     # would admit another user's mid-session events without their
     # session head and re-sessionize them into a phantom fragment.
-    lookback = (hist.join(cand, "user_id")
+    starts = F.broadcast(tails.select("user_id", "_tail_start"))
+    lookback = (hist.join(starts, "user_id")
                     .where(F.col("ts") >= F.col("_tail_start")))
-    return increment.unionByName(
-        lookback.select(*increment.columns))
+    return (increment.unionByName(lookback.select(*increment.columns)),
+            tails.select(F.inline("_sessions")))
 
 
 def run_silver(spark: SparkSession, events_path: str, silver_path: str,
@@ -184,14 +205,31 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     those users only — a partition/stat-prunable time filter plus a
     user semi-join, never a full history re-read) are unioned back in.
     Re-sessionizing the union reproduces each tail session WITH its new
-    events; because session ids are content-derived (user + session
-    start second), the recomputed session carries the SAME id and the
-    MERGE replaces the stale tail row in place — all rollup columns,
-    including non-combinable ones like distinct item counts, come out
-    exact. The reference sidesteps this only because its events carry
-    client-assigned session ids (silver_user_session_events.py:146-186);
-    this engine derives sessions, so the continuation logic is the
-    price of gaps-and-islands semantics.
+    events, so all rollup columns, including non-combinable ones like
+    distinct item counts, come out exact. The reference sidesteps this
+    only because its events carry client-assigned session ids
+    (silver_user_session_events.py:146-186); this engine derives
+    sessions, so the continuation logic is the price of
+    gaps-and-islands semantics.
+
+    The tail pass runs once: ``_extend_with_open_tails`` materializes
+    the tails (one row per increment user) and derives the scan bound,
+    the per-user lookback join and the retire keys from that result.
+
+    MERGE key ``(session_id, datetime)``: a session id is user * 1e10 +
+    the epoch second of the session's start, and ``datetime`` is the
+    UTC date of that same start (conf.py pins the session time zone),
+    so no key can ever change partition. The merge therefore rewrites
+    only the day partitions its keys name, with no partition-blind
+    victim scan over the whole table.
+
+    Superseded sessions: a late event that moves a session's start (an
+    event in the gap before it, one across midnight, one bridging two
+    sessions) changes the content-derived id, so the re-derived session
+    does not replace the stored one by key. Every stored tail session
+    was re-derived from raw events, so the merge RETIRES all of them
+    and inserts what the re-sessionization produced; a day partition
+    left with no rows is removed.
 
     ``table_format="log"`` binds both ends to the transactional LogTable
     format: the events increment comes from real snapshot lineage
@@ -219,10 +257,10 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     if plan.mode == "empty":
         plan.commit()
         return SilverResult("empty", 0, 0)
-    raw = plan.df
+    raw, retire = plan.df, None
     if plan.mode == "incremental":
-        raw = _extend_with_open_tails(spark, raw, silver_path,
-                                      events_path, table_format)
+        raw, retire = _extend_with_open_tails(spark, raw, silver_path,
+                                              events_path, table_format)
     events = drop_null_keys(
         dedup_latest(raw, key=["event_id"], order_by=["ts"]),
         ["event_id", "user_id", "ts"])
@@ -239,8 +277,9 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     # (or double-scans, which would double-count the metrics) this subtree.
     sessions = sessions.localCheckpoint(eager=True)
     merge_upsert(spark, silver_path, sessions,
-                 keys=["session_id"], partition_by=["datetime"],
-                 format=table_format if table_format == "log" else "auto")
+                 keys=["session_id", "datetime"], partition_by=["datetime"],
+                 format=table_format if table_format == "log" else "auto",
+                 retire=retire)
     plan.commit()        # ledger moves only after the table write landed
     return SilverResult(plan.mode, int(obs_in.get["rows"]),
                         int(obs_out.get["rows"]))

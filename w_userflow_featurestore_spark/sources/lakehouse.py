@@ -1119,15 +1119,23 @@ class LogTable:
                             expected_base=base)
 
     def merge(self, staged: DataFrame, keys: list[str],
-              txn: str | None = None) -> int:
+              txn: str | None = None,
+              retire: DataFrame | None = None) -> int:
         """MERGE INTO: matched rows updated, new rows inserted, as
         file-granular copy-on-write (reference S9,
         silver_user_session_events.py:146-186 MERGEs on the session
         key). Only files that CONTAIN a matched key are rewritten:
 
           victims = files holding >=1 row whose key appears in staged
-          adds    = staged  ∪  (victim rows anti-join staged on keys)
+                    or in ``retire``
+          adds    = staged  ∪  (victim rows anti-join those keys)
           commit  = remove(victims) + add(new files)
+
+        ``retire`` (a frame holding the ``keys`` columns) deletes the
+        target rows with those keys unless ``staged`` re-inserts them
+        (``WHEN NOT MATCHED BY SOURCE ... THEN DELETE`` restricted to
+        those keys); a partition left with no rows simply has no live
+        files after the commit.
 
         Scale: the victim scan is one distributed semi-join over the
         file-path metadata column; unmatched files are untouched, so
@@ -1151,7 +1159,10 @@ class LogTable:
                                 expected_base=None, txn=txn)
         target = self._read_files(self.files(base)).withColumn(
             "_file", F.col("_metadata.file_path"))
-        key_rows = staged.select(*keys).distinct()
+        key_rows = staged.select(*keys)
+        if retire is not None:
+            key_rows = key_rows.unionByName(retire.select(*keys))
+        key_rows = key_rows.distinct()
         victims = (target.join(key_rows.hint("broadcast"), keys, "left_semi")
                    .select("_file").distinct().collect())
         from urllib.parse import unquote, urlparse

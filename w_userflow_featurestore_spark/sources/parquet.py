@@ -23,7 +23,7 @@ import os
 import re
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,13 +40,25 @@ _NANO_TS_COLS = {
     "lineitem": ["l_shipdate"],
 }
 
-#: session_cache key: {table path: inferred StructType}. Re-inferring
-#: the schema costs a footer read + datasource resolution per call
-#: (~40-80 ms per call); pinning the memoized schema via .schema(...)
-#: skips it while producing the IDENTICAL relation (fixture tables are
-#: immutable within a session; a regenerated fixture needs a new
-#: session, as with Spark's own FileStatusCache).
+#: session_cache key: {table path: (stat signature, inferred
+#: StructType)}. Re-inferring the schema costs a footer read +
+#: datasource resolution per call (~40-80 ms per call); pinning the
+#: memoized schema via .schema(...) skips it while producing the
+#: IDENTICAL relation. The entry is served only while the path's stat
+#: signature is unchanged: a table rewritten at the same path (a
+#: regenerated fixture, a randomized test instance) may change a
+#: column's type, and a stale pinned schema then fails the scan.
 _SCHEMA_MEMO = "parquet.schema"
+
+
+def _stat_signature(path: str) -> tuple | None:
+    """(mtime_ns, size) of a local table file or directory; None when
+    it cannot be stat'ed (e.g. a remote URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str,
@@ -73,12 +85,13 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     """
     path = f"{sf_dir}/{name}.parquet"
     memo = session_cache(spark).setdefault(_SCHEMA_MEMO, {})
-    schema = memo.get(path)
-    if schema is None:
+    sig = _stat_signature(path)
+    hit = memo.get(path)
+    if hit is None or hit[0] != sig:
         df = spark.read.parquet(path)
-        memo[path] = df.schema
+        memo[path] = (sig, df.schema)
     else:
-        df = spark.read.schema(schema).parquet(path)
+        df = spark.read.schema(hit[1]).parquet(path)
     if ts_filter is not None:
         c, lo, hi = ts_filter
         raw = df.schema[c].dataType
@@ -348,22 +361,45 @@ def _delete_partition_dirs(target_path: str, partition_by: list[str],
                 break
 
 
+def _part_set(types: dict) -> Column:
+    """Observed metric: the partitions a frame's rows land in. Each
+    value is cast to its merged type and rendered as text, so the sets
+    observed on the target read (inferred partition types) and on the
+    merged write compare the way the written directory names do: NULL
+    and NaN included, and an inferred int 1 equal to a written '1'."""
+    return F.collect_set(F.struct(*[
+        F.col(c).cast(t).cast("string") for c, t in types.items()
+    ])).alias("p")
+
+
+def _observed_parts(obs: Observation) -> set[tuple]:
+    """The partition tuples a ``_part_set`` observation collected."""
+    return {tuple(r) for r in obs.get["p"]}
+
+
 def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
                  keys: list[str], partition_by: list[str],
-                 format: str = "auto") -> None:
+                 format: str = "auto",
+                 retire: DataFrame | None = None) -> None:
     """MERGE INTO semantics (S9), format-dispatched.
 
     Reference: silver stages sessions as a temp view and MERGEs on the full
     session key — matched rows updated, new rows inserted
     (silver_user_session_events.py:146-186).
 
+    ``retire`` (a frame holding the ``keys`` columns) names target rows
+    to delete unless ``staged`` carries their key: MERGE's ``WHEN NOT
+    MATCHED BY SOURCE ... THEN DELETE``, restricted to those keys. The
+    silver runner retires the stored sessions it re-derived, whose ids
+    a late event may have changed.
+
     ``format="log"`` (or auto-detection of a LogTable at ``target_path``)
     uses the transactional commit-log format: file-granular copy-on-write
     with an atomic commit (sources/lakehouse.py). The plain-parquet
     fallback gets the same end state idempotently by rewriting only the
-    partitions the staged rows touch:
+    partitions the staged and retired keys touch:
 
-      new_target_partition = staged ∪ (target_partition ⟕anti staged on keys)
+      new_target_partition = staged ∪ (target_partition ⟕anti keys)
 
     The rewrite is scoped to affected partitions (same recovery unit as the
     reference's day partitions), so repeated runs converge.
@@ -372,16 +408,17 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
     if format == "log" or (format == "auto"
                            and LogTable.is_log_table(target_path)):
         LogTable.create(spark, target_path, partition_by) \
-            .merge(staged, keys)
+            .merge(staged, keys, retire=retire)
         return
     try:
         target = spark.read.parquet(target_path)
     except Exception:
         write_partitioned(staged, target_path, partition_by)
         return
-    # restrict the rewrite to partitions present in the staged batch
-    parts = staged.select(*partition_by).distinct()
-    skey = staged.select(*keys).distinct()
+    skey = staged.select(*keys)
+    if retire is not None:
+        skey = skey.unionByName(retire.select(*keys))
+    skey = skey.distinct()
     moves_possible = not set(partition_by) <= set(keys)
     if moves_possible:
         # A staged row may MOVE a key into a different partition; the
@@ -392,13 +429,16 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
         # file-granular on keys, partition-blind). Partitions holding a
         # matched key therefore join the rewrite set. Skipped when the
         # merge key contains every partition column: key equality then
-        # pins the partition, victim partitions are necessarily staged
-        # partitions, and the reference's day-keyed MERGE keeps its
-        # partition-scoped scan with no extra pass over the target.
+        # pins the partition, so the keys name every partition the
+        # merge rewrites and the scan stays partition-scoped, with no
+        # extra pass over the target.
         victim_parts = (target.join(skey.hint("broadcast"), on=keys,
                                     how="left_semi")
-                        .select(*partition_by).distinct())
-        parts = parts.unionByName(victim_parts).distinct()
+                        .select(*partition_by))
+        parts = staged.select(*partition_by).unionByName(victim_parts)
+    else:
+        parts = skey.select(*partition_by)
+    parts = parts.distinct()
     # eqNullSafe: a NULL partition value (__HIVE_DEFAULT_PARTITION__)
     # must still match its own partition, or its non-matched rows are
     # dropped by the dynamic overwrite of that directory
@@ -408,6 +448,25 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
         eq = F.col(f"__t.{c}").eqNullSafe(F.col(f"__parts.{c}"))
         cond = eq if cond is None else (cond & eq)
     affected = target.alias("__t").join(pa, on=cond, how="left_semi")
+    # Dynamic overwrite replaces only partitions PRESENT in the output —
+    # it cannot express "replace with nothing". A rewritten partition
+    # whose every row was matched (its keys moved elsewhere or were
+    # retired) has zero merged rows, so its stale files would survive
+    # the write. Two observed metrics name those partitions without an
+    # extra action: the partitions the rewrite read, and the ones it
+    # wrote; the difference is dropped after the write lands. A crash
+    # between the write and the sweep leaves the stale rows, and
+    # re-running the same merge converges: the stale keys still match,
+    # re-electing the same partitions. Without moves or retired keys
+    # every rewritten partition receives staged rows, so no observation
+    # is needed.
+    may_empty = moves_possible or retire is not None
+    if may_empty:
+        read_parts, written_parts = Observation(), Observation()
+        types = {f.name: f.dataType for f in
+                 target.select(*partition_by)
+                 .unionByName(staged.select(*partition_by)).schema}
+        affected = affected.observe(read_parts, _part_set(types))
     kept = affected.join(skey, on=keys, how="left_anti")
     kept = kept.select(*staged.columns)
     # localCheckpoint breaks lineage so the overwrite of the target files
@@ -423,30 +482,22 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
     # a target-reading staged plan and re-opens the read-before-overwrite
     # hazard. Match both the raw spelling and the canonical one.
     canon = os.path.realpath(os.path.abspath(target_path)).rstrip("/")
-    if target_path in plan or canon in plan:
-        merged = kept.unionByName(staged).localCheckpoint(eager=True)
-    else:
-        merged = kept.localCheckpoint(eager=True).unionByName(staged)
-    # Dynamic overwrite replaces only partitions PRESENT in the output —
-    # it cannot express "replace with nothing". A victim partition whose
-    # every row was matched (its keys all moved elsewhere) has zero
-    # merged rows, so its stale files would survive the write; find
-    # those BEFORE the overwrite (the `parts` plan still scans the
-    # pre-write target files — only `kept` is lineage-cut) and drop the
-    # directories after it lands. EXCEPT (subtract) is null-safe, so
-    # the NULL partition participates. A crash between the write and
-    # the sweep leaves the stale rows, and re-running the same merge
-    # converges: the stale keys still match, re-electing the same empty
-    # victims. Both frames are partition-count-sized; the sweep never
-    # runs in the keys-contain-partition case (no moves -> no emptied
-    # victims possible).
-    emptied = []
-    if moves_possible:
-        emptied = [r.asDict() for r in parts.subtract(
-            merged.select(*partition_by).distinct()).collect()]
+    staged_reads_target = target_path in plan or canon in plan
+    if not staged_reads_target:
+        kept = kept.localCheckpoint(eager=True)
+    merged = kept.unionByName(staged)
+    if may_empty:
+        merged = merged.observe(written_parts, _part_set(types))
+    if staged_reads_target:
+        merged = merged.localCheckpoint(eager=True)
     overwrite_partitions(merged, target_path, partition_by, format="parquet")
-    if emptied:
-        _delete_partition_dirs(target_path, partition_by, emptied)
+    if may_empty:
+        emptied = (_observed_parts(read_parts)
+                   - _observed_parts(written_parts))
+        if emptied:
+            _delete_partition_dirs(
+                target_path, partition_by,
+                [dict(zip(partition_by, p)) for p in emptied])
 
 
 def compact_partitions(spark: SparkSession, path: str,
