@@ -2165,7 +2165,7 @@ def q_frequency_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from w_userflow_featurestore_spark.sources import fan_out
     docs = read_table(spark, sf_dir, "documents")
     toks = (fan_out(docs.select("text"))
-            .select(F.explode(words(F.col("text"))).alias("token"))
+            .select(F.explode(words("text")).alias("token"))
             .where(F.col("token") != ""))
     sketch = cms_build(toks, "token", depth=4, width=1024)
     probes = TX.frequent_tokens(docs, k=20)

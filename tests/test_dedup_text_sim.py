@@ -186,16 +186,16 @@ def test_ivf_cell_partition_and_probe_superset(spark):
     from w_userflow_featurestore_spark.sources import read_table
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
     cents = SIM.ivf_fit_centroids(emb, n_centroids=8)
-    cells = (emb.select(SIM.ivf_cell(SIM.quantize(F.col("embedding")), cents)
-                        .alias("cell"))
+    qemb = emb.select("vec_id", SIM.quantize("embedding").alias("qv"))
+    cells = (qemb.select(SIM.ivf_cell("qv", cents).alias("cell"))
                 .groupBy("cell").count().collect())
     assert {r["cell"] for r in cells} <= set(range(8))   # valid cell ids
     assert len(cells) > 1                                # corpus actually splits
     # nprobe=1's probe list is a prefix of nprobe=2's (nearest-first order)
-    p = (emb.where(F.col("vec_id") < 3)
+    p = (qemb.where(F.col("vec_id") < 3)
             .select("vec_id",
-                    SIM.ivf_probe_cells(SIM.quantize(F.col("embedding")),
-                                        cents, 2).alias("pc")).collect())
+                    SIM.ivf_probe_cells("qv", cents, 2).alias("pc"))
+            .collect())
     for r in p:
         assert len(r["pc"]) == 2 and r["pc"][0] != r["pc"][1]
 

@@ -472,7 +472,7 @@ def test_dsir_select_tokens_matches_greedy_walk_and_keeps_small_corpus(spark):
                      dsir_select_tokens(raw, target, budget).collect()))
     scored = (dsir_importance(raw, target)
               .join(raw.select("doc_id",
-                               token_count_ws(F.col("text"))
+                               token_count_ws("text")
                                .cast("long").alias("n_tokens")),
                     "doc_id")
               .orderBy(F.desc("score_bits"), F.asc("doc_id")).collect())

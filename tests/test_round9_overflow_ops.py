@@ -343,7 +343,6 @@ def test_cross_source_overlap_near_dup_unit_catches_edited_mirror(spark):
     from w_userflow_featurestore_spark.operators.text import (
         doc_fingerprint,
     )
-    from pyspark.sql import functions as F
     # B's doc is a lightly-edited mirror of A's (tail word changed):
     # the exact-hash unit misses it, the winnowing fingerprint unit
     # catches it (the minimal 5-gram survives the edit)
@@ -354,7 +353,7 @@ def test_cross_source_overlap_near_dup_unit_catches_edited_mirror(spark):
         "doc_id long, text string, source string")
     exact = DD.cross_source_overlap(docs).collect()
     fp = DD.cross_source_overlap(
-        docs, unit=doc_fingerprint(F.col("text"))).collect()
+        docs, unit=doc_fingerprint("text")).collect()
     assert exact == []
     assert [(r["source_a"], r["source_b"], r["n_shared"])
             for r in fp] == [("A", "B", 1)]

@@ -114,7 +114,7 @@ def test_semantic_dedup_cell_occupancy_balanced(spark):
     q = SIM._quantized(emb, "vec_id", "embedding", "_sid", "_svec", 64)
     assign = (q.crossJoin(F.broadcast(cdf))
                .select("_sid", "cell",
-                       SIM.l2_q(F.col("_svec"), F.col("cv")).alias("d"))
+                       SIM.l2_q("_svec", "cv").alias("d"))
                .groupBy("_sid")
                .agg(F.min_by("cell", F.struct("d", "cell")).alias("cell")))
     occupancy = _max_bucket(assign, "cell")
@@ -147,7 +147,7 @@ def test_token_budget_mix_bounds_rows_per_sort_task(spark):
     # builds it (order-preserving hash-range bucket of the 60-bit hash)
     width = -(-(1 << 60) // n_buckets)
     occupancy = (docs.select(
-        (text_hash60(F.col("doc_id").cast("string"), seed="mixfill")
+        (text_hash60("CAST(doc_id AS STRING)", seed="mixfill")
          / F.lit(1)).alias("_h"))
         .select(F.expr(f"CAST(_h AS BIGINT) div {width}").alias("_b"))
         .groupBy("_b").agg(F.count(F.lit(1)).alias("occ")))

@@ -423,40 +423,22 @@ def test_merge_upsert_drops_emptied_victim_partition(spark, tmp_path):
 
 
 def test_fan_out_estimate_matches_exact_split_count(spark):
-    """The file-size split estimate that replaced fan_out's
-    df.rdd.getNumPartitions() check (a full physical-planning pass per
-    call, ~100 ms of driver time inside every timed query) must agree
-    with the exact count on the frames fan_out actually sees —
-    scan+projection over fixture parquet — so the spread/no-spread
-    decision is unchanged."""
-    from w_userflow_featurestore_spark.sources.parquet import (
-        _estimated_scan_splits, fan_out,
-    )
-    for name in ("events", "documents", "embeddings"):
-        df = read_table(spark, SF0001, name).select(df_first_col(name))
-        est = _estimated_scan_splits(df)
-        assert est == df.rdd.getNumPartitions(), name
-    # decision unchanged: a single-split scan still spreads to all cores
+    """fan_out's spread decision on the frames it actually sees —
+    scan+projection over fixture parquet: a single-split scan spreads
+    to all cores."""
+    from w_userflow_featurestore_spark.sources.parquet import fan_out
     docs = read_table(spark, SF0001, "documents").select("doc_id", "text")
     spread = fan_out(docs)
     target = spark.sparkContext.defaultParallelism
     assert spread.rdd.getNumPartitions() == max(target, 1)
 
 
-def df_first_col(name: str) -> str:
-    return {"events": "user_id", "documents": "doc_id",
-            "embeddings": "vec_id"}[name]
-
-
 def test_fan_out_falls_back_without_input_files(spark):
     """Frames with no file-backed leaves (createDataFrame, checkpoints)
-    can't be size-estimated; fan_out must fall back to the exact
-    partition count and still make the right call."""
-    from w_userflow_featurestore_spark.sources.parquet import (
-        _estimated_scan_splits, fan_out,
-    )
+    are sized by their partition count like any other frame, and fan_out
+    still makes the right call."""
+    from w_userflow_featurestore_spark.sources.parquet import fan_out
     local = spark.createDataFrame([(i,) for i in range(10)], "x long")
-    assert _estimated_scan_splits(local) is None
     target = spark.sparkContext.defaultParallelism
     out = fan_out(local)
     if local.rdd.getNumPartitions() >= target:
@@ -470,7 +452,7 @@ def test_fan_out_falls_back_without_input_files(spark):
 
 def test_fan_out_memo_caches_per_plan(spark):
     """Repeated constructions of the same plan (bench warm-up + timed
-    repeats) must hit the memo, not re-stat the files."""
+    repeats) must hit the memo, not re-plan the frame."""
     from w_userflow_featurestore_spark.conf import session_cache
     from w_userflow_featurestore_spark.sources import parquet as P
     docs = read_table(spark, SF0001, "documents").select("doc_id")

@@ -1,0 +1,58 @@
+"""Lint: no library module imports a name it never uses.
+
+A small AST pass instead of a linter dependency. A name counts as used
+when it appears as an identifier anywhere in the module or is listed in
+``__all__``; package ``__init__.py`` files are skipped because their
+imports are re-exports, and a line marked ``noqa: F401`` is exempt.
+"""
+
+from __future__ import annotations
+
+import ast
+from pathlib import Path
+
+import pytest
+
+PKG = Path(__file__).resolve().parent.parent / "w_userflow_featurestore_spark"
+MODULES = sorted(p for p in PKG.rglob("*.py") if p.name != "__init__.py")
+
+
+def unused_imports(source: str) -> list[tuple[int, str]]:
+    """(line, name) for every imported name the module never uses."""
+    tree = ast.parse(source)
+    lines = source.splitlines()
+    imported: list[tuple[int, str]] = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names = [(a.asname or a.name.split(".")[0]) for a in node.names]
+        elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+            names = [a.asname or a.name for a in node.names if a.name != "*"]
+        else:
+            continue
+        if "noqa: F401" in lines[node.lineno - 1]:
+            continue
+        imported += [(node.lineno, n) for n in names]
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    for node in ast.walk(tree):
+        if (isinstance(node, ast.Assign)
+                and any(isinstance(t, ast.Name) and t.id == "__all__"
+                        for t in node.targets)):
+            used |= {e.value for e in ast.walk(node.value)
+                     if isinstance(e, ast.Constant)}
+    return sorted((line, n) for line, n in imported if n not in used)
+
+
+def test_checker_flags_only_unused_names():
+    src = ("from __future__ import annotations\n"
+           "import os\nimport json\n"
+           "from a import b, c as d\n"
+           "from e import f  # noqa: F401\n"
+           "__all__ = ['b']\n"
+           "def g():\n    from h import i\n    return json.dumps(d)\n")
+    assert unused_imports(src) == [(2, "os"), (8, "i")]
+
+
+@pytest.mark.parametrize("path", MODULES,
+                         ids=[str(p.relative_to(PKG)) for p in MODULES])
+def test_library_module_has_no_unused_imports(path):
+    assert unused_imports(path.read_text()) == []

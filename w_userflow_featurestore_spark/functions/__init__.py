@@ -4,13 +4,29 @@ Everything here returns Catalyst ``Column`` expressions built purely from
 ``pyspark.sql.functions`` — JVM-side, whole-stage-codegen friendly. The
 reference uses the same handful of idioms inline everywhere (guarded
 ratios, when-chains, round placement); centralizing them keeps the quirky
-semantics (SURVEY.md §7.4) in exactly one place.
+semantics (SURVEY.md §7.4) in exactly one place. ``sql_ident`` and
+``sql_str`` quote caller strings for the SQL fragments that
+expression helpers across the operators take.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier; an embedded backtick
+    is doubled, so no column name can end the quoting early."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(value) -> str:
+    """``str(value)`` as a single-quoted Spark SQL string literal. The
+    parser reads backslash escapes, so ``\\`` and ``'`` are both
+    backslash-escaped: the parsed literal is exactly the caller's text."""
+    text = str(value).replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{text}'"
 
 
 def fround(col: Column, scale: int = 2) -> Column:

@@ -44,17 +44,16 @@ def contamination_check(corpus: DataFrame, eval_set: DataFrame, *,
     degrade to whole-text comparison, inheriting shingles()' short-doc
     rule.
     """
-    gram = lambda c: text_hash60(c)  # noqa: E731 — shared 60-bit gram id
     eval_grams = F.broadcast(
         eval_set.select(
             F.explode(shingles(f"`{text_col}`", n)).alias("g"))
-        .select(gram(F.col("g")).alias("gh"))
+        .select(text_hash60("g").alias("gh"))
         .distinct())
     doc_grams = (fan_out(corpus.select(F.col(id_col), F.col(text_col)))
                  .select(
         F.col(id_col).alias("doc_id"),
         F.explode(shingles(f"`{text_col}`", n)).alias("g"))
-        .select("doc_id", gram(F.col("g")).alias("gh")))
+        .select("doc_id", text_hash60("g").alias("gh")))
     hits = (doc_grams.join(eval_grams.withColumn("_hit", F.lit(1)),
                            "gh", "left")
             .groupBy("doc_id")

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import fround, rate
+from w_userflow_featurestore_spark.functions import fround, sql_ident, sql_str
 from w_userflow_featurestore_spark.sources import fan_out
 
 # ---------------------------------------------------------------------------
@@ -38,18 +38,13 @@ from w_userflow_featurestore_spark.sources import fan_out
 # ---------------------------------------------------------------------------
 
 
-# The helpers below accept a Column OR a SQL fragment string; ``_sql``
-# twins compose fragments. The string path renders each helper as ONE
-# ``F.expr`` instead of one py4j roundtrip per AST node — plan
-# construction is driver-side py4j traffic paid inside every timed
-# query (guide §7.3; building shingles() via the Column API costs ~170
-# roundtrips, the parsed-string form ~6). Parsed trees are the same
-# Catalyst expressions, so results and runtime plans are unchanged.
+# Expression helpers take a SQL fragment (a backticked column name or an
+# expression) and return a Column parsed by one ``F.expr``.
 
 
 def _hash60_sql(payload: str, seed: int | str | None = None) -> str:
     if seed is not None:
-        payload = f"concat('{seed}:', {payload})"
+        payload = f"concat({sql_str(f'{seed}:')}, {payload})"
     return f"CAST(conv(substring(md5({payload}), 1, 15), 16, 10) AS BIGINT)"
 
 
@@ -68,55 +63,41 @@ def _shingles_sql(x: str, n: int = 3) -> str:
             f" i -> concat_ws(' ', slice({ws}, i, {n}))))")
 
 
-def text_hash60(col: Column | str,
-                seed: int | str | None = None) -> Column:
+def text_hash60(col: str, seed: int | str | None = None) -> Column:
     """Deterministic 60-bit non-negative integer hash of a string.
 
     First 15 hex chars of md5 parsed as an integer — both engines compute
     md5 identically, and 15 hex digits (60 bits) always fit a signed
     BIGINT. DuckDB twin: CAST('0x' || substr(md5(x), 1, 15) AS BIGINT).
-    Seeded variants prefix the payload, giving k independent hash
-    families for minwise hashing. The seed's STRING FORM is part of the
-    cross-engine hash contract (the prefix is built with an f-string and
-    mirrored literally in every DuckDB oracle), so int and str seeds are
-    both first-class: hash(seed=1) == hash(seed="1"), and a named seed
-    like "shuffle" is just another family.
+    Seeded variants hash the payload prefixed with ``"{seed}:"``, giving
+    k independent hash families for minwise hashing. The seed's STRING
+    FORM is part of the cross-engine hash contract (mirrored literally in
+    every DuckDB oracle), so int and str seeds are both first-class:
+    hash(seed=1) == hash(seed="1"), and a named seed like "shuffle" is
+    just another family. Any seed text is quoted exactly (sql_str).
     """
-    if isinstance(col, str):
-        return F.expr(_hash60_sql(col, seed))
-    payload = col if seed is None else F.concat(F.lit(f"{seed}:"), col)
-    return F.conv(F.substring(F.md5(payload), 1, 15), 16, 10).cast("long")
+    return F.expr(_hash60_sql(col, seed))
 
 
-def normalize_text(col: Column | str) -> Column:
+def normalize_text(col: str) -> Column:
     """Canonical text form shared by all dedup/text ops: lowercase,
     non-alphanumerics collapsed to single spaces, trimmed."""
-    if isinstance(col, str):
-        return F.expr(_norm_sql(col))
-    return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
+    return F.expr(_norm_sql(col))
 
 
-def words(col: Column | str) -> Column:
+def words(col: str) -> Column:
     """Normalized token array."""
-    if isinstance(col, str):
-        return F.expr(_words_sql(col))
-    return F.split(normalize_text(col), " ")
+    return F.expr(_words_sql(col))
 
 
-def shingles(col: Column | str, n: int = 3) -> Column:
+def shingles(col: str, n: int = 3) -> Column:
     """Array of word n-gram shingles (distinct, order-free set).
 
     slice/transform/sequence higher-order functions — evaluated inside
     codegen, no UDF. A document shorter than ``n`` words yields its whole
     text as the single shingle.
     """
-    if isinstance(col, str):
-        return F.expr(_shingles_sql(col, n))
-    ws = words(col)
-    k = F.greatest(F.size(ws) - (n - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), k),
-                    lambda i: F.concat_ws(" ", F.slice(ws, i, n))))
+    return F.expr(_shingles_sql(col, n))
 
 
 def exploded_shingles(docs: DataFrame, text_col: str, id_col: str,
@@ -361,12 +342,11 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     (a shingle shared by 1 M docs contributes 10^12 pairs but zero
     information); the planted-near-dup recall loss is negligible.
 
-    Scale shape (round 12, guide §2.3/§2.4): |A| is ``size()`` of the
-    distinct-shingle array, computed ROW-LOCALLY in the same projection
-    that explodes it, and ridden through the posting self-join as one
-    extra integer per side — so the old separate sizes aggregate (a
-    full second explode pass + an id-keyed exchange) and the two
-    join-backs of the pair frame are gone. The sizes are functionally
+    Scale shape: |A| is ``size()`` of the distinct-shingle array,
+    computed ROW-LOCALLY in the same projection that explodes it, and
+    ridden through the posting self-join as one extra integer per side
+    — no separate sizes aggregate (a second explode pass + an id-keyed
+    exchange) and no join-backs of the pair frame. The sizes are functionally
     dependent on the pair key, so they join the groupBy key for free
     (no extra groups, no aggregate buffer).
     """
@@ -481,8 +461,8 @@ def connected_components(pairs: DataFrame, id_a: str = "doc_a",
         # LAZY checkpoint + the convergence count in ONE action: the
         # count job materializes the checkpoint as its side effect, so
         # each round schedules one Spark job instead of two (eager
-        # materialize + separate count) — round 12, guide §7.3: the
-        # loop is barrier-bound, so per-round job count IS its cost
+        # materialize + separate count); the loop is barrier-bound, so
+        # per-round job count IS its cost
         new = new.localCheckpoint(eager=False)
         changed = new.agg(F.sum("_chg")).first()[0] or 0
         labels = new.drop("_chg")
@@ -711,8 +691,9 @@ def quality_survivor_dedup(docs: DataFrame, text_col: str = "text",
                                   **lsh_kwargs)
     comp = connected_components(pairs).select(
         F.col("doc_id").alias(id_col), "component")
-    quality = F.size(F.array_distinct(
-        F.filter(words(F.col(text_col)), lambda w: w != ""))).cast("long")
+    quality = F.expr(f"CAST(size(array_distinct(filter("
+                     f"{_words_sql(sql_ident(text_col))}, w -> w != '')))"
+                     f" AS BIGINT)")
     scored = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
               .select(F.col(id_col), quality.alias("n_distinct_words")))
     labeled = (scored.join(comp, id_col, "left")

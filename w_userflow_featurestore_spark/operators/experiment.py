@@ -26,13 +26,11 @@ from pyspark.sql import functions as F
 from w_userflow_featurestore_spark.operators.dedup import text_hash60
 
 
-def ab_assign(id_col: Column, n_arms: int = 2,
-              salt: str = "ab") -> Column:
-    """Deterministic arm index in [0, n_arms): 60-bit md5 of
-    "salt:id" mod n_arms — the dataset_split idiom, so assignment is
-    rerun-stable and engine-replayable."""
-    return F.pmod(text_hash60(F.concat(F.lit(f"{salt}:"),
-                                       id_col.cast("string"))),
+def ab_assign(col: str, n_arms: int = 2, salt: str = "ab") -> Column:
+    """Deterministic arm index in [0, n_arms) of the SQL fragment
+    ``col``: 60-bit md5 of "salt:id" mod n_arms — the dataset_split
+    idiom, so assignment is rerun-stable and engine-replayable."""
+    return F.pmod(text_hash60(f"CAST({col} AS STRING)", seed=salt),
                   F.lit(n_arms)).cast("int")
 
 
@@ -54,7 +52,7 @@ def ab_test_summary(events: DataFrame, id_col: str = "user_id",
              .groupBy(F.col(id_col).alias("uid"))
              .agg(F.max(F.when(F.col(event_type_col) == conversion_event,
                                1).otherwise(0)).alias("converted"))
-             .select(ab_assign(F.col("uid"), 2, salt).alias("arm"),
+             .select(ab_assign("uid", 2, salt).alias("arm"),
                      "converted"))
     arms = (users.groupBy("arm")
                  .agg(F.count(F.lit(1)).alias("n"),

@@ -16,18 +16,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import sql_ident, sql_str
 from w_userflow_featurestore_spark.operators.dedup import text_hash60
+from w_userflow_featurestore_spark.operators.text import token_count_ws
 
 N_BUCKETS = 1000
 
 
-def hash_bucket(col: Column, n_buckets: int = N_BUCKETS,
+def hash_bucket(col: str, n_buckets: int = N_BUCKETS,
                 salt: str = "split") -> Column:
-    """Stable bucket in [0, n_buckets): 60-bit md5 of "salt:value" mod n.
-    The salt decorrelates this partition from every other hash use of the
-    same id (dedup survivors, LSH bands, ...)."""
-    return F.pmod(text_hash60(F.concat(F.lit(f"{salt}:"),
-                                       col.cast("string"))),
+    """Stable bucket in [0, n_buckets) of the SQL fragment ``col``: 60-bit
+    md5 of "salt:value" mod n. The salt decorrelates this partition from
+    every other hash use of the same id (dedup survivors, LSH bands, ...)."""
+    return F.pmod(text_hash60(f"CAST({col} AS STRING)", seed=salt),
                   F.lit(n_buckets)).cast("long")
 
 
@@ -40,7 +41,7 @@ def dataset_split(df: DataFrame, id_col: str = "doc_id",
     no sort, no state; the assignment of a row never changes when the
     corpus grows, which incremental pipelines rely on (new docs land in
     the same proportions without reshuffling old ones)."""
-    b = hash_bucket(F.col(id_col), n_buckets, salt)
+    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
     return df.withColumn("bucket", b).withColumn(
         "split",
         F.when(F.col("bucket") < train, "train")
@@ -73,7 +74,7 @@ def stratified_sample(df: DataFrame, fractions: dict[str, float],
     Class rebalancing (downweight boilerplate, keep all rare positives)
     is the canonical 100 TB use.
     """
-    b = hash_bucket(F.col(id_col), n_buckets, salt)
+    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
     thresholds = F.create_map(*[
         lit for k, frac in sorted(fractions.items())
         for lit in (F.lit(k), F.lit(int(round(frac * n_buckets))))])
@@ -95,7 +96,7 @@ def weighted_sample(df: DataFrame, weight: Column, id_col: str = "doc_id",
     engine and stable under corpus growth / reruns. Projection-only:
     composes into the scan with zero shuffles.
     """
-    b = hash_bucket(F.col(id_col), n_buckets, salt)
+    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
     thr = F.floor(weight * n_buckets + F.lit(0.5)).cast("long")
     return df.where(b < thr)
 
@@ -115,8 +116,7 @@ def cap_group_rows(df: DataFrame, group_cols: list[str], n: int,
     the cap IS the skew fix for whatever follows it.
     """
     w = Window.partitionBy(*group_cols).orderBy(
-        text_hash60(F.concat(F.lit(f"{salt}:"),
-                             F.col(id_col).cast("string"))),
+        text_hash60(f"CAST({sql_ident(id_col)} AS STRING)", seed=salt),
         F.col(id_col))
     return (df.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= n).drop("__rn"))
@@ -149,7 +149,7 @@ def source_balanced_sample(df: DataFrame, source_col: str = "source",
                              F.floor(F.lit(n_buckets) * F.col("_total")
                                      / (F.col("_nsrc") * F.col("_n")))
                               .cast("long")).alias("_keep_bp")))
-    b = hash_bucket(F.col(id_col), n_buckets, salt)
+    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
     return (df.join(F.broadcast(rates), source_col)
               .where(b < F.col("_keep_bp"))
               .drop("_keep_bp"))
@@ -223,7 +223,7 @@ def _split_columns(keyed: DataFrame, id_col: str, train: int, val: int,
                    n_buckets: int, salt: str) -> DataFrame:
     """Apply the hash-bucket split rule to a (doc_id, group_key) frame —
     the shared tail of the full and incremental leakage-safe splits."""
-    b = hash_bucket(F.col("group_key"), n_buckets, salt)
+    b = hash_bucket("group_key", n_buckets, salt)
     return (keyed.withColumn("bucket", b)
                  .withColumn(
                      "split",
@@ -368,7 +368,7 @@ def split_leakage_audit(pairs: DataFrame,
     audit costs pair-graph-proportional work — component propagation
     plus two label joins — no matter how large the corpus is.
     """
-    def split_of(col: Column) -> Column:
+    def split_of(col: str) -> Column:
         b = hash_bucket(col, n_buckets, salt)
         return (F.when(b < train, "train")
                  .when(b < train + val, "val")
@@ -384,7 +384,7 @@ def split_leakage_audit(pairs: DataFrame,
                            .alias("n_pairs")))
 
     p = pairs.select(pair_a, pair_b)
-    naive = cells(split_of(F.col(pair_a)), split_of(F.col(pair_b)),
+    naive = cells(split_of(sql_ident(pair_a)), split_of(sql_ident(pair_b)),
                   "doc_hash", p)
     from w_userflow_featurestore_spark.operators.dedup import (
         connected_components,
@@ -395,7 +395,7 @@ def split_leakage_audit(pairs: DataFrame,
     cb = comp.select(F.col("doc_id").alias(pair_b),
                      F.col("component").alias("_gb"))
     labeled = p.join(ca, pair_a).join(cb, pair_b)
-    cluster = cells(split_of(F.col("_ga")), split_of(F.col("_gb")),
+    cluster = cells(split_of("_ga"), split_of("_gb"),
                     "cluster", labeled)
     return naive.unionByName(cluster)
 
@@ -484,9 +484,6 @@ def token_budget_mix(docs: DataFrame, budget_tokens: int,
     for s, b in sorted(ov.items()):
         budget = F.when(F.col(source_col) == s,
                         F.lit(int(b)).cast("long")).otherwise(budget)
-    from w_userflow_featurestore_spark.operators.text import (
-        token_count_ws,
-    )
     h = text_hash60(f"CAST(`{id_col}` AS STRING)", seed=seed)
     # integer div, not float /: _h spans 60 bits, past double's 53-bit
     # mantissa, so float bucketing could misplace boundary rows
@@ -550,9 +547,6 @@ def temperature_mix_weights(docs: DataFrame, budget_tokens: int,
     """
     if tau < 1 or (tau & (tau - 1)):
         raise ValueError("tau must be a power of two (1, 2, 4, ...)")
-    from w_userflow_featurestore_spark.operators.text import (
-        token_count_ws,
-    )
     counts = (docs.groupBy(source_col)
                   .agg(F.sum(token_count_ws(f"`{text_col}`").cast("long"))
                         .cast("long").alias("n_tokens")))
@@ -810,7 +804,7 @@ def dsir_select_tokens(docs: DataFrame, target: DataFrame | None,
                               target_pred=target_pred)
               .join(docs.select(
                         F.col(id_col),
-                        _token_count(F.col(text_col)).cast("long")
+                        token_count_ws(sql_ident(text_col)).cast("long")
                          .alias("n_tokens")), id_col)
               .localCheckpoint(eager=True))
     hist = (scores.groupBy("score_bits")
@@ -849,13 +843,6 @@ def dsir_select_tokens(docs: DataFrame, target: DataFrame | None,
                 .unionByName(tie_kept.select(*out_cols)))
 
 
-def _token_count(col: Column) -> Column:
-    """Whitespace token count over normalized text (the
-    text.token_count_ws twin, local to avoid a circular import)."""
-    from w_userflow_featurestore_spark.operators.dedup import words
-    return F.size(words(col))
-
-
 def negative_samples(positives: DataFrame, user_col: str = "user_id",
                      item_col: str = "item_k", k: int = 4,
                      salt: str = "neg") -> DataFrame:
@@ -890,8 +877,8 @@ def negative_samples(positives: DataFrame, user_col: str = "user_id",
     # work itself stays spread across buckets)
     n_rank_buckets = 64
     items = (pos.select("_i").distinct()
-                .withColumn("_b", F.pmod(text_hash60(
-                    F.col("_i").cast("string")), F.lit(n_rank_buckets))))
+                .withColumn("_b", F.pmod(text_hash60("CAST(_i AS STRING)"),
+                                         F.lit(n_rank_buckets))))
     wb = Window.partitionBy("_b").orderBy("_i")
     bucket_sizes = (items.groupBy("_b")
                          .agg(F.count(F.lit(1)).alias("_n")))
@@ -913,8 +900,7 @@ def negative_samples(positives: DataFrame, user_col: str = "user_id",
                         "_n_items")
                 .select("_u", "_i", "draw",
                         F.pmod(text_hash60(
-                            F.concat_ws(":", F.lit(salt), F.col("_u"),
-                                        F.col("_i"), F.col("draw"))),
+                            f"concat_ws(':', {sql_str(salt)}, _u, _i, draw)"),
                             F.col("_n_items")).alias("_idx")))
     cand = (draws.join(F.broadcast(catalog), "_idx")
                  .select(F.col("_u"), F.col("_i"), F.col("draw"),

@@ -23,22 +23,15 @@ Python crosses the row path — everything is whole-stage-codegen'd.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import epoch_ms, exact_sum, fround, presence_flag
+from w_userflow_featurestore_spark.functions import sql_ident, sql_str
 
 DEFAULT_GAP_MS = 30 * 60 * 1000          # 30 min inactivity starts a new session
 DEFAULT_TIMEOUT_MS = 600 * 1000          # reference: 600 s idle => TIMEOUT_EXIT
                                          # (silver_user_session_events.py:135)
 DEFAULT_COMPLETE_THRESHOLD = 50.0        # analog of scroll_ratio >= 0.95 (:128)
-
-
-def _ident(name: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier for the parsed
-    fragments below; an embedded backtick is doubled, so no column
-    name can end the quoting early."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def assign_sessions(events: DataFrame, user_col: str = "user_id",
@@ -82,9 +75,9 @@ def assign_sessions(events: DataFrame, user_col: str = "user_id",
     # unchanged. The lag fragment is written out twice below; the
     # analyzer collapses equal window expressions, so one Window
     # operator (and one user-keyed exchange) remains.
-    user, ts = _ident(user_col), _ident(ts_col)
+    user, ts = sql_ident(user_col), sql_ident(ts_col)
     order_sql = (f"PARTITION BY {user} ORDER BY {ts} ASC,"
-                 f" {_ident(order_tiebreak)} ASC")
+                 f" {sql_ident(order_tiebreak)} ASC")
     cum_sql = (f"{order_sql} ROWS BETWEEN UNBOUNDED PRECEDING"
                f" AND CURRENT ROW")
     lag_sql = f"lag(unix_millis({ts})) OVER ({order_sql})"
@@ -147,7 +140,7 @@ def rollup_sessions(events_with_sessions: DataFrame,
 
     # fround(x, 2) == (FLOOR(x * 100.0D + 0.5D) / 100.0D)
     _sum_scaled = "sum(CAST(FLOOR(`value` * 100.0D + 0.5D) AS BIGINT))"
-    ts = _ident(ts_col)
+    ts = sql_ident(ts_col)
     aggs = [
         F.expr(f"min({ts})").alias("start_time"),
         F.expr(f"max({ts})").alias("end_time"),
@@ -179,7 +172,7 @@ def rollup_sessions(events_with_sessions: DataFrame,
         # buffer and the rollup plans as a HashAggregate instead of
         # Sort + SortAggregate on every session-derived query
         # (value-identical, oracle-pinned).
-        user = F.col(_ident(user_col))
+        user = F.col(sql_ident(user_col))
         g = (e.groupBy(F.col("session_id"), user,
                        F.col("_first_event_type")
                         .alias("entry_event_type"))
@@ -196,7 +189,7 @@ def rollup_sessions(events_with_sessions: DataFrame,
                    f"'ts', {ts}, 'event_id', `event_id`))") \
         .alias("entry_event_type")
     return (
-        e.groupBy(F.col("session_id"), F.col(_ident(user_col)))
+        e.groupBy(F.col("session_id"), F.col(sql_ident(user_col)))
          .agg(*aggs[:4], entry, *aggs[4:])
          .withColumn("datetime", F.to_date("start_time"))
     )
@@ -218,15 +211,14 @@ def classify_sessions(sessions: DataFrame, now: str,
     (:139-141). Rule order is load-bearing: a session with both purchase
     and error is COMPLETE, matching the reference's when-chain.
     """
-    # one parsed expr per output column (cheaper to construct than the
-    # Column form); the when-chain fragment mirrors the Column form exactly — float
-    # threshold suffixed D, ``now`` single-quote-escaped
-    now_lit = str(now).replace("'", "''")
+    # one parsed expr per output column; the float threshold is suffixed
+    # D (so the parser does not widen it to DECIMAL) and ``now`` is
+    # quoted by sql_str
     state_sql = (
         "CASE WHEN (`seen_purchase` = 1 AND `max_value` >="
         f" {float(complete_threshold)}D) THEN 'COMPLETE'"
         " WHEN `seen_error` = 1 THEN 'EXIT'"
-        f" WHEN (unix_millis(to_timestamp('{now_lit}')) -"
+        f" WHEN (unix_millis(to_timestamp({sql_str(now)})) -"
         f" unix_millis(`end_time`)) > {int(timeout_ms)}"
         " THEN 'TIMEOUT_EXIT' ELSE 'IN_PROGRESS' END")
     return (sessions

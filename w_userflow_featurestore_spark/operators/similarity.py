@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 import hashlib
 import os
 
-from w_userflow_featurestore_spark.functions import fround
+from w_userflow_featurestore_spark.functions import fround, sql_ident
 from w_userflow_featurestore_spark.sources import fan_out
 
 SCALE = 1_000_000  # 1e6 quantization: 64-dim unit vectors -> |dot| <= 6.4e13
@@ -55,15 +55,8 @@ def plane_signs(plane: int, dims: int) -> list[int]:
             for d in range(dims)]
 
 
-# Helpers below accept a Column OR a SQL fragment string. The string
-# path renders the WHOLE expression as one ``F.expr`` — a single py4j
-# roundtrip instead of one per AST node. That matters because plan
-# CONSTRUCTION is driver-side py4j traffic paid inside every timed
-# query (guide §7.3): building bucket_q(planes=8) through the Column
-# API costs ~1,500 roundtrips (measured), the same tree as a parsed
-# string costs ~6. The parsed expressions are identical Catalyst
-# nodes, so runtime plans (and the HOF-vs-flat-codegen trade discussed
-# above) are unchanged.
+# Expression helpers take SQL fragments (backticked column names or
+# expressions) and return a Column parsed by one ``F.expr``.
 
 
 def _quantize_sql(vec: str, scale: int = SCALE) -> str:
@@ -81,33 +74,26 @@ def _l2_sql(a: str, b: str) -> str:
             f" CAST(0 AS BIGINT), (acc, v) -> acc + v)")
 
 
-def quantize(vec: Column | str, scale: int = SCALE) -> Column:
+def quantize(vec: str, scale: int = SCALE) -> Column:
     """float array -> exact 1e6-scaled BIGINT array (round half up)."""
-    if isinstance(vec, str):
-        return F.expr(_quantize_sql(vec, scale))
-    return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("long"))
+    return F.expr(_quantize_sql(vec, scale))
 
 
-def dot_q(a: Column | str, b: Column | str) -> Column:
-    """Exact integer dot product of two quantized vector Columns."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda acc, v: acc + v)
+def dot_q(a: str, b: str) -> Column:
+    """Exact integer dot product of two quantized vectors."""
+    return F.expr(_dot_sql(a, b))
 
 
-def norm_q(a: Column | str) -> Column:
-    """Double L2 norm of a quantized vector Column (exact integer
-    self-dot under the sqrt)."""
-    if isinstance(a, str):
-        return F.expr(f"sqrt({_dot_sql(a, a)})")
-    return F.sqrt(dot_q(a, a))
+def norm_q(a: str) -> Column:
+    """Double L2 norm of a quantized vector (exact integer self-dot
+    under the sqrt)."""
+    return F.expr(f"sqrt({_dot_sql(a, a)})")
 
 
-def cosine_q(a: Column, b: Column) -> Column:
+def cosine_q(a: str, b: str) -> Column:
     """Cosine from quantized vectors: exact int dot / double norms."""
-    return dot_q(a, b) / (norm_q(a) * norm_q(b))
+    return F.expr(f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)})"
+                  f" * sqrt({_dot_sql(b, b)}))")
 
 
 def _bucket_sql(qv: str, planes: int, dims: int, table: int) -> str:
@@ -123,31 +109,21 @@ def _bucket_sql(qv: str, planes: int, dims: int, table: int) -> str:
     return " + ".join(terms)
 
 
-def bucket_q(qv: Column | str, planes: int = 8, dims: int = 64,
+def bucket_q(qv: str, planes: int = 8, dims: int = 64,
              table: int = 0) -> Column:
     """Random-hyperplane LSH bucket id (SimHash for vectors) from a
-    PRE-QUANTIZED vector Column. Bucket bit p = 1 iff plane p's signed
+    PRE-QUANTIZED vector. Bucket bit p = 1 iff plane p's signed
     projection is positive; ``table`` offsets the plane indices so
     independent hash tables can be built (OR-amplification — lsh_topk).
     The sign vectors are inlined literal arrays; each projection is one
     zip_with/aggregate over the shared quantized array."""
-    if isinstance(qv, str):
-        return F.expr(_bucket_sql(qv, planes, dims, table))
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        signs = F.expr("array({})".format(",".join(
-            f"{s}L" for s in plane_signs(table * planes + p, dims))))
-        proj = F.aggregate(F.zip_with(qv, signs, lambda x, s: x * s),
-                           F.lit(0).cast("long"), lambda acc, v: acc + v)
-        bucket = bucket + F.when(proj > 0, F.lit(2 ** p).cast("long")
-                                 ).otherwise(F.lit(0).cast("long"))
-    return bucket
+    return F.expr(_bucket_sql(qv, planes, dims, table))
 
 
-def hyperplane_bucket(vec: Column, planes: int = 8,
+def hyperplane_bucket(vec: str, planes: int = 8,
                       dims: int = 64, table: int = 0) -> Column:
-    """bucket_q over a raw float vector Column (quantizes first)."""
-    return bucket_q(quantize(vec), planes, dims, table)
+    """bucket_q over a raw float vector (quantizes first)."""
+    return bucket_q(_quantize_sql(vec), planes, dims, table)
 
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str, out_id: str,
@@ -271,13 +247,10 @@ def embedding_dedup(corpus: DataFrame, threshold: float = 0.9,
     return corpus.select(id_col).join(victims, id_col, "left_anti")
 
 
-def l2_q(a: Column | str, b: Column | str) -> Column:
+def l2_q(a: str, b: str) -> Column:
     """Exact integer squared-L2 distance of two quantized vectors
     (diffs <= 2e6, squared x 64 dims ~ 2.6e14 — comfortably BIGINT)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_l2_sql(a, b))
-    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                       F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return F.expr(_l2_sql(a, b))
 
 
 def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
@@ -293,7 +266,7 @@ def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
     structure (and this engine's plumbing) is identical either way.
     """
     from w_userflow_featurestore_spark.operators.dedup import text_hash60
-    h = text_hash60(f"concat('ivf:', CAST(`{id_col}` AS STRING))")
+    h = text_hash60(f"CAST({sql_ident(id_col)} AS STRING)", seed="ivf")
     rows = (corpus
             .select(F.col(id_col).alias("_id"),
                     quantize(f"`{vec_col}`").alias("cv"), h.alias("h"))
@@ -305,49 +278,33 @@ def _vec_sql(vals: list[int]) -> str:
     return "array({})".format(",".join(f"{v}L" for v in vals))
 
 
-def _lit_vec(vals: list[int]) -> Column:
-    # one expression per centroid, not 64 py4j F.lit round-trips
-    return F.expr(_vec_sql(vals))
+def _cell_dists(q: str, centroids: list[list[int]]) -> list[str]:
+    """Squared-L2 distance fragments from ``q`` to each literal centroid."""
+    return [_l2_sql(q, _vec_sql(cv)) for cv in centroids]
 
 
-def _cell_dists(q: Column | str, centroids: list[list[int]]) -> list[Column]:
-    if isinstance(q, str):
-        return [F.expr(_l2_sql(q, _vec_sql(cv))) for cv in centroids]
-    return [l2_q(q, _lit_vec(cv)) for cv in centroids]
-
-
-def ivf_cell(qcol: Column | str, centroids: list[list[int]]) -> Column:
+def ivf_cell(qcol: str, centroids: list[list[int]]) -> Column:
     """Nearest-centroid cell id (0-based, lowest cell wins ties) from a
-    quantized Column as a pure projection. Convenience/compat form for a
+    quantized vector as a pure projection. Convenience/compat form for a
     handful of centroids; ivf_topk's hot path assigns cells through a
     broadcast centroid JOIN instead — inlining n_centroids x dims
     literal terms into the plan stops scaling past ~tens of centroids
     (megabyte task binaries), while a broadcast join takes thousands."""
-    if isinstance(qcol, str):
-        darr = "array({})".format(",".join(
-            _l2_sql(qcol, _vec_sql(cv)) for cv in centroids))
-        return F.expr(f"CAST((array_position({darr}, array_min({darr}))"
-                      f" - 1) AS BIGINT)")
-    darr = F.array(*_cell_dists(qcol, centroids))
-    return (F.array_position(darr, F.array_min(darr)) - 1).cast("long")
+    darr = "array({})".format(",".join(_cell_dists(qcol, centroids)))
+    return F.expr(f"CAST((array_position({darr}, array_min({darr}))"
+                  f" - 1) AS BIGINT)")
 
 
-def ivf_probe_cells(qcol: Column | str, centroids: list[list[int]],
+def ivf_probe_cells(qcol: str, centroids: list[list[int]],
                     nprobe: int) -> Column:
     """The ``nprobe`` nearest cell ids for a query vector (distance then
     cell-id order), via array_sort over (dist, cell) structs — struct
     comparison is lexicographic by field position in both engines."""
-    if isinstance(qcol, str):
-        structs = ",".join(
-            f"named_struct('d', {_l2_sql(qcol, _vec_sql(cv))},"
-            f" 'cell', CAST({c} AS BIGINT))"
-            for c, cv in enumerate(centroids))
-        return F.expr(f"slice(transform(array_sort(array({structs})),"
-                      f" s -> s.cell), 1, {int(nprobe)})")
-    order = F.array_sort(F.array(*[
-        F.struct(d.alias("d"), F.lit(c).cast("long").alias("cell"))
-        for c, d in enumerate(_cell_dists(qcol, centroids))]))
-    return F.slice(F.transform(order, lambda s: s["cell"]), 1, nprobe)
+    structs = ",".join(
+        f"named_struct('d', {d}, 'cell', CAST({c} AS BIGINT))"
+        for c, d in enumerate(_cell_dists(qcol, centroids)))
+    return F.expr(f"slice(transform(array_sort(array({structs})),"
+                  f" s -> s.cell), 1, {int(nprobe)})")
 
 
 def _centroids_df(spark, centroids: list[list[int]]) -> DataFrame:
@@ -366,13 +323,13 @@ def _assign_cells(vecs: DataFrame, id_col: str, vec_col: str,
     lowest cell wins ties, ivf_cell's semantics.
 
     The (d, cell) min is ENCODED into one BIGINT, ``d * n_cells +
-    cell`` (round 12): min over the encoding equals the lexicographic
+    cell``: min over the encoding equals the lexicographic
     min because 0 <= cell < n_cells and d >= 0, and it is exact while
     ``d * n_cells + cell`` fits a BIGINT — d <= dims * (2 * SCALE)^2,
-    so the gate is ``dims * (2*SCALE)^2 * (n_cells + 1) < 2^63``
-    (round-13 ADVICE fix: a fixed n_cells <= 16384 gate silently
-    overflowed for dims >~ 140, e.g. 1024-dim embeddings — dims is a
-    public parameter on ivf_topk/semantic_dedup/ivf_recall_sweep).
+    so the gate is ``dims * (2*SCALE)^2 * (n_cells + 1) < 2^63`` (it
+    depends on dims: a fixed n_cells bound would overflow for 1024-dim
+    embeddings — dims is a public parameter on
+    ivf_topk/semantic_dedup/ivf_recall_sweep).
     A plain ``min(BIGINT)`` hash-aggregates with map-side partial
     combine and ships 8 bytes per pre-combine row, where the
     ``min_by(cell, struct(d, cell))`` form planned as SortAggregate
@@ -388,8 +345,7 @@ def _assign_cells(vecs: DataFrame, id_col: str, vec_col: str,
     hop is a BROADCAST join (the IVF probe) read vectors straight off
     the assignment instead of re-attaching them with an id-keyed
     shuffle join: the carried bytes cross exactly the one exchange the
-    assignment already pays, and the (cand x n) join disappears
-    (round 12, guide §2.4/§8 "move the heavy bytes once").
+    assignment already pays, and no (cand x n) join is needed.
     """
     j = vecs.crossJoin(F.broadcast(cdf))
     keys = [id_col, *carry]
@@ -435,7 +391,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                    with_norm="n_norm")
     # nearest cell per corpus vector: min (distance, cell) — lowest cell
     # wins ties, matching ivf_cell's array_position semantics; the
-    # quantized vector + norm RIDE the assignment (round 12) so the
+    # quantized vector + norm RIDE the assignment so the
     # verify reads them straight off the broadcast probe join instead
     # of re-attaching via an id-keyed shuffle join of the corpus
     assign = _assign_cells(n.select("n_id", "n_vec", "n_norm"),
@@ -527,7 +483,7 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.85,
     cdf = _centroids_df(corpus.sparkSession, cents)
     n = _quantized(corpus, id_col, vec_col, "_sid", "_svec", dims,
                    with_norm="_snorm")
-    # vector + norm ride the assignment aggregate (round 12): the
+    # vector + norm ride the assignment aggregate: the
     # in-cell self-join reads them directly — no id-keyed shuffle join
     # re-attaching the corpus vectors to their cell labels
     assign = _assign_cells(n.select("_sid", "_svec", "_snorm"),
@@ -589,7 +545,7 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 5,
     n = _quantized(corpus, id_col, vec_col, "_sid", "_svec", dims)
     assign = _assign_cells(n.select("_sid", "_svec"), "_sid", "_svec",
                            cdf, n_centroids, dims=dims)
-    h = text_hash60(f"concat('{salt}:', CAST(_sid AS STRING))")
+    h = text_hash60("CAST(_sid AS STRING)", seed=salt)
     wrk = Window.partitionBy("cell").orderBy("_h", "_sid")
     wall = Window.partitionBy("cell")
     return (assign.withColumn("_h", h)
@@ -915,7 +871,7 @@ def ivf_recall_sweep(corpus: DataFrame, queries: DataFrame, k: int = 5,
     cdf = _centroids_df(corpus.sparkSession, cents)
     n = _quantized(corpus, id_col, vec_col, "n_id", "n_vec", dims,
                    with_norm="n_norm")
-    # vector + norm ride the assignment (round 12) — see ivf_topk
+    # vector + norm ride the assignment — see ivf_topk
     assign = _assign_cells(n.select("n_id", "n_vec", "n_norm"),
                            "n_id", "n_vec", cdf, n_centroids,
                            carry=("n_vec", "n_norm"), dims=dims)

@@ -25,16 +25,19 @@ material for any probe join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import sql_ident, sql_str
 from w_userflow_featurestore_spark.operators.dedup import text_hash60
 
 
-def _cell(item_col, d_col, width: int, salt: str):
+def _cell(item: str, d: str, width: int, salt: str) -> Column:
+    """Row ``d``'s counter cell of the SQL fragment ``item``: the 60-bit
+    md5 of "salt:d:item" mod ``width``."""
     return F.pmod(
-        text_hash60(F.concat_ws(":", F.lit(salt), d_col.cast("string"),
-                                item_col.cast("string"))),
+        text_hash60(f"concat_ws(':', {sql_str(salt)}, CAST({d} AS STRING),"
+                    f" CAST({item} AS STRING))"),
         F.lit(width)).cast("long")
 
 
@@ -53,7 +56,7 @@ def cms_build(df: DataFrame, item_col: str, depth: int = 4,
     return (counts
             .select("item", "n", d.alias("d", "_z"))
             .select(F.col("d").cast("int").alias("d"),
-                    _cell(F.col("item"), F.col("d"), width, salt)
+                    _cell("item", "d", width, salt)
                     .alias("cell"), "n")
             .groupBy("d", "cell").agg(F.sum("n").alias("n")))
 
@@ -78,7 +81,7 @@ def cms_lookup(sketch: DataFrame, probes: DataFrame, item_col: str,
     probed = (probes
               .select("*", d.alias("d", "_z"))
               .select("*",
-                      _cell(F.col(item_col), F.col("d"), width, salt)
+                      _cell(sql_ident(item_col), "d", width, salt)
                       .alias("cell")))
     return (probed.join(F.broadcast(sketch), ["d", "cell"], "left")
                   .groupBy(*probes.columns)

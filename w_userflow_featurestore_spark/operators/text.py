@@ -16,7 +16,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import exact_avg, fround
+from w_userflow_featurestore_spark.functions import (
+    exact_avg, fround, sql_ident,
+)
 from w_userflow_featurestore_spark.operators.dedup import (
     _hash60_sql, _norm_sql, _words_sql, normalize_text, text_hash60, words,
 )
@@ -35,44 +37,37 @@ LANG_PROFILES: dict[str, tuple[str, ...]] = {
 BPE_TOKEN_RE = "[a-z]+|[0-9]+|[^a-z0-9\\s]"
 
 
-# Compound leaf helpers accept a Column OR a SQL fragment string; the
-# string path renders the whole expression as ONE ``F.expr`` instead of
-# one py4j roundtrip per AST node (guide §7.3 — plan construction is
-# driver-side traffic paid inside every timed query). The parsed trees
-# are the same Catalyst expressions; double literals are written with
-# the ``D`` suffix so SQL types match ``F.lit(float)`` exactly.
+# Expression helpers take a SQL fragment (a backticked column name or an
+# expression) and return a Column parsed by one ``F.expr``; double
+# literals carry the ``D`` suffix so the parser does not widen them to
+# DECIMAL.
 
 
 def _stop_hits_sql(ws: str, stopwords: tuple[str, ...]) -> str:
+    """Frequency-sensitive stopword hit count of a word array."""
     arr = ",".join(f"'{w}'" for w in stopwords)
     return f"size(filter({ws}, w -> array_contains(array({arr}), w)))"
 
 
-def _stop_hits(ws: Column, stopwords: tuple[str, ...]) -> Column:
-    """Frequency-sensitive stopword hit count (filter+size, JVM-side)."""
-    arr = F.array(*[F.lit(w) for w in stopwords])
-    return F.size(F.filter(ws, lambda w: F.array_contains(arr, w)))
-
-
-def token_count_ws(col: Column | str) -> Column:
+def token_count_ws(col: str) -> Column:
     """Whitespace token count over the normalized text."""
-    if isinstance(col, str):
-        return F.expr(f"size({_words_sql(col)})")
-    return F.size(words(col))
+    return F.expr(f"size({_words_sql(col)})")
 
 
-def token_count_bpe(col: Column | str) -> Column:
+def token_count_bpe(col: str) -> Column:
     """BPE-ish subword proxy: count of letter-run / digit-run / symbol
     matches in the RAW lowercased text (punctuation counts, as a real
     byte-pair pretokenizer would see it)."""
-    if isinstance(col, str):
-        pat = BPE_TOKEN_RE.replace("\\", "\\\\")
-        return F.expr(f"regexp_count(lower({col}), '{pat}')")
-    return F.regexp_count(F.lower(col), F.lit(BPE_TOKEN_RE))
+    pat = BPE_TOKEN_RE.replace("\\", "\\\\")
+    return F.expr(f"regexp_count(lower({col}), '{pat}')")
 
 
-def _lang_id_sql(x: str) -> str:
-    ws = _words_sql(x)
+def lang_id(col: str) -> Column:
+    """Stopword-profile language ID: argmax of per-language hit counts,
+    'und' (undetermined) when nothing matches. Deterministic tie-break =
+    LANG_PROFILES order. Accuracy is corpus-dependent (it is a heuristic);
+    the contract is determinism + zero shuffle."""
+    ws = _words_sql(col)
     hits = {lang: _stop_hits_sql(ws, prof)
             for lang, prof in LANG_PROFILES.items()}
     best = "greatest({})".format(",".join(hits.values()))
@@ -80,83 +75,40 @@ def _lang_id_sql(x: str) -> str:
     for lang in reversed(list(LANG_PROFILES)):      # earlier profile wins ties
         out = (f"CASE WHEN ((({hits[lang]}) > 0) AND (({hits[lang]}) ="
                f" ({best}))) THEN '{lang}' ELSE {out} END")
-    return out
+    return F.expr(out)
 
 
-def lang_id(col: Column | str) -> Column:
-    """Stopword-profile language ID: argmax of per-language hit counts,
-    'und' (undetermined) when nothing matches. Deterministic tie-break =
-    LANG_PROFILES order. Accuracy is corpus-dependent (it is a heuristic);
-    the contract is determinism + zero shuffle."""
-    if isinstance(col, str):
-        return F.expr(_lang_id_sql(col))
-    ws = words(col)
-    hits = {lang: _stop_hits(ws, prof) for lang, prof in LANG_PROFILES.items()}
-    best = F.greatest(*hits.values())
-    out = F.lit("und")
-    for lang in reversed(list(LANG_PROFILES)):      # earlier profile wins ties
-        out = F.when((hits[lang] > 0) & (hits[lang] == best), lang).otherwise(out)
-    return out
-
-
-def _quality_sql(x: str) -> str:
-    ws = _words_sql(x)
+def quality_score(col: str) -> Column:
+    """Composite [0,1] quality heuristic from length, alpha ratio, mean
+    word length, and stopword density — the standard cheap pre-filter for
+    training-corpus curation. Weights are fixed; each component is a pure
+    arithmetic expression of the raw text, rounded with fround's
+    floor(x * 100 + 0.5) / 100."""
+    ws = _words_sql(col)
     n_tok = f"size({ws})"
-    n_alpha = f"length(regexp_replace(lower({x}), '[^a-z0-9]', ''))"
-    norm = _norm_sql(x)
-    mean_wl = f"((length({norm}) - ({n_tok} - 1)) / {n_tok})"
+    n_alpha = f"length(regexp_replace(lower({col}), '[^a-z0-9]', ''))"
+    # mean word length over normalized text: chars minus separators / tokens
+    mean_wl = f"((length({_norm_sql(col)}) - ({n_tok} - 1)) / {n_tok})"
     len_score = f"least({n_tok} / 64.0D, 1.0D)"
-    alpha_ratio = f"({n_alpha} / length({x}))"
+    alpha_ratio = f"({n_alpha} / length({col}))"
     stop = _stop_hits_sql(ws, LANG_PROFILES["en"])
     stop_density = f"least((({stop}) * 8.0D) / {n_tok}, 1.0D)"
     wl_score = (f"CASE WHEN (({mean_wl} >= 3.0D) AND ({mean_wl} <= 8.0D))"
                 f" THEN 1.0D ELSE 0.5D END")
     q = (f"(((0.35D * {len_score}) + (0.25D * {alpha_ratio}))"
          f" + (0.25D * ({wl_score}))) + (0.15D * {stop_density})")
-    return f"floor((({q}) * 100.0D) + 0.5D) / 100.0D"
+    return F.expr(f"floor((({q}) * 100.0D) + 0.5D) / 100.0D")
 
 
-def quality_score(col: Column | str) -> Column:
-    """Composite [0,1] quality heuristic from length, alpha ratio, mean
-    word length, and stopword density — the standard cheap pre-filter for
-    training-corpus curation. Weights are fixed; each component is a pure
-    arithmetic expression of the raw text."""
-    if isinstance(col, str):
-        return F.expr(_quality_sql(col))
-    n_tok = token_count_ws(col)
-    n_raw = F.length(col)
-    n_alpha = F.length(F.regexp_replace(F.lower(col), "[^a-z0-9]", ""))
-    norm = normalize_text(col)
-    # mean word length over normalized text: chars minus separators / tokens
-    mean_wl = (F.length(norm) - (n_tok - 1)) / n_tok
-    len_score = F.least(n_tok / F.lit(64.0), F.lit(1.0))
-    alpha_ratio = n_alpha / n_raw
-    stop_density = F.least(
-        _stop_hits(words(col), LANG_PROFILES["en"]) * F.lit(8.0) / n_tok,
-        F.lit(1.0))
-    wl_score = F.when((mean_wl >= 3.0) & (mean_wl <= 8.0), 1.0).otherwise(0.5)
-    return fround(F.lit(0.35) * len_score + F.lit(0.25) * alpha_ratio
-                  + F.lit(0.25) * wl_score + F.lit(0.15) * stop_density, 2)
-
-
-def doc_fingerprint(col: Column | str, n: int = 5) -> Column:
+def doc_fingerprint(col: str, n: int = 5) -> Column:
     """Bottom-1 rolling fingerprint: min 60-bit hash over word n-gram
     shingles (array_min(transform(...)) — per-row, no explode). Two docs
     sharing their minimal shingle collide — the winnowing building block."""
-    if isinstance(col, str):
-        ws = _words_sql(col)
-        k = f"greatest(size({ws}) - {n - 1}, 1)"
-        sh = (f"transform(sequence(1, {k}),"
-              f" i -> concat_ws(' ', slice({ws}, i, {n})))")
-        return F.expr(f"array_min(transform({sh},"
-                      f" s -> {_hash60_sql('s')}))")
-    ws = words(col)
-    k = F.greatest(F.size(ws) - (n - 1), F.lit(1))
-    sh = F.transform(F.sequence(F.lit(1), k),
-                     lambda i: F.concat_ws(" ", F.slice(ws, i, n)))
-    # NB: explicit one-arg lambda — F.transform would otherwise pass the
-    # array index into text_hash60's ``seed`` parameter
-    return F.array_min(F.transform(sh, lambda s: text_hash60(s)))
+    ws = _words_sql(col)
+    k = f"greatest(size({ws}) - {n - 1}, 1)"
+    sh = (f"transform(sequence(1, {k}),"
+          f" i -> concat_ws(' ', slice({ws}, i, {n})))")
+    return F.expr(f"array_min(transform({sh}, s -> {_hash60_sql('s')}))")
 
 
 def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
@@ -181,21 +133,16 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
     # per-position lambda re-runs the regex over the whole document at
     # every position — O(len^2) interpreted regex work per doc (measured:
     # a single such task ran 25+ min over sf0.1's documents).
-    norm_col = F.col("__winnow_norm")
-    hs_col = F.col("__winnow_hs")
-    m = F.length(norm_col) - (k - 1)
-    hs = F.when(
-        m >= 1,
-        F.transform(F.sequence(F.lit(1), m),
-                    lambda i: text_hash60(F.substring(norm_col, i, k)))
-    ).otherwise(F.array(text_hash60(norm_col)))
-    nwin = F.size(hs_col) - (w - 1)
-    fps = F.when(
-        nwin >= 1,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), nwin),
-                        lambda i: F.array_min(F.slice(hs_col, i, w))))
-    ).otherwise(F.array(F.array_min(hs_col)))
+    m = f"length(__winnow_norm) - {k - 1}"
+    gram = _hash60_sql(f"substring(__winnow_norm, i, {k})")
+    hs = F.expr(f"CASE WHEN {m} >= 1 THEN transform(sequence(1, {m}),"
+                f" i -> {gram}) ELSE array({_hash60_sql('__winnow_norm')})"
+                f" END")
+    nwin = f"size(__winnow_hs) - {w - 1}"
+    fps = F.expr(f"CASE WHEN {nwin} >= 1 THEN array_distinct(transform("
+                 f"sequence(1, {nwin}),"
+                 f" i -> array_min(slice(__winnow_hs, i, {w}))))"
+                 f" ELSE array(array_min(__winnow_hs)) END")
     return (fan_out(docs.select(F.col(id_col), F.col(text_col)))
             .withColumn("__winnow_norm", normalize_text(f"`{text_col}`"))
             .withColumn("__winnow_hs", hs)
@@ -259,29 +206,34 @@ def pii_scrub(docs: DataFrame, text_col: str = "text",
                       (total > 0).cast("int").alias("has_pii"))
 
 
-def _max_run(sorted_arr: Column | str) -> Column:
+def _max_run(sorted_arr: str) -> Column:
     """Count of the most frequent element of a SORTED array = longest run
     of equal adjacent elements — one linear ``aggregate()`` pass per row.
     This turns "mode count", normally an explode + groupBy shuffle, into
     a row-local expression: the per-doc sort is O(n log n) inside codegen
     and the corpus never shuffles."""
-    if isinstance(sorted_arr, str):
-        run = "CASE WHEN x = acc.prev THEN acc.run + 1 ELSE 1 END"
-        return F.expr(
-            f"aggregate({sorted_arr},"
-            f" named_struct('prev', '', 'run', 0, 'best', 0),"
-            f" (acc, x) -> named_struct('prev', x, 'run', {run},"
-            f" 'best', greatest(acc.best, {run})),"
-            f" acc -> acc.best)")
-    zero = F.struct(F.lit("").alias("prev"), F.lit(0).alias("run"),
-                    F.lit(0).alias("best"))
+    run = "CASE WHEN x = acc.prev THEN acc.run + 1 ELSE 1 END"
+    return F.expr(f"aggregate({sorted_arr},"
+                  f" named_struct('prev', '', 'run', 0, 'best', 0),"
+                  f" (acc, x) -> named_struct('prev', x, 'run', {run},"
+                  f" 'best', greatest(acc.best, {run})),"
+                  f" acc -> acc.best)")
 
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(F.lit(1))
-        return F.struct(x.alias("prev"), run.alias("run"),
-                        F.greatest(acc["best"], run).alias("best"))
 
-    return F.aggregate(sorted_arr, zero, step, lambda acc: acc["best"])
+def _top_fracs(ws: str, n: str) -> tuple[Column, Column]:
+    """(top_word, top_bigram) over the word-array column ``ws`` of size
+    ``n``: the most frequent word's share of the words and the most
+    frequent bigram's share of the ``n - 1`` bigrams, unrounded. A doc
+    with a single word has no bigrams and scores 0 (never a descending
+    ``sequence(1, 0)``)."""
+    bigrams = (f"CASE WHEN {n} >= 2 THEN transform(sequence(1, {n} - 1),"
+               f" i -> concat_ws(' ', slice({ws}, i, 2)))"
+               f" ELSE CAST(array() AS ARRAY<STRING>) END")
+    top_word = _max_run(f"array_sort({ws})").cast("double") / F.col(n)
+    top_bigram = F.coalesce(
+        _max_run(f"array_sort({bigrams})").cast("double")
+        / F.nullif(F.col(n) - 1, F.lit(0)), F.lit(0.0))
+    return top_word, top_bigram
 
 
 def repetition_profile(docs: DataFrame, text_col: str = "text",
@@ -299,34 +251,26 @@ def repetition_profile(docs: DataFrame, text_col: str = "text",
     :func:`_max_run`), so the op is a zero-shuffle projection that
     pipelines into the document scan — the cheap pre-filter runs before
     any shuffle-bearing dedup stage. Docs with a single word have no
-    bigrams: ``top_bigram_frac`` is 0 there (never a descending
-    ``sequence(1, 0)``).
+    bigrams: ``top_bigram_frac`` is 0 there.
     """
     docs = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    ws = words(f"`{text_col}`")
-    empty = F.array().cast("array<string>")
-    out = (docs.withColumn("__ws", ws)
-           .withColumn("__n", F.size(F.col("__ws"))))
-    n, wsc = F.col("__n"), F.col("__ws")
-    bigrams = F.when(n >= 2, F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.concat_ws(" ", F.slice(wsc, i, 2)))).otherwise(empty)
-    out = (out.withColumn("__nd", F.size(F.array_distinct(wsc)))
-           .withColumn("__tw", _max_run(F.array_sort(wsc)))
-           .withColumn("__tb", _max_run(F.array_sort(bigrams))))
-    top_word = F.col("__tw").cast("double") / n
-    top_bigram = F.when(n >= 2, F.col("__tb").cast("double") / (n - 1)) \
-                  .otherwise(F.lit(0.0))
+    top_word, top_bigram = _top_fracs("__ws", "__n")
+    out = (docs.withColumn("__ws", words(sql_ident(text_col)))
+           .withColumn("__n", F.size(F.col("__ws")))
+           .withColumn("__nd", F.size(F.array_distinct(F.col("__ws"))))
+           .withColumn("__tw", top_word)
+           .withColumn("__tb", top_bigram))
+    n, tw, tb = F.col("__n"), F.col("__tw"), F.col("__tb")
     distinct_ratio = F.col("__nd").cast("double") / n
     return out.select(
         F.col(id_col),
         n.cast("long").alias("n_words"),
         F.col("__nd").cast("long").alias("n_distinct_words"),
         fround(distinct_ratio, 4).alias("distinct_word_ratio"),
-        fround(top_word, 4).alias("top_word_frac"),
-        fround(top_bigram, 4).alias("top_bigram_frac"),
-        ((top_word > F.lit(top_word_max))
-         | (top_bigram > F.lit(top_bigram_max))
+        fround(tw, 4).alias("top_word_frac"),
+        fround(tb, 4).alias("top_bigram_frac"),
+        ((tw > F.lit(top_word_max))
+         | (tb > F.lit(top_bigram_max))
          | (distinct_ratio < F.lit(distinct_min)))
         .cast("int").alias("repetitive"))
 
@@ -531,10 +475,9 @@ def line_dedup(docs: DataFrame, max_occurrences: int = 2,
     anti-join carry hashes.
     """
     # The per-doc TOTAL line count rides every exploded row as a
-    # row-local size() (round 12, guide §2.3/§2.4): it is functionally
-    # dependent on the doc, so it joins the reassembly GROUP KEY for
-    # free — the old shape paid a second full explode pass, an
-    # id-keyed aggregate and a join to re-attach it. The doc text's
+    # row-local size(): it is functionally dependent on the doc, so it
+    # joins the reassembly GROUP KEY for free instead of a second full
+    # explode pass, an id-keyed aggregate and a join. The doc text's
     # split() is evaluated twice per row (size + the generator), far
     # cheaper than that extra pass.
     lines = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
@@ -688,14 +631,11 @@ def _gram_postings(docs: DataFrame, k: int, text_col: str,
     if k < 2:
         raise ValueError("k-gram spans need k >= 2")
     base = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    ws = words(f"`{text_col}`")
-    n = F.size(ws)
-    grams = F.when(
-        n >= k,
-        F.transform(F.sequence(F.lit(1), (n - k + 1).cast("int")),
-                    lambda i: text_hash60(
-                        F.concat_ws(" ", F.slice(ws, i, k)))),
-    ).otherwise(F.array().cast("array<bigint>"))
+    ws = _words_sql(sql_ident(text_col))
+    gram = _hash60_sql(f"concat_ws(' ', slice({ws}, i, {k}))")
+    grams = F.expr(f"CASE WHEN size({ws}) >= {k} THEN transform(sequence(1,"
+                   f" CAST(size({ws}) - {k} + 1 AS INT)), i -> {gram})"
+                   f" ELSE CAST(array() AS ARRAY<BIGINT>) END")
     return (base.select(F.col(id_col),
                         F.posexplode(grams).alias("p0", "gh"))
                 .select(F.col(id_col),
@@ -810,10 +750,9 @@ def incremental_span_removed(new_docs: DataFrame, ledger: DataFrame,
     """The ExactSubstr REWRITE for a NEW batch against an
     already-ingested corpus represented ONLY by its
     :func:`gram_ledger` — the daily-update twin of
-    :func:`remove_duplicate_spans`, completing the incremental family
-    (round-10 verdict #5: detect had an incremental form,
-    :func:`incremental_duplicate_spans`; the rewrite did not, so a
-    growing corpus re-paid the whole-complement rewrite each batch).
+    :func:`remove_duplicate_spans` and the rewrite half of
+    :func:`incremental_duplicate_spans`, so a growing corpus never
+    re-pays the whole-complement rewrite each batch.
 
     Returns the batch rewritten: one row per batch document with
     (doc_id, text_clean, n_tokens, n_tokens_removed, n_spans_removed)
@@ -869,7 +808,7 @@ def token_surprisal(docs: DataFrame, text_col: str = "text",
     # join then read the SAME (id, token)-keyed partial aggregate, so
     # its exchange plans once and replays as a ReusedExchange — the
     # token explode + normalization runs ONE map pass instead of two
-    # (guide §2.4: operations keyed the same way share one exchange).
+    # (operations keyed the same way share one exchange).
     toks_cnt = (toks.groupBy(id_col, "token")
                 .agg(F.count(F.lit(1)).alias("_c")))
     lm = toks_cnt.groupBy("token").agg(F.sum("_c").alias("n_t"))
@@ -940,15 +879,9 @@ def quality_filter_verdict(docs: DataFrame, *,
                .withColumn("__n", F.size(F.col("__ws")))
                .withColumn("__q", quality_score(c))
                .withColumn("__lang", lang_id(c)))
-    n, wsc = F.col("__n"), F.col("__ws")
-    bigrams_sql = ("CASE WHEN __n >= 2 THEN transform(sequence(1,"
-                   " __n - 1), i -> concat_ws(' ', slice(__ws, i, 2)))"
-                   " ELSE CAST(array() AS ARRAY<STRING>) END")
-    top_word = _max_run("array_sort(__ws)").cast("double") / n
-    top_bigram = F.coalesce(
-        _max_run(f"array_sort({bigrams_sql})").cast("double")
-        / F.nullif(n - 1, F.lit(0)), F.lit(0.0))
-    distinct_ratio = F.size(F.array_distinct(wsc)).cast("double") / n
+    n = F.col("__n")
+    top_word, top_bigram = _top_fracs("__ws", "__n")
+    distinct_ratio = F.size(F.array_distinct("__ws")).cast("double") / n
     repetitive = ((top_word > F.lit(top_word_max))
                   | (top_bigram > F.lit(top_bigram_max))
                   | (distinct_ratio < F.lit(distinct_min)))
@@ -1022,7 +955,7 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
     # (doc, bigram, count) grain FIRST — the LM aggregate and the
     # scoring join share the (id, w1, w2) partial aggregate's exchange
     # (ReusedExchange), so the bigram build runs one map pass instead
-    # of two (guide §2.4; same shape as token_surprisal/dsir).
+    # of two (same shape as token_surprisal/dsir).
     big_cnt = (big.groupBy(id_col, "w1", "w2")
                .agg(F.count(F.lit(1)).alias("_c")))
     lm2 = big_cnt.groupBy("w1", "w2").agg(F.sum("_c").alias("c2"))
@@ -1062,9 +995,9 @@ def perplexity_buckets(docs: DataFrame, text_col: str = "text",
 
     Returns (doc_id, lang, mean_bits, bucket).
 
-    Scale shape — NO per-language global sort (the round-6
-    token_budget_mix lesson: a window partitioned by a handful of
-    languages routes each language's corpus to one task). mean_bits is
+    Scale shape — NO per-language global sort (a window partitioned
+    by a handful of languages routes each language's corpus to one
+    task). mean_bits is
     quantized to 4 decimals, so the score domain is small and
     bounded: the thresholds come from a (lang, score) HISTOGRAM — one
     hash-aggregate whose output is value-domain-sized, a window over
@@ -1156,20 +1089,16 @@ BPE_OPEN, BPE_CLOSE = "\x01", "\x02"
 
 
 def _bpe_symbols_sql(syms: str) -> str:
-    """SQL twin of :func:`_bpe_symbols` (one F.expr instead of ~30 py4j
-    roundtrips; the sentinels are embedded as raw characters in the
-    parsed string literal)."""
+    """Symbol array from the wrapped representation: strip the leading
+    \\x01 and trailing \\x02, split on the \\x02\\x01 seam (the
+    sentinels are embedded as raw characters in the parsed literal)."""
     return (f"split(CAST(substring({syms}, 2, length({syms}) - 2)"
             f" AS STRING), '{BPE_CLOSE}{BPE_OPEN}')")
 
 
-def _bpe_symbols(syms: Column | str) -> Column:
-    """Symbol array from the wrapped representation: strip the leading
-    \\x01 and trailing \\x02, split on the \\x02\\x01 seam."""
-    if isinstance(syms, str):
-        return F.expr(_bpe_symbols_sql(syms))
-    return F.split(F.substring(syms, 2, F.length(syms) - 2)
-                   .cast("string"), BPE_CLOSE + BPE_OPEN)
+def _bpe_symbols(syms: str) -> Column:
+    """:func:`_bpe_symbols_sql` as a Column."""
+    return F.expr(_bpe_symbols_sql(syms))
 
 
 def bpe_pair_stats(symbolized: DataFrame) -> DataFrame:
@@ -1258,9 +1187,8 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
             expr = f"replace({expr}, '{S}{a}{E}{S}{b}{E}', '{S}{a}{b}{E}')"
         return base.select(F.expr(expr).alias("syms"), "freq")
 
-    # Round-12 note — batched argmax selection was TRIED and REVERTED
-    # (guide §1.1: measure the ideal, switch back when it loses).
-    # Accepting several top-K pairs per counting round is only
+    # One merge per counting round, on purpose. Accepting several
+    # top-K pairs per counting round is only
     # sequential-exact when a candidate's count strictly dominates
     # every fetched pair sharing a symbol with the accepted set —
     # including TIES sorted after it, because a pair derived from an
@@ -1270,8 +1198,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     # model). Under that sound condition, char-level pair counts —
     # whose top pairs all share a handful of hot symbols — accept one
     # pair per round anyway (measured 8 rounds for 8 merges on the
-    # fixture corpus), so the batching bought nothing and the simple
-    # sequential loop stays.
+    # fixture corpus), so batching buys nothing over this loop.
     merges: list[tuple] = []
     for rank in range(1, n_merges + 1):
         best = (bpe_pair_stats(symbolize(merges))
@@ -1336,9 +1263,9 @@ BPE_MERGE_SCHEMA = ("tokenizer_version long, merge_rank long,"
 
 def _registry_max_version(t) -> int | None:
     """Exact ``max(tokenizer_version)`` read from the registry's
-    MANIFEST stats — pure driver-side metadata, no Spark job (round
-    13, guide §7.3: the latest-version probe inside bpe_save/bpe_load
-    was a full table read+agg+collect per call). Sound because every
+    MANIFEST stats — pure driver-side metadata, no Spark job (instead
+    of a full table read+agg+collect per bpe_save/bpe_load call).
+    Sound because every
     publish stamps the version onto every row of its single file and
     the table declares ``stats_columns=["tokenizer_version"]``, so
     max-over-file-maxes is the column max. Returns None whenever ANY
@@ -1582,7 +1509,7 @@ def ccnet_curate(docs: DataFrame, *, middle_keep_bp: int = 500,
                 .where(F.col("keep")).select(id_col))
     admit = (F.when(F.col("bucket") == "head", F.lit(True))
               .when(F.col("bucket") == "middle",
-                    hash_bucket(F.col(id_col), sample_buckets, salt)
+                    hash_bucket(sql_ident(id_col), sample_buckets, salt)
                     < middle_keep_bp)
               .otherwise(F.lit(False)))
     return (buckets.join(kept_ids, id_col, "left_semi")
@@ -1608,15 +1535,14 @@ def bpe_version_drift(spark, table_path: str, docs: DataFrame,
     drift_bp = old_bp - new_bp (>= 0 when the new version extends the
     old merge list — more merges never split a word further).
 
-    Scale shape (round 12): ONE pass at the (doc, distinct-word) grain
-    — both versions' symbol counts are computed side by side in the
-    same projection (the replace chains ride as literals; when the new
+    Scale shape: ONE pass at the (doc, distinct-word) grain — both
+    versions' symbol counts are computed side by side in the same
+    projection (the replace chains ride as literals; when the new
     version extends the old, codegen shares the old chain as the new
-    chain's prefix subexpression), then one per-doc rollup. The
-    previous shape ran two full :func:`bpe_apply` passes over the
-    corpus and joined them on the doc key (guide §2.4: don't compute
-    the same grain twice to join it back together); output is
-    bit-identical — same counts, same DECIMAL basis-point arithmetic.
+    chain's prefix subexpression), then one per-doc rollup, instead of
+    two full :func:`bpe_apply` passes joined on the doc key. Output is
+    bit-identical to that form — same counts, same DECIMAL basis-point
+    arithmetic.
     """
     S, E = BPE_OPEN, BPE_CLOSE
 
@@ -1738,7 +1664,7 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
     raises at execution time instead of losing rows; a NULL T with a
     nonempty pair table (the SUM itself overflowing past ~1e38
     events) raises through the same guard rather than falling to the
-    ELSE arm (round-10 ADVICE).
+    ELSE arm.
     Only POSITIVE-PMI pairs survive (num >= den): negative PMI means
     "co-occur less than chance", never a collocation, and keeping the
     domain >= 1 keeps the log integral. ``min_count`` suppresses the
@@ -1793,7 +1719,7 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
                  # ITSELF overflowed (>1e38 events — non-ANSI Spark
                  # nulls it); without the IS NULL arm the NULL
                  # comparison falls to ELSE and silently corrupts
-                 # t_total (round-10 ADVICE). The _np > 0 conjunct
+                 # t_total. The _np > 0 conjunct
                  # keeps a legitimately EMPTY bigram corpus (sum over
                  # zero rows is also NULL) from tripping the guard —
                  # the broadcast build evaluates this projection even

@@ -20,8 +20,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import os
-import re
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -133,94 +131,8 @@ def read_table(spark: SparkSession, sf_dir: str, name: str,
     return df
 
 
-#: session_cache key: {analyzed-plan semanticHash: partition-count
-#: estimate}. Plan METADATA only (how many splits a scan yields).
+#: session_cache key: {analyzed-plan semanticHash: partition count}.
 _FANOUT_PARTS_MEMO = "parquet.fanout_parts"
-
-
-def _conf_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('128m', '4194304b', '1g')."""
-    m = re.fullmatch(r"(\d+)([kmgtp]?)b?", v.strip().lower())
-    if not m:
-        raise ValueError(v)
-    return int(m.group(1)) * 1024 ** "_kmgtp".index(m.group(2) or "_")
-
-
-def _estimated_scan_splits(df: DataFrame) -> int | None:
-    """Estimate the scan split count of a file-backed frame WITHOUT
-    invoking the physical planner.
-
-    ``df.rdd.getNumPartitions()`` answers this exactly but runs full
-    physical planning + RDD DAG construction of the whole subtree —
-    ~100 ms per call, paid
-    inside every timed query that calls :func:`fan_out`. The estimate
-    instead lists the frame's input files (analysis-only metadata call)
-    and replays Spark's split formula (``FilePartition``: splits ≈
-    ceil((Σ size_i + openCost·n_files) / maxSplitBytes)). Local-path
-    files only — any remote URI, empty listing (e.g. a localCheckpoint
-    or createDataFrame leaf) or stat failure returns None and the
-    caller falls back to the exact path. The estimate ignores
-    upstream exchanges (a post-shuffle frame reports its scan's
-    splits); every call site hands in a scan+projection, and a wrong
-    answer only toggles a round-robin spread of an input that small —
-    never correctness.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — e.g. streaming frame
-        return None
-    if not files:
-        return None
-    sizes = []
-    for uri in files:
-        if uri.startswith("file:"):
-            path = unquote(urlparse(uri).path)
-        elif "://" in uri:
-            return None                      # remote FS: can't stat cheaply
-        else:
-            path = uri
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    conf = df.sparkSession.conf
-    try:
-        max_part = _conf_bytes(conf.get(
-            "spark.sql.files.maxPartitionBytes", "128m"))
-        open_cost = _conf_bytes(conf.get(
-            "spark.sql.files.openCostInBytes", "4m"))
-    except ValueError:
-        return None
-    default_par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        # no default arg: Spark 4 validates a default against the conf's
-        # requirement (rejects "0" / "" for this positive-int conf)
-        min_num = int(conf.get("spark.sql.files.minPartitionNum")
-                      or default_par)
-    except Exception:  # noqa: BLE001 — unset optional conf
-        min_num = default_par
-    # FilePartition.maxSplitBytes: bytesPerCore over openCost-padded
-    # totals, clamped to [openCost, maxPartitionBytes]
-    padded = sum(sizes) + open_cost * len(sizes)
-    split = min(max_part, max(open_cost, padded // max(min_num, 1)))
-    # FilePartition.getFilePartitions: slice each file into <=split
-    # pieces (size DESC), then pack — a partition closes when adding
-    # the next piece's BYTES would exceed split; each packed piece
-    # accrues openCost padding toward the running size.
-    pieces: list[int] = []
-    for s in sorted(sizes, reverse=True):
-        while s > split:
-            pieces.append(split)
-            s -= split
-        if s > 0:
-            pieces.append(s)
-    n, cur = 0, 0
-    for p in pieces:
-        if n == 0 or cur + p > split:
-            n += 1
-            cur = 0
-        cur += p + open_cost
-    return max(1, n)
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -238,29 +150,22 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     attributes, not computation, through a Repartition), so the heavy
     work lands on every core.
 
-    The partition count is read through a memoized file-size estimate
-    (:func:`_estimated_scan_splits`) rather than
-    ``df.rdd.getNumPartitions()``: the exact check runs the physical
-    planner over the subtree (~100 ms/call),
-    which dominated sub-second queries that fan out two or three
-    inputs. The decision is identical — both compare the scan's split
-    count against the target — and the memo key is the analyzed plan's
-    ``semanticHash``, so repeated constructions of the same query
-    (bench warm-up + repeats) pay the estimate once.
+    The partition count is ``df.rdd.getNumPartitions()``, which plans
+    the subtree physically (~100 ms). It is memoized per session on the
+    analyzed plan's ``semanticHash``, so repeated constructions of the
+    same query (warm-up + timed repeats) size the frame once.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     memo = session_cache(spark).setdefault(_FANOUT_PARTS_MEMO, {})
     try:
         key = df.semanticHash()
-    except Exception:  # noqa: BLE001 — unanalyzable: size it the slow way
+    except Exception:  # noqa: BLE001 — unanalyzable: size it uncached
         key = None
     if key is not None and key in memo:
         n = memo[key]
     else:
-        n = _estimated_scan_splits(df)
-        if n is None:
-            n = df.rdd.getNumPartitions()
+        n = df.rdd.getNumPartitions()
         if key is not None:
             memo[key] = n
     if n >= target:
