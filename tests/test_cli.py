@@ -34,6 +34,52 @@ def test_cli_bronze_silver_gold_pipeline(spark, tmp_path, capsys):
     assert spark.read.parquet(f"{gold}/user_daily").count() == 2
 
 
+def test_cli_bronze_silver_gold_pipeline_log_compacted(spark, tmp_path,
+                                                      capsys):
+    """Only bronze names the format. After a compaction leaves the
+    replaced files on disk, silver and gold read the LogTable's live
+    rows, so gold equals run_daily_features over ``LogTable.read()``
+    events; a plain parquet read would count the compacted rows twice."""
+    from tests.conftest import rows
+    from w_userflow_featurestore_spark.runner import run_daily_features
+    from w_userflow_featurestore_spark.sources import LogTable, read_path
+
+    src = str(tmp_path / "src")
+    bronze, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    for batch in (
+        [(1, dt.datetime(2024, 1, 1, 10, 0), 1, "view", 1.0, '{"k": 1}'),
+         (2, dt.datetime(2024, 1, 1, 10, 5), 1, "purchase", 60.0, "{}")],
+        [(3, dt.datetime(2024, 1, 1, 11, 0), 2, "error", 5.0, "{}"),
+         (4, dt.datetime(2024, 1, 2, 9, 0), 1, "view", 2.0, "{}")],
+    ):
+        spark.createDataFrame(batch, EVENTS_DDL).coalesce(1) \
+            .write.mode("append").parquet(src)
+        assert main(["bronze", "--source", src, "--out", bronze,
+                     "--checkpoint", ckpt, "--table-format", "log"]) == 0
+    events = LogTable(spark, bronze)
+    assert len(events.snapshots()) == 2
+    events.compact(target_files=1)
+    assert events.read().count() == 4
+
+    silver, ledger = str(tmp_path / "silver"), str(tmp_path / "ledger.json")
+    assert main(["silver", "--events", bronze, "--silver", silver,
+                 "--ledger", ledger, "--now", "2024-02-01 00:00:00"]) == 0
+    assert "sessions_upserted=3" in capsys.readouterr().out
+
+    gold, ref = str(tmp_path / "gold"), str(tmp_path / "gold_ref")
+    assert main(["gold", "--silver", silver, "--events", bronze,
+                 "--out", gold]) == 0
+    want = run_daily_features(spark, silver, events.read(), ref)
+    for name in want:
+        got_t, want_t = read_path(spark, f"{gold}/{name}"), \
+            read_path(spark, f"{ref}/{name}")
+        cols = sorted(want_t.columns)
+        assert rows(got_t, *cols) == rows(want_t, *cols), name
+    # silver and gold took bronze's format
+    assert all(LogTable.is_log_table(p) for p in
+               [silver] + [f"{gold}/{name}" for name in want])
+
+
 def test_cli_curate_full_then_incremental(spark, tmp_path, capsys):
     from w_userflow_featurestore_spark.__main__ import main
 

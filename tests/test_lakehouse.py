@@ -103,9 +103,10 @@ def test_merge_idempotent_and_first_write_creates(spark, table):
 
 def test_merge_upsert_dispatches_to_log_format(spark, tmp_path):
     path = str(tmp_path / "t")
+    LogTable.create(spark, path, ["datetime"])
     merge_upsert(spark, path, _df(spark, [(1, D1, "a")]),
-                 keys=["k"], partition_by=["datetime"], format="log")
-    # auto-detect on the second call: LogTable already exists at path
+                 keys=["k"], partition_by=["datetime"])
+    # the second call dispatches the same way: a LogTable is at path
     merge_upsert(spark, path, _df(spark, [(1, D1, "A"), (2, D2, "b")]),
                  keys=["k"], partition_by=["datetime"])
     t = LogTable(spark, path)
@@ -332,8 +333,7 @@ def test_run_silver_log_format_matches_parquet_format(spark, tmp_path):
         lt.append(spark.createDataFrame(b, EVENTS_DDL)
                   .withColumn("datetime", F.to_date("ts")))
         r = run_silver(spark, lt.path, str(tmp_path / "lt_silver"),
-                       str(tmp_path / "lt_ledger.json"), now,
-                       table_format="log")
+                       str(tmp_path / "lt_ledger.json"), now)
         assert r.mode in ("full", "incremental")
 
     cols = ["session_id", "user_id", "start_time", "end_time", "n_events",
@@ -477,10 +477,9 @@ def test_run_daily_features_log_format_matches_parquet(spark, tmp_path):
     lt = LogTable.create(spark, str(tmp_path / "lt_events"), ["datetime"])
     lt.append(events_df.withColumn("datetime", F.to_date("ts")))
     run_silver(spark, lt.path, str(tmp_path / "lt_silver"),
-               str(tmp_path / "lt_ledger.json"), now, table_format="log")
+               str(tmp_path / "lt_ledger.json"), now)
     got = run_daily_features(spark, str(tmp_path / "lt_silver"),
-                             events_df, str(tmp_path / "lt_gold"),
-                             table_format="log")
+                             events_df, str(tmp_path / "lt_gold"))
     assert got == want                      # same rows-written per table
 
     for name in want:
@@ -493,8 +492,7 @@ def test_run_daily_features_log_format_matches_parquet(spark, tmp_path):
 
     # idempotent re-run: one more atomic commit, same data
     again = run_daily_features(spark, str(tmp_path / "lt_silver"),
-                               events_df, str(tmp_path / "lt_gold"),
-                               table_format="log")
+                               events_df, str(tmp_path / "lt_gold"))
     assert again == want
     t0 = LogTable(spark, str(tmp_path / "lt_gold/user_daily"))
     assert len(t0.snapshots()) == 2

@@ -49,8 +49,7 @@ def test_full_lifecycle_bronze_silver_gold_cdf_vacuum(spark, tmp_path):
     q.awaitTermination(120)
 
     # ---- silver: incremental sessionize + transactional MERGE
-    r1 = run_silver(spark, bronze, silver, ledger, now=NOW,
-                    table_format="log")
+    r1 = run_silver(spark, bronze, silver, ledger, now=NOW)
     assert r1.input_rows == 3 and r1.sessions_upserted == 2
     st = LogTable(spark, silver)
     silver_v1 = st.latest_snapshot_id()
@@ -67,8 +66,7 @@ def test_full_lifecycle_bronze_silver_gold_cdf_vacuum(spark, tmp_path):
     q2 = bronze_ingest(spark.readStream.schema(EVENTS_DDL).parquet(src),
                        bronze, ck, available_now=True, table_format="log")
     q2.awaitTermination(120)
-    r2 = run_silver(spark, bronze, silver, ledger, now=NOW,
-                    table_format="log")
+    r2 = run_silver(spark, bronze, silver, ledger, now=NOW)
     # input = 3 increment rows + 1 continuation-lookback row (event 3)
     assert r2.mode == "incremental" and r2.input_rows == 4
 
@@ -97,7 +95,7 @@ def test_full_lifecycle_bronze_silver_gold_cdf_vacuum(spark, tmp_path):
     )
     events_df = LogTable(spark, bronze).read()
     written = run_daily_features(
-        spark, silver, events_df, gold, table_format="log",
+        spark, silver, events_df, gold,
         quality_rules=[not_null("session_id"), unique("session_id"),
                        min_rows(3)])
     assert written["user_daily"] == 3
@@ -109,7 +107,6 @@ def test_full_lifecycle_bronze_silver_gold_cdf_vacuum(spark, tmp_path):
     from w_userflow_featurestore_spark.runner import QualityGateError
     with pytest.raises(QualityGateError):
         run_daily_features(spark, silver, events_df, gold,
-                           table_format="log",
                            quality_rules=[min_rows(10_000)])
 
     # ---- maintenance: compact, expire history, vacuum; reads identical
@@ -144,7 +141,7 @@ def test_lookback_bound_is_per_user_no_phantom_fragments(spark, tmp_path):
     q = bronze_ingest(spark.readStream.schema(EVENTS_DDL).parquet(src),
                       bronze, ck, available_now=True, table_format="log")
     q.awaitTermination(120)
-    run_silver(spark, bronze, silver, ledger, now=NOW, table_format="log")
+    run_silver(spark, bronze, silver, ledger, now=NOW)
     # increment: continues BOTH open tails (B @ 08:20+gap, A @ 10:00+gap)
     _write(spark, src, [
         _ev(7, "2024-01-01 10:20:00", 10, "view"),
@@ -153,7 +150,7 @@ def test_lookback_bound_is_per_user_no_phantom_fragments(spark, tmp_path):
     q2 = bronze_ingest(spark.readStream.schema(EVENTS_DDL).parquet(src),
                        bronze, ck, available_now=True, table_format="log")
     q2.awaitTermination(120)
-    run_silver(spark, bronze, silver, ledger, now=NOW, table_format="log")
+    run_silver(spark, bronze, silver, ledger, now=NOW)
     got = {(r["user_id"], str(r["start_time"])): r["n_events"]
            for r in LogTable(spark, silver).read().collect()}
     # exactly 3 sessions; A's closed morning session keeps ALL 3 events

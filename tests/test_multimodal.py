@@ -159,3 +159,27 @@ def test_fake_decode_batch_matches_row_form():
     assert got2["duration_ms"][1] == 0
     with pytest.raises(ValueError, match="empty payload"):
         _fake_decode_batch(np.array(["image"]), [b""])
+
+
+@pytest.mark.parametrize("kind,n", [("image", 1), ("image", 3),
+                                    ("audio", 1), ("audio", 5),
+                                    ("video", 3), ("video", 5)])
+def test_fake_decode_batch_rejects_payloads_the_row_form_rejects(kind, n):
+    """A payload too short for its kind's dims raises in the row form
+    (IndexError) and must raise in the batch form too, wherever the
+    short row sits in the batch, instead of decoding zero-padded or
+    neighbouring bytes."""
+    import numpy as np
+
+    from w_userflow_featurestore_spark.operators.multimodal import (
+        _fake_decode_batch, _fake_decode_one,
+    )
+    payload = bytes(range(1, n + 1))
+    with pytest.raises(IndexError):
+        _fake_decode_one(kind, payload)
+    full = bytes(range(8))
+    for kinds, payloads in (([kind], [payload]),
+                            ([kind, "video"], [payload, full]),
+                            (["video", kind], [full, payload])):
+        with pytest.raises(ValueError, match="shorter than its kind"):
+            _fake_decode_batch(np.array(kinds), payloads)

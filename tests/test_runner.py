@@ -11,6 +11,7 @@ from tests.conftest import rows
 from w_userflow_featurestore_spark.runner import (
     CompletenessError, completeness_gate, run_daily_features, run_silver,
 )
+from w_userflow_featurestore_spark.sources import read_path
 
 EVENTS_DDL = ("event_id long, ts timestamp, user_id long, event_type string,"
               " value double, props string")
@@ -178,8 +179,7 @@ def test_open_tail_lookback_propagates_read_failures(spark, tmp_path):
     inc = spark.read.parquet(events)
 
     # missing table -> first-run path, increment passes through
-    out, retire = _extend_with_open_tails(spark, inc, silver, events,
-                                          "parquet")
+    out, retire = _extend_with_open_tails(spark, inc, silver, events)
     assert out.count() == inc.count() and retire is None
 
     # corrupted table (a non-parquet file at the path) -> must raise
@@ -188,20 +188,20 @@ def test_open_tail_lookback_propagates_read_failures(spark, tmp_path):
     with open(os.path.join(silver, "part-00000.parquet"), "w") as fh:
         fh.write("this is not parquet")
     with _pt.raises(Exception) as ei:
-        _extend_with_open_tails(
-            spark, inc, silver, events, "parquet")[0].count()
+        _extend_with_open_tails(spark, inc, silver, events)[0].count()
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
     # LogTable format: zero-commit table -> first-run; corrupt log -> raise
+    from w_userflow_featurestore_spark.sources import LogTable
     logdir = str(tmp_path / "logsilver")
-    out, retire = _extend_with_open_tails(spark, inc, logdir, events, "log")
+    LogTable.create(spark, logdir, ["datetime"])
+    out, retire = _extend_with_open_tails(spark, inc, logdir, events)
     assert out.count() == inc.count() and retire is None
-    os.makedirs(os.path.join(logdir, "_txn_log"), exist_ok=True)
     with open(os.path.join(logdir, "_txn_log", "00000000000000000001.json"),
               "w") as fh:
         fh.write("{corrupt json")
     with _pt.raises(Exception):
-        _extend_with_open_tails(spark, inc, logdir, events, "log")[0].count()
+        _extend_with_open_tails(spark, inc, logdir, events)[0].count()
 
 
 def _land(spark, path, data, fmt):
@@ -215,27 +215,38 @@ def _land(spark, path, data, fmt):
         _write(spark, path, data)
 
 
-def _read_silver(spark, path, fmt):
+def _retract(spark, path, event_id, fmt):
+    """Delete one delivered event from the events table: the parquet
+    file holding it, or a LogTable ``delete_where`` commit. Either
+    breaks the planner's lineage, so the next run reads in full."""
     if fmt == "log":
         from w_userflow_featurestore_spark.sources import LogTable
-        return LogTable(spark, path).read()
-    return spark.read.parquet(path)
+        LogTable(spark, path).delete_where([("event_id", "=", event_id)])
+        return
+    import glob
+    import os
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        if spark.read.parquet(f).where(f"event_id = {event_id}").count():
+            os.remove(f)
 
 
-def _incremental_and_full(spark, tmp_path, slices, fmt):
-    """Run silver once per arrival slice, and once over every delivered
+def _incremental_and_full(spark, tmp_path, slices, fmt, retract=None):
+    """Run silver once per arrival slice (then, with ``retract``, once
+    more after that event is deleted), and once over every remaining
     event; returns the incremental silver frame and both tables as
     sorted row lists."""
     events, silver, ref = (str(tmp_path / p)
                            for p in ("events", "silver", "silver_ref"))
+    ledger = str(tmp_path / "ledger.json")
     for data in slices:
         _land(spark, events, data, fmt)
-        run_silver(spark, events, silver, str(tmp_path / "ledger.json"),
-                   NOW, table_format=fmt)
-    run_silver(spark, events, ref, str(tmp_path / "ledger_ref.json"), NOW,
-               table_format=fmt)
-    inc = _read_silver(spark, silver, fmt)
-    full = _read_silver(spark, ref, fmt)
+        run_silver(spark, events, silver, ledger, NOW)
+    if retract is not None:
+        _retract(spark, events, retract, fmt)
+        assert run_silver(spark, events, silver, ledger, NOW).mode == "full"
+    run_silver(spark, events, ref, str(tmp_path / "ledger_ref.json"), NOW)
+    inc = read_path(spark, silver)
+    full = read_path(spark, ref)
     cols = sorted(full.columns)
     return inc, rows(inc, *cols), rows(full, *cols)
 
@@ -262,6 +273,13 @@ SUPERSEDED = {
          _ev(3, "2024-01-01 10:50:00", 1), _ev(4, "2024-01-01 10:55:00", 1),
          _ev(5, "2024-01-01 10:30:00", 2)],
         [_ev(6, "2024-01-01 10:28:00", 1)]),
+    # retracted head: the session's first event is deleted from the
+    # events table after both runs, and the full re-read that follows
+    # re-derives the session from 10:10
+    "retracted_head": (
+        [_ev(1, "2024-01-01 10:00:00", 1)],
+        [_ev(2, "2024-01-01 10:10:00", 1), _ev(3, "2024-01-01 10:20:00", 1),
+         _ev(4, "2024-01-01 12:00:00", 2)]),
 }
 
 
@@ -271,11 +289,13 @@ def test_incremental_silver_retires_superseded_sessions(
         spark, tmp_path, case, fmt):
     """A late event that moves a session's start changes its id; the
     incremental merge must retire the stored session it re-derived, so
-    silver equals a full recompute: one session for user 1."""
+    silver equals a full recompute: one session for user 1. A full
+    re-read over an existing silver retires every stored session."""
     import os
 
-    inc, got, want = _incremental_and_full(spark, tmp_path,
-                                           SUPERSEDED[case], fmt)
+    inc, got, want = _incremental_and_full(
+        spark, tmp_path, SUPERSEDED[case], fmt,
+        retract=1 if case == "retracted_head" else None)
     assert got == want
     assert inc.where("user_id = 1").count() == 1
     if fmt == "parquet" and case == "across_midnight":
@@ -355,7 +375,7 @@ def test_incremental_silver_tick_job_budget(spark, tmp_path, fmt, budget):
     _land(spark, events, [
         _ev(i, f"2024-01-0{1 + i % 3} {10 + i % 8}:{i % 6}0:00", i % 7)
         for i in range(40)], fmt)
-    run_silver(spark, events, silver, ledger, NOW, table_format=fmt)
+    run_silver(spark, events, silver, ledger, NOW)
     for tick in range(3):
         # each tick extends user 1's day-3 session (last event 15:50)
         # and opens a session for a new user
@@ -366,8 +386,7 @@ def test_incremental_silver_tick_job_budget(spark, tmp_path, fmt, budget):
         sc = spark.sparkContext
         sc.setJobGroup(group, group)
         try:
-            r = run_silver(spark, events, silver, ledger, NOW,
-                           table_format=fmt)
+            r = run_silver(spark, events, silver, ledger, NOW)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)

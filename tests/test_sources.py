@@ -265,8 +265,9 @@ def test_merge_upsert_retire_deletes_unstaged_keys_and_empty_partitions(
 
     path = str(tmp_path / "t")
     d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
-    kw = dict(keys=["k", "datetime"], partition_by=["datetime"],
-              format="log" if fmt == "log" else "auto")
+    if fmt == "log":
+        LogTable.create(spark, path, ["datetime"])
+    kw = dict(keys=["k", "datetime"], partition_by=["datetime"])
     merge_upsert(spark, path,
                  _frame(spark, [(1, d1, "a"), (2, d1, "b"), (3, d2, "c")]),
                  **kw)

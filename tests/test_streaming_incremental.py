@@ -176,6 +176,43 @@ def test_incremental_planner_broken_lineage_full_reread(spark, tmp_path):
     assert rows(plan.df, "event_id") == [(2,)]
 
 
+def test_racing_ledger_commits_each_land_whole(spark, tmp_path,
+                                              monkeypatch):
+    """A rival ledger commit that runs while the first commit is still
+    writing its JSON must not share the first commit's tmp file: both
+    commits return, the last replace wins whole, the ledger parses and
+    no tmp file is left behind."""
+    import glob
+    import json
+
+    from w_userflow_featurestore_spark import incremental
+
+    table, ledger = str(tmp_path / "t"), str(tmp_path / "ledger.json")
+    _write_events(spark, table, [_batch(1, "2024-01-01 10:00:00", 1)])
+    plans = []
+    for files in (["a.parquet"],
+                  [f"b-much-longer-file-name-{i:03d}.parquet"
+                   for i in range(3)]):
+        monkeypatch.setattr(incremental, "_list_data_files",
+                            lambda path, f=files: f)
+        plans.append(IncrementalPlanner(table, ledger).plan_read(spark))
+    real_dump, rival = json.dump, [plans[1]]
+
+    def dump(obj, fh, *a, **kw):
+        if rival:
+            rival.pop().commit()         # the rival lands mid-write
+        real_dump(obj, fh, *a, **kw)
+
+    monkeypatch.setattr(json, "dump", dump)
+    plans[0].commit()
+    monkeypatch.undo()
+    with open(ledger) as fh:
+        assert json.load(fh) == {"files": ["a.parquet"]}
+    assert glob.glob(f"{ledger}*.tmp") == []
+    assert IncrementalPlanner(table, ledger).plan_read(spark).mode == \
+        "full"                            # a.parquet is gone: replans
+
+
 def test_incremental_planner_plans_a_50k_file_ledger_in_linear_time(
         spark, tmp_path, monkeypatch):
     """A bronze table fed every 10 minutes reaches tens of thousands of

@@ -5,13 +5,18 @@ The reference ships one script per layer, submitted by Airflow
 gold_*_metrics.py, wired in airflow/dags/*.py). Equivalent here:
 
     python -m w_userflow_featurestore_spark bronze \
-        --source <events dir> --out <bronze dir> --checkpoint <ckpt>
+        --source <events dir> --out <bronze dir> --checkpoint <ckpt> \
+        [--table-format parquet|log]
     python -m w_userflow_featurestore_spark silver \
         --events <bronze dir> --silver <silver dir> \
         --ledger <ledger.json> [--now "YYYY-mm-dd HH:MM:SS"]
     python -m w_userflow_featurestore_spark gold \
         --silver <silver dir> --events <bronze dir> --out <gold dir> \
         [--min-rows 1]
+
+Only ``bronze`` takes ``--table-format``: ``silver`` and ``gold`` read
+each table's format off the table, and a table they create takes the
+format of its input.
 
 ``--now`` defaults to wall clock ONLY at the CLI boundary — the library
 itself always takes "now" as a parameter (reference quirk P9: a
@@ -42,27 +47,20 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--table-format", choices=["parquet", "log"],
                    default="parquet",
                    help="'log' = one atomic LogTable snapshot per "
-                        "micro-batch (exactly-once via txn tokens)")
+                        "micro-batch (exactly-once via txn tokens); "
+                        "silver and gold take bronze's format")
 
     s = sub.add_parser("silver", help="sessionize new events into silver")
     s.add_argument("--events", required=True)
     s.add_argument("--silver", required=True)
     s.add_argument("--ledger", required=True)
     s.add_argument("--now", default=None)
-    s.add_argument("--table-format", choices=["parquet", "log"],
-                   default="parquet",
-                   help="'log' = transactional LogTable backend: snapshot-"
-                        "range incremental read + copy-on-write MERGE")
 
     g = sub.add_parser("gold", help="build the daily feature tables")
     g.add_argument("--silver", required=True)
     g.add_argument("--events", required=True)
     g.add_argument("--out", required=True)
     g.add_argument("--min-rows", type=int, default=1)
-    g.add_argument("--table-format", choices=["parquet", "log"],
-                   default="parquet",
-                   help="'log' = each gold table is a LogTable; the "
-                        "daily overwrite is one atomic commit")
     g.add_argument("--date", default=None, metavar="YYYY-MM-DD",
                    help="day-scoped run (the reference daily-DAG "
                         "regime): scan history up to this date, "
@@ -98,18 +96,17 @@ def main(argv: list[str] | None = None) -> int:
         from w_userflow_featurestore_spark.runner import run_silver
         now = args.now or dt.datetime.now(dt.timezone.utc).strftime(
             "%Y-%m-%d %H:%M:%S")
-        r = run_silver(spark, args.events, args.silver, args.ledger, now,
-                       table_format=args.table_format)
+        r = run_silver(spark, args.events, args.silver, args.ledger, now)
         print(f"silver: mode={r.mode} input_rows={r.input_rows} "
               f"sessions_upserted={r.sessions_upserted}")
         return 0
 
     if args.cmd == "gold":
         from w_userflow_featurestore_spark.runner import run_daily_features
-        events = spark.read.parquet(args.events)
+        from w_userflow_featurestore_spark.sources import read_path
+        events = read_path(spark, args.events)
         written = run_daily_features(spark, args.silver, events, args.out,
                                      min_rows_per_day=args.min_rows,
-                                     table_format=args.table_format,
                                      for_date=args.date)
         # rows WRITTEN THIS RUN (observed on the write action), not total
         # table rows — with dynamic partition overwrite, untouched prior

@@ -42,8 +42,13 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+
+from w_userflow_featurestore_spark.sources.lakehouse import (
+    BrokenLineageError, _replace_json,
+)
 
 
 def _list_data_files(path: str) -> list[str]:
@@ -57,6 +62,22 @@ def _list_data_files(path: str) -> list[str]:
                 rel = os.path.relpath(os.path.join(root, f), path)
                 out.append(rel)
     return sorted(out)
+
+
+def _read_ledger(ledger_path: str, key: str):
+    """What the last committed run recorded; None before the first."""
+    if not os.path.exists(ledger_path):
+        return None
+    with open(ledger_path) as fh:
+        return json.load(fh)[key]
+
+
+def _write_ledger(ledger_path: str, key: str, value) -> None:
+    """Replace the ledger atomically. Each commit writes its own
+    uuid-named tmp, so racing commits never write into one file: the
+    last ``os.replace`` wins whole, and the ledger always parses."""
+    os.makedirs(os.path.dirname(ledger_path) or ".", exist_ok=True)
+    _replace_json(ledger_path, {key: value})
 
 
 @dataclass
@@ -81,12 +102,6 @@ class IncrementalPlanner:
         self.table_path = table_path
         self.ledger_path = ledger_path
 
-    def _read_ledger(self) -> list[str] | None:
-        if not os.path.exists(self.ledger_path):
-            return None
-        with open(self.ledger_path) as fh:
-            return json.load(fh)["files"]
-
     def plan_read(self, spark: SparkSession) -> ReadPlan:
         current = _list_data_files(self.table_path)
 
@@ -101,14 +116,8 @@ class IncrementalPlanner:
         # compare-and-swap; keep this watermark in a LogTable the same
         # way only if a deployment needs it on a rename-free object
         # store.
-        def commit(files=current):
-            os.makedirs(os.path.dirname(self.ledger_path) or ".", exist_ok=True)
-            tmp = self.ledger_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"files": files}, fh)
-            os.replace(tmp, self.ledger_path)   # atomic swap
-
-        recorded = self._read_ledger()
+        commit = partial(_write_ledger, self.ledger_path, "files", current)
+        recorded = _read_ledger(self.ledger_path, "files")
         full_df = lambda: spark.read.parquet(self.table_path)  # noqa: E731
 
         if recorded is None:
@@ -143,27 +152,11 @@ class LakehousePlanner:
         self.table = table          # a sources.lakehouse.LogTable
         self.ledger_path = ledger_path
 
-    def _read_ledger(self) -> int | None:
-        if not os.path.exists(self.ledger_path):
-            return None
-        with open(self.ledger_path) as fh:
-            return json.load(fh)["snapshot_id"]
-
     def plan_read(self, spark: SparkSession) -> ReadPlan:
-        from w_userflow_featurestore_spark.sources.lakehouse import (
-            BrokenLineageError,
-        )
         latest = self.table.latest_snapshot_id()
-
-        def commit(sid=latest):
-            os.makedirs(os.path.dirname(self.ledger_path) or ".",
-                        exist_ok=True)
-            tmp = self.ledger_path + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"snapshot_id": sid}, fh)
-            os.replace(tmp, self.ledger_path)
-
-        recorded = self._read_ledger()
+        commit = partial(_write_ledger, self.ledger_path, "snapshot_id",
+                         latest)
+        recorded = _read_ledger(self.ledger_path, "snapshot_id")
         if latest is None:
             return ReadPlan("empty", "table has no snapshots", None,
                             lambda: None)

@@ -82,43 +82,32 @@ def _fake_decode_one(kind: str, b: bytes) -> tuple[int, int, int, int, int]:
 
 def _fake_decode_batch(kinds: np.ndarray,
                        contents: list) -> dict[str, np.ndarray]:
-    """Whole-batch twin of :func:`_fake_decode_one` (round 12, guide
-    §4.2: hand Arrow batches to vectorized numpy instead of looping
-    rows in Python — measured ~4x on the decode stage). Payloads are
-    flattened into one uint8 buffer with per-row offsets; dims index
-    the first bytes, the checksum is a segmented sum (reduceat).
-    Payloads must be non-empty (synthesize_media's are 32 bytes; the
-    row form would IndexError on an empty payload too — and reduceat
-    needs a real start offset per row), enforced with a clear error.
-    Payloads of 1-5 bytes ARE legal whenever the row form accepts
-    them (e.g. a 4-byte image needs only bytes 0-3): byte reads are
-    masked to the row's own length over a zero-padded buffer, so a
-    short row never reads its neighbor's bytes and the last row never
-    indexes past the buffer (round-13 ADVICE fix — np.where evaluates
-    both branches, so unmasked byte(4)/byte(5) reads crashed on short
-    tail payloads the row form decoded fine)."""
+    """Whole-batch twin of :func:`_fake_decode_one` (vectorized numpy
+    over the Arrow batch, ~4x the row loop): payloads flattened into one
+    uint8 buffer with per-row offsets, dims from the first bytes, the
+    checksum a segmented sum (reduceat). A payload shorter than the row
+    form reads (images 4 bytes, audio/video 6, any row 1) raises
+    ``ValueError``; a 6-byte zero pad keeps the reads a kind mask
+    discards inside the buffer."""
     n = len(contents)
     lens = np.fromiter((len(b) for b in contents), dtype=np.int64,
                        count=n)
-    if not (lens > 0).all():
+    vis = (kinds == "image") | (kinds == "video")
+    aud = (kinds == "audio") | (kinds == "video")
+    if (lens < np.where(aud, 6, np.where(vis, 4, 1))).any():
         raise ValueError(
-            "decode_media: empty payload in batch — every media row "
-            "must carry at least 1 content byte (images need >= 4, "
-            "audio/video >= 6, matching the per-row decoder)")
+            "decode_media: empty payload or payload shorter than its "
+            "kind needs in batch — images need >= 4 content bytes, "
+            "audio/video >= 6, any row >= 1, matching the per-row "
+            "decoder")
     flat = np.frombuffer(b"".join(contents), dtype=np.uint8) \
         .astype(np.int64)
     offs = np.zeros(n, dtype=np.int64)
     np.cumsum(lens[:-1], out=offs[1:])
-    vis = (kinds == "image") | (kinds == "video")
-    aud = (kinds == "audio") | (kinds == "video")
-    # masked reads over a 6-byte zero pad: out-of-row positions yield
-    # 0 and only ever flow into np.where branches the kind mask
-    # discards (positions a row truly needs are in-row wherever the
-    # row-form reference succeeds, so the forms stay equal there)
     flat_p = np.concatenate([flat, np.zeros(6, dtype=np.int64)])
 
     def byte(i: int) -> np.ndarray:
-        return np.where(i < lens, flat_p[offs + i], 0)
+        return flat_p[offs + i]
 
     width = np.where(vis, (byte(0) << 8 | byte(1)) % 1024 + 16, 0)
     height = np.where(vis, (byte(2) << 8 | byte(3)) % 1024 + 16, 0)

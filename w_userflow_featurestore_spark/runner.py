@@ -41,14 +41,18 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-from w_userflow_featurestore_spark.incremental import IncrementalPlanner
+from w_userflow_featurestore_spark.incremental import (
+    IncrementalPlanner, LakehousePlanner,
+)
 from w_userflow_featurestore_spark.operators import metrics as M
 from w_userflow_featurestore_spark.operators.cleanse import (
     dedup_latest, drop_null_keys,
 )
-from w_userflow_featurestore_spark.operators.sessionize import sessionize
+from w_userflow_featurestore_spark.operators.sessionize import (
+    DEFAULT_GAP_MS, sessionize,
+)
 from w_userflow_featurestore_spark.sources import (
-    merge_upsert, overwrite_partitions,
+    LogTable, merge_upsert, overwrite_partitions, read_path,
 )
 
 
@@ -105,9 +109,28 @@ class SilverResult:
     sessions_upserted: int
 
 
+def _stored_silver(spark: SparkSession, silver_path: str
+                   ) -> DataFrame | None:
+    """The stored silver sessions, or None before silver's first write
+    (a LogTable with zero commits, or no parquet directory). Any other
+    read failure (corrupt log JSON, transient FS error) PROPAGATES:
+    skipping the stored sessions would write a fragment or superseded
+    session next to the stale one — silent corruption instead of a
+    visible failed run."""
+    try:
+        return read_path(spark, silver_path)
+    except ValueError as exc:
+        if "has no commits" not in str(exc):
+            raise
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" not in str(exc) and \
+                "Path does not exist" not in str(exc):
+            raise
+    return None
+
+
 def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
                             silver_path: str, events_path: str,
-                            table_format: str,
                             ) -> tuple[DataFrame, DataFrame | None]:
     """run_silver's continuation lookback (see its docstring).
 
@@ -126,34 +149,8 @@ def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
     start is a broadcast join, and the retire keys are the stored
     sessions, so neither silver nor the increment is scanned again.
     """
-    from w_userflow_featurestore_spark.operators.sessionize import (
-        DEFAULT_GAP_MS,
-    )
-    from w_userflow_featurestore_spark.sources import LogTable
-    # Only the narrow "table doesn't exist yet" signals mean "first run,
-    # no tails to look back at": a LogTable with zero commits raises
-    # ValueError("... has no commits"), a missing parquet path raises
-    # AnalysisException(PATH_NOT_FOUND). Anything else (corrupt log
-    # JSON, transient FS error, concurrent-commit race) must PROPAGATE:
-    # silently skipping the lookback would re-sessionize a spanning
-    # session without its head — a fragment row under a new
-    # content-derived id next to the stale tail, i.e. permanent silent
-    # corruption instead of a visible failed run.
-    try:
-        if table_format == "log":
-            silver = LogTable(spark, silver_path).read()
-        else:
-            silver = spark.read.parquet(silver_path)
-    except FileNotFoundError:  # LogTable dir never created
-        return increment, None
-    except ValueError as exc:
-        if "has no commits" not in str(exc):
-            raise
-        return increment, None
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and \
-                "Path does not exist" not in str(exc):
-            raise
+    silver = _stored_silver(spark, silver_path)
+    if silver is None:
         return increment, None
     first_new = (increment.groupBy("user_id")
                  .agg(F.min("ts").alias("_new_ts")))
@@ -172,13 +169,9 @@ def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
     bound = earliest.get["ts"]
     if bound is None:
         return increment, None
-    if table_format == "log":
-        hist = LogTable(spark, events_path).read(
-            filters=[("ts", ">=", bound)])
-    else:
-        # the increment's schema is the table's: no footer-read job
-        hist = (spark.read.schema(increment.schema).parquet(events_path)
-                     .where(F.col("ts") >= F.lit(bound)))
+    # the increment's schema is the table's: no footer-read job
+    hist = read_path(spark, events_path, filters=[("ts", ">=", bound)],
+                     schema=increment.schema)
     # the global bound only PRUNES the scan; membership is per-user —
     # ts >= that user's own qualifying tail start. A global-min cut
     # would admit another user's mid-session events without their
@@ -191,8 +184,7 @@ def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
 
 
 def run_silver(spark: SparkSession, events_path: str, silver_path: str,
-               ledger_path: str, now: str,
-               table_format: str = "parquet") -> SilverResult:
+               ledger_path: str, now: str) -> SilverResult:
     """Events -> classified sessions, MERGEd by session key.
 
     CONTINUATION-AWARE incremental sessionization: a session can span
@@ -229,11 +221,14 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     does not replace the stored one by key. Every stored tail session
     was re-derived from raw events, so the merge RETIRES all of them
     and inserts what the re-sessionization produced; a day partition
-    left with no rows is removed.
+    left with no rows is removed. A full re-read (no ledger, or broken
+    lineage) re-derives every session, so it retires every stored one:
+    a session whose head event was retracted from the events table
+    does not survive under its old id.
 
-    ``table_format="log"`` binds both ends to the transactional LogTable
-    format: the events increment comes from real snapshot lineage
-    (LakehousePlanner) and the silver MERGE is a file-granular
+    Formats are read off the tables: when ``events_path`` is a LogTable
+    the increment comes from real snapshot lineage (LakehousePlanner)
+    and silver is a LogTable too, so the MERGE is a file-granular
     copy-on-write commit — the reference's actual Iceberg semantics
     (S6/S7/S9) rather than the parquet emulation.
 
@@ -245,22 +240,22 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     merge converges), but latency-sensitive cluster deployments should
     swap in a reliable ``checkpoint()`` dir or persist(DISK_ONLY_2).
     """
-    if table_format == "log":
-        from w_userflow_featurestore_spark.incremental import (
-            LakehousePlanner,
-        )
-        from w_userflow_featurestore_spark.sources import LogTable
+    if LogTable.is_log_table(events_path):
         planner = LakehousePlanner(LogTable(spark, events_path), ledger_path)
+        LogTable.create(spark, silver_path, ["datetime"])
     else:
         planner = IncrementalPlanner(events_path, ledger_path)
     plan = planner.plan_read(spark)
     if plan.mode == "empty":
         plan.commit()
         return SilverResult("empty", 0, 0)
-    raw, retire = plan.df, None
     if plan.mode == "incremental":
-        raw, retire = _extend_with_open_tails(spark, raw, silver_path,
-                                              events_path, table_format)
+        raw, retire = _extend_with_open_tails(spark, plan.df, silver_path,
+                                              events_path)
+    else:
+        raw, retire = plan.df, _stored_silver(spark, silver_path)
+        if retire is not None:
+            retire = retire.select("session_id", "datetime")
     events = drop_null_keys(
         dedup_latest(raw, key=["event_id"], order_by=["ts"]),
         ["event_id", "user_id", "ts"])
@@ -278,7 +273,6 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
     sessions = sessions.localCheckpoint(eager=True)
     merge_upsert(spark, silver_path, sessions,
                  keys=["session_id", "datetime"], partition_by=["datetime"],
-                 format=table_format if table_format == "log" else "auto",
                  retire=retire)
     plan.commit()        # ledger moves only after the table write landed
     return SilverResult(plan.mode, int(obs_in.get["rows"]),
@@ -288,7 +282,6 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
 def _read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     """The latest snapshot of a ledger's LogTable; ``FileNotFoundError``
     before the first commit."""
-    from w_userflow_featurestore_spark.sources import LogTable
     lt = LogTable(spark, ledger_dir)
     base = lt.latest_snapshot_id() if LogTable.is_log_table(ledger_dir) \
         else None
@@ -306,7 +299,6 @@ def _commit_ledger(spark: SparkSession, ledger_dir: str,
     raises ``ConcurrentCommitError`` instead of silently dropping the
     rival's batch; a crash before the commit leaves the previous
     version live. Returns (snapshot id, mode, rows committed)."""
-    from w_userflow_featurestore_spark.sources import LogTable
     lt = LogTable.create(spark, ledger_dir)
     base = lt.latest_snapshot_id()
     prev = None if base is None else lt.read(base)
@@ -440,13 +432,12 @@ def run_novelty_ledger_update(spark: SparkSession, ledger_dir: str,
 # (gold_webtoon_daily_metrics.py:74-85, gold_daily_dag.py:146)
 def run_daily_features(spark: SparkSession, silver_path: str, events: DataFrame,
                        out_dir: str, min_rows_per_day: int = 1,
-                       table_format: str = "parquet",
                        for_date: str | None = None,
                        quality_rules: list[dict] | None = None) -> dict[str, int]:
     """All gold-grain feature tables, gated then written idempotently.
-    ``table_format="log"`` makes each table a LogTable whose daily
-    overwrite is one atomic remove+add commit (reference S10 on a real
-    format); the silver input is read from either backend.
+    Gold takes silver's format: when silver is a LogTable, each gold
+    table is one too, and its daily overwrite is one atomic remove+add
+    commit (reference S10 on a real format).
 
     Returns rows WRITTEN per table by THIS run (observed on the write
     action itself). Under dynamic partition overwrite that is the row
@@ -465,11 +456,8 @@ def run_daily_features(spark: SparkSession, silver_path: str, events: DataFrame,
     one day's partitions and one that rewrites the table: recompute
     cost tracks history size read-only, write cost tracks one day.
     Re-running any date converges (same inputs -> same partition)."""
-    from w_userflow_featurestore_spark.sources import LogTable
-    if LogTable.is_log_table(silver_path):
-        sessions = LogTable(spark, silver_path).read()
-    else:
-        sessions = spark.read.parquet(silver_path)
+    sessions = read_path(spark, silver_path)
+    log_format = LogTable.is_log_table(silver_path)
     if for_date is not None:
         d = F.lit(for_date).cast("date")
         sessions = sessions.where(F.col("datetime") <= d)
@@ -504,8 +492,9 @@ def run_daily_features(spark: SparkSession, silver_path: str, events: DataFrame,
         # not a post-hoc re-read+count of the table we just wrote)
         obs = Observation()
         df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        overwrite_partitions(df, f"{out_dir}/{name}", ["datetime"],
-                             format="log" if table_format == "log"
-                             else "auto")
+        path = f"{out_dir}/{name}"
+        if log_format:
+            LogTable.create(spark, path, ["datetime"])
+        overwrite_partitions(df, path, ["datetime"])
         written[name] = int(obs.get["rows"])
     return written

@@ -9,6 +9,10 @@ Iceberg/Delta in production (swap the writer, keep the call sites):
 
 - ``read_table``            — pruned scan (S5): filters passed here reach the
                               parquet reader as PushedFilters / partition pruning.
+- ``read_path``             — the live rows of a pipeline table. A path
+                              holding a LogTable log is a LogTable, any
+                              other a parquet directory; the two writers
+                              below decide the format the same way.
 - ``overwrite_partitions``  — dynamic partition overwrite (S10): replace only
                               the partitions present in the result.
 - ``merge_upsert``          — MERGE INTO semantics (S9) as an anti-join +
@@ -26,6 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from w_userflow_featurestore_spark.conf import session_cache
+from w_userflow_featurestore_spark.sources.lakehouse import (
+    LogTable, _part_matches,
+)
 
 # Timestamp columns in the fixture tables. They are stored as parquet
 # TIMESTAMP(NANOS); with spark.sql.legacy.parquet.nanosAsLong=true they
@@ -180,20 +187,31 @@ def write_partitioned(df: DataFrame, path: str, partition_by: list[str],
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
-def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str],
-                         format: str = "auto") -> None:
+def read_path(spark: SparkSession, path: str,
+              filters: list[tuple] | None = None,
+              schema: T.StructType | None = None) -> DataFrame:
+    """The live rows of the table at ``path``: a LogTable's current
+    snapshot, or a parquet directory read with ``schema`` pinned when
+    given (no footer-read job). ``filters`` are ``(col, op, value)``
+    conjuncts as :meth:`LogTable.read` takes them; on a LogTable they
+    also skip files by manifest statistics."""
+    if LogTable.is_log_table(path):
+        return LogTable(spark, path).read(filters=filters)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return LogTable._apply_filters(reader.parquet(path), filters or [])
+
+
+def overwrite_partitions(df: DataFrame, path: str,
+                         partition_by: list[str]) -> None:
     """Dynamic partition overwrite (S10): replaces only partitions present
     in ``df`` — the gold layer's idempotent recovery unit
     (reference gold_user_daily_metrics.py:104 `.overwritePartitions()`).
 
-    ``format="log"`` (or auto-detection of an existing LogTable at
-    ``path``) routes to the transactional commit-log implementation —
-    one atomic commit instead of an in-place directory rewrite.
+    A LogTable at ``path`` gets one atomic commit instead of an
+    in-place directory rewrite.
     """
-    from w_userflow_featurestore_spark.sources.lakehouse import LogTable
-    if format == "log" or (format == "auto" and LogTable.is_log_table(path)):
-        LogTable.create(df.sparkSession, path, partition_by) \
-            .overwrite_partitions(df)
+    if LogTable.is_log_table(path):
+        LogTable(df.sparkSession, path).overwrite_partitions(df)
         return
     (df.write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
@@ -241,8 +259,6 @@ def _delete_partition_dirs(target_path: str, partition_by: list[str],
     import shutil
     from urllib.parse import unquote
 
-    from w_userflow_featurestore_spark.sources.lakehouse import _part_matches
-
     cands = [target_path]
     for col in partition_by:            # walk nested hive levels in order
         nxt = []
@@ -284,7 +300,6 @@ def _observed_parts(obs: Observation) -> set[tuple]:
 
 def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
                  keys: list[str], partition_by: list[str],
-                 format: str = "auto",
                  retire: DataFrame | None = None) -> None:
     """MERGE INTO semantics (S9), format-dispatched.
 
@@ -298,9 +313,9 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
     silver runner retires the stored sessions it re-derived, whose ids
     a late event may have changed.
 
-    ``format="log"`` (or auto-detection of a LogTable at ``target_path``)
-    uses the transactional commit-log format: file-granular copy-on-write
-    with an atomic commit (sources/lakehouse.py). The plain-parquet
+    A LogTable at ``target_path`` takes the transactional commit-log
+    merge: file-granular copy-on-write with an atomic commit
+    (sources/lakehouse.py). The plain-parquet
     fallback gets the same end state idempotently by rewriting only the
     partitions the staged and retired keys touch:
 
@@ -309,11 +324,8 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
     The rewrite is scoped to affected partitions (same recovery unit as the
     reference's day partitions), so repeated runs converge.
     """
-    from w_userflow_featurestore_spark.sources.lakehouse import LogTable
-    if format == "log" or (format == "auto"
-                           and LogTable.is_log_table(target_path)):
-        LogTable.create(spark, target_path, partition_by) \
-            .merge(staged, keys, retire=retire)
+    if LogTable.is_log_table(target_path):
+        LogTable(spark, target_path).merge(staged, keys, retire=retire)
         return
     try:
         target = spark.read.parquet(target_path)
@@ -372,30 +384,15 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
                  target.select(*partition_by)
                  .unionByName(staged.select(*partition_by)).schema}
         affected = affected.observe(read_parts, _part_set(types))
-    kept = affected.join(skey, on=keys, how="left_anti")
-    kept = kept.select(*staged.columns)
-    # localCheckpoint breaks lineage so the overwrite of the target files
-    # cannot race the scan feeding it (read-before-overwrite hazard). Only
-    # the target-derived side needs it; when the staged plan does not read
-    # the target itself (the common case — runner hands in an already-
-    # checkpointed frame), staged rows skip the second materialization
-    # instead of being copied through executor storage twice.
-    plan = staged._jdf.queryExecution().optimizedPlan().toString()
-    # Plan locations print canonicalized file: URIs, so a relative /
-    # symlinked / trailing-slash target_path must be canonicalized before
-    # the substring match — a false negative here skips the checkpoint of
-    # a target-reading staged plan and re-opens the read-before-overwrite
-    # hazard. Match both the raw spelling and the canonical one.
-    canon = os.path.realpath(os.path.abspath(target_path)).rstrip("/")
-    staged_reads_target = target_path in plan or canon in plan
-    if not staged_reads_target:
-        kept = kept.localCheckpoint(eager=True)
-    merged = kept.unionByName(staged)
+    merged = (affected.join(skey, on=keys, how="left_anti")
+              .select(*staged.columns).unionByName(staged))
     if may_empty:
         merged = merged.observe(written_parts, _part_set(types))
-    if staged_reads_target:
-        merged = merged.localCheckpoint(eager=True)
-    overwrite_partitions(merged, target_path, partition_by, format="parquet")
+    # localCheckpoint breaks lineage so the overwrite of the target files
+    # cannot race a scan feeding it (read-before-overwrite hazard): the
+    # kept rows read the target, and so may the staged or retired keys.
+    merged = merged.localCheckpoint(eager=True)
+    overwrite_partitions(merged, target_path, partition_by)
     if may_empty:
         emptied = (_observed_parts(read_parts)
                    - _observed_parts(written_parts))

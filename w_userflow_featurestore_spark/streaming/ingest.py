@@ -68,6 +68,17 @@ def parse_kafka_events(raw: DataFrame, schema: StructType | str) -> DataFrame:
                .withColumn("datetime", F.to_date("ts")))
 
 
+def _start(writer, trigger_seconds: int | None, available_now: bool):
+    """Start a stream: ``available_now`` drains the source and stops,
+    else a processing-time trigger every ``trigger_seconds`` (None =
+    Spark's default, a micro-batch as soon as the previous one ends)."""
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
+
+
 def bronze_ingest(events: DataFrame, path: str, checkpoint: str,
                   trigger_seconds: int | None = 30,
                   available_now: bool = False,
@@ -83,7 +94,10 @@ def bronze_ingest(events: DataFrame, path: str, checkpoint: str,
     makes the replayed commit a no-op (exactly-once at the table), while
     each commit becomes a snapshot the silver LakehousePlanner reads
     incrementally (reference bronze_load_raw_data.py:84-90 +
-    silver_user_session_events.py:67-76 as one pipeline)."""
+    silver_user_session_events.py:67-76 as one pipeline).
+
+    This is where a pipeline's table format is chosen: silver and gold
+    read it off the bronze table, and the tables they create take it."""
     if "datetime" not in events.columns:
         events = events.withColumn("datetime", F.to_date("ts"))
     if table_format == "log":
@@ -108,11 +122,7 @@ def bronze_ingest(events: DataFrame, path: str, checkpoint: str,
                   .option("checkpointLocation", checkpoint)
                   .option("path", path)
                   .partitionBy("datetime"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def debug_sink(events: DataFrame, *, num_rows: int = 20,
@@ -137,9 +147,7 @@ def debug_sink(events: DataFrame, *, num_rows: int = 20,
               .queryName(query_name)
               .option("numRows", str(num_rows))
               .option("truncate", str(truncate).lower()))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, None, available_now)
 
 
 def streaming_sessionize(events: DataFrame, gap_ms: int = DEFAULT_GAP_MS,
@@ -221,11 +229,7 @@ def stream_upsert(events: DataFrame, path: str, checkpoint: str, *,
     writer = (events.writeStream
               .foreachBatch(_sink)
               .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def streaming_dedup(events: DataFrame, key_cols: list[str] | None = None,
@@ -300,11 +304,7 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
     writer = (events.writeStream
               .foreachBatch(_sink)
               .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def read_drift_ledger(spark: SparkSession, table_path: str) -> DataFrame:
@@ -375,11 +375,7 @@ def streaming_scd2(events: DataFrame, table_path: str, checkpoint: str, *,
     writer = (events.writeStream
               .foreachBatch(_sink)
               .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def parse_with_dead_letter(raw: DataFrame, schema: StructType | str,
@@ -549,11 +545,7 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
     writer = (docs.writeStream
               .foreachBatch(_sink)
               .option("checkpointLocation", checkpoint))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(writer, trigger_seconds, available_now)
 
 
 def read_streaming_novelty_ledger(spark: SparkSession,
