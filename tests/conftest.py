@@ -31,3 +31,21 @@ def rows(df, *cols):
     out = [tuple(r) for r in df.select(*cols).collect()] if cols else \
           [tuple(r) for r in df.collect()]
     return sorted(out, key=lambda t: tuple((v is None, str(v)) for v in t))
+
+
+def log_scans(fn) -> int:
+    """How many full log reads (``LogTable.snapshots`` calls: a listing
+    of ``_txn_log/`` plus a parse of every commit) ``fn()`` makes."""
+    from w_userflow_featurestore_spark.sources import LogTable
+    real, n = LogTable.snapshots, [0]
+
+    def counting(self):
+        n[0] += 1
+        return real(self)
+
+    LogTable.snapshots = counting
+    try:
+        fn()
+    finally:
+        LogTable.snapshots = real
+    return n[0]

@@ -1950,3 +1950,48 @@ def test_rewrite_cas_exactly_one_winner_under_real_threads(spark,
     assert len(wins) == 1
     assert [s.snapshot_id for s in t.snapshots()] == [1, 2]
     assert t.files() == [f"w{wins[0]}"]
+
+
+def test_each_operation_reads_the_log_once(spark, tmp_path):
+    """Every operation derives the table's files, stats, lineage and
+    txn tokens from ONE read of the log; a write reads it once more in
+    ``_commit``, right before it publishes (the concurrency check).
+    Bronze gets a commit per micro-batch, so each extra read costs
+    O(commits)."""
+    from tests.conftest import log_scans
+    t = LogTable.create(spark, str(tmp_path / "t"), ["datetime"],
+                        stats_columns=["k"])
+    s1 = t.append(_df(spark, [(1, D1, "a")]))
+    t.append(_df(spark, [(2, D2, "b")]))
+    planner = LakehousePlanner(t, str(tmp_path / "ledger.json"))
+    planner.plan_read(spark).commit()
+    t.append(_df(spark, [(3, D1, "c")]))
+    plans = []
+    ops = {
+        "read": lambda: t.read(),
+        "read(filters=)": lambda: t.read(filters=[("k", ">=", 2)]),
+        "read_increment": lambda: t.read_increment(s1),
+        "files": t.files,
+        "files_stats": t.files_stats,
+        "plan_read": lambda: plans.append(planner.plan_read(spark)),
+        "append(txn=)": lambda: t.append(_df(spark, [(4, D2, "d")]),
+                                         txn="b-1"),
+        "merge": lambda: t.merge(_df(spark, [(1, D1, "A")]), ["k"]),
+        "merge(txn=)": lambda: t.merge(_df(spark, [(2, D2, "B")]), ["k"],
+                                       txn="m-1"),
+        "delete_where": lambda: t.delete_where([("k", "=", 3)]),
+        "update_where": lambda: t.update_where([("k", "=", 4)],
+                                               {"v": "D"}),
+        "overwrite_partitions": lambda: t.overwrite_partitions(
+            _df(spark, [(5, D1, "e")])),
+        "expire_snapshots": lambda: t.expire_snapshots(keep_last=2),
+        "vacuum": lambda: t.vacuum(retention_seconds=0),
+    }
+    got = {name: log_scans(op) for name, op in ops.items()}
+    # a write stages from one read and commits after a second; the
+    # planner reads the head, then the increment up to it
+    twice = ("append(txn=)", "merge", "merge(txn=)", "delete_where",
+             "update_where", "overwrite_partitions", "plan_read")
+    assert got == {name: 2 if name in twice else 1 for name in ops}
+    assert plans[0].mode == "incremental"
+    assert rows(t.read(), "k", "v") == [(2, "B"), (4, "D"), (5, "e")]

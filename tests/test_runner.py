@@ -574,3 +574,26 @@ def test_ledger_pointer_cas_rejects_the_losing_concurrent_writer(
            read_novelty_ledger(spark, ledger_dir).collect()}
     assert got == {tuple(r)
                    for r in shingle_ledger(mk([1, 2, 3])).collect()}
+
+
+def test_incremental_silver_log_tick_reads_the_log_at_most_7_times(
+        spark, tmp_path):
+    """One log-format incremental tick with an open-tail lookback reads
+    a LogTable's whole log at most 7 times: the planner's head and
+    increment (2), silver's "written yet" check and lookback read (2),
+    the events lookback read (1), and the merge's stage and commit
+    (2)."""
+    from tests.conftest import log_scans
+    events, silver, ledger = (str(tmp_path / p)
+                              for p in ("events", "silver", "ledger.json"))
+    _land(spark, events, [
+        _ev(i, f"2024-01-0{1 + i % 3} {10 + i % 8}:{i % 6}0:00", i % 7)
+        for i in range(40)], "log")
+    run_silver(spark, events, silver, ledger, NOW)
+    _land(spark, events, [_ev(100, "2024-01-03 16:10:00", 1),
+                          _ev(200, "2024-01-03 00:00:00", 9)], "log")
+    got = []
+    n = log_scans(lambda: got.append(
+        run_silver(spark, events, silver, ledger, NOW)))
+    assert got[0].mode == "incremental" and got[0].input_rows > 2
+    assert 0 < n <= 7, n

@@ -97,6 +97,43 @@ def test_merge_upsert_self_read_with_noncanonical_path(spark, tmp_path):
     assert rows(spark.read.parquet(real), "k", "v") == [(1, "A"), (2, "B")]
 
 
+def test_merge_upsert_torn_target_raises_and_keeps_every_file(
+        spark, tmp_path):
+    """A parquet target that exists but cannot be read is not "no table
+    yet": merge_upsert raises instead of overwriting the whole table
+    with the staged batch, and every file of the target stays."""
+    import glob
+
+    path = str(tmp_path / "t")
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    write_partitioned(_frame(spark, [(1, d1, "a"), (2, d2, "b")]),
+                      path, ["datetime"])
+    files = sorted(glob.glob(f"{path}/*/*.parquet"))
+    assert len(files) == 2
+    with open(files[0], "wb") as fh:
+        fh.write(b"torn")
+    with pytest.raises(Exception):
+        merge_upsert(spark, path, _frame(spark, [(3, d2, "c")]),
+                     keys=["k"], partition_by=["datetime"])
+    assert sorted(glob.glob(f"{path}/*/*.parquet")) == files
+
+
+def test_merge_upsert_into_a_target_emptied_by_retire(spark, tmp_path):
+    """A retire that empties every partition leaves the target directory
+    with no data file: the next merge writes its staged batch as the
+    table instead of failing to infer the empty directory's schema."""
+    path = str(tmp_path / "t")
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 1, 2)
+    merge_upsert(spark, path, _frame(spark, [(1, d1, "a")]),
+                 keys=["k"], partition_by=["datetime"])
+    merge_upsert(spark, path, _frame(spark, []), keys=["k"],
+                 partition_by=["datetime"],
+                 retire=_frame(spark, [(1, d1, "a")]).select("k"))
+    merge_upsert(spark, path, _frame(spark, [(2, d2, "b")]),
+                 keys=["k"], partition_by=["datetime"])
+    assert rows(spark.read.parquet(path), "k", "v") == [(2, "b")]
+
+
 def test_write_bucketed_join_and_agg_need_no_shuffle(spark, tmp_path):
     from w_userflow_featurestore_spark.sources import write_bucketed
 

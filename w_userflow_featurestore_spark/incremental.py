@@ -166,16 +166,12 @@ class LakehousePlanner:
         if recorded == latest:
             return ReadPlan("empty", f"no snapshots after {recorded}",
                             None, commit)
-        if not self.table.is_ancestor(recorded, latest):
-            # rollback / expired history re-forked the timeline — the
-            # reference's is_ancestor_snapshot guard (silver_dag.py:65-88)
-            return ReadPlan("full",
-                            f"lineage broken: snapshot {recorded} is not "
-                            f"an ancestor of {latest}",
-                            self.table.read(latest), commit)
         try:
             df = self.table.read_increment(recorded, latest)
         except BrokenLineageError as e:
+            # rollback / expired history re-forked the timeline (the
+            # reference's is_ancestor_snapshot guard, silver_dag.py:65-88),
+            # or a commit in range rewrote data
             return ReadPlan("full", f"lineage broken: {e}",
                             self.table.read(latest), commit)
         return ReadPlan("incremental",

@@ -81,7 +81,7 @@ def signature_index(docs: DataFrame, text_col: str = "text",
     # content_hash rides the minhash aggregate as a second GROUP KEY
     # (it is functionally dependent on the document, so the grouping is
     # unchanged) instead of a separate scan + doc-keyed join: one pass
-    # over the corpus text, one exchange, zero joins (guide §2.4). The
+    # over the corpus text, one exchange, zero joins. The
     # hash projection sits BELOW the shingle explode (computed once per
     # doc, replicated per shingle row), and the map-side partial
     # aggregate collapses the rows again before the exchange.

@@ -59,13 +59,12 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
               .union(e.select(F.col("_dst").alias("_n")))
               .distinct())
     n1 = nodes.agg(F.count(F.lit(1)).alias("_n_nodes"))
-    # Loop-invariant hoisting (round 12, guide §2.4): the out-weight
-    # join and the teleport/base-rank cross join are identical in every
-    # iteration — attach _outw to the edge list ONCE and precompute the
-    # per-node teleport term ONCE, so the loop body is exactly one
-    # rank join + one dst-keyed aggregate + one node-keyed left join
-    # per iteration (previously: two joins + a per-iteration broadcast
-    # cross join on top of those).
+    # Loop-invariant hoisting: the out-weight join and the
+    # teleport/base-rank cross join are identical in every iteration —
+    # attach _outw to the edge list ONCE and precompute the per-node
+    # teleport term ONCE, so the loop body is exactly one rank join +
+    # one dst-keyed aggregate + one node-keyed left join per iteration,
+    # with no per-iteration broadcast cross join.
     ew = (e.join(e.groupBy("_src").agg(F.sum("_w").alias("_outw")),
                  "_src")
            .localCheckpoint(eager=True))

@@ -56,7 +56,7 @@ def user_daily(sessions: DataFrame,
     #   count_distinct(when(complete, session_id)) == sum(when(complete
     #     AND session_id IS NOT NULL, 1))  (the bare-column distinct
     #     SKIPPED a NULL id; the isNotNull term preserves that).
-    # Why it matters at scale (guide §2.3): three distinct aggregates in
+    # Why it matters at scale: three distinct aggregates in
     # one groupBy plan as an Expand that multiplies every session row 4x
     # through the exchange; with only the entry-type distinct left, the
     # aggregate plans without the Expand. Values are oracle-pinned
@@ -87,22 +87,27 @@ def user_daily(sessions: DataFrame,
                         F.when(F.col("total_sessions") >= 2, 1).otherwise(0)))
 
 
-def return_intervals(sessions: DataFrame) -> DataFrame:
-    """Average seconds between consecutive sessions per user per day —
-    reference A4 (gold_user_daily_metrics.py:70-78): lag(end_time) over
-    user ordered by start_time, clamp negatives to 0, NULL for the first
-    session, then per-(datetime,user) avg with coalesce(...,0.0).
-    """
+def _with_return_interval(sessions: DataFrame):
+    """``(sessions + return_interval_ms, avg aggregate)`` — reference A4
+    (gold_user_daily_metrics.py:70-78): lag(end_time) over user ordered
+    by start_time, clamp negatives to 0, NULL for the first session;
+    the aggregate is the per-group avg in seconds with
+    coalesce(...,0.0)."""
     w = Window.partitionBy("user_id").orderBy("start_time", "session_id")
     prev_end = F.lag("end_time").over(w)
     interval_ms = clamp_nonneg(epoch_ms(F.col("start_time")) - epoch_ms(prev_end))
-    return (sessions
-            .withColumn("return_interval_ms", interval_ms)
-            .groupBy("datetime", "user_id")
-            .agg(fround(F.coalesce(
-                F.sum("return_interval_ms") / F.lit(1000.0)
-                / F.count("return_interval_ms"), F.lit(0.0)), 2)
-                  .alias("avg_return_interval_s")))
+    avg_s = fround(F.coalesce(
+        F.sum("return_interval_ms") / F.lit(1000.0)
+        / F.count("return_interval_ms"), F.lit(0.0)), 2)
+    return (sessions.withColumn("return_interval_ms", interval_ms),
+            avg_s.alias("avg_return_interval_s"))
+
+
+def return_intervals(sessions: DataFrame) -> DataFrame:
+    """Average seconds between consecutive sessions per user per day
+    (reference A4, see :func:`_with_return_interval`)."""
+    s, avg_s = _with_return_interval(sessions)
+    return s.groupBy("datetime", "user_id").agg(avg_s)
 
 
 def repeat_events(events: DataFrame, event_type: str = "purchase") -> DataFrame:
@@ -134,14 +139,7 @@ def user_daily_full(sessions: DataFrame, events: DataFrame) -> DataFrame:
     A4 pass + J1 join recomputed sessionization — at scale that doubles
     the dominant cost for identical values; both group the same session
     rows by the same key, so the left join can never miss)."""
-    w = Window.partitionBy("user_id").orderBy("start_time", "session_id")
-    prev_end = F.lag("end_time").over(w)
-    s = sessions.withColumn(
-        "_ret_ms",
-        clamp_nonneg(epoch_ms(F.col("start_time")) - epoch_ms(prev_end)))
-    ret_avg = fround(F.coalesce(
-        F.sum("_ret_ms") / F.lit(1000.0) / F.count("_ret_ms"),
-        F.lit(0.0)), 2).alias("avg_return_interval_s")
+    s, ret_avg = _with_return_interval(sessions)
     out = (user_daily(s, extra_aggs=[ret_avg])
            .join(repeat_events(events), ["datetime", "user_id"], "left")
            .fillna({"repeat_purchase_cnt": 0}))
@@ -276,7 +274,7 @@ def binge_ratio(events: DataFrame, min_items: int = 2) -> DataFrame:
     user count-distincts reduce to plain conditional counts with
     IDENTICAL values — count_distinct(user) == count(user) over
     user-unique rows, and the conditional distinct likewise. Why it
-    matters at scale (round 12, guide §2.3): two distinct aggregates
+    matters at scale: two distinct aggregates
     in one groupBy plan as an Expand that doubles every per-user row
     through the exchange; the plain-count form aggregates map-side
     with no row multiplication. Values are oracle-pinned unchanged
@@ -305,7 +303,7 @@ def retention_yesterday_anchored(sessions: DataFrame, dim: str) -> DataFrame:
     removes the driver round-trip, SURVEY.md P7 note). Output row = the
     *today* date, ratio = retained / yesterday_users.
 
-    Plan shape (round 12, guide §2.4): the reference's self-join is
+    Plan shape: the reference's self-join is
     replaced by ONE pass over the distinct (day, dim, user) frame — a
     user active on day d is retained iff their NEXT active day (lead
     over the per-(dim, user) day sequence) is d+1, which is exactly
@@ -342,7 +340,7 @@ def retention_today_anchored(sessions: DataFrame, dim: str) -> DataFrame:
     LEFT JOIN yesterday's; returning = matched, new = today - returning.
     Note the direction is the OPPOSITE of A11 — both are kept as-is.
 
-    Plan shape (round 12, guide §2.4): same single-pass window rewrite
+    Plan shape: the same single-pass window rewrite
     as :func:`retention_yesterday_anchored`, with ``lag`` — a user is
     returning on day d iff their PREVIOUS active day is d-1. The
     NULL-dim guard mirrors the join's NULL != NULL non-match; values

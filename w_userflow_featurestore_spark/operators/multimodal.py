@@ -152,7 +152,7 @@ def sample_frames(decoded: DataFrame, fps: float = 1.0,
     feature is checksum + frame index."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized 1->N fan-out (round 12, guide §4.2): frame counts
+        # vectorized 1->N fan-out: frame counts
         # per clip, then np.repeat + a segmented arange — no Python
         # row loop
         for pdf in batches:
@@ -206,7 +206,7 @@ def resize_images(decoded: DataFrame, target_w: int = 224,
             "production path")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized geometry (round 12, guide §4.2) — integer numpy
+        # vectorized geometry — integer numpy
         # arithmetic, identical to the scalar branch structure: fits
         # pass through, else width- or height-limited integer fit
         for pdf in batches:
@@ -247,7 +247,7 @@ def audio_windows(decoded: DataFrame, window_ms: int = 1000,
     stage is value-oracle-able."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # vectorized 1->N framing (round 12, guide §4.2): window counts
+        # vectorized 1->N framing: window counts
         # per clip, np.repeat + segmented arange for the window index —
         # same shape as sample_frames' fan-out
         for pdf in batches:

@@ -176,12 +176,11 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
 
     Returns (id, group_key, bucket, split) for every input doc.
 
-    SCHEMA NOTE: since the round-7 cast fix, ``group_key``'s type
-    FOLLOWS the id type (string ids yield string group keys; the
-    round-6 build always emitted BIGINT). The old cast('long') turned
-    every non-numeric string id into NULL and silently dumped the
-    whole corpus into 'test'; a consumer that persisted the old
-    BIGINT schema must migrate the column type alongside this fix.
+    SCHEMA NOTE: ``group_key``'s type FOLLOWS the id type (string ids
+    yield string group keys). A cast('long') would turn every
+    non-numeric string id into NULL and silently dump the whole corpus
+    into 'test'; a consumer that persisted an older BIGINT schema must
+    migrate the column type.
 
     Scale shape: component labels are pair-graph-proportional (near-dup
     docs only), so the label join touches a small fraction of the
@@ -455,9 +454,9 @@ def token_budget_mix(docs: DataFrame, budget_tokens: int,
     Scale shape — BUCKETED TWO-PASS exclusive prefix sum. A training
     mixture has a handful of sources, so a window partitioned by
     ``source`` alone hash-routes each source's ENTIRE multi-TB row set
-    to one task and sorts it there — the common case, not a pathology
-    (round-6 verdict, What's wrong #2). Instead the per-source hash
-    order is range-bucketed: ``_b = _h div ceil(2^60/B)`` is
+    to one task and sorts it there — the common case, not a pathology.
+    Instead the per-source hash order is range-bucketed:
+    ``_b = _h div ceil(2^60/B)`` is
     order-preserving in ``_h`` (equal hashes share a bucket, so the
     (_h, id) sort order never straddles a boundary), which decomposes
     the prefix sum exactly:
@@ -619,9 +618,8 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     collapsed to the (doc, feature, count) grain in ONE partial
     aggregate whose exchange both consumers (the r_f re-aggregate and
     the scoring join) share as a ReusedExchange — one gram+hash map
-    pass over the corpus, no token-grain materialization (the previous
-    shape recomputed the token-grain subtree per consumer; guide §2.4:
-    operations keyed the same way share one exchange).
+    pass over the corpus, no token-grain materialization and no
+    recomputation of the token-grain subtree per consumer.
     """
     from w_userflow_featurestore_spark.operators.dedup import (
         _hash60_sql, _words_sql,
@@ -629,9 +627,8 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     from w_userflow_featurestore_spark.sources import fan_out
 
     def grams(frame: DataFrame, *extra_cols: str) -> DataFrame:
-        # single parsed expression per projection (guide §7.3: the
-        # Column-API form of this builder cost ~160 py4j roundtrips,
-        # paid per construction inside every timed DSIR query)
+        # single parsed expression per projection: a Column-API form
+        # of this builder costs ~160 py4j roundtrips per construction
         ws = _words_sql(f"`{text_col}`")
         bigrams = (f"transform(sequence(1, size({ws}) - 1),"
                    f" i -> concat_ws(' ', element_at({ws}, i),"
@@ -655,15 +652,14 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     # aggregate subtree, so its exchange plans once and the second
     # consumer replays it as a ReusedExchange — the corpus gram explode
     # + 60-bit hashing runs ONE map pass instead of two, without
-    # materializing token-grain state (guide §2.4: operations keyed the
-    # same way share one exchange).
+    # materializing token-grain state.
     if target_pred is not None:
         # target ⊆ docs stated as a predicate: the target feature
         # counts are then sums of the per-doc counts over the flagged
         # docs — derived from the SAME (doc, f) partial aggregate, so
-        # the target side costs zero extra corpus passes (round 12,
-        # guide §2.3/§2.4; the separate-frame path below pays a second
-        # gram explode over the target sample). The flag is per-doc
+        # the target side costs zero extra corpus passes (the
+        # separate-frame path below pays a second gram explode over
+        # the target sample). The flag is per-doc
         # constant, so adding it to the group key changes no group.
         base = docs.select(F.col(id_col), F.col(text_col),
                            F.coalesce(target_pred, F.lit(False))

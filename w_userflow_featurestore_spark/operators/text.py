@@ -1323,13 +1323,12 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
         # freshly computed max+1 would then LIE about which version the
         # original commit published — resolve the replay first and
         # return ITS version (read from the commit's own increment)
-        if txn is not None:
-            for s in t._chain(latest):
-                if s.txn == txn:
-                    v = (t.read_increment(s.parent_id, s.snapshot_id)
-                          .agg(F.max("tokenizer_version").alias("v"))
-                          .collect()[0]["v"])
-                    return int(v), s.snapshot_id
+        done = t.txn_commit(txn) if txn is not None else None
+        if done is not None:
+            v = (t.read_increment(done.parent_id, done.snapshot_id)
+                  .agg(F.max("tokenizer_version").alias("v"))
+                  .collect()[0]["v"])
+            return int(v), done.snapshot_id
         prev = _registry_max_version(t)
         if prev is None:                 # manifest stats unusable
             prev = t.read().agg(

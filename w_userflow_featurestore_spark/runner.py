@@ -39,7 +39,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from w_userflow_featurestore_spark.incremental import (
     IncrementalPlanner, LakehousePlanner,
@@ -52,7 +51,7 @@ from w_userflow_featurestore_spark.operators.sessionize import (
     DEFAULT_GAP_MS, sessionize,
 )
 from w_userflow_featurestore_spark.sources import (
-    LogTable, merge_upsert, overwrite_partitions, read_path,
+    LogTable, is_written, merge_upsert, overwrite_partitions, read_path,
 )
 
 
@@ -112,21 +111,14 @@ class SilverResult:
 def _stored_silver(spark: SparkSession, silver_path: str
                    ) -> DataFrame | None:
     """The stored silver sessions, or None before silver's first write
-    (a LogTable with zero commits, or no parquet directory). Any other
-    read failure (corrupt log JSON, transient FS error) PROPAGATES:
-    skipping the stored sessions would write a fragment or superseded
-    session next to the stale one — silent corruption instead of a
-    visible failed run."""
-    try:
-        return read_path(spark, silver_path)
-    except ValueError as exc:
-        if "has no commits" not in str(exc):
-            raise
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc) and \
-                "Path does not exist" not in str(exc):
-            raise
-    return None
+    (``sources.is_written``: a LogTable with zero commits, or no parquet
+    data file). Any read failure (corrupt log JSON, transient FS error)
+    PROPAGATES: skipping the stored sessions would write a fragment or
+    superseded session next to the stale one — silent corruption
+    instead of a visible failed run."""
+    if not is_written(spark, silver_path):
+        return None
+    return read_path(spark, silver_path)
 
 
 def _extend_with_open_tails(spark: SparkSession, increment: DataFrame,
@@ -282,12 +274,9 @@ def run_silver(spark: SparkSession, events_path: str, silver_path: str,
 def _read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
     """The latest snapshot of a ledger's LogTable; ``FileNotFoundError``
     before the first commit."""
-    lt = LogTable(spark, ledger_dir)
-    base = lt.latest_snapshot_id() if LogTable.is_log_table(ledger_dir) \
-        else None
-    if base is None:
+    if not is_written(spark, ledger_dir):
         raise FileNotFoundError(f"no committed ledger in {ledger_dir}")
-    return lt.read(base)
+    return LogTable(spark, ledger_dir).read()
 
 
 def _commit_ledger(spark: SparkSession, ledger_dir: str,

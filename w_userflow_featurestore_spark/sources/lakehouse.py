@@ -156,11 +156,6 @@ def _stat_value(v):
     return None
 
 
-def _filter_value(v):
-    """Normalize a user filter operand the same way as the stats."""
-    return _stat_value(v)
-
-
 def _comparable(a, b) -> bool:
     num = (int, float)
     return (isinstance(a, num) and isinstance(b, num)) or \
@@ -337,6 +332,44 @@ class Snapshot:
     stats: dict = field(default_factory=dict)
 
 
+@dataclass(frozen=True)
+class _Replay:
+    """A table's state at one snapshot (:meth:`LogTable._replay`)."""
+    snaps: list[Snapshot]     # the whole log, in log order
+    chain: list[Snapshot]     # root -> the snapshot; [] for an empty table
+    live: dict                # {rel_path: stats} of the snapshot's files
+
+    @property
+    def snapshot_id(self) -> int | None:
+        return self.chain[-1].snapshot_id if self.chain else None
+
+    @property
+    def files(self) -> list[str]:
+        return sorted(self.live)
+
+    def since(self, start_snapshot_id: int | None) -> list[Snapshot]:
+        """Commits strictly after ``start`` up to this snapshot along
+        its chain (``None``: from the root). :class:`BrokenLineageError`
+        when the table is empty or ``start`` is not an ancestor."""
+        if not self.chain:
+            raise BrokenLineageError("empty table has no snapshots")
+        if start_snapshot_id is None:
+            return self.chain
+        ids = [s.snapshot_id for s in self.chain]
+        if start_snapshot_id not in ids:
+            raise BrokenLineageError(
+                f"snapshot {start_snapshot_id} is not an ancestor of "
+                f"{self.snapshot_id}")
+        return self.chain[ids.index(start_snapshot_id) + 1:]
+
+    def txn_commit(self, txn: str | None) -> Snapshot | None:
+        """The newest commit on the chain carrying idempotence token
+        ``txn`` (None matches nothing). A txn stranded on a dead
+        rollback fork is off the chain, so a replay of it RE-applies."""
+        return next((s for s in reversed(self.chain)
+                     if txn is not None and s.txn == txn), None)
+
+
 class LogTable:
     """One transaction-log table rooted at ``path``."""
 
@@ -364,17 +397,16 @@ class LogTable:
         A snapshot's live set never changes and data files are
         immutable, so the manifest is immutable and regeneration is
         idempotent (atomic tmp+rename either way)."""
-        if snapshot_id is None:
-            snapshot_id = self.latest_snapshot_id()
-        if snapshot_id is None:
+        st = self._replay(snapshot_id)
+        if st.snapshot_id is None:
             raise ValueError("empty table has no snapshot to export")
         mdir = os.path.join(self.path, "_manifests")
         os.makedirs(mdir, exist_ok=True)
-        dest = os.path.join(mdir, f"{snapshot_id:020d}.txt")
+        dest = os.path.join(mdir, f"{st.snapshot_id:020d}.txt")
         data_abs = os.path.abspath(self._data_path)
         tmp = dest + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as fh:
-            for rel in self.files(snapshot_id):
+            for rel in st.files:
                 fh.write(os.path.join(data_abs, rel) + "\n")
         os.replace(tmp, dest)
         return dest
@@ -500,9 +532,61 @@ class LogTable:
             rows, "snapshot_id long, parent_id long, committed_at_ms long,"
                   " operation string, n_added_files long, n_removed_files long")
 
+    def _replay(self, snapshot_id: int | None = None,
+                snaps: list[Snapshot] | None = None) -> _Replay:
+        """The table's state at ``snapshot_id`` (default: latest) from
+        ONE read of the log — or from ``snaps``, a read the caller
+        already made. No state outlives the call: the next operation
+        reads the log again and sees every commit landed meanwhile."""
+        if snaps is None:
+            snaps = self.snapshots()
+        if snapshot_id is None:
+            if not snaps:
+                return _Replay(snaps, [], {})
+            snapshot_id = snaps[-1].snapshot_id
+        by_id = {s.snapshot_id: s for s in snaps}
+        if snapshot_id not in by_id:
+            raise BrokenLineageError(f"unknown snapshot {snapshot_id}")
+        # root -> snapshot along parent_id pointers (NOT log order: a
+        # rollback re-parents, and commits after the fork are not part
+        # of the rolled-back timeline)
+        chain: list[Snapshot] = []
+        cur: int | None = snapshot_id
+        while cur is not None:
+            s = by_id.get(cur)
+            if s is None:
+                # an ancestor is gone (expired history): the walked
+                # snapshot's file set is NOT reconstructible — raising
+                # beats silently returning a partial chain (a dead-fork
+                # read would otherwise yield incomplete data). The live
+                # chain never hits this: expire rewrites its oldest
+                # kept commit as a parentless checkpoint.
+                raise BrokenLineageError(
+                    f"snapshot {cur} (ancestor of {snapshot_id}) has "
+                    f"been expired; the requested state is not "
+                    f"reconstructible")
+            chain.append(s)
+            cur = s.parent_id
+        chain.reverse()
+        # each live file's stats come from the commit that ADDED it
+        # (files are immutable, so the stats never go stale)
+        live: dict = {}
+        for s in chain:
+            for f in s.remove:
+                live.pop(f, None)
+            for f in s.add:
+                live[f] = s.stats.get(f, {})
+        return _Replay(snaps, chain, live)
+
     def latest_snapshot_id(self) -> int | None:
         snaps = self.snapshots()
         return snaps[-1].snapshot_id if snaps else None
+
+    def txn_commit(self, txn: str) -> Snapshot | None:
+        """The current-timeline commit that carried idempotence token
+        ``txn``, or None — how a replayed publish finds what the
+        original one committed."""
+        return self._replay().txn_commit(txn)
 
     def files_df(self, snapshot_id: int | None = None) -> DataFrame:
         """Live data files at a snapshot as a DataFrame — the queryable
@@ -514,8 +598,8 @@ class LogTable:
         like every metadata read — never a data scan."""
         parts = self.partition_by
         rows = []
-        stats = self.files_stats(snapshot_id)
-        for rel in self.files(snapshot_id):
+        stats = self._replay(snapshot_id).live
+        for rel in sorted(stats):
             p = os.path.join(self._data_path, rel)
             try:
                 size = os.path.getsize(p)
@@ -525,7 +609,7 @@ class LogTable:
             # to partition parsing must not have to land twice
             pvals = self._partition_values(rel)
             part = {c: pvals.get(c) for c in parts}
-            rows.append((rel, size, part, json.dumps(stats.get(rel, {}),
+            rows.append((rel, size, part, json.dumps(stats[rel],
                                                      sort_keys=True)))
         return self.spark.createDataFrame(
             rows, "file_path string, size_bytes long,"
@@ -634,30 +718,20 @@ class LogTable:
         validate_base = expected_base is not LogTable._UNSET
         stats = self._collect_stats(add)
         for _ in range(_retries):
-            snaps = self.snapshots()
-            if txn is not None:
-                # re-check idempotence after losing a race: the winner
-                # may have been a replay of this very transaction. Walk
-                # the live parent chain only — the same rule append()'s
-                # pre-check uses — so a txn stranded on a dead rollback
-                # fork is consistently RE-APPLIED by both code paths
-                # rather than deduped here and replayed there.
-                by_id = {s.snapshot_id: s for s in snaps}
-                cur = snaps[-1].snapshot_id if snaps else None
-                while cur is not None:
-                    s = by_id.get(cur)
-                    if s is None:          # broken lineage: stop the walk
-                        break
-                    if s.txn == txn:
-                        return s.snapshot_id
-                    cur = s.parent_id
-            latest = snaps[-1].snapshot_id if snaps else None
+            st = self._replay()
+            # re-check idempotence after losing a race: the winner may
+            # have been a replay of this very transaction (the same
+            # lookup append()'s and merge()'s pre-checks use)
+            done = st.txn_commit(txn)
+            if done is not None:
+                return done.snapshot_id
+            latest = st.snapshot_id
             if validate_base and latest != expected_base:
                 raise ConcurrentCommitError(
                     f"{operation} was staged against snapshot "
                     f"{expected_base} but the table is now at {latest} "
                     f"— re-run the operation")
-            seq = (latest + 1) if snaps else 1
+            seq = 1 if latest is None else latest + 1
             pid = parent_id if parent_id is not None else latest
             body = {"snapshot_id": seq, "parent_id": pid,
                     "committed_at_ms": int(time.time() * 1000),
@@ -681,69 +755,25 @@ class LogTable:
 
     # ----------------------------------------------------------- lineage
 
-    def _chain(self, snapshot_id: int) -> list[Snapshot]:
-        """Root -> snapshot along ``parent_id`` pointers (NOT log order:
-        a rollback re-parents, and commits after the fork are not part
-        of the rolled-back timeline)."""
-        by_id = {s.snapshot_id: s for s in self.snapshots()}
-        if snapshot_id not in by_id:
-            raise BrokenLineageError(f"unknown snapshot {snapshot_id}")
-        chain: list[Snapshot] = []
-        cur: int | None = snapshot_id
-        while cur is not None:
-            s = by_id.get(cur)
-            if s is None:
-                # an ancestor is gone (expired history): the walked
-                # snapshot's file set is NOT reconstructible — raising
-                # beats silently returning a partial chain (a dead-fork
-                # read would otherwise yield incomplete data). The live
-                # chain never hits this: expire rewrites its oldest
-                # kept commit as a parentless checkpoint.
-                raise BrokenLineageError(
-                    f"snapshot {cur} (ancestor of {snapshot_id}) has "
-                    f"been expired; the requested state is not "
-                    f"reconstructible")
-            chain.append(s)
-            cur = s.parent_id
-        return list(reversed(chain))
-
     def is_ancestor(self, ancestor_id: int, descendant_id: int) -> bool:
         """Walk the parent chain — the reference's
         ``is_ancestor_snapshot`` (silver_dag.py:65-88)."""
         try:
             return any(s.snapshot_id == ancestor_id
-                       for s in self._chain(descendant_id))
+                       for s in self._replay(descendant_id).chain)
         except BrokenLineageError:
             return False
 
     def files(self, snapshot_id: int | None = None) -> list[str]:
         """Live data files (relative paths) at a snapshot: replay
         add/remove along the parent chain."""
-        if snapshot_id is None:
-            snapshot_id = self.latest_snapshot_id()
-        if snapshot_id is None:
-            return []
-        live: set[str] = set()
-        for s in self._chain(snapshot_id):
-            live.difference_update(s.remove)
-            live.update(s.add)
-        return sorted(live)
+        return self._replay(snapshot_id).files
 
     def files_stats(self, snapshot_id: int | None = None) -> dict:
         """{rel_path: {col: [min, max]}} for the live files at a
         snapshot — each file's stats come from the commit that ADDED
         it (files are immutable, so the stats never go stale)."""
-        if snapshot_id is None:
-            snapshot_id = self.latest_snapshot_id()
-        if snapshot_id is None:
-            return {}
-        out: dict = {}
-        for s in self._chain(snapshot_id):
-            for f in s.remove:
-                out.pop(f, None)
-            for f in s.add:
-                out[f] = s.stats.get(f, {})
-        return out
+        return self._replay(snapshot_id).live
 
     @staticmethod
     def _partition_values(rel: str) -> dict[str, str | None]:
@@ -793,8 +823,8 @@ class LogTable:
                         drop = True
                         break
                     continue
-                norm = ([_filter_value(x) for x in val]
-                        if op == "in" else _filter_value(val))
+                norm = ([_stat_value(x) for x in val]
+                        if op == "in" else _stat_value(val))
                 if _stats_exclude(stats.get(rel, {}).get(col),
                                   op, norm):
                     drop = True
@@ -814,8 +844,8 @@ class LogTable:
 
     # ------------------------------------------------------------- reads
 
-    def _read_files(self, rel_files: list[str],
-                    merge_schema: bool = False) -> DataFrame:
+    def _read_files(self, rel_files: list[str], merge_schema: bool = False,
+                    snaps: list[Snapshot] | None = None) -> DataFrame:
         paths = [os.path.join(self._data_path, f) for f in rel_files]
         if not paths:
             # schema-stable empty frame from an existing data file; a
@@ -823,12 +853,13 @@ class LogTable:
             # on the CURRENT chain's files first — a file known only
             # to a dead-fork snapshot may have been vacuumed — and
             # verify on-disk existence either way (retention-expired
-            # files linger in old add-lists)
-            snaps = self.snapshots()
-            if not snaps:
+            # files linger in old add-lists). ``snaps`` is the log the
+            # caller already read, if any.
+            cur = self._replay(snaps=snaps)
+            if not cur.snaps:
                 raise ValueError(f"LogTable {self.path} has no commits")
-            live = sorted(self.files())
-            dead = sorted({f for s in snaps for f in s.add}
+            live = cur.files
+            dead = sorted({f for s in cur.snaps for f in s.add}
                           - set(live))
             for rel in live + dead:
                 p = os.path.join(self._data_path, rel)
@@ -914,32 +945,12 @@ class LogTable:
         Iceberg/Delta perform. Off by default — schema merging reads
         every file footer up front, which costs a listing-scale pass at
         100 TB, so turn it on only for tables that actually evolved."""
-        rel = self.files(snapshot_id)
+        st = self._replay(snapshot_id)
+        rel = st.files
         if filters:
-            rel = self._prune(rel, self.files_stats(snapshot_id),
-                              filters)
-        df = self._read_files(rel, merge_schema)
+            rel = self._prune(rel, st.live, filters)
+        df = self._read_files(rel, merge_schema, st.snaps)
         return self._apply_filters(df, filters) if filters else df
-
-    def _commits_between(self, start_snapshot_id: int | None,
-                         end_snapshot_id: int | None) -> list[Snapshot]:
-        """Commits strictly after ``start`` up to and including ``end``
-        (default latest) along ``end``'s parent chain; ``start=None``
-        means from the root. :class:`BrokenLineageError` when the table
-        is empty or ``start`` is not an ancestor of ``end``."""
-        if end_snapshot_id is None:
-            end_snapshot_id = self.latest_snapshot_id()
-        if end_snapshot_id is None:
-            raise BrokenLineageError("empty table has no snapshots")
-        chain = self._chain(end_snapshot_id)
-        if start_snapshot_id is None:
-            return chain
-        ids = [s.snapshot_id for s in chain]
-        if start_snapshot_id not in ids:
-            raise BrokenLineageError(
-                f"snapshot {start_snapshot_id} is not an ancestor of "
-                f"{end_snapshot_id}")
-        return chain[ids.index(start_snapshot_id) + 1:]
 
     def read_increment(self, start_snapshot_id: int | None,
                        end_snapshot_id: int | None = None,
@@ -952,7 +963,8 @@ class LogTable:
         overwrite), in which case "rows added since" is not
         well-defined and the caller must replan a full read, exactly
         like the reference's broken-ancestry fallback."""
-        inc = self._commits_between(start_snapshot_id, end_snapshot_id)
+        st = self._replay(end_snapshot_id)
+        inc = st.since(start_snapshot_id)
         non_append = [s for s in inc if s.operation != "append"]
         if non_append:
             raise BrokenLineageError(
@@ -963,7 +975,7 @@ class LogTable:
         if filters:
             stats = {f: s.stats.get(f, {}) for s in inc for f in s.add}
             rel = self._prune(rel, stats, filters)
-        df = self._read_files(rel)
+        df = self._read_files(rel, snaps=st.snaps)
         return self._apply_filters(df, filters) if filters else df
 
     def change_feed(self, start_snapshot_id: int | None,
@@ -1000,7 +1012,8 @@ class LogTable:
         retention that covers your longest feed lag."""
         added: set[str] = set()
         removed: set[str] = set()
-        for s in self._commits_between(start_snapshot_id, end_snapshot_id):
+        st = self._replay(end_snapshot_id)
+        for s in st.since(start_snapshot_id):
             for f in s.add:
                 # re-added after removal in range -> cancels
                 if f in removed:
@@ -1013,8 +1026,8 @@ class LogTable:
                     added.discard(f)
                 else:
                     removed.add(f)
-        before = self._read_files(sorted(removed))
-        after = self._read_files(sorted(added))
+        before = self._read_files(sorted(removed), snaps=st.snaps)
+        after = self._read_files(sorted(added), snaps=st.snaps)
         cols = after.columns
         ins = (after.exceptAll(before.select(*cols))
                     .withColumn("_change_type", F.lit("insert")))
@@ -1089,12 +1102,9 @@ class LogTable:
         and the role Iceberg's atomic snapshot commit plays for the
         reference's Kafka->Bronze hop (bronze_load_raw_data.py:84-90,
         README 'exactly-once' §)."""
-        if txn is not None:
-            latest = self.latest_snapshot_id()
-            if latest is not None:
-                for s in self._chain(latest):
-                    if s.txn == txn:
-                        return s.snapshot_id
+        done = self.txn_commit(txn) if txn is not None else None
+        if done is not None:
+            return done.snapshot_id
         return self._commit("append", self._stage_write(df), [], txn=txn)
 
     def overwrite_partitions(self, df: DataFrame) -> int:
@@ -1104,7 +1114,7 @@ class LogTable:
         parts = self.partition_by
         if not parts:
             raise ValueError("overwrite_partitions needs a partitioned table")
-        base = self.latest_snapshot_id()
+        st = self._replay()
         adds = self._stage_write(df)
         # Derive the touched partitions from the STAGED files' own
         # relative dirs: Spark wrote those dirs with its own Hive-path
@@ -1113,10 +1123,9 @@ class LogTable:
         # str(value)-to-raw-segment comparison does on null or
         # special-character partition values.
         touched = {os.path.dirname(f) for f in adds}
-        removes = [f for f in self.files(base)
-                   if os.path.dirname(f) in touched]
+        removes = [f for f in st.files if os.path.dirname(f) in touched]
         return self._commit("overwrite_partitions", adds, removes,
-                            expected_base=base)
+                            expected_base=st.snapshot_id)
 
     def merge(self, staged: DataFrame, keys: list[str],
               txn: str | None = None,
@@ -1147,34 +1156,19 @@ class LogTable:
         re-delivers a merge micro-batch commits exactly once even when
         re-applying it would NOT be a semantic no-op (multi-run SCD2
         batches are the canonical example)."""
-        if txn is not None:
-            latest = self.latest_snapshot_id()
-            if latest is not None:
-                for s in self._chain(latest):
-                    if s.txn == txn:
-                        return s.snapshot_id
-        base = self.latest_snapshot_id()
-        if base is None:
-            return self._commit("merge", self._stage_write(staged), [],
-                                expected_base=None, txn=txn)
-        target = self._read_files(self.files(base)).withColumn(
-            "_file", F.col("_metadata.file_path"))
+        st = self._replay()
+        done = st.txn_commit(txn)
+        if done is not None:
+            return done.snapshot_id
+        base = st.snapshot_id
         key_rows = staged.select(*keys)
         if retire is not None:
             key_rows = key_rows.unionByName(retire.select(*keys))
         key_rows = key_rows.distinct()
-        victims = (target.join(key_rows.hint("broadcast"), keys, "left_semi")
-                   .select("_file").distinct().collect())
-        from urllib.parse import unquote, urlparse
-        # _metadata.file_path URI-encodes the on-disk name ONCE MORE on
-        # top of Spark's Hive dir escaping (disk `p=x%3Ay z` prints as
-        # `p=x%253Ay%20z`), so exactly one unquote recovers the real
-        # relative path; skipping it mis-resolves victims for any
-        # special-character partition value.
-        victim_rel = sorted(
-            os.path.relpath(unquote(urlparse(r["_file"]).path),
-                            self._data_path)
-            for r in victims)
+        victim_rel = [] if base is None else self._victim_paths(
+            self._read_files(st.files, snaps=st.snaps)
+            .withColumn("_file", F.col("_metadata.file_path"))
+            .join(key_rows.hint("broadcast"), keys, "left_semi"))
         if not victim_rel:
             return self._commit("merge", self._stage_write(staged), [],
                                 expected_base=base, txn=txn)
@@ -1212,17 +1206,10 @@ class LogTable:
         snapshots still see the deleted rows (immutable files) until
         ``vacuum`` ages them out — exactly Iceberg's snapshot-isolation
         contract for deletes."""
-        base, victim_rel = self._row_level_victims(filters)
-        if not victim_rel:
-            return base
-        victim_df = self._read_files(victim_rel)
         # keep = NOT(all filters match); NULLs in any compared column
         # make the conjunction non-TRUE, so those rows are kept
-        hit = F.coalesce(self._filter_cond(filters), F.lit(False))
-        kept = victim_df.where(~hit)
-        adds = self._stage_write(kept.select(*victim_df.columns))
-        return self._commit("delete", adds, victim_rel,
-                            expected_base=base)
+        return self._rewrite_matching(
+            "delete", filters, lambda victims, hit: victims.where(~hit))
 
     @staticmethod
     def _filter_term(col: str, op: str, val) -> Column:
@@ -1245,28 +1232,47 @@ class LogTable:
             cond = cond & LogTable._filter_term(col, op, val)
         return cond
 
-    def _row_level_victims(self,
-                           filters: list[tuple]) -> tuple[int, list[str]]:
-        """Shared delete/update narrowing: manifest-stats pruning, then
-        one containment pass finding the live files that hold >=1 row
-        matching ``filters``. Returns (base snapshot, victim paths)."""
-        base = self.latest_snapshot_id()
-        if base is None:
-            raise ValueError(f"LogTable {self.path} has no commits")
-        candidates = self._prune(self.files(base),
-                                 self.files_stats(base), filters)
-        if not candidates:
-            return base, []
-        matched = self._apply_filters(self._read_files(candidates),
-                                      filters)
-        victims = (matched
-                   .select(F.col("_metadata.file_path").alias("_file"))
-                   .distinct().collect())
+    def _victim_paths(self, df: DataFrame) -> list[str]:
+        """The relative paths of the data files named in ``df``'s
+        ``_file`` column (``_metadata.file_path`` of the rows a DML
+        scan matched), one distinct collect. That column URI-encodes
+        the on-disk name ONCE MORE on top of Spark's Hive dir escaping
+        (disk `p=x%3Ay z` prints as `p=x%253Ay%20z`), so exactly one
+        unquote recovers the real relative path; skipping it
+        mis-resolves victims for any special-character partition
+        value."""
         from urllib.parse import unquote, urlparse
-        return base, sorted(
+        return sorted(
             os.path.relpath(unquote(urlparse(r["_file"]).path),
                             self._data_path)
-            for r in victims)
+            for r in df.select("_file").distinct().collect())
+
+    def _rewrite_matching(self, operation: str, filters: list[tuple],
+                          rewrite) -> int:
+        """Shared delete/update: manifest-stats pruning, one containment
+        pass finding the live files that hold >=1 row matching
+        ``filters`` (victims), then ONE commit replacing the victims by
+        ``rewrite(victim rows, hit)``, where ``hit`` is the filters'
+        conjunction with NULL as false. No victim, no commit: returns
+        the current snapshot."""
+        st = self._replay()
+        if st.snapshot_id is None:
+            raise ValueError(f"LogTable {self.path} has no commits")
+        candidates = self._prune(st.files, st.live, filters)
+        if not candidates:
+            return st.snapshot_id
+        matched = self._apply_filters(self._read_files(candidates),
+                                      filters)
+        victim_rel = self._victim_paths(
+            matched.select(F.col("_metadata.file_path").alias("_file")))
+        if not victim_rel:
+            return st.snapshot_id
+        victims = self._read_files(victim_rel)
+        hit = F.coalesce(self._filter_cond(filters), F.lit(False))
+        adds = self._stage_write(
+            rewrite(victims, hit).select(*victims.columns))
+        return self._commit(operation, adds, victim_rel,
+                            expected_base=st.snapshot_id)
 
     def update_where(self, filters: list[tuple],
                      set_exprs: dict[str, object]) -> int:
@@ -1277,31 +1283,25 @@ class LogTable:
         matching rows get ``set_exprs`` (column -> Column or literal)
         applied and non-matching rows in the same files are carried
         unchanged. NULL-predicate rows are NOT updated (SQL UPDATE)."""
-        base, victim_rel = self._row_level_victims(filters)
-        if not victim_rel:
-            return base
-        victim_df = self._read_files(victim_rel)
-        unknown = sorted(set(set_exprs) - set(victim_df.columns))
-        if unknown:
-            raise ValueError(
-                f"update_where SET names unknown column(s) {unknown} — "
-                f"table columns are {victim_df.columns} (SQL UPDATE "
-                "rejects an unknown SET column; silently ignoring it "
-                "would no-op the update)")
-        hit = F.coalesce(self._filter_cond(filters), F.lit(False))
-        # ONE select evaluating predicate and every SET expression
-        # against the ORIGINAL row — sequential withColumn would let a
-        # SET of a predicate column hide the row from later SETs, and
-        # {a: col(b), b: col(a)} would fail to swap (SQL UPDATE
-        # evaluates all right-hand sides against the pre-update row)
-        updated = victim_df.select(*[
-            F.when(hit, set_exprs[c] if isinstance(set_exprs[c], Column)
-                   else F.lit(set_exprs[c])).otherwise(F.col(c)).alias(c)
-            if c in set_exprs else F.col(c)
-            for c in victim_df.columns])
-        adds = self._stage_write(updated)
-        return self._commit("update", adds, victim_rel,
-                            expected_base=base)
+        def updated(victims: DataFrame, hit: Column) -> DataFrame:
+            unknown = sorted(set(set_exprs) - set(victims.columns))
+            if unknown:
+                raise ValueError(
+                    f"update_where SET names unknown column(s) {unknown} "
+                    f"— table columns are {victims.columns} (SQL UPDATE "
+                    "rejects an unknown SET column; silently ignoring it "
+                    "would no-op the update)")
+            # ONE select evaluating predicate and every SET expression
+            # against the ORIGINAL row — sequential withColumn would let
+            # a SET of a predicate column hide the row from later SETs,
+            # and {a: col(b), b: col(a)} would fail to swap (SQL UPDATE
+            # evaluates all right-hand sides against the pre-update row)
+            return victims.select(*[
+                F.when(hit, set_exprs[c] if isinstance(set_exprs[c], Column)
+                       else F.lit(set_exprs[c])).otherwise(F.col(c)).alias(c)
+                if c in set_exprs else F.col(c)
+                for c in victims.columns])
+        return self._rewrite_matching("update", filters, updated)
 
     def compact(self, target_files: int = 1,
                 zorder_by: list[str] | None = None,
@@ -1323,15 +1323,15 @@ class LogTable:
         same replace commit. Combined with ``stats_columns`` covering
         the same columns, the freshly tightened per-file min/max let
         ``read(filters=...)`` skip files on ANY clustered dimension."""
-        base = self.latest_snapshot_id()
-        live = self.files(base)
+        st = self._replay()
+        base, live = st.snapshot_id, st.files
         if filters:
             # partition-scoped maintenance: rewrite ONLY the files the
             # manifest proves relevant (a daily table compacts
             # yesterday's partition, never the year of history behind
             # it) — same pruning as the read path, and the replace
             # commit removes exactly what it rewrote
-            live = self._prune(live, self.files_stats(base), filters)
+            live = self._prune(live, st.live, filters)
         if not live:
             return base or 0
         df = self._read_files(live)
@@ -1369,14 +1369,13 @@ class LogTable:
         dead fork, so a reader that recorded one of them fails the
         ancestry check and replans a full read (the exact situation
         the reference's is_ancestor_snapshot guard exists for)."""
-        base = self.latest_snapshot_id()
-        chain_files = self.files(snapshot_id)
-        cur = self.files(base)
+        cur = self._replay()
+        target = self._replay(snapshot_id, cur.snaps).live
         return self._commit(
             "rollback",
-            add=[f for f in chain_files if f not in set(cur)],
-            remove=[f for f in cur if f not in set(chain_files)],
-            parent_id=snapshot_id, expected_base=base)
+            add=[f for f in sorted(target) if f not in cur.live],
+            remove=[f for f in cur.files if f not in target],
+            parent_id=snapshot_id, expected_base=cur.snapshot_id)
 
     def expire_snapshots(self, keep_last: int = 10) -> int:
         """Truncate table history to the newest ``keep_last`` snapshots
@@ -1397,11 +1396,8 @@ class LogTable:
         full live file set + stats as of its snapshot (Delta's
         checkpoint-then-clean protocol — a delta log cannot just drop
         its base). Returns the number of snapshots expired."""
-        latest = self.latest_snapshot_id()
-        if latest is None:
-            return 0
-        keep_last = max(1, keep_last)
-        chain = self._chain(latest)
+        st = self._replay()
+        chain, keep_last = st.chain, max(1, keep_last)
         expired = chain[:-keep_last]
         if not expired:
             return 0
@@ -1411,13 +1407,11 @@ class LogTable:
         # set (and its stats) as of that snapshot: exactly Delta's
         # checkpoint-then-clean protocol. Atomic tmp+rename rewrite.
         oldest = chain[-keep_last]
-        full = self.files(oldest.snapshot_id)
-        stats = self.files_stats(oldest.snapshot_id)
+        stats = self._replay(oldest.snapshot_id, st.snaps).live
         body = {"snapshot_id": oldest.snapshot_id, "parent_id": None,
                 "committed_at_ms": oldest.committed_at_ms,
-                "operation": "checkpoint", "add": sorted(full),
-                "remove": [], "txn": oldest.txn,
-                "stats": {f: stats.get(f, {}) for f in full}}
+                "operation": "checkpoint", "add": sorted(stats),
+                "remove": [], "txn": oldest.txn, "stats": stats}
         _replace_json(os.path.join(self._log_path,
                                    f"{oldest.snapshot_id:020d}.json"),
                       body)
@@ -1448,10 +1442,10 @@ class LogTable:
         tmp may likewise be a commit about to link. The window is the
         same guard as Delta VACUUM's retention period; pass ``0`` only
         when no concurrent writer can exist."""
-        latest = self.latest_snapshot_id()
-        if latest is None:
+        chain = self._replay().chain
+        if not chain:
             return 0
-        keep = {f for s in self._chain(latest) for f in s.add}
+        keep = {f for s in chain for f in s.add}
         cutoff = time.time() - retention_seconds
         n = 0
         for f in os.listdir(self._log_path):

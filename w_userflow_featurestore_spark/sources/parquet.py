@@ -187,6 +187,23 @@ def write_partitioned(df: DataFrame, path: str, partition_by: list[str],
     df.write.mode(mode).partitionBy(*partition_by).parquet(path)
 
 
+def is_written(spark: SparkSession, path: str) -> bool:
+    """Whether the table at ``path`` holds a write: a LogTable with at
+    least one commit, or a parquet directory with a data file outside
+    Spark's hidden ``_``/``.`` dirs (``merge_upsert`` removes emptied
+    partition dirs, and a crashed first write leaves only
+    ``_temporary``). The one "not written yet" test: a read failure of
+    a written table propagates. The walk stops at the first data
+    file."""
+    if LogTable.is_log_table(path):
+        return LogTable(spark, path).latest_snapshot_id() is not None
+    for _root, dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+    return False
+
+
 def read_path(spark: SparkSession, path: str,
               filters: list[tuple] | None = None,
               schema: T.StructType | None = None) -> DataFrame:
@@ -327,11 +344,12 @@ def merge_upsert(spark: SparkSession, target_path: str, staged: DataFrame,
     if LogTable.is_log_table(target_path):
         LogTable(spark, target_path).merge(staged, keys, retire=retire)
         return
-    try:
-        target = spark.read.parquet(target_path)
-    except Exception:
+    if not is_written(spark, target_path):
         write_partitioned(staged, target_path, partition_by)
         return
+    # a read failure of an existing table propagates: a torn or
+    # unreadable target is never replaced by the staged batch alone
+    target = spark.read.parquet(target_path)
     skey = staged.select(*keys)
     if retire is not None:
         skey = skey.unionByName(retire.select(*keys))

@@ -79,6 +79,13 @@ def _start(writer, trigger_seconds: int | None, available_now: bool):
     return writer.start()
 
 
+def _roll_up(table, sums) -> None:
+    """Replace a delta table's rows by ``sums`` of them in one replace
+    commit, validated against the snapshot the sum was read from."""
+    base = table.latest_snapshot_id()
+    table.rewrite(sums(table.read(base)), base)
+
+
 def bronze_ingest(events: DataFrame, path: str, checkpoint: str,
                   trigger_seconds: int | None = 30,
                   available_now: bool = False,
@@ -205,8 +212,11 @@ def stream_upsert(events: DataFrame, path: str, checkpoint: str, *,
                   available_now: bool = False):
     """MERGE-INTO as a streaming sink: ``foreachBatch`` applies an
     optional batch ``transform`` (e.g. dedup/sessionize/classify) to
-    each micro-batch, then upserts it into the day-partitioned parquet
-    target on ``keys`` via :func:`~...sources.parquet.merge_upsert`.
+    each micro-batch, then upserts it into the day-partitioned target
+    on ``keys`` via :func:`~...sources.parquet.merge_upsert`: a LogTable
+    target takes the transactional merge (file-granular copy-on-write,
+    one atomic commit per micro-batch), a parquet target the
+    partition-scoped rewrite.
 
     This is the reference's Silver loop (stage + MERGE every 10 minutes,
     silver_user_session_events.py:146-186) collapsed into the stream:
@@ -214,8 +224,9 @@ def stream_upsert(events: DataFrame, path: str, checkpoint: str, *,
     holds for the same reason the reference's does — the merge converges
     per key, so a replayed batch (checkpoint recovery re-delivers the
     last uncommitted micro-batch) rewrites the same rows to the same
-    values. At scale the merge rewrites only the partitions a batch
-    touches, so steady-state cost tracks batch size, not table size.
+    values. At scale the merge rewrites only the files (LogTable) or
+    partitions (parquet) a batch touches, so steady-state cost tracks
+    batch size, not table size.
     """
     from w_userflow_featurestore_spark.sources.parquet import merge_upsert
 
@@ -296,10 +307,7 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
             t = LogTable.create(batch.sparkSession, table_path, [])
             t.append(inc, txn=f"drift:{checkpoint}:{batch_id}")
             if compact_every and (batch_id + 1) % compact_every == 0:
-                # roll-up: deltas -> their group-sum, one replace commit
-                # validated against the snapshot the sum was read from
-                base = t.latest_snapshot_id()
-                t.rewrite(_drift_sums(t.read(base)), base)
+                _roll_up(t, _drift_sums)
 
     writer = (events.writeStream
               .foreachBatch(_sink)
@@ -507,7 +515,7 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
     from w_userflow_featurestore_spark.operators.dedup import (
         incremental_novelty, shingle_ledger,
     )
-    from w_userflow_featurestore_spark.sources import LogTable
+    from w_userflow_featurestore_spark.sources import LogTable, is_written
 
     def _sink(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -517,14 +525,10 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
         batch = batch.select(F.col(id_col), F.col(text_col)) \
             .localCheckpoint(eager=True)
         # zero-commit guard: a crash between LogTable.create() and the
-        # first ledger append leaves _txn_log present but empty — on
-        # checkpoint replay is_log_table() alone would route into
-        # read() and raise 'has no commits' on EVERY retry, wedging
-        # the stream permanently (runner.py's ledger readers guard
-        # this same state)
-        if (LogTable.is_log_table(ledger_path)
-                and LogTable(spark, ledger_path)
-                        .latest_snapshot_id() is not None):
+        # first ledger append leaves _txn_log present but empty — a
+        # read() there would raise 'has no commits' on EVERY replay,
+        # wedging the stream permanently
+        if is_written(spark, ledger_path):
             led = read_streaming_novelty_ledger(spark, ledger_path)
         else:
             led = spark.createDataFrame([], "sh long, n_docs long")
@@ -537,10 +541,7 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
         lt.append(shingle_ledger(batch, n, text_col, id_col),
                   txn=f"nov-ledger:{checkpoint}:{batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
-            # roll-up: deltas -> their group-sum, one replace commit
-            # validated against the snapshot the sum was read from
-            base = lt.latest_snapshot_id()
-            lt.rewrite(_novelty_sums(lt.read(base)), base)
+            _roll_up(lt, _novelty_sums)
 
     writer = (docs.writeStream
               .foreachBatch(_sink)
