@@ -569,7 +569,7 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale. NO broadcast hint on it: customer is SF-proportional, so a
     # forced hint would ship millions of rows per executor at SF~100 —
     # AQE picks broadcast while it fits the threshold and falls back to
-    # a 3/5-pruned shuffle join beyond (round-8 ADVICE)
+    # a 3/5-pruned shuffle join beyond
     mkt_nations = (nation.join(F.broadcast(region),
                                F.col("n_regionkey") == F.col("r_regionkey"))
                    .select(F.col("n_nationkey").alias("_mk"),
@@ -2481,20 +2481,11 @@ def q_quality_survivor_dedup(spark: SparkSession,
 
 
 # driver-walk order: the correctness harness certifies entries
-# front-to-back and stops at 50, so the dict is kept in
-# least-recently-certified order — the block holding the OLDEST
-# certificates first, plus anything whose implementation or oracle
-# changed this round, plus every NEW query. With >100 queries and a
-# 50-entry window, full coverage needs a 3-round rotation; the
-# discipline is strict LRU so no certificate is ever older than 2
-# rounds, and every tail query is re-verified against the DuckDB
-# oracle at sf0.001 by tests/test_oracle_parity.py on every pytest run
-# (plus the committed sf0.01 self-check artifact, SELFCHECK_r{N}.json).
-# Round 8 window: the 39 remaining round-5 certificate holders lead,
-# then the 4 changed + 1 new query, then the 6 oldest round-6 holders
-# fill to 50 — after this round's driver run every certificate is
-# r6-r8 and the ledger reads 50 r8 + 46 r7 + 34 r6. The remaining 34
-# round-6 holders lead the tail — FIRST in line for round 9.
+# front-to-back and stops at 50, so the registry is kept in
+# least-recently-certified order (the rebuild from _ROUND12_WINDOW
+# below sets the physical order). Every query, inside the window or
+# past it, is re-verified against the DuckDB oracle at sf0.001 by
+# tests/test_oracle_parity.py on every pytest run.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- round-8 window (first 50 = this round's driver certificates).
     # Head: the 39 queries that hold only round-5 certificates —
@@ -2668,8 +2659,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # already spent on the 39 r6 rotations + 2 changed + 9 new): these
     # hold no driver certificate yet — they LEAD the round-10 window
     # head, ahead of the r7 fill (the round-8 verdict's sanctioned
-    # overflow path). Each is sf0.01-verified by the committed
-    # selfcheck and sf0.001-verified on every pytest run.
+    # overflow path). Each is sf0.001-verified on every pytest run.
     "tfidf_top_terms": q_tfidf_top_terms,
     "pmi_collocations": q_pmi_collocations,
     "ngram_novelty": q_ngram_novelty,
@@ -2711,9 +2701,8 @@ _ROUND12_WINDOW = [
     "mixture_weights", "incremental_leakage_split", "bpe_merges",
     "bpe_encode", "bigram_surprisal", "perplexity_buckets",
     "dsir_importance", "funnel_daily", "incremental_span_removed",
-    # then strict LRU: the first 41 of the 47 r9 certificate holders
-    # (reconstructed from CORRECTNESS_r09 minus the 3 reshapes that
-    # re-certified in round 11), in their round-9 certification order
+    # then strict LRU: the first 41 of the 47 queries last certified
+    # together, in that run's certification order
     "event_transitions", "incremental_curate", "behavior_diversity",
     "contamination", "shipping_priority", "churn_labels",
     "time_decay_features", "big_spender_customers", "multimodal_decode",

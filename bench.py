@@ -5,15 +5,14 @@ Runs every ``__spark_entry__.queries()`` entry against
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "total_query_sec", "value": N, "unit": "sec",
-     "queries": {"q1": sec, ...}, "sf": 0.1}
+     "queries": {"q1": sec, ...}, "sf": 0.1, "cores": C}
 
 Each query is forced end-to-end with a JVM-side noop write (consumes
 every partition without serializing rows to Python — measures the
 engine, not the toPandas bridge).
 
-Run-order discipline (round-7 verdict, noise class "run-order cache
-warmth": `pii_scrub` doubled purely by rotating into window position 1
-with unchanged code). Two measures, each attacking a different half:
+Run order. A query's time depends on how warm the session is when it
+runs, so two measures keep that warmth the same from run to run:
 
 * PER-QUERY warm-up — each query runs once untimed immediately before
   its timed repeats (plus the global session warm-up), so parquet
@@ -24,34 +23,27 @@ with unchanged code). Two measures, each attacking a different half:
   session (measured: a head query stays ~1.6x its deep-warm time even
   after 9 consecutive self-runs — no affordable per-query warm-up
   erases the gradient), so what CAN be guaranteed is that each query
-  occupies the SAME session position every round regardless of window
-  rotation — the gradient cancels in every round-over-round ratio.
-  Hash order (not alphabetical) so the position a name gets is
-  arbitrary but permanent; inserting a new query shifts neighbors by
-  at most one slot. Round 8→7 comparisons straddle the order switch —
-  one transition round of position-attributable deltas, then silence.
+  occupies the SAME session position in every run — the gradient
+  cancels in every run-over-run ratio. Hash order (not alphabetical)
+  so the position a name gets is arbitrary but permanent; inserting a
+  new query shifts neighbors by at most one slot.
 
-Round-over-round comparability: every query is timed
-``$SPARK_GRAFT_BENCH_REPEAT`` times (default 3) and the BEST run is
-reported — a loaded sandbox inflates wall clock uniformly, and min-of-n
-strips most of that noise (a round-2 judge cycle was spent proving a
-1.43x "regression" was machine load; a round-6 cycle re-proved it at
-1.10x, hence repeat now defaults to 3). The JSON additionally records
-the repeat count, the 1-minute load average at start/end, and — in the
-detail sidecar only — the load average observed right after EACH query,
-so a mid-run load spike is attributable to the specific timings it
-inflated. Round-over-round deltas should be read through
-``bench_compare.py``, which applies the measured noise threshold
-(ratio > 1.5x AND > 0.25 s) instead of eyeballing totals.
+Every query is timed ``$SPARK_GRAFT_BENCH_REPEAT`` times (default 3)
+and the BEST run is reported — a loaded machine inflates wall clock
+uniformly, and min-of-n strips most of that noise. The JSON
+additionally records the repeat count, the core count, the 1-minute
+load average at start/end, and — in the detail sidecar only — the load
+average observed right after EACH query, so a mid-run load spike is
+attributable to the specific timings it inflated. Two runs compare
+only at the same core count; the paired-run comparison rules that
+gate a performance claim are ``perfbench/``'s (``perfbench/README.md``).
 
-Output-size discipline: the harness that records this run keeps only the
-LAST ~2000 characters of the output, and parses the final line as JSON.
-Round 4's 104-query line was ~2800 chars — it ran clean (rc=0) but the
-truncated line failed to parse and the round lost its bench artifact.
-So the final stdout line is now a bounded-size summary (total + errors +
-the slowest queries that fit a 1600-char budget), and the COMPLETE
-per-query map is (a) written to ``BENCH_DETAIL.json`` beside this file
-and (b) printed in full to stderr for logs.
+Output size: a recorder that keeps only the LAST ~2000 characters of
+the output must still parse the final line as JSON. So the final
+stdout line is a bounded-size summary (total + errors + the slowest
+queries that fit a 1600-char budget), and the COMPLETE per-query map
+is (a) written to ``BENCH_DETAIL_c{cores}.json`` beside this file and
+(b) printed in full to stderr for logs.
 """
 
 from __future__ import annotations
@@ -75,12 +67,10 @@ def _force(df) -> None:
 
 def git_provenance(repo_dir: str | None = None) -> dict:
     """{"head": <commit sha>, "dirty": <bool>} for the working tree —
-    stamped into every recorded artifact so "recorded on final code" is
-    mechanically checkable by the judge (round-7 verdict, What's wrong
-    #1: a selfcheck committed before the round's last code change was
-    indistinguishable from one recorded after it). Shared by bench.py
-    and tests/oracle_check.py. Degrades to {"head": None, "dirty":
-    None} outside a git checkout."""
+    stamped into every recorded artifact so the code a number was
+    measured on is part of the record. Shared by bench.py and
+    tests/oracle_check.py. Degrades to {"head": None, "dirty": None}
+    outside a git checkout."""
     import subprocess
     cwd = repo_dir or os.path.dirname(os.path.abspath(__file__))
     try:
@@ -101,17 +91,23 @@ def git_provenance(repo_dir: str | None = None) -> dict:
 _LINE_BUDGET = 1600
 
 
+def detail_name(cores: int) -> str:
+    """The detail sidecar's file name: one per core count, so a run on
+    one box never overwrites another box's record."""
+    return f"BENCH_DETAIL_c{cores}.json"
+
+
 def summary_line(out: dict, budget: int = _LINE_BUDGET) -> str:
     """Render ``out`` as one JSON line guaranteed <= ``budget`` chars.
 
     Always keeps the scalar fields and every ``err`` entry; then fills
     the remaining budget with per-query timings, slowest first (the
-    slowest queries are the ones a reviewer compares round-over-round).
+    slowest queries are the ones a reader compares run-over-run).
     ``queries_omitted`` counts what didn't fit; the full map lives in
-    BENCH_DETAIL.json.
+    the detail sidecar, :func:`detail_name` of ``out["cores"]``.
     """
     scalars = {k: v for k, v in out.items() if k != "queries"}
-    scalars["detail"] = "BENCH_DETAIL.json"
+    scalars["detail"] = detail_name(out["cores"])
     qs = out.get("queries", {})
     errs = {n: {"err": str(v.get("err", ""))[:100]}
             for n, v in qs.items() if isinstance(v, dict)}
@@ -149,23 +145,15 @@ def settle_gate(load5: float, max_load5: float,
                 strict: bool) -> dict:
     """Annotate (never refuse) a bench run on an unsettled machine.
 
-    History: round 11 lost a judge+builder adjudication cycle to a
-    load-inflated timing, so round 12 added a gate that REFUSED
-    (SystemExit) when the 5-min loadavg exceeded the threshold. That
-    broke the artifact contract harder than noise ever did: the
-    driver runs on a shared box it does not idle first and cannot set
-    env overrides, so round 12 shipped with ZERO driver bench data —
-    both the 32-core and 8-core runs died rc=1 (round-12 verdict,
-    What's wrong #1). A bench that refuses to print the contract line
-    is worse than one that prints an annotated noisy line.
-
-    So: the run ALWAYS proceeds and the artifact carries
-    ``{"load5", "max_load5", "settled": bool}`` — a reviewer sees an
-    unsettled context directly in the JSON, no adjudication needed,
-    and ``bench_compare.py``'s drift normalization + min-of-N already
-    absorb most of the inflation. The old refusal behavior survives
-    ONLY behind ``SPARK_GRAFT_BENCH_STRICT=1``, an opt-in the builder
-    uses locally when it wants a hard guarantee of a settled base."""
+    A shared box is not idled before a run and its runner may not set
+    env overrides, so a gate that refused (SystemExit) on a high 5-min
+    loadavg would leave no record at all — worse than a noisy one. So
+    the run ALWAYS proceeds and the artifact carries ``{"load5",
+    "max_load5", "settled": bool}``: a reader sees an unsettled
+    context directly in the JSON, and min-of-N absorbs most of the
+    inflation. Refusal happens ONLY behind the explicit
+    ``SPARK_GRAFT_BENCH_STRICT=1`` opt-in, for a run that must be
+    recorded on a settled machine."""
     settled = load5 <= max_load5
     rec = {"load5": load5, "max_load5": max_load5, "settled": settled}
     if not settled:
@@ -205,10 +193,10 @@ def main() -> None:
     # queries. The session's JIT gradient is steepest over the first
     # handful of jobs (measured: head queries read 1.5-1.8x their
     # deep-warm time with only a single-query warm-up, ~1.3x after ~10
-    # varied warm jobs — under the compare gate's 1.5x). The queries
-    # timed first are exactly the ones warmed, so the head of the
-    # timing run starts past the steep part of the curve. Failures are
-    # non-fatal — a failing query still gets timed, and judged, below.
+    # varied warm jobs). The queries timed first are exactly the ones
+    # warmed, so the head of the timing run starts past the steep part
+    # of the curve. Failures are non-fatal — a failing query still
+    # gets timed, and recorded, below.
     for name in order[:8]:
         try:
             _force(qs[name](spark, sf_dir))
@@ -216,8 +204,8 @@ def main() -> None:
             print(f"warmup {name} failed: {exc}", file=sys.stderr)
 
     # Per-query fault isolation: one failing query must never zero the
-    # round's artifact — it records an "err" entry, everything else
-    # still gets timed (round 3 lost ALL timings to one OOM).
+    # run's artifact — it records an "err" entry, everything else
+    # still gets timed.
     prerun = os.environ.get("SPARK_GRAFT_BENCH_PRERUN", "1") != "0"
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
@@ -254,6 +242,7 @@ def main() -> None:
         "queries": {**timings,
                     **{n: {"err": e} for n, e in errors.items()}},
         "sf": sf,
+        "cores": spark.sparkContext.defaultParallelism,
         "repeat": repeat,
         "prerun": prerun,
         "loadavg": [load_start, round(os.getloadavg()[0], 2)],
@@ -270,7 +259,8 @@ def main() -> None:
                         separators=(",", ":"))
     try:
         detail_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
+            os.path.dirname(os.path.abspath(__file__)),
+            detail_name(out["cores"]))
         with open(detail_path, "w") as fh:
             fh.write(detail + "\n")
     except OSError as exc:
@@ -278,7 +268,7 @@ def main() -> None:
     print(detail, file=sys.stderr)
 
     # Final stdout line: bounded size so the recorder's tail window can
-    # always parse it (round 4 lost its artifact to an oversized line).
+    # always parse it.
     print(summary_line(out))
 
 

@@ -11,10 +11,17 @@ import sys
 from pathlib import Path
 
 import pytest
+from hypothesis import settings
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from w_userflow_featurestore_spark import get_spark  # noqa: E402
+
+# Property tests draw the same examples on every run: a failure is a
+# reproducible counterexample, never a draw that the next run skips.
+# Each test's own max_examples and deadline still apply.
+settings.register_profile("tier1", derandomize=True, database=None)
+settings.load_profile("tier1")
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"

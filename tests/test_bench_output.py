@@ -1,21 +1,27 @@
-"""Bench artifact size invariant.
+"""bench.py's output contract.
 
-The recorder that runs bench.py keeps only the last ~2000 chars of
-output and parses the FINAL line as JSON. Round 3 lost its artifact to
-an OOM (fixed with per-query fault isolation); round 4 ran clean (rc=0)
-but lost it again because the 104-query JSON line was ~2800 chars and
-the truncated line failed to parse. These tests pin the new contract:
-the final line is always parseable and always fits the window, no
-matter how many queries the suite grows to.
+A recorder of bench.py keeps only the last ~2000 chars of output and
+parses the FINAL line as JSON (a 104-query line of ~2800 chars once
+ran clean and still failed to parse once truncated). These tests pin
+the contract: the final line is always parseable and always fits the
+window, no matter how many queries the suite grows to; the run is
+stamped with the checkout it measured.
 """
 
 from __future__ import annotations
 
 import importlib.util
 import json
+import os
+import subprocess
 import sys
 
-spec = importlib.util.spec_from_file_location("bench", "/root/repo/bench.py")
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+spec = importlib.util.spec_from_file_location(
+    "bench", os.path.join(REPO, "bench.py"))
 bench = importlib.util.module_from_spec(spec)
 sys.modules.setdefault("bench", bench)
 spec.loader.exec_module(bench)
@@ -34,6 +40,7 @@ def _fake_out(n_queries: int, n_errors: int = 0) -> dict:
         "unit": "sec",
         "queries": qs,
         "sf": 0.1,
+        "cores": 4,
         "repeat": 2,
         "loadavg": [11.36, 8.44],
         **({"n_errors": n_errors} if n_errors else {}),
@@ -47,8 +54,8 @@ def test_summary_line_fits_budget_at_200_queries():
     assert parsed["metric"] == "total_query_sec"
     assert parsed["value"] == 123.456
     assert parsed["n_queries"] == 200
-    assert parsed["detail"] == "BENCH_DETAIL.json"
-    # the kept subset is the slowest queries (the round-over-round signal)
+    assert parsed["detail"] == "BENCH_DETAIL_c4.json"
+    # the kept subset is the slowest queries (the run-over-run signal)
     kept = parsed["queries"]
     assert parsed["queries_omitted"] == 200 - len(kept)
     slowest = "some_quite_long_query_name_199"
@@ -81,77 +88,12 @@ def test_summary_line_fits_even_with_pathological_budget_pressure():
     json.loads(line)
 
 
-spec_cmp = importlib.util.spec_from_file_location(
-    "bench_compare", "/root/repo/bench_compare.py")
-bench_compare = importlib.util.module_from_spec(spec_cmp)
-sys.modules.setdefault("bench_compare", bench_compare)
-spec_cmp.loader.exec_module(bench_compare)
-
-
-def test_bench_compare_flags_only_outside_noise_band():
-    base = {"queries": {
-        "steady": 2.0,          # 1.2x drift: ambient noise, not signal
-        "regressed": 1.0,       # 2x and +1s: real
-        "tiny": 0.02,           # 2x but +0.02s: under the floor
-        "faster": 3.0,          # 2x improvement, informational
-        "gone": 1.0,
-    }}
-    cur = {"queries": {
-        "steady": 2.4,
-        "regressed": 2.0,
-        "tiny": 0.04,
-        "faster": 1.4,
-        "fresh": 0.5,
-        "broken": {"err": "boom"},
-    }}
-    out = bench_compare.compare(base, cur)
-    assert set(out["flagged"]) == {"regressed"}
-    assert out["flagged"]["regressed"]["ratio"] == 2.0
-    assert set(out["improved"]) == {"faster"}
-    assert out["new_queries"] == ["fresh"]
-    assert out["removed_queries"] == ["gone"]
-    assert out["errors_cur"] == ["broken"]
-    assert out["n_compared"] == 4
-    # the explicit threshold is part of the artifact contract
-    assert out["noise_ratio"] == 1.5 and out["abs_floor_sec"] == 0.25
-
-
-def test_bench_compare_default_base_prefers_same_boot_base(
-        tmp_path, monkeypatch):
-    """Round-10 verdict #2: while a round is OPEN (its same-boot
-    BENCH_BASE_r{N} exists but its DETAIL doesn't yet), the default
-    comparison base must be that base — not a prior round's detail
-    recorded on a different boot. Once the round CLOSES (DETAIL_r{N}
-    lands), the detail outranks the round-start base: comparing new
-    work against the pre-round snapshot would re-flag every perf
-    change the closed round made. Parsed round numbers, not
-    lexicographic names."""
-    import os
-    for f in ("BENCH_DETAIL_r9.json", "BENCH_DETAIL_r10.json",
-              "BENCH_BASE_r11.json"):
-        (tmp_path / f).write_text("{}")
-    monkeypatch.setattr(bench_compare, "_HERE", str(tmp_path))
-    # round 11 open: base_r11 beats detail_r10
-    assert os.path.basename(
-        bench_compare._default_base()) == "BENCH_BASE_r11.json"
-    # round 11 closes: its detail outranks its round-start base
-    (tmp_path / "BENCH_DETAIL_r11.json").write_text("{}")
-    assert os.path.basename(
-        bench_compare._default_base()) == "BENCH_DETAIL_r11.json"
-    # round 12 opens: the new same-boot base takes over again
-    (tmp_path / "BENCH_BASE_r12.json").write_text("{}")
-    assert os.path.basename(
-        bench_compare._default_base()) == "BENCH_BASE_r12.json"
-
-
 def test_settle_gate_annotates_and_never_refuses_by_default():
-    """Round-12 verdict #1: the refusal path (SystemExit at loadavg >
-    threshold) blanked BOTH of the driver's r12 bench runs (rc=1, no
-    parsed JSON line) because the driver can neither idle the box nor
-    set env overrides. The gate must ALWAYS let the run proceed and
-    stamp ``settled: true/false`` into the artifact; refusal survives
-    only behind the explicit SPARK_GRAFT_BENCH_STRICT=1 opt-in."""
-    import pytest
+    """A refusal at high loadavg would leave a run with no parsed JSON
+    line on a box its runner cannot idle. The gate must ALWAYS let the
+    run proceed and stamp ``settled: true/false`` into the artifact;
+    refusal survives only behind the explicit
+    SPARK_GRAFT_BENCH_STRICT=1 opt-in."""
     rec = bench.settle_gate(0.8, 1.5, strict=False)
     assert rec == {"load5": 0.8, "max_load5": 1.5, "settled": True}
     # loaded machine, default mode: proceeds, annotated unsettled
@@ -165,39 +107,16 @@ def test_settle_gate_annotates_and_never_refuses_by_default():
     assert rec["settled"] is True
 
 
-def test_bench_compare_normalizes_uniform_drift():
-    """Round-11 verdict #3 (second half): ambient machine state moves
-    every query together — the median common-query ratio is that
-    common-mode term and the gate must apply AFTER dividing it out,
-    so a uniformly-1.6x-slower boot doesn't flag 150 untouched
-    queries, while a query that ALSO regressed 2x on top of the drift
-    still flags."""
-    base = {"queries": {f"q{i:02d}": 1.0 for i in range(24)},
-            "loadavg": [0.3, 0.2]}
-    cur = {"queries": {f"q{i:02d}": 1.6 for i in range(24)},
-           "loadavg": [5.0, 6.7],
-           "query_loadavg": {"q00": 6.5}}
-    cur["queries"]["q00"] = 3.4          # 3.4x raw, ~2.1x adjusted
-    out = bench_compare.compare(base, cur)
-    assert out["drift_median_ratio"] == 1.6
-    assert set(out["flagged"]) == {"q00"}
-    assert out["flagged"]["q00"]["ratio"] == 3.4
-    assert out["flagged"]["q00"]["ratio_adj"] == round(3.4 / 1.6, 3)
-    # the flag carries its machine-state context automatically
-    assert out["flagged"]["q00"]["loadavg_after_query"]["cur"] == 6.5
-    assert out["cur_loadavg"] == [5.0, 6.7]
-    # and a uniformly-FASTER run doesn't report 150 phantom wins
-    cur2 = {"queries": {f"q{i:02d}": 0.6 for i in range(24)}}
-    out2 = bench_compare.compare(base, cur2)
-    assert out2["flagged"] == {} and out2["improved"] == {}
+def _git(*args: str) -> str:
+    return subprocess.run(["git", *args], cwd=REPO, capture_output=True,
+                          text=True, check=True).stdout.strip()
 
 
-def test_bench_compare_small_suites_skip_drift_normalization():
-    """Below MIN_DRIFT_QUERIES common queries the median is some
-    query's own change, not the machine — drift pins to 1.0 and the
-    raw gate applies (keeps the 4-query contract test semantics)."""
-    base = {"queries": {"a": 1.0, "b": 1.0, "c": 1.0}}
-    cur = {"queries": {"a": 2.0, "b": 2.0, "c": 2.0}}
-    out = bench_compare.compare(base, cur)
-    assert out["drift_median_ratio"] == 1.0
-    assert set(out["flagged"]) == {"a", "b", "c"}
+def test_git_provenance_reports_this_checkout():
+    try:
+        _git("rev-parse", "HEAD")
+    except Exception:  # noqa: BLE001
+        pytest.skip("not a git checkout")
+    prov = bench.git_provenance()
+    assert prov["head"] == _git("rev-parse", "HEAD")
+    assert prov["dirty"] == bool(_git("status", "--porcelain"))

@@ -31,11 +31,8 @@ ROUND_WINDOW_HEAD = [
     # (b) reshaped in round 11: none
     # (c) new in round 11, never driver-certified
     "incremental_span_removed",
-    # then the first 41 of the 47 r9 certificate holders
-    # (reconstructed from CORRECTNESS_r09 minus the 3 reshaped queries
-    # that re-certified in round 11), in their round-9 certification
-    # order — pre-reconstructed in round 11's bookkeeping comment and
-    # unchanged since
+    # then the first 41 of the 47 queries last certified together,
+    # in that run's certification order
     "event_transitions", "incremental_curate", "behavior_diversity",
     "contamination", "shipping_priority", "churn_labels",
     "time_decay_features", "big_spender_customers", "multimodal_decode",
@@ -78,10 +75,8 @@ ROUND13_LEADS = [
 # least-recently-certified ORDER — the cycle length follows from
 # |queries| / WINDOW.
 #
-# ROUND-13 FILL, pre-reconstructed (the 50 r10 certificate holders =
-# CORRECTNESS_r10 keys minus r11 re-certs — the two sets are disjoint,
-# so all 50 survive — in their r10 certification order; nothing in the
-# round-12 window touches them, so this list is final). The
+# ROUND-13 FILL (the 50 queries last certified together after those
+# 47, in that run's certification order). The
 # ROUND13_LEADS above + the FIRST 50-len(leads)=44 of these fill
 # round 13's window; the remainder (the last 6: user_cohort_setops,
 # customers_no_orders, tokenizer_fertility, split_leakage_audit plus

@@ -215,8 +215,7 @@ def test_ivf_topk_matches_brute_force_within_probed_cells(spark):
 
 
 def test_assign_cells_gate_is_dims_aware_and_forms_agree(spark):
-    """Round-13 ADVICE fix: the encoded-BIGINT fast path in
-    _assign_cells must be gated on dims * (2*SCALE)^2 * n_cells
+    """The encoded-BIGINT fast path in _assign_cells must be gated on dims * (2*SCALE)^2 * n_cells
     fitting int64, not on a fixed n_cells threshold — at dims >= 143
     the old n_cells<=16384 gate let d * n_cells silently overflow and
     mis-assign cells. Pins (a) both forms agree where the fast path is

@@ -156,7 +156,7 @@ def test_vacuum_drops_only_dead_files(spark, table):
 def test_vacuum_retention_spares_staged_uncommitted_files(spark, table):
     """_stage_write lands files in data/ BEFORE the commit publishes
     them; default-retention vacuum must not delete an in-flight
-    writer's staged files (the ADVICE race)."""
+    writer's staged files."""
     table.append(_df(spark, [(1, D1, "a")]))
     staged = table._stage_write(_df(spark, [(2, D2, "b")]))   # no commit yet
     assert table.vacuum() == 0               # fresh files survive default window
@@ -207,7 +207,7 @@ def test_special_char_and_null_partition_values(spark, tmp_path):
     """Hive dir escaping (%xx specials, __HIVE_DEFAULT_PARTITION__ for
     null) must round-trip through overwrite_partitions victim matching
     AND merge's _metadata.file_path URI decode — str(value)-vs-raw-dir
-    comparison misses both (the ADVICE finding)."""
+    comparison misses both."""
     ddl = "k long, p string, v string"
     t = LogTable.create(spark, str(tmp_path / "sp"), ["p"])
     t.append(spark.createDataFrame(
@@ -416,16 +416,15 @@ def test_compact_single_replace_commit_triggers_full_replan(spark, table, tmp_pa
 def test_rewrite_changes_content_atomically_and_pins_old_readers(
         spark, table):
     """rewrite() = whole-table content replace in ONE commit: the new
-    row set is whatever df holds (here: a group-sum roll-up of
+    row set is whatever build returns (here: a group-sum roll-up of
     additive deltas — fewer rows, same summed view), the commit is a
     'replace' like compact's, and a reader pinned to the pre-rewrite
     snapshot still sees the original deltas."""
     table.append(_df(spark, [(1, D1, "a"), (2, D1, "b")]))
     table.append(_df(spark, [(1, D1, "c"), (3, D2, "d")]))
     pre = table.latest_snapshot_id()
-    rolled = (table.read(pre).groupBy("k", "datetime")
-              .agg(F.count(F.lit(1)).cast("string").alias("v")))
-    table.rewrite(rolled, pre)
+    table.rewrite(lambda prev: prev.groupBy("k", "datetime").agg(
+        F.count(F.lit(1)).cast("string").alias("v")))
     assert table.snapshots()[-1].operation == "replace"
     assert rows(table.read(), "k", "v") == [
         (1, "2"), (2, "1"), (3, "1")]            # rows CHANGED (rolled up)
@@ -436,21 +435,22 @@ def test_rewrite_changes_content_atomically_and_pins_old_readers(
 def test_rewrite_validates_the_snapshot_its_input_was_read_from(
         spark, table):
     """A rival commit landing between the read a rewrite derives from
-    and the rewrite itself must fail the rewrite — validating against
-    the table as it is at rewrite time would commit the stale frame
-    and silently drop the rival's rows."""
+    and its commit must fail the rewrite — validating against the
+    table as it is at commit time would commit the stale frame and
+    silently drop the rival's rows."""
     from w_userflow_featurestore_spark.sources import ConcurrentCommitError
     table.append(_df(spark, [(1, D1, "a")]))
-    base = table.latest_snapshot_id()
-    df = table.read(base)
-    table.append(_df(spark, [(2, D2, "b")]))        # the rival
+
+    def rival_commits(prev):
+        table.append(_df(spark, [(2, D2, "b")]))    # the rival
+        return prev
+
     with pytest.raises(ConcurrentCommitError):
-        table.rewrite(df, base)
+        table.rewrite(rival_commits)
     assert [s.snapshot_id for s in table.snapshots()] == [1, 2]
     assert rows(table.read(), "k") == [(1,), (2,)]
     # re-derived from the current snapshot, the rewrite commits
-    base = table.latest_snapshot_id()
-    assert table.rewrite(table.read(base), base) == 3
+    assert table.rewrite(lambda prev: prev) == 3
     assert rows(table.read(), "k") == [(1,), (2,)]
 
 
@@ -1004,9 +1004,9 @@ def test_partition_prune_matches_spark_dir_formatting(spark, tmp_path):
 
 def test_partition_prune_temporal_decimal_and_special_doubles(
         spark, tmp_path):
-    """Round-11 ADVICE #1: _part_matches lacked the temporal
-    normalization the stats path got. A tz-aware literal formatted as
-    '...+00:00' via isoformat and never matched the naive dir string;
+    """_part_matches applies the temporal normalization the stats
+    path does. Without it, a tz-aware literal formatted as
+    '...+00:00' via isoformat never matched the naive dir string;
     a midnight datetime vs a DATE-partitioned dir (or a date literal
     vs a TIMESTAMP dir) failed the exact string match where Spark's
     own coercion matches; Spark trims trailing zeros in the dir's
@@ -1137,8 +1137,8 @@ def test_snapshots_tolerates_concurrent_expire_deletions(
 
 def test_snapshots_relist_closes_the_torn_expire_interleaving(
         spark, table, monkeypatch):
-    """Round-11 ADVICE #3: skipping a FileNotFoundError is not enough
-    when the reader already CONSUMED a pre-expire entry before the
+    """Skipping a FileNotFoundError is not enough when the reader
+    already CONSUMED a pre-expire entry before the
     expire deleted it — the returned list would mix that stale entry
     (parent chain gone) with the post-expire checkpoint, and
     whole-list consumers (snapshots_df, the dead-fork scan) see a
@@ -1240,9 +1240,8 @@ import decimal as _dec
 import math as _math
 import random as _random
 
-# Round 13: default trimmed 120 -> 32 so the driver's full-suite run
-# fits its wall-clock budget (VERIFY_r12 truncated at ~87%); the
-# env knob restores the deep sweep for local soak runs.
+# 32 trials by default keep the full Tier-1 run inside its wall-clock
+# budget; the env knob raises it (e.g. 120) for a local deep sweep.
 _PRUNE_TRIALS = int(os.environ.get("SPARK_GRAFT_PRUNE_TRIALS", "32"))
 _TRIALS_PER_TABLE = 8
 _UTC = dt.timezone.utc
@@ -1293,10 +1292,9 @@ def _value_pool(typ: str, partition: bool) -> list:
 
 
 def _twist_literal(rng: "_random.Random", v):
-    """Apply one of the cross-type coercions Spark accepts (and the
-    round-11 ADVICE flagged) so filters arrive in a DIFFERENT shape
-    than the column: date<->datetime, naive<->aware, int<->double,
-    decimal->float/int."""
+    """Apply one of the cross-type coercions Spark accepts so filters
+    arrive in a DIFFERENT shape than the column: date<->datetime,
+    naive<->aware, int<->double, decimal->float/int."""
     if isinstance(v, bool):
         return v
     if isinstance(v, dt.datetime):
@@ -1923,23 +1921,26 @@ def test_commit_fallback_write_failure_retracts_the_published_name(
 
 
 def test_rewrite_cas_exactly_one_winner_under_real_threads(spark,
-                                                           tmp_path):
-    """Eight threads race a rewrite commit from the same base through
-    one barrier: exactly one wins, every loser gets
-    ConcurrentCommitError, and the log holds the winner's commit."""
+                                                           table):
+    """Eight threads race a rewrite from the same base through one
+    barrier (every thread has read snapshot 1 before any stages):
+    exactly one wins, every loser gets ConcurrentCommitError, and the
+    table holds the winner's content."""
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
     from w_userflow_featurestore_spark.sources import ConcurrentCommitError
 
-    t = _bare_table(spark, tmp_path)
-    t._commit("append", ["base"], [])
-    barrier = threading.Barrier(8)
+    table.append(_df(spark, [(1, D1, "base")]))
+    barrier = threading.Barrier(8, timeout=120)
 
     def worker(i):
-        barrier.wait()
+        def build(prev):
+            barrier.wait()
+            return prev.withColumn("v", F.lit(f"w{i}"))
+
         try:
-            t._commit("replace", [f"w{i}"], ["base"], expected_base=1)
+            table.rewrite(build)
             return i
         except ConcurrentCommitError:
             return None
@@ -1948,8 +1949,8 @@ def test_rewrite_cas_exactly_one_winner_under_real_threads(spark,
         outcomes = list(ex.map(worker, range(8)))
     wins = [i for i in outcomes if i is not None]
     assert len(wins) == 1
-    assert [s.snapshot_id for s in t.snapshots()] == [1, 2]
-    assert t.files() == [f"w{wins[0]}"]
+    assert [s.snapshot_id for s in table.snapshots()] == [1, 2]
+    assert rows(table.read(), "v") == [(f"w{wins[0]}",)]
 
 
 def test_each_operation_reads_the_log_once(spark, tmp_path):
@@ -1985,13 +1986,15 @@ def test_each_operation_reads_the_log_once(spark, tmp_path):
         "overwrite_partitions": lambda: t.overwrite_partitions(
             _df(spark, [(5, D1, "e")])),
         "expire_snapshots": lambda: t.expire_snapshots(keep_last=2),
+        "rewrite": lambda: t.rewrite(lambda prev: prev),
         "vacuum": lambda: t.vacuum(retention_seconds=0),
     }
     got = {name: log_scans(op) for name, op in ops.items()}
     # a write stages from one read and commits after a second; the
     # planner reads the head, then the increment up to it
     twice = ("append(txn=)", "merge", "merge(txn=)", "delete_where",
-             "update_where", "overwrite_partitions", "plan_read")
+             "update_where", "overwrite_partitions", "rewrite",
+             "plan_read")
     assert got == {name: 2 if name in twice else 1 for name in ops}
     assert plans[0].mode == "incremental"
     assert rows(t.read(), "k", "v") == [(2, "B"), (4, "D"), (5, "e")]

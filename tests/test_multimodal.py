@@ -132,7 +132,7 @@ def test_fake_decode_batch_matches_row_form():
         kinds.append(("image", "audio", "video")[i % 3])
         payloads.append(bytes(rng.randrange(256)
                               for _ in range(rng.randrange(6, 64))))
-    # round-13 ADVICE fix pins: short payloads the ROW form accepts —
+    # short payloads the ROW form accepts —
     # a 4-byte image (needs bytes 0-3 only) as the LAST row used to
     # IndexError in the batch form (unmasked byte(4)/byte(5) reads
     # past the flattened buffer), and mid-buffer short rows read their

@@ -404,8 +404,8 @@ def test_q8_q9_q10_shape_plan_pins(spark):
     # and part-type semi-prune both push to scans; ONE fact aggregation
     # computes numerator + denominator as conditional sums. The
     # customer-derived join is deliberately UNHINTED (SF-proportional
-    # build side — a forced broadcast ships millions of rows at SF~100,
-    # round-8 ADVICE), so the STATIC plan may carry one sort-merge
+    # build side — a forced broadcast ships millions of rows at
+    # SF~100), so the STATIC plan may carry one sort-merge
     # join; the pin is that AQE converts it at this SF, i.e. the FINAL
     # plan is SMJ-free with all four dim-side joins broadcast
     df8 = _q(spark, "market_share")

@@ -7,10 +7,9 @@ agreement bug in the DataFrame implementation shows up as a property
 violation rather than an oracle coincidence.
 """
 
-# Round 13: max_examples trimmed ~2x so the driver's full-suite run
-# fits its wall-clock budget (VERIFY_r12 truncated at ~87% with zero
-# failures). Deep sweeps: raise them locally or via a hypothesis
-# profile; seeds/strategies are unchanged.
+# max_examples are sized so the full Tier-1 run fits its wall-clock
+# budget, and Tier-1 draws derandomized examples (tests/conftest.py).
+# A deeper sweep raises max_examples locally; strategies are unchanged.
 
 
 from __future__ import annotations
@@ -865,7 +864,7 @@ def test_merge_component_ledger_disjointness_assert(spark):
                                assert_disjoint=True)
     # default trusts the caller (documented): no eager job — the
     # overlapping doc 2 rides the union twice, so the 3-distinct-doc
-    # grown corpus emits 4 rows (the shape violation ADVICE describes)
+    # grown corpus emits 4 rows (the shape violation the check guards)
     out = merge_component_ledger(ledger, bad, empty_pairs)
     assert out.count() == 4
     assert out.select("doc_id").distinct().count() == 3

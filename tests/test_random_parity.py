@@ -11,10 +11,9 @@ each one — the oracle is an independent implementation, so agreement
 on arbitrary data pins the SEMANTICS, not the fixture.
 """
 
-# Round 13: max_examples trimmed ~2x so the driver's full-suite run
-# fits its wall-clock budget (VERIFY_r12 truncated at ~87% with zero
-# failures). Deep sweeps: raise them locally or via a hypothesis
-# profile; seeds/strategies are unchanged.
+# max_examples are sized so the full Tier-1 run fits its wall-clock
+# budget, and Tier-1 draws derandomized examples (tests/conftest.py).
+# A deeper sweep raises max_examples locally; strategies are unchanged.
 
 
 from __future__ import annotations

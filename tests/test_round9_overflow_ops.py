@@ -85,7 +85,7 @@ def test_pmi_min_count_suppresses_rare_pairs(spark):
 
 def test_pmi_overflow_envelope_raises_instead_of_dropping(spark,
                                                           monkeypatch):
-    # round-9 ADVICE: past the DECIMAL(38,0) envelope, non-ANSI decimal
+    # past the DECIMAL(38,0) envelope, non-ANSI decimal
     # overflow would silently NULL (drop) the hottest pairs. The guard
     # must fail LOUDLY instead. Shrink the envelope so a tiny corpus
     # trips it (the expr reads _PMI_T_MAX at call time).
@@ -104,7 +104,7 @@ def test_pmi_overflow_envelope_raises_instead_of_dropping(spark,
 
 
 def test_pmi_empty_bigram_corpus_returns_empty_not_overflow(spark):
-    # round-10 ADVICE follow-through: the guard's NULL arm (a SUM that
+    # the guard's NULL arm (a SUM that
     # itself overflowed DECIMAL(38,0)) must not conflate with the
     # OTHER way _t goes NULL — a sum over ZERO bigram rows. Single-word
     # docs produce no bigrams; the broadcast build still evaluates the

@@ -647,7 +647,7 @@ def test_streaming_novelty_monitor_matches_batch_and_replays_once(
 
 def test_streaming_novelty_rollup_bounds_ledger_and_keeps_parity(
         spark, tmp_path):
-    """Round-9 ADVICE: the delta ledger must not grow unboundedly.
+    """The delta ledger must not grow unboundedly.
     With compact_every=1 every batch ends in a roll-up rewrite, so the
     PHYSICAL delta-table row count stays at |distinct shingles| (one
     row per sh, already summed) instead of one row per (batch, sh) —
@@ -783,7 +783,7 @@ def test_streaming_novelty_monitor_recovers_zero_commit_ledger(
 
 def test_streaming_drift_rollup_bounds_ledger_and_keeps_parity(
         spark, tmp_path):
-    """Same round-9-ADVICE class as the novelty ledger: the drift
+    """Same bound as the novelty ledger's: the drift
     delta table must not grow one file + |dim| rows per batch forever.
     With compact_every=1 every batch ends in a roll-up rewrite, so
     physical rows stay at |days| x |categories| (already summed) while

@@ -281,20 +281,21 @@ def _read_ledger(spark: SparkSession, ledger_dir: str) -> DataFrame:
 
 def _commit_ledger(spark: SparkSession, ledger_dir: str,
                    build) -> tuple[int, str, int]:
-    """Commit the next ledger version: ``build(prev)`` derives it from
-    the pinned current version (``None`` on an empty table) and ONE
-    ``rewrite`` commit replaces that version, validated against the
-    snapshot ``prev`` was read from. A rival commit after the read
-    raises ``ConcurrentCommitError`` instead of silently dropping the
-    rival's batch; a crash before the commit leaves the previous
-    version live. Returns (snapshot id, mode, rows committed)."""
-    lt = LogTable.create(spark, ledger_dir)
-    base = lt.latest_snapshot_id()
-    prev = None if base is None else lt.read(base)
-    obs = Observation()
-    merged = build(prev).observe(obs, F.count(F.lit(1)).alias("rows"))
-    version = lt.rewrite(merged, base)
-    return (version, "initial" if base is None else "incremental",
+    """Commit the next ledger version: ONE ``LogTable.rewrite`` calls
+    ``build(prev)`` with the current version (``None`` on an empty
+    table) and replaces it, validated against the snapshot ``prev``
+    was read from. A rival commit after the read raises
+    ``ConcurrentCommitError`` instead of silently dropping the rival's
+    batch; a crash before the commit leaves the previous version live.
+    Returns (snapshot id, mode, rows committed)."""
+    obs, initial = Observation(), []
+
+    def observed(prev):
+        initial.append(prev is None)
+        return build(prev).observe(obs, F.count(F.lit(1)).alias("rows"))
+
+    version = LogTable.create(spark, ledger_dir).rewrite(observed)
+    return (version, "initial" if initial[0] else "incremental",
             int(obs.get["rows"]))
 
 

@@ -1343,25 +1343,27 @@ class LogTable:
         adds = self._stage_write(df)
         return self._commit("replace", adds, live, expected_base=base)
 
-    def rewrite(self, df: DataFrame, base: int | None,
-                target_files: int = 1) -> int:
+    def rewrite(self, build) -> int:
         """Atomic whole-table CONTENT rewrite: replace the live file
-        set of snapshot ``base`` with ``df`` as ONE ``replace`` commit.
-        Where :meth:`compact` preserves rows and only merges files,
-        rewrite changes the row set — a delta ledger's roll-up (the
-        deltas replaced by their sums) or a state table's next version.
+        set with ``build(rows)`` as ONE ``replace`` commit. Where
+        :meth:`compact` preserves rows and only merges files, rewrite
+        changes the row set — a delta ledger's roll-up (the deltas
+        replaced by their sums) or a state table's next version.
 
-        ``base`` is the snapshot ``df`` was derived from (``None`` for
-        an empty table): derive from ``read(base)`` and pass the same
-        id. The commit validates it, so a commit that landed after that
-        read — even before ``rewrite`` was called — fails this rewrite
+        ``build`` gets the live rows of the snapshot this call read
+        (``None`` on an empty table) and returns the new content. The
+        commit validates that snapshot, so a commit that lands after
+        the read — even one made inside ``build`` — fails this rewrite
         with :class:`ConcurrentCommitError` instead of silently losing
         its rows. Readers pinned to older snapshots are untouched;
         incremental readers crossing the replace commit replan a full
         read, exactly as for :meth:`compact`."""
-        live = self.files(base)
-        adds = self._stage_write(df.repartition(target_files))
-        return self._commit("replace", adds, live, expected_base=base)
+        st = self._replay()
+        prev = (None if st.snapshot_id is None
+                else self._read_files(st.files, snaps=st.snaps))
+        adds = self._stage_write(build(prev).repartition(1))
+        return self._commit("replace", adds, st.files,
+                            expected_base=st.snapshot_id)
 
     def rollback(self, snapshot_id: int) -> int:
         """Reset the table to an older snapshot by committing a new

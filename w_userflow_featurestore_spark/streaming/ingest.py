@@ -79,13 +79,6 @@ def _start(writer, trigger_seconds: int | None, available_now: bool):
     return writer.start()
 
 
-def _roll_up(table, sums) -> None:
-    """Replace a delta table's rows by ``sums`` of them in one replace
-    commit, validated against the snapshot the sum was read from."""
-    base = table.latest_snapshot_id()
-    table.rewrite(sums(table.read(base)), base)
-
-
 def bronze_ingest(events: DataFrame, path: str, checkpoint: str,
                   trigger_seconds: int | None = 30,
                   available_now: bool = False,
@@ -307,7 +300,7 @@ def streaming_drift_monitor(events: DataFrame, table_path: str,
             t = LogTable.create(batch.sparkSession, table_path, [])
             t.append(inc, txn=f"drift:{checkpoint}:{batch_id}")
             if compact_every and (batch_id + 1) % compact_every == 0:
-                _roll_up(t, _drift_sums)
+                t.rewrite(_drift_sums)
 
     writer = (events.writeStream
               .foreachBatch(_sink)
@@ -541,7 +534,7 @@ def streaming_novelty_monitor(docs: DataFrame, scores_path: str,
         lt.append(shingle_ledger(batch, n, text_col, id_col),
                   txn=f"nov-ledger:{checkpoint}:{batch_id}")
         if compact_every and (batch_id + 1) % compact_every == 0:
-            _roll_up(lt, _novelty_sums)
+            lt.rewrite(_novelty_sums)
 
     writer = (docs.writeStream
               .foreachBatch(_sink)
