@@ -20,7 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.conf import session_cache
+from w_userflow_featurestore_spark.conf import SESSION_SQL_CONF, session_cache
 from w_userflow_featurestore_spark.functions import (
     epoch_ms, exact_avg, exact_sum, fround,
 )
@@ -42,40 +42,20 @@ NOW = "2024-02-01 00:00:00"
 
 SF001 = "/root/testdata/sf0.001"
 
-# Runtime-settable SQL confs every query depends on, applied defensively
-# because the DRIVER owns the SparkSession here (conf.get_spark defaults
-# only cover sessions we build ourselves):
-# - nanosAsLong: fixture parquet stores TIMESTAMP(NANOS), which the
-#   vectorized reader otherwise rejects outright
-# - UTC: oracle epoch math must agree with DuckDB's naive-timestamp reads
-# - ansi off: classic NULL-on-bad-cast semantics (all divisions are
-#   guarded anyway, but keep both engines' semantics aligned)
-_REQUIRED_CONF = {
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.ansi.enabled": "false",
-    "spark.sql.adaptive.enabled": "true",
-    # Join-strategy performance confs (guide §3.1/§9, measured round 12:
-    # shuffled-hash beats sort-merge 1.2-1.7x on this engine's equi-join
-    # shapes at every tested SF). Safe at scale: the planner only picks
-    # SHJ when its build-side size conditions hold, and the AQE
-    # threshold converts SMJ->SHJ from ACTUAL post-shuffle sizes.
-    "spark.sql.join.preferSortMergeJoin": "false",
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
-}
-
 #: session_cache flag for sessions already configured — _ensure_conf runs
-#: inside EVERY queries() callable, and 8 conf.set py4j roundtrips per
+#: inside EVERY queries() callable, and its conf.set py4j roundtrips per
 #: construction add up over a 156-query bench (the conf is
 #: session-sticky; one pass suffices).
 _CONF_APPLIED = "entry.conf_applied"
 
 
 def _ensure_conf(spark: SparkSession) -> SparkSession:
+    """Apply ``conf.SESSION_SQL_CONF`` to a session the driver hands in
+    (``conf.get_spark``'s other defaults only cover sessions built here)."""
     memo = session_cache(spark)
     if memo.get(_CONF_APPLIED):
         return spark
-    for k, v in _REQUIRED_CONF.items():
+    for k, v in SESSION_SQL_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:   # noqa: BLE001 — a locked conf: keep going
@@ -266,7 +246,7 @@ def q_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7-style cross-nation shipping volume: revenue by
     (supplier nation, customer nation, ship year) for one nation pair.
 
-    Scale shape (round-6 rewrite): BOTH dims are semi-pruned to the two
+    Scale shape: BOTH dims are semi-pruned to the two
     relevant nations BEFORE touching the fact — the nation filter folds
     into the broadcast supplier build, so lineitem shrinks ~2/25
     *before* the orders shuffle, and customer shrinks ~2/25 before its
@@ -460,9 +440,9 @@ _SMALL_QTY_BRANDS = ["Brand#13", "Brand#19", "Brand#22",
 def q_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17-shape, PER BRAND: revenue locked in small-quantity
     orders across a 5-brand watchlist, one row per brand plus a
-    ROLLUP total row (brand = 'ALL') — round-9 verdict #3 widened the
-    single-row certificate to cross-brand contrast while the total
-    row still pins the old aggregate's lineage. The correlated scalar
+    ROLLUP total row (brand = 'ALL'): the per-brand rows give
+    cross-brand contrast while the total row pins the whole-watchlist
+    aggregate. The correlated scalar
     subquery (qty < 0.2 x the part's own avg qty) stays decorrelated
     into one per-part aggregate joined back, and the brand IN-list
     still broadcast-prunes the fact FIRST (each part has exactly one
@@ -547,9 +527,9 @@ def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-prunes lineitem via the broadcast part build, and the share is
     a conditional sum over ONE aggregation — numerator flagged by
     supplier nation, never a second fact pass or a per-market pass.
-    Three markets (round-7 verdict #6): the former single-market form
-    certified on 2 rows, a shape class where a group-collapsing GROUP
-    BY bug could still hash-match; (market, year) yields 6 rows at
+    Three markets: a single market yields 2 rows, a shape class where
+    a group-collapsing GROUP BY bug could still hash-match; (market,
+    year) yields 6 rows at
     every fixture SF, and the cross-market contrast (NATION_2 sits in
     ASIA, so its AMERICA/EUROPE share is structurally 0 bp) is itself
     pinned by the oracle. Share emitted as exact integer basis points
@@ -699,9 +679,8 @@ def q_discount_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6-shape, PER DISCOUNT BAND: potential revenue from
     lineitems in one ship year under a quantity cap, grouped by the
     whole-percent discount band with a ROLLUP grand-total row
-    (band_pct = -1) — the name always promised bands; round-9 verdict
-    #3 widened the single-total certificate to one row per band plus
-    the total the old query pinned. Still the pure scan-pushdown
+    (band_pct = -1): one row per band plus the grand total. The pure
+    scan-pushdown
     query: date + quantity predicates reach the parquet scan
     (pinned), zero joins, one (rollup) aggregation whose output is
     bounded by the 11-value discount domain. The band computes in
@@ -833,10 +812,9 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_corpus_language_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicted-language rollup with exact-avg quality, sliced by the
-    LABELED language (round-9 verdict #3: the 2-row certificate widens
-    to |labeled x predicted| cells with cross-group contrast — and the
-    slice is the labeled-vs-predicted dashboard a curation run
-    actually reads)."""
+    LABELED language: |labeled x predicted| cells with cross-group
+    contrast — the labeled-vs-predicted dashboard a curation run
+    actually reads."""
     return TX.corpus_language_stats(read_table(spark, sf_dir, "documents"),
                                     extra_dims=["lang"])
 
@@ -1087,8 +1065,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                       columns=["doc_id", "text", "lang"])
     # target stated as a predicate over the SAME frame: the target
     # feature counts derive from the shared (doc, f) partial aggregate
-    # — one gram explode pass over the corpus instead of two (round 12,
-    # guide §2.3/§2.4)
+    # — one gram explode pass over the corpus instead of two
     return SMP.dsir_importance(docs, None,
                                target_pred=F.col("lang") == "en")
 
@@ -1247,9 +1224,7 @@ def q_span_removed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     of substring dedup is the corpus with matched spans EXCISED, not a
     span report): every document reassembled from the complement of
     its ``duplicate_spans`` islands, same k=6 / min_count=2 as the
-    span query so the two certify the same pipeline end to end
-    (round-9 verdict #5 — the one LLM-pipeline gap a real curation
-    run would hit)."""
+    span query so the two certify the same pipeline end to end."""
     return TX.remove_duplicate_spans(
         read_table(spark, sf_dir, "documents"), k=6, min_count=2)
 
@@ -1423,12 +1398,12 @@ def q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlapping [0.4n, 0.6n], checked in exact integer arithmetic.
     A 0.1 rank band is far looser than GK's 1/accuracy guarantee, so
     any merge order passes while a degraded sketch flips the value
-    hash red. (The round-6 form compared the sketch value against the
-    INTERPOLATED exact [p40, p60] value band — for a 2-element group
+    hash red. (A check of the sketch value against the INTERPOLATED
+    exact [p40, p60] value band would be wrong: for a 2-element group
     that band excludes every actual data value, so a perfectly healthy
-    sketch failed; found by the randomized-parity harness, round 7.)"""
-    # ONE datetime-keyed exchange shared by both aggregate branches
-    # (round 12, guide §2.4): repartition establishes the clustering
+    sketch would fail.)"""
+    # ONE datetime-keyed exchange shared by both aggregate branches:
+    # repartition establishes the clustering
     # both groupBys need, so the sessionize subtree — the dominant
     # cost — plans into a single exchange both branches read (AQE
     # ReusedExchange), instead of running once per branch. The
@@ -1488,9 +1463,9 @@ def q_hll_union_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the portable gate per event type: exact distinct users, n_days
     merged, and whether the UNIONED estimate lands within 5% of exact
     — a broken merge path flips the hash red. Per-event-type, not one
-    corpus row (round-7 verdict #6): the former 1-row form's
-    certificate couldn't distinguish a group-collapsing bug from the
-    real rollup — 5 independently merged rollup chains can."""
+    corpus row: a 1-row result cannot distinguish a group-collapsing
+    bug from the real rollup — 5 independently merged rollup chains
+    can."""
     e = (_events(spark, sf_dir)
          .withColumn("datetime", F.to_date("ts")))
     daily = (e.groupBy("event_type", "datetime")
@@ -1687,10 +1662,10 @@ def q_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti join (NOT EXISTS): dormant customers — no order since
     1999-01-01 — the membership-ledger exclusion idiom. The date bound
     rides ``ts_filter`` so it prunes the orders scan (PushedFilters on
-    the raw nano-epoch), and it exists for certification honesty: the
-    round-6 variant ("never ordered at all") was TRUE of zero sf0.01
-    customers, so its green driver row only ever proved empty == empty
-    (round-6 verdict, What's wrong #1). This horizon yields rows at
+    the raw nano-epoch), and it keeps the result non-empty: "never
+    ordered at all" is TRUE of zero sf0.01 customers, so that form's
+    driver row could only ever prove empty == empty. This horizon
+    yields rows at
     every fixture SF (6 / 29 / 305 at sf0.001/0.01/0.1)."""
     return REL.anti_join_keys(
         read_table(spark, sf_dir, "customer",
@@ -1725,8 +1700,8 @@ def q_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses. The stop-fingerprint cap (max_doc_freq=64, mirrored in the
     oracle SQL) bounds per-bucket join work to 64^2 pairs: without it a
     corpus-hot boilerplate print lands in thousands of docs and the
-    inverted-index self-join goes quadratic in corpus size (the sf0.1
-    OOM of round 3)."""
+    inverted-index self-join goes quadratic in corpus size (and runs
+    out of memory at sf0.1)."""
     return TX.fingerprint_pairs(read_table(spark, sf_dir, "documents"),
                                 min_shared=2, max_doc_freq=64)
 
@@ -1830,9 +1805,9 @@ def q_user_cohort_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     users — UNION / INTERSECT / EXCEPT with SQL set-distinct semantics.
     The excluded cohort is errors since 2024-01-24 (the fixtures' final
     week), not all-time errors: at sf0.01 every (purchase∪signup)∩click
-    user also has SOME error event, so the round-6 all-time EXCEPT
-    emptied the result and its driver certificate proved only
-    empty == empty (round-6 verdict, What's wrong #1). The date bound
+    user also has SOME error event, so an all-time EXCEPT would empty
+    the result and its driver row could prove only empty == empty.
+    The date bound
     rides ``ts_filter`` so it prunes the error leg's scan; non-empty at
     every fixture SF (2 / 9 / 64 rows)."""
     e = _events(spark, sf_dir)
@@ -2487,10 +2462,6 @@ def q_quality_survivor_dedup(spark: SparkSession,
 # past it, is re-verified against the DuckDB oracle at sf0.001 by
 # tests/test_oracle_parity.py on every pytest run.
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- round-8 window (first 50 = this round's driver certificates).
-    # Head: the 39 queries that hold only round-5 certificates —
-    # re-certifying them keeps every certificate r6-r8 (the 3-round
-    # steady-state cycle; round-7 verdict, Next round #1) ---
     "ab_test": q_ab_test,
     "behavior_trigrams": q_behavior_trigrams,
     "curate_corpus": q_curate_corpus,
@@ -2532,24 +2503,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "training_set": q_training_set,
     "bm25_topk": q_bm25_topk,
     "hybrid_search": q_hybrid_search,
-    # --- implementation changed this round (re-certify). The module
-    # rule is applied at FUNCTION granularity this round — round 7's
-    # whole-module re-certification followed a cross-cutting
-    # sampling.py refactor (shared bucketing helpers); round 8's
-    # sampling.py edits are local to two functions, and only 11 window
-    # slots exist after the 39 r5 holders, so spending 12 on untouched
-    # hash-threshold projections would age an r5 certificate past the
-    # 3-round cycle. Changed: hll_union_rollup (per-event-type rollup
-    # chains, round-7 verdict #6), market_share (three markets, #6),
-    # mixture_weights (zero-token raise_error guard in its plan),
-    # incremental_leakage_split (backing function factored into
-    # merge_component_ledger). Docstring-only edits
-    # (leakage_safe_split's schema note) do NOT spend slots ---
     "hll_union_rollup": q_hll_union_rollup,
     "market_share": q_market_share,
     "mixture_weights": q_mixture_weights,
     "incremental_leakage_split": q_incremental_leakage_split,
-    # --- new this round ---
     "bpe_merges": q_bpe_merges,
     "bpe_encode": q_bpe_encode,
     "bpe_encode_persisted": q_bpe_encode_persisted,
@@ -2562,12 +2519,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "quality_filter_verdict": q_quality_filter_verdict,
     "quality_rule_report": q_quality_rule_report,
     "ccnet_curate": q_ccnet_curate,
-    # --- oldest round-6 certificate holder (fill to 50; five fill
-    # slots went to new queries — the displaced r6 holders keep
-    # certificates valid through round 9 and lead the tail) ---
     "funnel_daily": q_funnel_daily,
-    # --- certificate tail. Remaining round-6 holders first — they
-    # lead the round-9 window ---
     "event_transitions": q_event_transitions,
     "incremental_curate": q_incremental_curate,
     "behavior_diversity": q_behavior_diversity,
@@ -2608,7 +2560,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "text_profile": q_text_profile,
     "corpus_language_stats": q_corpus_language_stats,
     "repetition_profile": q_repetition_profile,
-    # --- round-7 certificates (freshest tail) ---
     "pii_scrub": q_pii_scrub,
     "fingerprint_pairs": q_fingerprint_pairs,
     "cardinality_sketch": q_cardinality_sketch,
@@ -2655,11 +2606,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "revenue_by_nation": q_revenue_by_nation,
     "pack_sequences": q_pack_sequences,
     "frequent_tokens": q_frequent_tokens,
-    # --- round-9 window OVERFLOW (added after the 50-slot window was
-    # already spent on the 39 r6 rotations + 2 changed + 9 new): these
-    # hold no driver certificate yet — they LEAD the round-10 window
-    # head, ahead of the r7 fill (the round-8 verdict's sanctioned
-    # overflow path). Each is sf0.001-verified on every pytest run.
     "tfidf_top_terms": q_tfidf_top_terms,
     "pmi_collocations": q_pmi_collocations,
     "ngram_novelty": q_ngram_novelty,
@@ -2670,39 +2616,26 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lang_id_confusion": q_lang_id_confusion,
     "ivf_recall_sweep": q_ivf_recall_sweep,
     "incremental_novelty": q_incremental_novelty,
-    # --- round-10 OVERFLOW (all 50 window slots went to the 10 r9
-    # overflow leads + 40 r7 rotations): new in round 10, flagged as a
-    # round-11 window lead in tests/test_cert_window.py alongside the
-    # three round-10 reshapes (discount_band_revenue,
-    # small_quantity_revenue, corpus_language_stats) ---
     "span_removed_corpus": q_span_removed_corpus,
-    # --- round-11 OVERFLOW (all 50 window slots went to the 10
-    # ROUND11_LEADS + 40 r8 rotations): new in round 11 (the one
-    # sanctioned addition, round-10 verdict #5 — the incremental twin
-    # of the span REWRITE), flagged as a round-12 window lead in
-    # tests/test_cert_window.py ---
     "incremental_span_removed": q_incremental_span_removed,
 }
 
-# --- round-12 certification window (driver certifies the FIRST 50) ---
-# Rotation discipline: displaced/reshaped/never-certified leads first
-# (the sanctioned overflow path), then strict least-recently-certified.
-# At 156 registered queries the 50-slot window needs a FOUR-round cycle
-# (3 x 50 = 150 < 156 — round-9 verdict, What's wrong #2). The dict
-# literal above keeps its historical narrative order; this list IS the
-# round-12 bookkeeping record (tests/test_cert_window.py pins the
-# composition), and the rebuild below makes it the driver's physical
-# certification order.
+# Certification window: the driver certifies the FIRST 50 entries of
+# QUERIES. At 156 registered queries a 50-slot window needs a four-pass
+# cycle (3 x 50 = 150 < 156). Displaced, reshaped and never-certified
+# queries lead; the rest follow in least-recently-certified order.
+# tests/test_cert_window.py pins this list's composition, and the
+# rebuild below makes it the driver's physical certification order
+# (the dict literal above only registers the queries).
 _ROUND12_WINDOW = [
-    # the 9 ROUND12_LEADS the round-11 verdict pins (Next round #1),
-    # in exactly this order: 8 r8 holders displaced by the 4-round
-    # cycle (in r8 certification order), then the never-certified
-    # round-11 addition. Nothing was reshaped in round 11.
+    # the 9 leads, in exactly this order: 8 queries displaced by the
+    # four-pass cycle (in their last certification order), then the
+    # never-certified incremental_span_removed
     "mixture_weights", "incremental_leakage_split", "bpe_merges",
     "bpe_encode", "bigram_surprisal", "perplexity_buckets",
     "dsir_importance", "funnel_daily", "incremental_span_removed",
-    # then strict LRU: the first 41 of the 47 queries last certified
-    # together, in that run's certification order
+    # then least-recently-certified: the first 41 of the 47 queries
+    # last certified together, in that run's certification order
     "event_transitions", "incremental_curate", "behavior_diversity",
     "contamination", "shipping_priority", "churn_labels",
     "time_decay_features", "big_spender_customers", "multimodal_decode",
@@ -2717,11 +2650,9 @@ _ROUND12_WINDOW = [
     "simhash_near_pairs", "text_profile", "repetition_profile",
     "market_share", "quality_filter_verdict", "bpe_encode_persisted",
     "dsir_select", "dsir_select_tokens",
-    # the 6 r9 holders that don't fit (quality_rule_report,
-    # ccnet_curate, hard_negatives, knn_label_agreement,
-    # dedup_rate_report, tokenizer_drift) lead the ROUND-13 window,
-    # ahead of the r10 holders — the 4-round cycle forced by
-    # 156 queries / 50 slots
+    # the 6 that do not fit (quality_rule_report, ccnet_curate,
+    # hard_negatives, knn_label_agreement, dedup_rate_report,
+    # tokenizer_drift) lead the next window
 ]
 
 QUERIES = {name: QUERIES[name] for name in
@@ -6084,7 +6015,7 @@ def _lower_rounds(sql: str) -> str:
     return "".join(out)
 
 
-# --- round-9 overflow oracles ----------------------------------------------
+# --- text-statistics, data-selection and index-tuning oracles -------------
 
 # TF-IDF keywords: whole-bit IDF = floor(log2(N/df)) via binary-string
 # length (token_surprisal's trick on the document-frequency axis)

@@ -128,8 +128,7 @@ def _vecs(spark):
 
 def test_brute_force_topk_ranks_planted_neighbor(spark):
     emb = _vecs(spark)
-    out = SIM.brute_force_topk(emb, emb.where(F.col("vec_id") == 1), k=3,
-                               dims=4)
+    out = SIM.brute_force_topk(emb, emb.where(F.col("vec_id") == 1), k=3)
     got = [(r["n_id"], r["rank"]) for r in
            sorted(out.collect(), key=lambda r: r["rank"])]
     assert got[0] == (2, 1)                   # nearest = planted neighbor
@@ -185,19 +184,42 @@ def test_ivf_fit_is_deterministic_and_model_sized(spark):
 def test_ivf_cell_partition_and_probe_superset(spark):
     from w_userflow_featurestore_spark.sources import read_table
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = SIM.ivf_fit_centroids(emb, n_centroids=8)
-    qemb = emb.select("vec_id", SIM.quantize("embedding").alias("qv"))
-    cells = (qemb.select(SIM.ivf_cell("qv", cents).alias("cell"))
+    model = SIM._fit(emb, 8, "vec_id", "embedding")
+    n = SIM._quantized(emb, "vec_id", "embedding", "vec_id", "qv")
+    cells = (SIM._assign_cells(n, "vec_id", "qv", model)
                 .groupBy("cell").count().collect())
     assert {r["cell"] for r in cells} <= set(range(8))   # valid cell ids
     assert len(cells) > 1                                # corpus actually splits
-    # nprobe=1's probe list is a prefix of nprobe=2's (nearest-first order)
-    p = (qemb.where(F.col("vec_id") < 3)
-            .select("vec_id",
-                    SIM.ivf_probe_cells("qv", cents, 2).alias("pc"))
-            .collect())
-    for r in p:
-        assert len(r["pc"]) == 2 and r["pc"][0] != r["pc"][1]
+    # nprobe=1's probe list is the rank-1 prefix of nprobe=2's
+    q = SIM._quantized(emb.where(F.col("vec_id") < 3), "vec_id",
+                       "embedding", "q_id", "q_vec", spread=False)
+    p2 = {}
+    for r in SIM._probe(q, model.cells, 2).collect():
+        p2.setdefault(r["q_id"], {})[r["probe_rank"]] = r["cell"]
+    p1 = {r["q_id"]: r["cell"]
+          for r in SIM._probe(q, model.cells, 1).collect()}
+    assert set(p2) == set(p1) == {0, 1, 2}
+    for qid, ranked in p2.items():
+        assert sorted(ranked) == [1, 2] and ranked[1] != ranked[2]
+        assert p1[qid] == ranked[1]
+
+
+def test_quantizer_reads_cell_count_and_dims_off_the_data(spark):
+    """The centroid model's cell count and vector length come from the
+    fitted centroids, not from a caller-supplied dims: a 4-dim corpus
+    of 4 vectors asked for 8 cells yields a 4-cell, 4-dim model, and
+    every vector (each one a centroid) lands in its own cell."""
+    emb = _vecs(spark)
+    model = SIM._fit(emb, 8, "vec_id", "embedding")
+    assert (model.n_cells, model.dims) == (4, 4)
+    assert SIM._fit(emb, 2, "vec_id", "embedding")[1:] == (2, 4)
+    n = SIM._quantized(emb, "vec_id", "embedding", "vec_id", "qv")
+    cells = {r["vec_id"]: r["cell"] for r in
+             SIM._assign_cells(n, "vec_id", "qv", model).collect()}
+    assert sorted(cells.values()) == [0, 1, 2, 3]
+    out = SIM.cluster_balanced_sample(emb, per_cluster=1,
+                                      n_centroids=8).collect()
+    assert {r["vec_id"]: r["cell"] for r in out} == cells
 
 
 def test_ivf_topk_matches_brute_force_within_probed_cells(spark):
@@ -223,21 +245,19 @@ def test_assign_cells_gate_is_dims_aware_and_forms_agree(spark):
     plan has a min_by SortAggregate, detectable via 'sort' in the
     plan) and still assigns correctly."""
     from w_userflow_featurestore_spark.operators.similarity import (
-        SCALE, _assign_cells, _centroids_df)
+        SCALE, _assign_cells)
     from w_userflow_featurestore_spark.sources import read_table
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = SIM.ivf_fit_centroids(emb, n_centroids=8)
-    cdf = _centroids_df(spark, cents)
-    n = SIM._quantized(emb, "vec_id", "embedding", "_id", "_vec", 64)
-    fast = _assign_cells(n.select("_id", "_vec"), "_id", "_vec", cdf,
-                         8, dims=64)
+    model = SIM._fit(emb, 8, "vec_id", "embedding")
+    assert (model.n_cells, model.dims) == (8, 64)
+    n = SIM._quantized(emb, "vec_id", "embedding", "_id", "_vec")
+    fast = _assign_cells(n, "_id", "_vec", model)
     # dims=64: 64 * (2e6)^2 * 9 = 2.3e15 << 2^63 — fast path legal
     assert 64 * (2 * SCALE) ** 2 * 9 < 2 ** 63
     # an overflow-risky dims (1024 dims x 2^21 cells would wrap):
-    # force the struct form by passing a huge n_cells-equivalent gate
+    # force the struct form through a model whose dims is oversized
     big_dims = 2 ** 63 // ((2 * SCALE) ** 2 * 9) + 1
-    safe = _assign_cells(n.select("_id", "_vec"), "_id", "_vec", cdf,
-                         8, dims=big_dims)
+    safe = _assign_cells(n, "_id", "_vec", model._replace(dims=big_dims))
     # the risky dims actually selected the min_by struct form
     plan_fast = fast._jdf.queryExecution().optimizedPlan().toString()
     plan_safe = safe._jdf.queryExecution().optimizedPlan().toString()
@@ -535,6 +555,30 @@ def test_ivf_index_search_equals_inline_ivf(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
+def test_ivf_index_build_stores_the_assign_cells_cells(spark, tmp_path):
+    """The persisted index assigns through the one _assign_cells path:
+    its stored cells equal _assign_cells' cells for the same corpus and
+    model, and the index-rows plan is the encoded-min HashAggregate,
+    never a min_by."""
+    from w_userflow_featurestore_spark.operators.similarity import (
+        _assign_cells, _fit, _index_rows, _quantized, ivf_index_build,
+    )
+    from w_userflow_featurestore_spark.sources import LogTable, read_table
+    emb = read_table(spark, SF0001, "embeddings")
+    path = str(tmp_path / "ivf")
+    ivf_index_build(emb, path, n_centroids=4)
+    stored = {r["vec_id"]: r["cell"] for r in
+              LogTable(spark, path + "/vectors").read().collect()}
+    model = _fit(emb, 4, "vec_id", "embedding")
+    n = _quantized(emb, "vec_id", "embedding", "vec_id", "qv")
+    want = {r["vec_id"]: r["cell"] for r in
+            _assign_cells(n, "vec_id", "qv", model).collect()}
+    assert stored == want and len(stored) == emb.count()
+    plan = (_index_rows(emb, model, "vec_id", "embedding")
+            ._jdf.queryExecution().optimizedPlan().toString())
+    assert "min_by" not in plan
+
+
 def test_ivf_index_probe_reads_only_probed_cells(spark, tmp_path):
     """The scan must touch ONLY the probed cells' partition files —
     IO proportional to nprobe/n_centroids, enforced at the manifest."""
@@ -696,7 +740,7 @@ def test_bpe_registry_versions_are_pinned_and_latest_resolves(spark, tmp_path):
 
 
 def test_bpe_registry_manifest_version_probe(spark, tmp_path, monkeypatch):
-    """Round 13: the latest-version probe inside bpe_save/bpe_load
+    """The latest-version probe inside bpe_save/bpe_load
     reads max(tokenizer_version) from MANIFEST stats (driver-side, no
     Spark job) instead of a full table read+agg+collect. Pins (a) the
     probe equals the read-based max after multiple publishes, (b) with
@@ -716,12 +760,15 @@ def test_bpe_registry_manifest_version_probe(spark, tmp_path, monkeypatch):
     t = LogTable(spark, path)
     read_max = t.read().agg(
         F.max("tokenizer_version").alias("v")).collect()[0]["v"]
-    assert _registry_max_version(t) == int(read_max) == 2
-    # unusable stats -> None -> callers take the read fallback
-    monkeypatch.setattr(LogTable, "files_stats", lambda self, *a: {})
-    assert _registry_max_version(t) is None
-    v3, _ = bpe_save(spark, path, m3[:2])
-    assert v3 == 3                      # fallback still counts correctly
+    assert _registry_max_version(t.files_stats()) == int(read_max) == 2
+    # unusable stats -> None -> callers take the read fallback: a
+    # commit made without footer stats leaves a statless live file
+    monkeypatch.setattr(LogTable, "_collect_stats", lambda self, rel: {})
+    v3, _ = bpe_save(spark, path, m3[:1])
+    assert v3 == 3
+    assert _registry_max_version(t.files_stats()) is None
+    v4, _ = bpe_save(spark, path, m3[:2])
+    assert v4 == 4                      # fallback still counts correctly
     monkeypatch.undo()
     assert bpe_load(spark, path) == [tuple(m) for m in m3[:2]]
 
@@ -752,6 +799,36 @@ def test_bpe_registry_rollback_and_idempotent_replay(spark, tmp_path):
     assert bpe_load(spark, path) == [tuple(m) for m in m2]
     with pytest.raises(ValueError, match="not found"):
         bpe_load(spark, path, version=2)
+
+
+def test_bpe_save_reads_the_log_once_per_replayed_publish(spark, tmp_path):
+    """One log replay serves bpe_save's empty check, txn lookup and
+    version stats: a new publish reads the log 3 times (that replay,
+    then append's txn check and commit); a replayed publish reads it
+    once and runs no Spark job — its version comes off the replayed
+    commit's manifest stats."""
+    from tests.conftest import log_scans
+    from w_userflow_featurestore_spark.operators.text import bpe_save
+    path = str(tmp_path / "tokenizer")
+    merges = [(1, "a", "b", "ab", 3)]
+    got = {}
+    assert log_scans(lambda: got.setdefault(
+        "first", bpe_save(spark, path, merges, txn="p-1"))) == 3
+    assert log_scans(lambda: got.setdefault(
+        "new", bpe_save(spark, path, merges, txn="p-2"))) == 3
+    sc = spark.sparkContext
+    group = "bpe-save-replay"
+    sc.setJobGroup(group, group)
+    try:
+        n = log_scans(lambda: got.setdefault(
+            "replay", bpe_save(spark, path, merges, txn="p-2")))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert n == 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert got["first"][0] == 1
+    assert got["replay"] == got["new"] and got["new"][0] == 2
 
 
 def test_bpe_registry_empty_merge_list_is_a_real_version(spark, tmp_path):
@@ -788,7 +865,7 @@ def _labeled_vecs(spark):
 def test_hard_negative_mining_ranks_the_near_miss_first(spark):
     emb = _labeled_vecs(spark)
     out = SIM.hard_negative_mining(emb, emb.where(F.col("vec_id") == 1),
-                                   k=2, dims=4).collect()
+                                   k=2).collect()
     got = [(r["n_id"], r["neg_rank"]) for r in
            sorted(out, key=lambda r: r["neg_rank"])]
     assert got[0] == (5, 1)          # the planted near-miss leads
@@ -800,7 +877,7 @@ def test_hard_negative_mining_ranks_the_near_miss_first(spark):
 def test_knn_label_agreement_flags_the_mislabeled_vector(spark):
     emb = _labeled_vecs(spark)
     out = {r["q_id"]: r for r in
-           SIM.knn_label_agreement(emb, emb, k=2, dims=4).collect()}
+           SIM.knn_label_agreement(emb, emb, k=2).collect()}
     # vec 5 sits inside the label-0 cluster wearing label 1: zero of its
     # 2 nearest neighbors agree — the mislabeled-example signal
     assert out[5]["n_agree"] == 0 and out[5]["agreement_bp"] == 0

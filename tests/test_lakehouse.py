@@ -1974,6 +1974,7 @@ def test_each_operation_reads_the_log_once(spark, tmp_path):
         "read_increment": lambda: t.read_increment(s1),
         "files": t.files,
         "files_stats": t.files_stats,
+        "state": t.state,
         "plan_read": lambda: plans.append(planner.plan_read(spark)),
         "append(txn=)": lambda: t.append(_df(spark, [(4, D2, "d")]),
                                          txn="b-1"),

@@ -109,14 +109,9 @@ def test_semantic_dedup_cell_occupancy_balanced(spark):
     emb = read_table(spark, SF001, "embeddings")
     n_total = emb.count()
     k = 16
-    cents = SIM.ivf_fit_centroids(emb, k)
-    cdf = SIM._centroids_df(spark, cents)
-    q = SIM._quantized(emb, "vec_id", "embedding", "_sid", "_svec", 64)
-    assign = (q.crossJoin(F.broadcast(cdf))
-               .select("_sid", "cell",
-                       SIM.l2_q("_svec", "cv").alias("d"))
-               .groupBy("_sid")
-               .agg(F.min_by("cell", F.struct("d", "cell")).alias("cell")))
+    model = SIM._fit(emb, k, "vec_id", "embedding")
+    q = SIM._quantized(emb, "vec_id", "embedding", "_sid", "_svec")
+    assign = SIM._assign_cells(q, "_sid", "_svec", model)
     occupancy = _max_bucket(assign, "cell")
     # random-vector fixture -> near-uniform Voronoi cells; even a loose
     # 4x-mean bound catches a collapsed quantizer

@@ -547,6 +547,35 @@ def test_read_table_schema_memo_follows_a_rewritten_table(spark, tmp_path):
     assert rows(got, "bal") == [(1.5,), (None,)]
 
 
+def test_driver_applies_exactly_the_session_sql_confs():
+    """conf.SESSION_SQL_CONF is the one owner of the runtime SQL confs:
+    get_spark's defaults include it unchanged, and the driver's
+    _ensure_conf sets exactly those entries, once per session — never
+    a sizing default such as spark.sql.shuffle.partitions."""
+    import __spark_entry__ as entry_mod
+    from w_userflow_featurestore_spark.conf import (
+        _DEFAULTS, SESSION_SQL_CONF,
+    )
+
+    class _Conf:
+        def __init__(self):
+            self.sets = []
+
+        def set(self, k, v):
+            self.sets.append((k, v))
+
+    class _Session:
+        def __init__(self):
+            self.conf = _Conf()
+
+    s = _Session()
+    entry_mod._ensure_conf(s)
+    entry_mod._ensure_conf(s)
+    assert dict(s.conf.sets) == SESSION_SQL_CONF
+    assert len(s.conf.sets) == len(SESSION_SQL_CONF)
+    assert {k: _DEFAULTS[k] for k in SESSION_SQL_CONF} == SESSION_SQL_CONF
+
+
 def test_session_cache_entries_die_with_their_session(spark):
     """The read_table / fan_out / _ensure_conf memos live in one cache
     keyed weakly on the session object: a new session starts empty, and

@@ -54,9 +54,7 @@ HELPERS = [
     (DD.shingles, ()), (TX.token_count_ws, ()), (TX.token_count_bpe, ()),
     (TX.lang_id, ()), (TX.quality_score, ()), (TX.doc_fingerprint, ()),
     (SIM.quantize, ()), (SIM.dot_q, ("b",)), (SIM.norm_q, ()),
-    (SIM.cosine_q, ("b",)), (SIM.bucket_q, ()),
-    (SIM.hyperplane_bucket, ()), (SIM.l2_q, ("b",)),
-    (SIM.ivf_cell, ([[0, 0]],)), (SIM.ivf_probe_cells, ([[0, 0]], 1)),
+    (SIM.bucket_q, ()), (SIM.l2_q, ("b",)),
     (SMP.hash_bucket, ()), (EXP.ab_assign, ()),
 ]
 

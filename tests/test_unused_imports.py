@@ -1,9 +1,14 @@
-"""Lint: no library module imports a name it never uses.
+"""Lint: no library module imports a name it never uses, and no
+library function takes a parameter it never reads.
 
-A small AST pass instead of a linter dependency. A name counts as used
-when it appears as an identifier anywhere in the module or is listed in
-``__all__``; package ``__init__.py`` files are skipped because their
-imports are re-exports, and a line marked ``noqa: F401`` is exempt.
+Small AST passes instead of a linter dependency. An import counts as
+used when its name appears as an identifier anywhere in the module or
+is listed in ``__all__``; package ``__init__.py`` files are skipped
+because their imports are re-exports, and a line marked ``noqa: F401``
+is exempt. A parameter counts as read when its name appears as an
+identifier in the function body (nested functions included); ``self``,
+``cls`` and names starting with ``_`` (a signature fixed by a caller,
+such as a ``foreachBatch`` batch id) are exempt.
 """
 
 from __future__ import annotations
@@ -42,6 +47,24 @@ def unused_imports(source: str) -> list[tuple[int, str]]:
     return sorted((line, n) for line, n in imported if n not in used)
 
 
+def unused_params(source: str) -> list[tuple[int, str, str]]:
+    """(line, function, parameter) for every parameter its function
+    never reads."""
+    out = []
+    for fn in ast.walk(ast.parse(source)):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = fn.args
+        params = [*a.posonlyargs, *a.args, *a.kwonlyargs,
+                  *[p for p in (a.vararg, a.kwarg) if p is not None]]
+        read = {n.id for stmt in fn.body for n in ast.walk(stmt)
+                if isinstance(n, ast.Name)}
+        out += [(fn.lineno, fn.name, p.arg) for p in params
+                if p.arg not in read and p.arg not in ("self", "cls")
+                and not p.arg.startswith("_")]
+    return sorted(out)
+
+
 def test_checker_flags_only_unused_names():
     src = ("from __future__ import annotations\n"
            "import os\nimport json\n"
@@ -52,7 +75,28 @@ def test_checker_flags_only_unused_names():
     assert unused_imports(src) == [(2, "os"), (8, "i")]
 
 
+def test_param_checker_flags_only_unread_parameters():
+    src = ("class C:\n"
+           "    def m(self, a, _b, *args, k=1, **kw):\n"
+           "        return a, kw\n"
+           "def f(x, y, _z):\n"
+           "    def g():\n"
+           "        return x\n"
+           "    return g\n")
+    assert unused_params(src) == [(2, "m", "args"), (2, "m", "k"),
+                                  (4, "f", "y")]
+
+
 @pytest.mark.parametrize("path", MODULES,
                          ids=[str(p.relative_to(PKG)) for p in MODULES])
 def test_library_module_has_no_unused_imports(path):
     assert unused_imports(path.read_text()) == []
+
+
+ALL_MODULES = sorted(PKG.rglob("*.py"))
+
+
+@pytest.mark.parametrize("path", ALL_MODULES,
+                         ids=[str(p.relative_to(PKG)) for p in ALL_MODULES])
+def test_library_functions_read_every_parameter(path):
+    assert unused_params(path.read_text()) == []

@@ -13,21 +13,25 @@ import weakref
 
 from pyspark.sql import SparkSession
 
-# Defaults sized for the local[N] test harness; on a real cluster the same
-# code runs with whatever --conf the submitter provides (getOrCreate reuses).
-_DEFAULTS = {
-    # AQE: runtime re-planning, partition coalescing, skew-join splitting.
+#: Runtime-settable SQL confs every query depends on. ``get_spark``
+#: applies them with the other defaults; the driver applies exactly
+#: these (and no sizing default) to a session it does not build.
+SESSION_SQL_CONF = {
+    # The fixture parquet stores TIMESTAMP(NANOS) which Spark's vectorized
+    # reader rejects; read as nanosecond longs and convert in the reader
+    # (sources/parquet.py normalizes to TimestampType at micro precision,
+    # matching what DuckDB's reader does).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Deterministic timestamp semantics for oracle parity: DuckDB reads the
+    # parquet TIMESTAMP as naive; interpreting it as UTC makes epoch math agree.
+    "spark.sql.session.timeZone": "UTC",
+    # Classic (non-ANSI) SQL semantics: NULL on bad casts etc. All divisions
+    # in this library are explicitly guarded, so either mode is correct, but
+    # classic matches the reference's Spark 3.5 behavior exactly.
+    "spark.sql.ansi.enabled": "false",
+    # AQE: runtime re-planning from actual shuffle sizes.
     # (reference enables the same flags: silver_dag.py:177-179, gold_daily_dag.py:29-31)
     "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Runtime Bloom-filter join pruning: on a selective shuffle join,
-    # Spark builds a Bloom filter from the small side and pre-filters
-    # the big side BEFORE its shuffle — a major IO/shuffle saver at
-    # 100 TB. Injection conditions (scan-size and selectivity
-    # estimates) only materialize at real scale; at fixture scale the
-    # rule declines and the conf is inert, so enabling is pure upside.
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     # Join strategy: let the planner choose shuffled-hash over
     # sort-merge when its build-side size conditions hold (1.2-1.7x on
     # this engine's equi-join shapes — the sort dominates small-to-mid
@@ -38,21 +42,25 @@ _DEFAULTS = {
     # either check fails, so the spill-graceful path is never lost).
     "spark.sql.join.preferSortMergeJoin": "false",
     "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
+}
+
+# Defaults sized for the local[N] test harness; on a real cluster the same
+# code runs with whatever --conf the submitter provides (getOrCreate reuses).
+_DEFAULTS = {
+    **SESSION_SQL_CONF,
+    # AQE partition coalescing and skew-join splitting.
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Runtime Bloom-filter join pruning: on a selective shuffle join,
+    # Spark builds a Bloom filter from the small side and pre-filters
+    # the big side BEFORE its shuffle — a major IO/shuffle saver at
+    # 100 TB. Injection conditions (scan-size and selectivity
+    # estimates) only materialize at real scale; at fixture scale the
+    # rule declines and the conf is inert, so enabling is pure upside.
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
     # Arrow for the few pandas-UDF extension ops (multimodal / ANN refine).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Deterministic timestamp semantics for oracle parity: DuckDB reads the
-    # parquet TIMESTAMP as naive; interpreting it as UTC makes epoch math agree.
-    "spark.sql.session.timeZone": "UTC",
     "spark.sql.shuffle.partitions": "32",
-    # The fixture parquet stores TIMESTAMP(NANOS) which Spark's vectorized
-    # reader rejects; read as nanosecond longs and convert in the reader
-    # (sources/parquet.py normalizes to TimestampType at micro precision,
-    # matching what DuckDB's reader does).
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    # Classic (non-ANSI) SQL semantics: NULL on bad casts etc. All divisions
-    # in this library are explicitly guarded, so either mode is correct, but
-    # classic matches the reference's Spark 3.5 behavior exactly.
-    "spark.sql.ansi.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     # Driver heap for self-built local[N] sessions. Local mode runs every
     # executor thread inside the driver JVM, so the default ~1g heap is the

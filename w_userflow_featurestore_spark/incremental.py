@@ -152,7 +152,7 @@ class LakehousePlanner:
         self.table = table          # a sources.lakehouse.LogTable
         self.ledger_path = ledger_path
 
-    def plan_read(self, spark: SparkSession) -> ReadPlan:
+    def plan_read(self, _spark: SparkSession) -> ReadPlan:
         latest = self.table.latest_snapshot_id()
         commit = partial(_write_ledger, self.ledger_path, "snapshot_id",
                          latest)

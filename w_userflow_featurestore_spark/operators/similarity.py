@@ -29,10 +29,19 @@ Scale design:
   exact-cosine verify (AQE broadcasts that join at small scale; at
   100 TB it is one id-keyed shuffle of the corpus instead of ``tables``
   of them). Neither path ever collects data to the driver — the IVF
-  "fit" collects only the O(k x dims) centroid model.
+  "fit" collects only the O(k x dims) centroid model, and the persisted
+  index reads that model from its centroid table.
+- one code path per step, shared by the brute-force, LSH, IVF and
+  label-aware operators: one centroid model (``_Quantizer``: the
+  broadcast (cell, cv) frame with its cell count and dims, read off the
+  centroids), one cell assignment (``_assign_cells``), one nprobe probe
+  (``_probe``), one exact cosine (``_cosine``) and one (cosine desc,
+  n_id) top-k (``_topk``).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -59,24 +68,15 @@ def plane_signs(plane: int, dims: int) -> list[int]:
 # expressions) and return a Column parsed by one ``F.expr``.
 
 
-def _quantize_sql(vec: str, scale: int = SCALE) -> str:
-    return (f"transform({vec}, x -> CAST(floor((CAST(x AS DOUBLE)"
-            f" * {scale}) + 0.5D) AS BIGINT))")
-
-
 def _dot_sql(a: str, b: str) -> str:
     return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
             f" CAST(0 AS BIGINT), (acc, v) -> acc + v)")
 
 
-def _l2_sql(a: str, b: str) -> str:
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-            f" CAST(0 AS BIGINT), (acc, v) -> acc + v)")
-
-
 def quantize(vec: str, scale: int = SCALE) -> Column:
     """float array -> exact 1e6-scaled BIGINT array (round half up)."""
-    return F.expr(_quantize_sql(vec, scale))
+    return F.expr(f"transform({vec}, x -> CAST(floor((CAST(x AS DOUBLE)"
+                  f" * {scale}) + 0.5D) AS BIGINT))")
 
 
 def dot_q(a: str, b: str) -> Column:
@@ -90,23 +90,21 @@ def norm_q(a: str) -> Column:
     return F.expr(f"sqrt({_dot_sql(a, a)})")
 
 
-def cosine_q(a: str, b: str) -> Column:
-    """Cosine from quantized vectors: exact int dot / double norms."""
-    return F.expr(f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)})"
-                  f" * sqrt({_dot_sql(b, b)}))")
+def _cosine(a_vec: str, a_norm: str, b_vec: str, b_norm: str) -> Column:
+    """The exact-cosine verify: integer dot of two quantized vectors over
+    their precomputed norms, rounded to 4 places (``fround``)."""
+    return fround(dot_q(a_vec, b_vec) / (F.col(a_norm) * F.col(b_norm)), 4)
 
 
-def _bucket_sql(qv: str, planes: int, dims: int, table: int) -> str:
-    terms = ["CAST(0 AS BIGINT)"]
-    for p in range(planes):
-        signs = ",".join(f"{s}L"
-                         for s in plane_signs(table * planes + p, dims))
-        proj = (f"aggregate(zip_with({qv}, array({signs}),"
-                f" (x, s) -> x * s), CAST(0 AS BIGINT),"
-                f" (acc, v) -> acc + v)")
-        terms.append(f"(CASE WHEN ({proj}) > 0 THEN CAST({2 ** p} AS"
-                     f" BIGINT) ELSE CAST(0 AS BIGINT) END)")
-    return " + ".join(terms)
+def _topk(scored: DataFrame, k: int, rank: str = "rank") -> DataFrame:
+    """Each query's ``k`` best neighbors of a (q_id, n_id, cosine, ...)
+    frame: ``rank`` 1..k by (cosine desc, n_id asc). The window
+    partitions by query id, so its shuffle is |Q|-way; the neighbor-id
+    tie-break keeps the output deterministic."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
+                                           F.col("n_id").asc())
+    return (scored.withColumn(rank, F.row_number().over(w).cast("long"))
+                  .where(F.col(rank) <= k))
 
 
 def bucket_q(qv: str, planes: int = 8, dims: int = 64,
@@ -117,33 +115,63 @@ def bucket_q(qv: str, planes: int = 8, dims: int = 64,
     independent hash tables can be built (OR-amplification — lsh_topk).
     The sign vectors are inlined literal arrays; each projection is one
     zip_with/aggregate over the shared quantized array."""
-    return F.expr(_bucket_sql(qv, planes, dims, table))
-
-
-def hyperplane_bucket(vec: str, planes: int = 8,
-                      dims: int = 64, table: int = 0) -> Column:
-    """bucket_q over a raw float vector (quantizes first)."""
-    return bucket_q(_quantize_sql(vec), planes, dims, table)
+    terms = ["CAST(0 AS BIGINT)"]
+    for p in range(planes):
+        signs = ",".join(f"{s}L"
+                         for s in plane_signs(table * planes + p, dims))
+        proj = (f"aggregate(zip_with({qv}, array({signs}),"
+                f" (x, s) -> x * s), CAST(0 AS BIGINT),"
+                f" (acc, v) -> acc + v)")
+        terms.append(f"(CASE WHEN ({proj}) > 0 THEN CAST({2 ** p} AS"
+                     f" BIGINT) ELSE CAST(0 AS BIGINT) END)")
+    return F.expr(" + ".join(terms))
 
 
 def _quantized(df: DataFrame, id_col: str, vec_col: str, out_id: str,
-               out_vec: str, dims: int, with_norm: str | None = None,
-               spread: bool = True) -> DataFrame:
-    """(id, quantized vec [, norm]) projection; fans out single-split
-    inputs so the per-row quantize + norm arithmetic parallelizes."""
-    base = df.select(F.col(id_col), F.col(vec_col))
+               out_vec: str, with_norm: str | None = None,
+               spread: bool = True,
+               carry: dict[str, str] | None = None) -> DataFrame:
+    """(id, quantized vec [, carried columns] [, norm]) projection; fans
+    out single-split inputs so the per-row quantize + norm arithmetic
+    parallelizes. ``carry`` maps extra input columns (a label) to their
+    output names: they ride the same row, never a separate corpus-grain
+    join back by id."""
+    carry = carry or {}
+    base = df.select(F.col(id_col), F.col(vec_col),
+                     *[F.col(c) for c in carry])
     if spread:
         base = fan_out(base)
     out = base.select(F.col(id_col).alias(out_id),
-                      quantize(f"`{vec_col}`").alias(out_vec))
+                      quantize(f"`{vec_col}`").alias(out_vec),
+                      *[F.col(c).alias(a) for c, a in carry.items()])
     if with_norm:
         out = out.withColumn(with_norm, norm_q(f"`{out_vec}`"))
     return out
 
 
+def _exact_scored(corpus: DataFrame, queries: DataFrame, id_col: str,
+                  vec_col: str, label_col: str | None = None) -> DataFrame:
+    """broadcast(queries) x corpus: (q_id, n_id [, q_label, n_label],
+    cosine) for every pair of distinct ids. Norms are computed once per
+    vector on each side; the per-pair work is one codegen dot product.
+    ``label_col`` rides both sides' scan projections."""
+    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec",
+                   with_norm="q_norm", spread=False,
+                   carry={label_col: "q_label"} if label_col else None)
+    c = _quantized(corpus, id_col, vec_col, "n_id", "n_vec",
+                   with_norm="n_norm",
+                   carry={label_col: "n_label"} if label_col else None)
+    labels = ["q_label", "n_label"] if label_col else []
+    return (c.crossJoin(F.broadcast(q))
+             .where(F.col("n_id") != F.col("q_id"))
+             .select("q_id", "n_id", *labels,
+                     _cosine("q_vec", "q_norm", "n_vec", "n_norm")
+                      .alias("cosine")))
+
+
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     dims: int = 64) -> DataFrame:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
     """Exact cosine top-k per query vector.
 
     broadcast(queries) x corpus -> windowed rank. Norms are computed once
@@ -152,26 +180,14 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     |Q|-way — small by construction. Tie-break on neighbor id keeps
     output deterministic.
     """
-    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec", dims,
-                   with_norm="q_norm", spread=False)
-    c = _quantized(corpus, id_col, vec_col, "n_id", "n_vec", dims,
-                   with_norm="n_norm")
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
-    scored = (c.crossJoin(F.broadcast(q))
-               .where(F.col("n_id") != F.col("q_id"))
-               .select("q_id", "n_id", fround(cos, 4).alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k))
+    return _topk(_exact_scored(corpus, queries, id_col, vec_col), k)
 
 
 def lsh_bucket_assignments(corpus: DataFrame, id_col: str = "vec_id",
                            vec_col: str = "embedding", planes: int = 8,
                            dims: int = 64) -> DataFrame:
     """Corpus -> (id, bucket): the index-build pass (one scan, no shuffle)."""
-    return (_quantized(corpus, id_col, vec_col, id_col, "_qv", dims)
+    return (_quantized(corpus, id_col, vec_col, id_col, "_qv")
             .select(F.col(id_col),
                     bucket_q("_qv", planes, dims).alias("bucket")))
 
@@ -180,7 +196,7 @@ def _banded_ids(df: DataFrame, nid: str, id_col: str, vec_col: str,
                 planes: int, dims: int, tables: int) -> DataFrame:
     """(id, tbl, bucket) rows — the ID-ONLY candidate-generation side
     (vectors never enter the band join or the pair-dedup shuffle)."""
-    q = _quantized(df, id_col, vec_col, nid, "_qv", dims)
+    q = _quantized(df, id_col, vec_col, nid, "_qv")
     return q.select(
         F.col(nid),
         F.explode(F.array(*[
@@ -219,10 +235,8 @@ def embedding_near_pairs(corpus: DataFrame, threshold: float = 0.9,
              .select(F.col("a._nid").alias("doc_a"),
                      F.col("b._nid").alias("doc_b"))
              .dropDuplicates(["doc_a", "doc_b"]))
-    vecs = _quantized(corpus, id_col, vec_col, "_vid", "_vec", dims,
+    vecs = _quantized(corpus, id_col, vec_col, "_vid", "_vec",
                       with_norm="_norm")
-    cos = dot_q("doc_a_vec", "doc_b_vec") \
-        / (F.col("norm_a") * F.col("norm_b"))
     return (cand
             .join(vecs.select(F.col("_vid").alias("doc_a"),
                               F.col("_vec").alias("doc_a_vec"),
@@ -230,7 +244,9 @@ def embedding_near_pairs(corpus: DataFrame, threshold: float = 0.9,
             .join(vecs.select(F.col("_vid").alias("doc_b"),
                               F.col("_vec").alias("doc_b_vec"),
                               F.col("_norm").alias("norm_b")), "doc_b")
-            .select("doc_a", "doc_b", fround(cos, 4).alias("cosine"))
+            .select("doc_a", "doc_b",
+                    _cosine("doc_a_vec", "norm_a", "doc_b_vec", "norm_b")
+                     .alias("cosine"))
             .where(F.col("cosine") >= threshold))
 
 
@@ -250,7 +266,9 @@ def embedding_dedup(corpus: DataFrame, threshold: float = 0.9,
 def l2_q(a: str, b: str) -> Column:
     """Exact integer squared-L2 distance of two quantized vectors
     (diffs <= 2e6, squared x 64 dims ~ 2.6e14 — comfortably BIGINT)."""
-    return F.expr(_l2_sql(a, b))
+    return F.expr(f"aggregate(zip_with({a}, {b},"
+                  f" (x, y) -> (x - y) * (x - y)),"
+                  f" CAST(0 AS BIGINT), (acc, v) -> acc + v)")
 
 
 def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
@@ -260,9 +278,8 @@ def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
     ``n_centroids`` corpus vectors (smallest md5-derived hash of the id —
     engine-portable, so the oracle reproduces the exact same centroids).
 
-    This is the ONLY driver collect in the module and it is the model,
-    not the data: O(n_centroids x dims) longs, independent of corpus
-    size. Production would k-means-refine these seeds; the index
+    The collect is the model, not the data: O(n_centroids x dims)
+    longs, independent of corpus size. Production would k-means-refine these seeds; the index
     structure (and this engine's plumbing) is identical either way.
     """
     from w_userflow_featurestore_spark.operators.dedup import text_hash60
@@ -274,53 +291,36 @@ def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
     return [list(r["cv"]) for r in rows]
 
 
-def _vec_sql(vals: list[int]) -> str:
-    return "array({})".format(",".join(f"{v}L" for v in vals))
+class _Quantizer(NamedTuple):
+    """A fitted IVF coarse quantizer: the broadcastable (cell, cv) frame
+    plus its cell count and vector length, both read off the centroids."""
+    cells: DataFrame
+    n_cells: int
+    dims: int
 
 
-def _cell_dists(q: str, centroids: list[list[int]]) -> list[str]:
-    """Squared-L2 distance fragments from ``q`` to each literal centroid."""
-    return [_l2_sql(q, _vec_sql(cv)) for cv in centroids]
-
-
-def ivf_cell(qcol: str, centroids: list[list[int]]) -> Column:
-    """Nearest-centroid cell id (0-based, lowest cell wins ties) from a
-    quantized vector as a pure projection. Convenience/compat form for a
-    handful of centroids; ivf_topk's hot path assigns cells through a
-    broadcast centroid JOIN instead — inlining n_centroids x dims
-    literal terms into the plan stops scaling past ~tens of centroids
-    (megabyte task binaries), while a broadcast join takes thousands."""
-    darr = "array({})".format(",".join(_cell_dists(qcol, centroids)))
-    return F.expr(f"CAST((array_position({darr}, array_min({darr}))"
-                  f" - 1) AS BIGINT)")
-
-
-def ivf_probe_cells(qcol: str, centroids: list[list[int]],
-                    nprobe: int) -> Column:
-    """The ``nprobe`` nearest cell ids for a query vector (distance then
-    cell-id order), via array_sort over (dist, cell) structs — struct
-    comparison is lexicographic by field position in both engines."""
-    structs = ",".join(
-        f"named_struct('d', {d}, 'cell', CAST({c} AS BIGINT))"
-        for c, d in enumerate(_cell_dists(qcol, centroids)))
-    return F.expr(f"slice(transform(array_sort(array({structs})),"
-                  f" s -> s.cell), 1, {int(nprobe)})")
-
-
-def _centroids_df(spark, centroids: list[list[int]]) -> DataFrame:
-    """The fitted coarse quantizer as a (cell, cv) DataFrame — the
-    broadcastable model representation."""
+def _quantizer(spark, centroids: list[list[int]]) -> _Quantizer:
+    """The centroid list as a :class:`_Quantizer` — the one model form
+    every IVF operator and the persisted index assign against."""
     rows = [(c, [int(v) for v in cv]) for c, cv in enumerate(centroids)]
-    return spark.createDataFrame(rows, "cell long, cv array<bigint>")
+    cells = spark.createDataFrame(rows, "cell long, cv array<bigint>")
+    return _Quantizer(cells, len(rows), len(rows[0][1]) if rows else 0)
+
+
+def _fit(corpus: DataFrame, n_centroids: int, id_col: str,
+         vec_col: str) -> _Quantizer:
+    """:func:`ivf_fit_centroids` over ``corpus``, as the model."""
+    return _quantizer(corpus.sparkSession,
+                      ivf_fit_centroids(corpus, n_centroids, id_col,
+                                        vec_col))
 
 
 def _assign_cells(vecs: DataFrame, id_col: str, vec_col: str,
-                  cdf: DataFrame, n_cells: int,
-                  carry: tuple[str, ...] = (),
-                  dims: int = 64) -> DataFrame:
+                  model: _Quantizer,
+                  carry: tuple[str, ...] = ()) -> DataFrame:
     """Nearest-cell id per quantized vector via the broadcast centroid
-    join: (id, cell) with the lexicographic (distance, cell) min —
-    lowest cell wins ties, ivf_cell's semantics.
+    join: (id, [carry,] cell) with the lexicographic (distance, cell)
+    min — lowest cell wins ties, the oracle's semantics.
 
     The (d, cell) min is ENCODED into one BIGINT, ``d * n_cells +
     cell``: min over the encoding equals the lexicographic
@@ -328,8 +328,7 @@ def _assign_cells(vecs: DataFrame, id_col: str, vec_col: str,
     ``d * n_cells + cell`` fits a BIGINT — d <= dims * (2 * SCALE)^2,
     so the gate is ``dims * (2*SCALE)^2 * (n_cells + 1) < 2^63`` (it
     depends on dims: a fixed n_cells bound would overflow for 1024-dim
-    embeddings — dims is a public parameter on
-    ivf_topk/semantic_dedup/ivf_recall_sweep).
+    embeddings). Both come from the model, so the gate follows the data.
     A plain ``min(BIGINT)`` hash-aggregates with map-side partial
     combine and ships 8 bytes per pre-combine row, where the
     ``min_by(cell, struct(d, cell))`` form planned as SortAggregate
@@ -347,27 +346,62 @@ def _assign_cells(vecs: DataFrame, id_col: str, vec_col: str,
     shuffle join: the carried bytes cross exactly the one exchange the
     assignment already pays, and no (cand x n) join is needed.
     """
-    j = vecs.crossJoin(F.broadcast(cdf))
+    j = vecs.crossJoin(F.broadcast(model.cells))
     keys = [id_col, *carry]
-    d_max = dims * (2 * SCALE) ** 2          # max squared-L2 distance
+    n_cells = model.n_cells
+    d_max = model.dims * (2 * SCALE) ** 2    # max squared-L2 distance
     if d_max * (n_cells + 1) < 2 ** 63:
-        return (j.select(F.col(id_col), *[F.col(c) for c in carry],
+        return (j.select(*keys,
                          (l2_q(vec_col, "cv") * n_cells + F.col("cell"))
                           .alias("_dc"))
                  .groupBy(*keys)
                  .agg(F.min("_dc").alias("_dc"))
-                 .select(F.col(id_col), *[F.col(c) for c in carry],
-                         (F.col("_dc") % n_cells).alias("cell")))
-    return (j.select(F.col(id_col), "cell", *[F.col(c) for c in carry],
-                     l2_q(vec_col, "cv").alias("d"))
+                 .select(*keys, (F.col("_dc") % n_cells).alias("cell")))
+    return (j.select(*keys, "cell", l2_q(vec_col, "cv").alias("d"))
              .groupBy(*keys)
              .agg(F.min_by("cell", F.struct("d", "cell")).alias("cell")))
 
 
+def _probe(q: DataFrame, cells: DataFrame, nprobe: int) -> DataFrame:
+    """(q_id, cell, probe_rank): each query's ``nprobe`` nearest cells,
+    ranked 1..nprobe by (distance, cell id). Probe sets NEST — the
+    cells at nprobe=p are the rank <= p prefix of any larger setting."""
+    wq = Window.partitionBy("q_id").orderBy("d", "cell")
+    return (q.select("q_id", "q_vec")
+             .crossJoin(F.broadcast(cells))
+             .select("q_id", "cell", l2_q("q_vec", "cv").alias("d"))
+             .withColumn("probe_rank", F.row_number().over(wq))
+             .where(F.col("probe_rank") <= nprobe)
+             .select("q_id", "cell", "probe_rank"))
+
+
+def _ivf_scored(corpus: DataFrame, queries: DataFrame, n_centroids: int,
+                nprobe: int, id_col: str, vec_col: str) -> DataFrame:
+    """The IVF candidate pipeline: (q_id, n_id, probe_rank, cosine) for
+    every corpus vector in one of a query's ``nprobe`` nearest cells.
+
+    Nearest cell per corpus vector is :func:`_assign_cells`; the
+    quantized vector + norm RIDE the assignment, so the verify reads
+    them straight off the broadcast probe join instead of re-attaching
+    them via an id-keyed shuffle join of the corpus."""
+    model = _fit(corpus, n_centroids, id_col, vec_col)
+    n = _quantized(corpus, id_col, vec_col, "n_id", "n_vec",
+                   with_norm="n_norm")
+    assign = _assign_cells(n, "n_id", "n_vec", model,
+                           carry=("n_vec", "n_norm"))
+    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec",
+                   with_norm="q_norm", spread=False)
+    cand = (assign.join(F.broadcast(_probe(q, model.cells, nprobe)), "cell")
+                  .where(F.col("n_id") != F.col("q_id")))
+    return (cand.join(F.broadcast(q), "q_id")
+                .select("q_id", "n_id", "probe_rank",
+                        _cosine("q_vec", "q_norm", "n_vec", "n_norm")
+                         .alias("cosine")))
+
+
 def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             n_centroids: int = 8, nprobe: int = 2,
-             dims: int = 64) -> DataFrame:
+             n_centroids: int = 8, nprobe: int = 2) -> DataFrame:
     """IVF (inverted-file) approximate top-k: partition the corpus into
     ``n_centroids`` Voronoi cells, probe only the query's ``nprobe``
     nearest cells, re-rank candidates by exact cosine.
@@ -376,48 +410,17 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     broadcast (cell, cv) DataFrame — NOT inlined literals, so the plan
     size is independent of n_centroids and the same code serves a
     4096-centroid production quantizer. Cell assignment is a broadcast
-    cross join + min_by (per-vector distances computed map-side;
-    the assignment shuffle carries only (id, cell, d) — map-side partial
-    aggregation collapses the x n_centroids fan-out back to one row per
-    vector before the exchange). The probe is a cell equi-join with the
-    query side broadcast, so the verify work drops to
-    ~nprobe/n_centroids of the corpus per query. A corpus row lives in
-    exactly one cell, so no candidate dedup is needed (unlike
+    cross join + encoded min (per-vector distances computed map-side;
+    map-side partial aggregation collapses the x n_centroids fan-out
+    back to one row per vector before the exchange). The probe is a
+    cell equi-join with the query side broadcast, so the verify work
+    drops to ~nprobe/n_centroids of the corpus per query. A corpus row
+    lives in exactly one cell, so no candidate dedup is needed (unlike
     multi-table LSH).
     """
-    cents = ivf_fit_centroids(corpus, n_centroids, id_col, vec_col)
-    cdf = _centroids_df(corpus.sparkSession, cents)
-    n = _quantized(corpus, id_col, vec_col, "n_id", "n_vec", dims,
-                   with_norm="n_norm")
-    # nearest cell per corpus vector: min (distance, cell) — lowest cell
-    # wins ties, matching ivf_cell's array_position semantics; the
-    # quantized vector + norm RIDE the assignment so the
-    # verify reads them straight off the broadcast probe join instead
-    # of re-attaching via an id-keyed shuffle join of the corpus
-    assign = _assign_cells(n.select("n_id", "n_vec", "n_norm"),
-                           "n_id", "n_vec", cdf, n_centroids,
-                           carry=("n_vec", "n_norm"), dims=dims)
-    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec", dims,
-                   with_norm="q_norm", spread=False)
-    wq = Window.partitionBy("q_id").orderBy("d", "cell")
-    probes = (q.select("q_id", "q_vec")
-               .crossJoin(F.broadcast(cdf))
-               .select("q_id", "cell",
-                       l2_q("q_vec", "cv").alias("d"))
-               .withColumn("_rn", F.row_number().over(wq))
-               .where(F.col("_rn") <= nprobe)
-               .select("q_id", "cell"))
-    cand = (assign.join(F.broadcast(probes), "cell")
-                  .where(F.col("n_id") != F.col("q_id"))
-                  .select("q_id", "n_id", "n_vec", "n_norm"))
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
-    scored = (cand.join(F.broadcast(q), "q_id")
-                  .select("q_id", "n_id", fround(cos, 4).alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k))
+    scored = _ivf_scored(corpus, queries, n_centroids, nprobe, id_col,
+                         vec_col)
+    return _topk(scored.drop("probe_rank"), k)
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -439,24 +442,21 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
              .where(F.col("n_id") != F.col("q_id"))
              .select("q_id", "n_id")
              .dropDuplicates(["q_id", "n_id"]))
-    qv = _quantized(queries, id_col, vec_col, "q_id", "q_vec", dims,
+    qv = _quantized(queries, id_col, vec_col, "q_id", "q_vec",
                     with_norm="q_norm", spread=False)
-    nv = _quantized(corpus, id_col, vec_col, "n_id", "n_vec", dims,
+    nv = _quantized(corpus, id_col, vec_col, "n_id", "n_vec",
                     with_norm="n_norm")
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
     scored = (cand.join(F.broadcast(qv), "q_id")
                   .join(nv, "n_id")
-                  .select("q_id", "n_id", fround(cos, 4).alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k))
+                  .select("q_id", "n_id",
+                          _cosine("q_vec", "q_norm", "n_vec", "n_norm")
+                           .alias("cosine")))
+    return _topk(scored, k)
 
 
 def semantic_dedup(corpus: DataFrame, threshold: float = 0.85,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   n_centroids: int = 8, dims: int = 64) -> DataFrame:
+                   n_centroids: int = 8) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space with the IVF coarse
     quantizer, compare pairs ONLY within a cluster, and drop every
@@ -475,32 +475,28 @@ def semantic_dedup(corpus: DataFrame, threshold: float = 0.85,
     ``n_centroids`` with the corpus so cells stay ~constant-sized (the
     paper's regime: 50k clusters over 5B embeddings). The centroid
     model is an O(n_centroids x dims) broadcast; assignment is one
-    map-side broadcast join + min_by partial agg; the in-cell self-join
-    shuffles (cell, id, vec, norm) once per side and never forms a
-    corpus-wide cross product.
+    map-side broadcast join + encoded-min partial agg; the in-cell
+    self-join shuffles (cell, id, vec, norm) once per side and never
+    forms a corpus-wide cross product.
     """
-    cents = ivf_fit_centroids(corpus, n_centroids, id_col, vec_col)
-    cdf = _centroids_df(corpus.sparkSession, cents)
-    n = _quantized(corpus, id_col, vec_col, "_sid", "_svec", dims,
+    model = _fit(corpus, n_centroids, id_col, vec_col)
+    n = _quantized(corpus, id_col, vec_col, "_sid", "_svec",
                    with_norm="_snorm")
     # vector + norm ride the assignment aggregate: the
     # in-cell self-join reads them directly — no id-keyed shuffle join
     # re-attaching the corpus vectors to their cell labels
-    assign = _assign_cells(n.select("_sid", "_svec", "_snorm"),
-                           "_sid", "_svec", cdf, n_centroids,
-                           carry=("_svec", "_snorm"), dims=dims)
-    sided = assign
-    a = sided.select(F.col("cell"), F.col("_sid").alias("a_id"),
-                     F.col("_svec").alias("a_vec"),
-                     F.col("_snorm").alias("a_norm"))
-    b = sided.select(F.col("cell"), F.col("_sid").alias("b_id"),
-                     F.col("_svec").alias("b_vec"),
-                     F.col("_snorm").alias("b_norm"))
-    cos = dot_q("a_vec", "b_vec") \
-        / (F.col("a_norm") * F.col("b_norm"))
+    assign = _assign_cells(n, "_sid", "_svec", model,
+                           carry=("_svec", "_snorm"))
+    a = assign.select(F.col("cell"), F.col("_sid").alias("a_id"),
+                      F.col("_svec").alias("a_vec"),
+                      F.col("_snorm").alias("a_norm"))
+    b = assign.select(F.col("cell"), F.col("_sid").alias("b_id"),
+                      F.col("_svec").alias("b_vec"),
+                      F.col("_snorm").alias("b_norm"))
     victims = (a.join(b, "cell")
                 .where(F.col("a_id") < F.col("b_id"))
-                .where(fround(cos, 4) >= threshold)
+                .where(_cosine("a_vec", "a_norm", "b_vec", "b_norm")
+                       >= threshold)
                 .select(F.col("b_id").alias("_sid"))
                 .distinct())
     return (assign.join(victims.withColumn("_drop", F.lit(True)),
@@ -514,7 +510,6 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 5,
                             n_centroids: int = 8,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding",
-                            dims: int = 64,
                             salt: str = "cbs") -> DataFrame:
     """Embedding-space-balanced sampling: assign every vector to its
     nearest coarse-quantizer cell, then keep a deterministic
@@ -533,18 +528,16 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 5,
     sampled) so callers can inspect occupancy, not just the survivors.
 
     Scale: centroid model is an O(n_centroids x dims) broadcast,
-    assignment one map-side broadcast join + min_by partial agg, then
-    ONE cell-keyed exchange shared by the rank window and the
+    assignment one map-side broadcast join + encoded-min partial agg,
+    then ONE cell-keyed exchange shared by the rank window and the
     occupancy count. No pairwise work at all — cheaper than any dedup
     in this family; raise ``n_centroids`` with the corpus exactly as
     ivf_topk does.
     """
     from w_userflow_featurestore_spark.operators.dedup import text_hash60
-    cents = ivf_fit_centroids(corpus, n_centroids, id_col, vec_col)
-    cdf = _centroids_df(corpus.sparkSession, cents)
-    n = _quantized(corpus, id_col, vec_col, "_sid", "_svec", dims)
-    assign = _assign_cells(n.select("_sid", "_svec"), "_sid", "_svec",
-                           cdf, n_centroids, dims=dims)
+    model = _fit(corpus, n_centroids, id_col, vec_col)
+    n = _quantized(corpus, id_col, vec_col, "_sid", "_svec")
+    assign = _assign_cells(n, "_sid", "_svec", model)
     h = text_hash60("CAST(_sid AS STRING)", seed=salt)
     wrk = Window.partitionBy("cell").orderBy("_h", "_sid")
     wall = Window.partitionBy("cell")
@@ -558,9 +551,18 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 5,
 
 # --------------------------------------------------------- persisted IVF
 
+def _index_rows(vecs: DataFrame, model: _Quantizer, id_col: str,
+                vec_col: str) -> DataFrame:
+    """(vec_id, qvec, norm, cell): the index's stored rows — the
+    quantized vector and norm carried through :func:`_assign_cells`."""
+    n = _quantized(vecs, id_col, vec_col, "vec_id", "qvec",
+                   with_norm="norm")
+    return _assign_cells(n, "vec_id", "qvec", model, carry=("qvec", "norm"))
+
+
 def ivf_index_build(corpus: DataFrame, table_path: str,
                     n_centroids: int = 8, id_col: str = "vec_id",
-                    vec_col: str = "embedding", dims: int = 64) -> int:
+                    vec_col: str = "embedding") -> int:
     """Materialize an IVF index as two LogTables — build once, query
     many (the production ANN pattern; ivf_topk refits per call, which
     is right for one-shot analytics and wrong for a serving index):
@@ -582,53 +584,37 @@ def ivf_index_build(corpus: DataFrame, table_path: str,
     if ct.latest_snapshot_id() is not None:
         raise ValueError(f"IVF index already exists at {table_path}; "
                          f"use ivf_index_append or a fresh path")
-    cents = ivf_fit_centroids(corpus, n_centroids, id_col, vec_col)
-    cdf = _centroids_df(spark, cents)
-    ct.append(cdf)
+    model = _fit(corpus, n_centroids, id_col, vec_col)
+    ct.append(model.cells)
     vt = LogTable.create(spark, os.path.join(table_path, "vectors"),
                          ["cell"])
-    return vt.append(_ivf_assign(corpus, cdf, id_col, vec_col, dims))
-
-
-def _ivf_assign(vecs: DataFrame, cdf: DataFrame, id_col: str,
-                vec_col: str, dims: int) -> DataFrame:
-    """(vec_id, cell, qvec, norm): nearest-centroid assignment keeping
-    the precomputed quantized vector + norm (min_by over a carrier
-    struct — the x n_centroids fan-out collapses map-side)."""
-    n = _quantized(vecs, id_col, vec_col, "vec_id", "qvec", dims,
-                   with_norm="norm")
-    return (n.crossJoin(F.broadcast(cdf))
-             .select("vec_id",
-                     F.struct("cell", "qvec", "norm").alias("_carry"),
-                     F.struct(l2_q("qvec", "cv").alias("d"),
-                              F.col("cell")).alias("_key"))
-             .groupBy("vec_id")
-             .agg(F.min_by("_carry", "_key").alias("s"))
-             .select("vec_id", F.col("s.cell").alias("cell"),
-                     F.col("s.qvec").alias("qvec"),
-                     F.col("s.norm").alias("norm")))
+    return vt.append(_index_rows(corpus, model, id_col, vec_col))
 
 
 def ivf_index_append(spark, table_path: str, new_vecs: DataFrame,
                      id_col: str = "vec_id", vec_col: str = "embedding",
-                     dims: int = 64, txn: str | None = None) -> int:
+                     txn: str | None = None) -> int:
     """Incrementally add vectors to a persisted IVF index: assign
     against the EXISTING centroids (no retrain — the standard serving
     tradeoff; if the data distribution drifts, cell sizes skew and
     recall sags, which ann_recall_gate-style monitoring catches) and
     append as one atomic commit. ``txn`` makes streaming replays
-    exactly-once, so a foreachBatch can feed the index directly."""
+    exactly-once, so a foreachBatch can feed the index directly.
+    The stored centroids are read back as the model (k rows, one
+    small job) so the cell count and dims come off the data."""
     from w_userflow_featurestore_spark.sources import LogTable
-    cdf = LogTable(spark, os.path.join(table_path, "centroids")).read()
+    stored = LogTable(spark, os.path.join(table_path, "centroids")).read()
+    rows = sorted(stored.collect(), key=lambda r: r["cell"])
+    model = _quantizer(spark, [r["cv"] for r in rows])
     vt = LogTable(spark, os.path.join(table_path, "vectors"))
-    return vt.append(_ivf_assign(new_vecs, cdf, id_col, vec_col, dims),
+    return vt.append(_index_rows(new_vecs, model, id_col, vec_col),
                      txn=txn)
 
 
 def ivf_index_search(spark, table_path: str, queries: DataFrame,
                      k: int = 5, nprobe: int = 2,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     dims: int = 64) -> DataFrame:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
     """Probe a persisted IVF index: nprobe nearest cells per query
     (broadcast centroid model), then ONE partition-pruned read of just
     the probed cells' files, exact-cosine re-rank. The only driver
@@ -636,57 +622,29 @@ def ivf_index_search(spark, table_path: str, queries: DataFrame,
     (<= n_centroids), needed to push the cell predicate into the
     MANIFEST before Spark lists the scan."""
     from w_userflow_featurestore_spark.sources import LogTable
-    cdf = LogTable(spark, os.path.join(table_path, "centroids")).read()
-    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec", dims,
+    cells = LogTable(spark, os.path.join(table_path, "centroids")).read()
+    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec",
                    with_norm="q_norm", spread=False)
-    wq = Window.partitionBy("q_id").orderBy("d", "cell")
-    probes = (q.select("q_id", "q_vec")
-               .crossJoin(F.broadcast(cdf))
-               .select("q_id", "cell",
-                       l2_q("q_vec", "cv").alias("d"))
-               .withColumn("_rn", F.row_number().over(wq))
-               .where(F.col("_rn") <= nprobe)
-               .select("q_id", "cell"))
-    cells = sorted({r["cell"] for r in
-                    probes.select("cell").distinct().collect()})
+    probes = _probe(q, cells, nprobe)
+    probed = sorted({r["cell"] for r in
+                     probes.select("cell").distinct().collect()})
     vt = LogTable(spark, os.path.join(table_path, "vectors"))
-    vecs = vt.read(filters=[("cell", "in", cells)])
+    vecs = vt.read(filters=[("cell", "in", probed)])
     cand = (vecs.join(F.broadcast(probes), "cell")
                 .where(F.col("vec_id") != F.col("q_id")))
-    cos = dot_q("q_vec", "qvec") \
-        / (F.col("q_norm") * F.col("norm"))
     scored = (cand.join(F.broadcast(q), "q_id")
                   .select("q_id", F.col("vec_id").alias("n_id"),
-                          fround(cos, 4).alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-                  .where(F.col("rank") <= k))
+                          _cosine("q_vec", "q_norm", "qvec", "norm")
+                           .alias("cosine")))
+    return _topk(scored, k)
 
 
 # ------------------------------------------------ label-aware neighbors
 
-def _quantized_labeled(df: DataFrame, id_col: str, vec_col: str,
-                       label_col: str, out_id: str, out_vec: str,
-                       out_lab: str, dims: int, with_norm: str,
-                       spread: bool = True) -> DataFrame:
-    """:func:`_quantized` carrying the label column through the
-    projection (the label rides the same row — never a separate
-    corpus-grain join back by id)."""
-    base = df.select(F.col(id_col), F.col(vec_col), F.col(label_col))
-    if spread:
-        base = fan_out(base)
-    return (base.select(F.col(id_col).alias(out_id),
-                        quantize(f"`{vec_col}`").alias(out_vec),
-                        F.col(label_col).alias(out_lab))
-                .withColumn(with_norm, norm_q(f"`{out_vec}`")))
-
-
 def hard_negative_mining(corpus: DataFrame, queries: DataFrame,
                          k: int = 5, label_col: str = "label",
                          id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         dims: int = 64) -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """Contrastive-training hard negatives: for each query (anchor)
     vector, the ``k`` NEAREST neighbors whose label DIFFERS from the
     anchor's — the negatives that sit closest to the decision boundary,
@@ -709,31 +667,17 @@ def hard_negative_mining(corpus: DataFrame, queries: DataFrame,
     sets too large to broadcast, mine per IVF cell
     (:func:`ivf_topk`'s probe path) and rank within probes instead.
     """
-    q = _quantized_labeled(queries, id_col, vec_col, label_col,
-                           "q_id", "q_vec", "q_label", dims,
-                           with_norm="q_norm", spread=False)
-    c = _quantized_labeled(corpus, id_col, vec_col, label_col,
-                           "n_id", "n_vec", "n_label", dims,
-                           with_norm="n_norm")
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
-    scored = (c.crossJoin(F.broadcast(q))
-               .where((F.col("n_id") != F.col("q_id"))
-                      & ~F.col("n_label").eqNullSafe(F.col("q_label")))
-               .select("q_id", "q_label", "n_id", "n_label",
-                       fround(cos, 4).alias("cosine")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    return (scored.withColumn("neg_rank",
-                              F.row_number().over(w).cast("long"))
-                  .where(F.col("neg_rank") <= k))
+    scored = (_exact_scored(corpus, queries, id_col, vec_col, label_col)
+              .where(~F.col("n_label").eqNullSafe(F.col("q_label"))))
+    return (_topk(scored, k, rank="neg_rank")
+            .select("q_id", "q_label", "n_id", "n_label", "cosine",
+                    "neg_rank"))
 
 
 def knn_label_agreement(corpus: DataFrame, queries: DataFrame,
                         k: int = 10, label_col: str = "label",
                         id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        dims: int = 64) -> DataFrame:
+                        vec_col: str = "embedding") -> DataFrame:
     """Label-agreement@k — the label-ERROR audit (Confident-Learning
     style): for each audited vector, the fraction of its k exact
     nearest neighbors sharing its label, in exact integer basis points.
@@ -752,23 +696,8 @@ def knn_label_agreement(corpus: DataFrame, queries: DataFrame,
     projections; the rollup is one |Q|-way aggregate. Nothing joins
     back to the corpus by id.
     """
-    q = _quantized_labeled(queries, id_col, vec_col, label_col,
-                           "q_id", "q_vec", "q_label", dims,
-                           with_norm="q_norm", spread=False)
-    c = _quantized_labeled(corpus, id_col, vec_col, label_col,
-                           "n_id", "n_vec", "n_label", dims,
-                           with_norm="n_norm")
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
-    scored = (c.crossJoin(F.broadcast(q))
-               .where(F.col("n_id") != F.col("q_id"))
-               .select("q_id", "q_label", "n_label",
-                       fround(cos, 4).alias("cosine"),
-                       F.col("n_id")))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
-    topk = (scored.withColumn("_rk", F.row_number().over(w))
-                  .where(F.col("_rk") <= k))
+    topk = _topk(_exact_scored(corpus, queries, id_col, vec_col,
+                               label_col), k, rank="_rk")
     agree = F.sum(F.when(F.col("n_label").eqNullSafe(F.col("q_label")),
                          1).otherwise(0)).cast("long")
     return (topk.groupBy("q_id", "q_label")
@@ -783,7 +712,7 @@ def knn_label_agreement(corpus: DataFrame, queries: DataFrame,
 def d4_select(corpus: DataFrame, threshold: float = 0.35,
               per_cluster: int = 5, sem_centroids: int = 16,
               sample_centroids: int = 8, id_col: str = "vec_id",
-              vec_col: str = "embedding", dims: int = 64,
+              vec_col: str = "embedding",
               salt: str = "cbs") -> DataFrame:
     """D4 data selection (Tirumala et al. 2023, arXiv:2308.12284):
     semantic DEDUPLICATION then embedding-space DIVERSIFICATION — drop
@@ -816,13 +745,13 @@ def d4_select(corpus: DataFrame, threshold: float = 0.35,
     # subtree) runs twice. Three narrow columns per vector, the same
     # bounded trade perplexity_buckets makes for its scored frame.
     sd = semantic_dedup(corpus, threshold, id_col, vec_col,
-                        n_centroids=sem_centroids, dims=dims) \
+                        n_centroids=sem_centroids) \
         .localCheckpoint(eager=True)
     kept_ids = sd.where(F.col("is_kept")).select(id_col)
     survivors = corpus.join(kept_ids, id_col)
     cbs = cluster_balanced_sample(survivors, per_cluster,
                                   sample_centroids, id_col, vec_col,
-                                  dims, salt)
+                                  salt)
     return (sd.select(F.col(id_col), F.col("cell").alias("sem_cell"),
                       "is_kept")
             .join(cbs.select(F.col(id_col), "cell", "cluster_size",
@@ -838,8 +767,7 @@ def ivf_recall_sweep(corpus: DataFrame, queries: DataFrame, k: int = 5,
                      n_centroids: int = 8,
                      nprobes: tuple[int, ...] = (1, 2, 4),
                      id_col: str = "vec_id",
-                     vec_col: str = "embedding",
-                     dims: int = 64) -> DataFrame:
+                     vec_col: str = "embedding") -> DataFrame:
     """Recall@k vs nprobe tuning curve for the IVF index — the
     characterization a team runs BEFORE fixing the production nprobe:
     `ann_recall_gate` pins one operating point against a floor; this
@@ -866,44 +794,13 @@ def ivf_recall_sweep(corpus: DataFrame, queries: DataFrame, k: int = 5,
     """
     if not nprobes:
         raise ValueError("nprobes must be non-empty")
-    pmax = max(nprobes)
-    cents = ivf_fit_centroids(corpus, n_centroids, id_col, vec_col)
-    cdf = _centroids_df(corpus.sparkSession, cents)
-    n = _quantized(corpus, id_col, vec_col, "n_id", "n_vec", dims,
-                   with_norm="n_norm")
-    # vector + norm ride the assignment — see ivf_topk
-    assign = _assign_cells(n.select("n_id", "n_vec", "n_norm"),
-                           "n_id", "n_vec", cdf, n_centroids,
-                           carry=("n_vec", "n_norm"), dims=dims)
-    q = _quantized(queries, id_col, vec_col, "q_id", "q_vec", dims,
-                   with_norm="q_norm", spread=False)
-    wq = Window.partitionBy("q_id").orderBy("d", "cell")
-    probes = (q.select("q_id", "q_vec")
-               .crossJoin(F.broadcast(cdf))
-               .select("q_id", "cell",
-                       l2_q("q_vec", "cv").alias("d"))
-               .withColumn("probe_rank", F.row_number().over(wq))
-               .where(F.col("probe_rank") <= pmax)
-               .select("q_id", "cell", "probe_rank"))
-    cand = (assign.join(F.broadcast(probes), "cell")
-                  .where(F.col("n_id") != F.col("q_id"))
-                  .select("q_id", "n_id", "probe_rank", "n_vec",
-                          "n_norm"))
-    cos = dot_q("q_vec", "n_vec") \
-        / (F.col("q_norm") * F.col("n_norm"))
-    scored = (cand.join(F.broadcast(q), "q_id")
-                  .select("q_id", "n_id", "probe_rank",
-                          fround(cos, 4).alias("cosine"))
-                  .localCheckpoint(eager=True))
-    brute = (brute_force_topk(corpus, queries, k, id_col, vec_col, dims)
+    scored = _ivf_scored(corpus, queries, n_centroids, max(nprobes),
+                         id_col, vec_col).localCheckpoint(eager=True)
+    brute = (brute_force_topk(corpus, queries, k, id_col, vec_col)
              .select("q_id", "n_id").localCheckpoint(eager=True))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(),
-                                           F.col("n_id").asc())
     curve = None
     for p in nprobes:
-        topk = (scored.where(F.col("probe_rank") <= p)
-                .withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
+        topk = (_topk(scored.where(F.col("probe_rank") <= p), k)
                 .select("q_id", "n_id").withColumn("_h", F.lit(1)))
         point = (brute.join(topk, ["q_id", "n_id"], "left")
                  .agg(F.count(F.lit(1)).alias("_n"),

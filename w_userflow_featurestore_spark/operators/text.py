@@ -1261,22 +1261,22 @@ BPE_MERGE_SCHEMA = ("tokenizer_version long, merge_rank long,"
                     " merged string, n_occurrences long")
 
 
-def _registry_max_version(t) -> int | None:
-    """Exact ``max(tokenizer_version)`` read from the registry's
-    MANIFEST stats — pure driver-side metadata, no Spark job (instead
-    of a full table read+agg+collect per bpe_save/bpe_load call).
-    Sound because every
+def _registry_max_version(live: dict) -> int | None:
+    """Exact ``max(tokenizer_version)`` over files' MANIFEST stats
+    (``{rel_path: {col: [min, max, ...]}}``, as in
+    :meth:`LogTable.files_stats`) — pure driver-side metadata, no Spark
+    job (instead of a full table read+agg+collect per bpe_save/bpe_load
+    call). Sound because every
     publish stamps the version onto every row of its single file and
     the table declares ``stats_columns=["tokenizer_version"]``, so
     max-over-file-maxes is the column max. Returns None whenever ANY
-    live file lacks a usable max stat (absent column, refused type,
+    file lacks a usable max stat (absent column, refused type,
     all-null) — the caller then falls back to the read path; the
     probe is an optimization, never a second source of truth."""
-    stats = t.files_stats()
-    if not stats:
+    if not live:
         return None
     hi = None
-    for fs in stats.values():
+    for fs in live.values():
         cs = fs.get("tokenizer_version")
         if not cs or cs[1] is None:
             return None
@@ -1315,21 +1315,26 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
     from w_userflow_featurestore_spark.sources import LogTable
     t = LogTable.create(spark, table_path, [],
                         stats_columns=["tokenizer_version"])
-    version = 1
-    latest = t.latest_snapshot_id()
-    if latest is not None:
+    # one log read serves the empty check, the txn lookup and the
+    # version stats; append() below reads it again to commit
+    st = t.state()
+    done = st.txn_commit(txn)
+    if done is not None:
         # replayed publish (checkpoint-recovery re-delivery): the
-        # append below would no-op on the matching txn token, but the
-        # freshly computed max+1 would then LIE about which version the
-        # original commit published — resolve the replay first and
-        # return ITS version (read from the commit's own increment)
-        done = t.txn_commit(txn) if txn is not None else None
-        if done is not None:
+        # append would no-op on the matching txn token, but a freshly
+        # computed max+1 would then LIE about which version the
+        # original commit published — return ITS version, read off the
+        # replayed commit's own manifest stats
+        v = _registry_max_version({f: done.stats.get(f, {})
+                                   for f in done.add})
+        if v is None:                    # manifest stats unusable
             v = (t.read_increment(done.parent_id, done.snapshot_id)
                   .agg(F.max("tokenizer_version").alias("v"))
                   .collect()[0]["v"])
-            return int(v), done.snapshot_id
-        prev = _registry_max_version(t)
+        return int(v), done.snapshot_id
+    version = 1
+    if st.snapshot_id is not None:
+        prev = _registry_max_version(st.live)
         if prev is None:                 # manifest stats unusable
             prev = t.read().agg(
                 F.max("tokenizer_version").alias("v")).collect()[0]["v"]
@@ -1366,7 +1371,7 @@ def bpe_load(spark, table_path: str,
     from w_userflow_featurestore_spark.sources import LogTable
     t = LogTable(spark, table_path)
     if version is None:
-        latest = _registry_max_version(t)
+        latest = _registry_max_version(t.files_stats())
         if latest is None:               # manifest stats unusable
             latest = t.read().agg(
                 F.max("tokenizer_version").alias("v")).collect()[0]["v"]

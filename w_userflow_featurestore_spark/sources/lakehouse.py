@@ -578,6 +578,12 @@ class LogTable:
                 live[f] = s.stats.get(f, {})
         return _Replay(snaps, chain, live)
 
+    def state(self) -> _Replay:
+        """The latest snapshot's state from ONE read of the log, for a
+        caller that needs several facts of that snapshot (its id, a txn
+        lookup, the live files' stats) without a log read for each."""
+        return self._replay()
+
     def latest_snapshot_id(self) -> int | None:
         snaps = self.snapshots()
         return snaps[-1].snapshot_id if snaps else None
