@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
+
 from tests.conftest import rows
 from w_userflow_featurestore_spark.operators.asof import asof_join
 
@@ -91,6 +93,21 @@ def test_interval_join_no_duplicate_pairs(spark):
     # backward-looking rows excluded: right ts >= left ts only
     assert all(v >= e for e, v in pairs)
     assert len(pairs) == 5 + 4 + 3 + 2 + 1
+
+
+def test_asof_join_rejects_a_right_ts_join_key(spark):
+    left, right = _frames(spark)
+    with pytest.raises(ValueError, match="right_ts"):
+        asof_join(left, right, on=["user_id", "ts"])
+
+
+@pytest.mark.parametrize("lower_ms,upper_ms", [(0, 0), (600_000, 0)])
+def test_interval_join_rejects_an_empty_interval(spark, lower_ms, upper_ms):
+    from w_userflow_featurestore_spark.operators.asof import interval_join
+    left, right = _frames(spark)
+    with pytest.raises(ValueError, match="empty interval"):
+        interval_join(left, right, on=["user_id"], lower_ms=lower_ms,
+                      upper_ms=upper_ms)
 
 
 def test_training_set_point_in_time_no_leakage(spark):

@@ -7,6 +7,7 @@ neighbors ranked first, signatures invariant where they must be).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF0001, rows
@@ -222,6 +223,23 @@ def test_quantizer_reads_cell_count_and_dims_off_the_data(spark):
     assert {r["vec_id"]: r["cell"] for r in out} == cells
 
 
+def test_quantizer_cells_are_a_jvm_literal_relation(spark):
+    """The centroid frame is built JVM-side (no pickled Python RDD
+    behind it) and keeps its schema when there are no centroids."""
+    from w_userflow_featurestore_spark.plans import physical_plan
+    model = SIM._quantizer(spark, [[3, -1], [0, 7], [5, 5]])
+    assert "ExistingRDD" not in physical_plan(model.cells)
+    assert (model.n_cells, model.dims) == (3, 2)
+    assert sorted((r["cell"], list(r["cv"]))
+                  for r in model.cells.collect()) == [
+        (0, [3, -1]), (1, [0, 7]), (2, [5, 5])]
+    empty = SIM._quantizer(spark, [])
+    assert (empty.n_cells, empty.dims) == (0, 0)
+    assert empty.cells.dtypes == model.cells.dtypes == [
+        ("cell", "bigint"), ("cv", "array<bigint>")]
+    assert empty.cells.count() == 0
+
+
 def test_ivf_topk_matches_brute_force_within_probed_cells(spark):
     from w_userflow_featurestore_spark.sources import read_table
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -309,6 +327,31 @@ def test_fingerprint_pairs_detects_copied_span_and_caps_hot_prints(spark):
     # stop-fingerprint cap: prints in >1 docs dropped -> no pairs at all
     assert TX.fingerprint_pairs(docs, min_shared=1,
                                 max_doc_freq=1).count() == 0
+
+
+def test_uncapped_fingerprint_pairs_equal_an_inverted_index_self_join(spark):
+    """``max_doc_freq=None`` only drops the document-frequency filter:
+    the array expansion counts exactly what a plain posting-list
+    self-join over the winnowing fingerprints counts."""
+    shared = "the quick brown fox jumps over the lazy dog again and again"
+    docs = spark.createDataFrame(
+        [(1, f"intro one. {shared}. outro alpha beta gamma delta"),
+         (2, f"completely different start. {shared}. other ending words"),
+         (3, f"{shared} and nothing else"),
+         (4, "unrelated text about spark catalyst optimizer internals"),
+         (5, "unrelated text about spark catalyst optimizer internals")],
+        "doc_id long, text string")
+    fp = TX.winnow_fingerprints(docs)
+    a, b = fp.alias("a"), fp.alias("b")
+    ref = (a.join(b, (F.col("a.fingerprint") == F.col("b.fingerprint"))
+                  & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .groupBy(F.col("a.doc_id").alias("doc_a"),
+                     F.col("b.doc_id").alias("doc_b"))
+            .agg(F.count(F.lit(1)).alias("n_shared")))
+    got = TX.fingerprint_pairs(docs, min_shared=1, max_doc_freq=None)
+    expected = rows(ref)
+    assert {(1, 2), (1, 3), (2, 3), (4, 5)} <= {p[:2] for p in expected}
+    assert rows(got) == expected
 
 
 def test_line_dedup_removes_corpus_hot_lines(spark):
@@ -685,6 +728,32 @@ def test_minhash_accuracy_identical_and_invariants(spark):
         assert r["est_bp"] % 1250 == 0 and r["est_bp"] >= 5000
         assert 0 <= r["exact_bp"] <= 10000
         assert r["err_bp"] == abs(r["est_bp"] - r["exact_bp"])
+
+
+def test_minhash_accuracy_pairs_are_the_lsh_candidate_pairs(spark):
+    """At k=8, est_bp >= 5000 and est_jaccard >= 0.5 both mean >= 4
+    agreeing minhashes, so the two ops keep the same pairs."""
+    from w_userflow_featurestore_spark.sources import read_table
+    docs = read_table(spark, SF0001, "documents",
+                      columns=["doc_id", "text"])
+    acc = {(r["doc_a"], r["doc_b"]) for r in DD.minhash_accuracy(
+        docs, k=8, bands=4, min_est_bp=5000).collect()}
+    lsh = {(r["doc_a"], r["doc_b"]) for r in DD.lsh_candidate_pairs(
+        DD.minhash_signatures(docs, k=8), bands=4,
+        min_est_jaccard=0.5).collect()}
+    assert acc and acc == lsh
+
+
+def test_bands_must_divide_the_signature_k(spark):
+    sigs = DD.minhash_signatures(_docs(spark), k=8)
+    with pytest.raises(ValueError, match="bands=3 must divide"):
+        DD.band_buckets(sigs, bands=3)
+    with pytest.raises(ValueError, match="bands=3 must divide"):
+        DD.lsh_candidate_pairs(sigs, bands=3)
+    with pytest.raises(ValueError, match="k=0"):
+        DD.band_buckets(sigs.select("doc_id"))
+    assert DD.band_buckets(sigs, bands=2).columns == [
+        "doc_id", "band", "bucket"]
 
 
 def test_minhash_accuracy_rejects_non_divisible_k(spark):

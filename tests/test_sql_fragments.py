@@ -14,7 +14,7 @@ import w_userflow_featurestore_spark.operators.experiment as EXP
 import w_userflow_featurestore_spark.operators.sampling as SMP
 import w_userflow_featurestore_spark.operators.similarity as SIM
 import w_userflow_featurestore_spark.operators.text as TX
-from w_userflow_featurestore_spark.functions import sql_str
+from w_userflow_featurestore_spark.functions import bp, sql_str
 from w_userflow_featurestore_spark.operators.sketch import cms_build
 
 # a quote, a backslash that the SQL parser would read as ``\n``, and both
@@ -50,12 +50,13 @@ def test_sql_str_round_trips_any_text(spark):
 
 
 HELPERS = [
-    (DD.text_hash60, ()), (DD.normalize_text, ()), (DD.words, ()),
+    (DD.text_hash60, ()), (DD.normalize_text, ()), (DD.content_hash, ()),
+    (DD.words, ()),
     (DD.shingles, ()), (TX.token_count_ws, ()), (TX.token_count_bpe, ()),
     (TX.lang_id, ()), (TX.quality_score, ()), (TX.doc_fingerprint, ()),
     (SIM.quantize, ()), (SIM.dot_q, ("b",)), (SIM.norm_q, ()),
     (SIM.bucket_q, ()), (SIM.l2_q, ("b",)),
-    (SMP.hash_bucket, ()), (EXP.ab_assign, ()),
+    (SMP.hash_bucket, ()), (EXP.ab_assign, ()), (bp, ("a",)),
 ]
 
 

@@ -1,5 +1,7 @@
-"""Lint: no library module imports a name it never uses, and no
-library function takes a parameter it never reads.
+"""Lint: no library module imports a name it never uses, no library
+function takes a parameter it never reads, no library module uses an
+``assert`` statement, and only ``functions.bp`` spells out the
+basis-point expression.
 
 Small AST passes instead of a linter dependency. An import counts as
 used when its name appears as an identifier anywhere in the module or
@@ -8,12 +10,17 @@ because their imports are re-exports, and a line marked ``noqa: F401``
 is exempt. A parameter counts as read when its name appears as an
 identifier in the function body (nested functions included); ``self``,
 ``cls`` and names starting with ``_`` (a signature fixed by a caller,
-such as a ``foreachBatch`` batch id) are exempt.
+such as a ``foreachBatch`` batch id) are exempt. ``python -O`` strips
+every ``assert``, so a library check on its arguments raises instead.
+A string literal (adjacent literals and f-string pieces are joined by
+the parser) spells out a basis point when it holds the
+``BP_FRAGMENT`` of ``functions.bp``, whitespace ignored.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -65,6 +72,24 @@ def unused_params(source: str) -> list[tuple[int, str, str]]:
     return sorted(out)
 
 
+def asserts(source: str) -> list[int]:
+    """Line of every ``assert`` statement."""
+    return sorted(n.lineno for n in ast.walk(ast.parse(source))
+                  if isinstance(n, ast.Assert))
+
+
+BP_FRAGMENT = "DECIMAL(38,0)) * 10000"
+BP_HOME = PKG / "functions" / "__init__.py"
+
+
+def bp_spellings(source: str) -> list[int]:
+    """Line of every string literal holding ``BP_FRAGMENT``."""
+    frag = re.sub(r"\s+", "", BP_FRAGMENT)
+    return sorted(n.lineno for n in ast.walk(ast.parse(source))
+                  if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                  and frag in re.sub(r"\s+", "", n.value))
+
+
 def test_checker_flags_only_unused_names():
     src = ("from __future__ import annotations\n"
            "import os\nimport json\n"
@@ -87,6 +112,26 @@ def test_param_checker_flags_only_unread_parameters():
                                   (4, "f", "y")]
 
 
+def test_assert_checker_flags_every_assert_statement():
+    src = ("def f(x):\n"
+           "    assert x > 0, 'x must be positive'\n"
+           "    if x > 9:\n"
+           "        raise ValueError(x)\n"
+           "    return 'assert x'\n"
+           "assert f(1)\n")
+    assert asserts(src) == [2, 6]
+
+
+def test_bp_checker_flags_each_spelled_out_basis_point():
+    src = ('a = ("CAST((CAST(n AS DECIMAL(38,0))"\n'
+           '     " * 10000) DIV d AS BIGINT)")\n'
+           'b = f"CAST((CAST({x} AS DECIMAL(38,0))*10000) DIV d AS BIGINT)"\n'
+           'c = "CAST(n AS DECIMAL(38,0)) * 100"\n'
+           'd = "DECIMAL(38,0)"\n')
+    assert bp_spellings(src) == [1, 3]
+    assert len(bp_spellings(BP_HOME.read_text())) == 1
+
+
 @pytest.mark.parametrize("path", MODULES,
                          ids=[str(p.relative_to(PKG)) for p in MODULES])
 def test_library_module_has_no_unused_imports(path):
@@ -100,3 +145,18 @@ ALL_MODULES = sorted(PKG.rglob("*.py"))
                          ids=[str(p.relative_to(PKG)) for p in ALL_MODULES])
 def test_library_functions_read_every_parameter(path):
     assert unused_params(path.read_text()) == []
+
+
+@pytest.mark.parametrize("path", ALL_MODULES,
+                         ids=[str(p.relative_to(PKG)) for p in ALL_MODULES])
+def test_library_module_has_no_assert_statement(path):
+    assert asserts(path.read_text()) == []
+
+
+NOT_BP_HOME = [p for p in ALL_MODULES if p != BP_HOME]
+
+
+@pytest.mark.parametrize("path", NOT_BP_HOME,
+                         ids=[str(p.relative_to(PKG)) for p in NOT_BP_HOME])
+def test_only_functions_bp_spells_out_a_basis_point(path):
+    assert bp_spellings(path.read_text()) == []

@@ -29,6 +29,13 @@ def sql_str(value) -> str:
     return f"'{text}'"
 
 
+def bp(num: str, den: str) -> Column:
+    """floor(num * 10000 / den) as BIGINT: exact basis points of two SQL
+    fragments, the product in DECIMAL(38,0) so it cannot wrap."""
+    return F.expr(f"CAST((CAST({num} AS DECIMAL(38,0)) * 10000)"
+                  f" DIV ({den}) AS BIGINT)")
+
+
 def fround(col: Column, scale: int = 2) -> Column:
     """Deterministic cross-engine rounding: floor(x*10^s + 0.5)/10^s.
 

@@ -41,7 +41,8 @@ def asof_join(left: DataFrame, right: DataFrame, on: list[str],
     """
     key_cols = list(on)
     r_payload = [c for c in right.columns if c not in key_cols]
-    assert right_ts in r_payload, "right_ts must not be a join key"
+    if right_ts not in r_payload:
+        raise ValueError(f"right_ts={right_ts!r} must not be a join key")
 
     r2 = (right
           .withColumn("_t", F.col(right_ts))
@@ -94,7 +95,9 @@ def interval_join(left: DataFrame, right: DataFrame, on: list[str],
     right row's single bucket, so no dedup is needed; work scales with
     rows-per-(key, W-window), never rows-per-key squared.
     """
-    assert upper_ms > lower_ms, "empty interval"
+    if upper_ms <= lower_ms:
+        raise ValueError(f"empty interval: upper_ms={upper_ms} must exceed"
+                         f" lower_ms={lower_ms}")
     width = upper_ms - lower_ms
     key_cols = list(on)
     r_payload = [c for c in right.columns if c not in key_cols]

@@ -18,13 +18,17 @@ back as a left-anti on doc_id. Nothing is ever collected.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import fround, sql_ident
 from w_userflow_featurestore_spark.operators.dedup import (
-    exact_dedup, lsh_candidate_pairs, minhash_signatures,
+    _agreement, _minhash_aggs, _signature_k, band_buckets,
+    content_hash, exact_dedup, lsh_candidate_pairs, minhash_signatures,
+    shingles,
 )
 from w_userflow_featurestore_spark.operators.text import text_profile
+from w_userflow_featurestore_spark.sources import fan_out
 
 
 def curate_corpus(docs: DataFrame, min_quality: float = 0.5,
@@ -75,9 +79,6 @@ def signature_index(docs: DataFrame, text_col: str = "text",
     so the ledger for a 100 TB corpus is ~100 GB: joinable, even
     broadcastable in shards, while the corpus text never gets rescanned.
     """
-    from w_userflow_featurestore_spark.operators.dedup import (
-        _hash60_sql, _norm_sql, _shingles_sql)
-    from w_userflow_featurestore_spark.sources import fan_out
     # content_hash rides the minhash aggregate as a second GROUP KEY
     # (it is functionally dependent on the document, so the grouping is
     # unchanged) instead of a separate scan + doc-keyed join: one pass
@@ -88,28 +89,24 @@ def signature_index(docs: DataFrame, text_col: str = "text",
     base = fan_out(docs.select(F.col(id_col), F.col(text_col)))
     sh = base.select(
         F.col(id_col),
-        F.expr(f"md5({_norm_sql(f'`{text_col}`')})").alias("content_hash"),
-        F.expr(f"explode({_shingles_sql(f'`{text_col}`', n)})")
-         .alias("shingle"))
-    aggs = [F.expr(f"min({_hash60_sql('shingle', seed=i)})").alias(f"mh{i}")
-            for i in range(k)]
-    return (sh.groupBy(id_col, "content_hash").agg(*aggs)
-            .select(id_col, "content_hash",
-                    *[f"mh{i}" for i in range(k)]))
+        content_hash(sql_ident(text_col)),
+        F.explode(shingles(sql_ident(text_col), n)).alias("shingle"))
+    return sh.groupBy(id_col, "content_hash").agg(*_minhash_aggs(k))
 
 
 def incremental_curate(new_docs: DataFrame, ledger: DataFrame,
                        min_quality: float = 0.5,
                        near_threshold: float = 0.5,
-                       id_col: str = "doc_id", n: int = 3, k: int = 8,
+                       id_col: str = "doc_id", n: int = 3,
                        bands: int = 4) -> DataFrame:
     """Curate a NEW batch against an already-ingested corpus without
     touching the corpus text — the daily-update form of
     :func:`curate_corpus`.
 
     The corpus is represented solely by its :func:`signature_index`
-    ledger. Drop rules, in order, mirroring curate_corpus with
-    "corpus always wins":
+    ledger; the batch signatures are built at the ledger's ``k`` (its
+    number of ``mh`` columns). Drop rules, in order, mirroring
+    curate_corpus with "corpus always wins":
 
     1. quality < min_quality (batch profile, survivors only — victims
        for rules 2-4 are computed pre-filter, same stability contract
@@ -128,12 +125,8 @@ def incremental_curate(new_docs: DataFrame, ledger: DataFrame,
     (bucket probe, batch self-probe, id-keyed victim anti-joins),
     none proportional to corpus text.
     """
-    from pyspark.sql import Window
-
-    from w_userflow_featurestore_spark.operators.dedup import (
-        band_buckets, minhash_signatures)
-
     prof = text_profile(new_docs)
+    k = _signature_k(ledger)
     # Lineage cut: the batch signatures feed SIX downstream branches
     # (banded probe, batch self-probe x2, signature verify x3); without
     # it each branch re-shingles the batch text from source. The frame
@@ -152,49 +145,23 @@ def incremental_curate(new_docs: DataFrame, ledger: DataFrame,
             .where(F.col(id_col) == F.col("__min_id"))
             .drop("__min_id"))
 
-    # rules 3+4 share one banded batch subplan and one signature
-    # projection — the minhash aggregation's exchange is identical in
-    # every reuse, so Spark replays it instead of re-shingling the batch
-    from w_userflow_featurestore_spark.functions import fround
-    nb = band_buckets(new_sigs, id_col, k=k, bands=bands)
-    cb = band_buckets(ledger, id_col, k=k, bands=bands) \
+    # rule 3: near-dup vs corpus — banded probe + signature verify. The
+    # batch's banded subplan and signature projection are the same
+    # plans rule 4 builds, so Spark reuses their exchanges.
+    cb = band_buckets(ledger, id_col, bands) \
         .select(F.col(id_col).alias("__cid"), "band", "bucket")
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    nsig = new_sigs.select(F.col(id_col), sig_arr.alias("__sig"))
-    csig = ledger.select(F.col(id_col).alias("__cid"),
-                         sig_arr.alias("__csig"))
-
-    def _agree(a: str, b: str):
-        return F.size(F.filter(
-            F.zip_with(a, b, lambda x, y: x == y), lambda e: e))
-
-    # rule 3: near-dup vs corpus — banded probe + signature verify
-    cand = (nb.join(cb, ["band", "bucket"])
+    cand = (band_buckets(new_sigs, id_col, bands).join(cb, ["band", "bucket"])
             .select(id_col, "__cid").dropDuplicates([id_col, "__cid"]))
-    corpus_victims = (cand.join(nsig, id_col).join(csig, "__cid")
-                      .where(fround(_agree("__sig", "__csig")
-                                    / F.lit(float(k)), 2) >= near_threshold)
+    corpus_victims = (_agreement(cand, new_sigs, ledger, id_col,
+                                 a=id_col, b="__cid")
+                      .where(fround(F.col("n_agree") / F.lit(float(k)), 2)
+                             >= near_threshold)
                       .select(id_col).distinct())
 
-    # rule 4: near-dup inside the batch — higher id loses (same
-    # candidates + verify as lsh_candidate_pairs, on the shared subplans)
-    a, b = nb.alias("a"), nb.alias("b")
-    bpairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-              .select(F.col(f"a.{id_col}").alias("__wa"),
-                      F.col(f"b.{id_col}").alias("__wb"))
-              .dropDuplicates(["__wa", "__wb"]))
-    batch_victims = (bpairs
-                     .join(nsig.select(F.col(id_col).alias("__wa"),
-                                       F.col("__sig").alias("__sa")),
-                           "__wa")
-                     .join(nsig.select(F.col(id_col).alias("__wb"),
-                                       F.col("__sig").alias("__sb")),
-                           "__wb")
-                     .where(fround(_agree("__sa", "__sb")
-                                   / F.lit(float(k)), 2) >= near_threshold)
-                     .select(F.col("__wb").alias(id_col)).distinct())
+    # rule 4: near-dup inside the batch — higher id loses
+    batch_victims = (lsh_candidate_pairs(new_sigs, id_col, bands,
+                                         near_threshold)
+                     .select(F.col("doc_b").alias(id_col)).distinct())
 
     return (keep
             .where(F.col("quality") >= min_quality)

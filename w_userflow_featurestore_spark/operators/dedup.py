@@ -18,11 +18,18 @@ Everything is built from deterministic, engine-portable primitives
 here has a full value-level oracle) and stays JVM-side: no Python UDFs,
 shingling via split/transform/sequence higher-order functions.
 
+Every pairwise op is filter-and-refine, one function per step: the
+exact-dup key ``content_hash``, the k min-hash aggregates
+``_minhash_aggs``, the bucket self-join ``_bucket_pairs``, the signature
+verify ``_agreement`` (agreeing minhashes, scaled by each caller; a
+signature's k is its count of mh columns) and the posting-list pair
+count ``_posting_pairs`` with its stop-posting cap.
+
 Scale design (100 TB): every op is one explode + one hash-partition
 shuffle on a derived key (content hash / band hash / shingle). Posting
-lists and buckets bound the join fan-out; skewed mega-buckets (stop-word
-shingles) should be dropped with ``max_bucket`` before the pair join —
-the standard guard in web-scale dedup pipelines.
+lists and buckets bound the join fan-out; skewed mega-postings (stop-word
+shingles) are dropped with ``max_posting`` before the pair join — the
+standard guard in web-scale dedup pipelines.
 """
 
 from __future__ import annotations
@@ -30,7 +37,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import fround, sql_ident, sql_str
+from w_userflow_featurestore_spark.functions import (
+    bp, fround, sql_ident, sql_str,
+)
 from w_userflow_featurestore_spark.sources import fan_out
 
 # ---------------------------------------------------------------------------
@@ -85,6 +94,11 @@ def normalize_text(col: str) -> Column:
     return F.expr(_norm_sql(col))
 
 
+def content_hash(col: str) -> Column:
+    """``content_hash``: md5 of the normalized text, the exact-dup key."""
+    return F.expr(f"md5({_norm_sql(col)})").alias("content_hash")
+
+
 def words(col: str) -> Column:
     """Normalized token array."""
     return F.expr(_words_sql(col))
@@ -128,15 +142,86 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
     standard first pass (hash is tiny vs text, so the exchange moves
     ~16 bytes/doc + id).
     """
-    h = F.expr(f"md5({_norm_sql(f'`{text_col}`')})")
     d = fan_out(docs.select(F.col(id_col), F.col(text_col))) \
-        .select(F.col(id_col), h.alias("content_hash"))
+        .select(F.col(id_col), content_hash(sql_ident(text_col)))
     w = Window.partitionBy("content_hash")
     return (d
             .withColumn("dup_count", F.count(F.lit(1)).over(w))
             .withColumn("keep",
                         F.when(F.col(id_col) == F.min(id_col).over(w), 1)
                          .otherwise(0)))
+
+
+# ---------------------------------------------------------------------------
+# near-duplicate core: candidates meet in a bucket or a posting list,
+# then one exact verify
+# ---------------------------------------------------------------------------
+
+
+def _self_join(rows: DataFrame, id_col: str, keys: tuple[str, ...],
+               carry: tuple[str, ...] = ()
+               ) -> tuple[DataFrame, list[Column]]:
+    """``rows`` joined to itself on all ``keys`` with a.id < b.id, and
+    the pair columns doc_a, doc_b, then ``{c}_a``, ``{c}_b`` per carry."""
+    a, b = rows.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys]
+    on.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    cols = [F.col(f"a.{id_col}").alias("doc_a"),
+            F.col(f"b.{id_col}").alias("doc_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+              for c in carry for s in "ab"]]
+    return a.join(b, on), cols
+
+
+def _bucket_pairs(banded: DataFrame, id_col: str, keys: tuple[str, ...],
+                  carry: tuple[str, ...] = ()) -> DataFrame:
+    """Distinct pairs sharing >= 1 bucket (``keys``): only keys, id and
+    carry move through the bucket shuffle."""
+    joined, cols = _self_join(banded, id_col, keys, carry)
+    return joined.select(*cols).dropDuplicates(["doc_a", "doc_b"])
+
+
+def _posting_pairs(postings: DataFrame, id_col: str, key: str,
+                   max_posting: int | None = None,
+                   carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_a, doc_b, carry..., common): how many ``key`` values each
+    pair shares. ``max_posting`` first drops every key held by more rows
+    (a stop-shingle in 1 M docs is 10^12 pairs and no information);
+    carry columns depend on the id alone, so they widen no group."""
+    if max_posting is not None:
+        ok = (postings.groupBy(key).agg(F.count(F.lit(1)).alias("pl"))
+                      .where(F.col("pl") <= max_posting))
+        postings = postings.join(ok.select(key), key, "left_semi")
+    joined, cols = _self_join(postings, id_col, (key,), carry)
+    return joined.groupBy(*cols).agg(F.count(F.lit(1)).alias("common"))
+
+
+def _signature_k(signatures: DataFrame) -> int:
+    """A signature frame's k: its number of mh0..mh{k-1} columns."""
+    cols = signatures.columns
+    return next(k for k in range(len(cols) + 1) if f"mh{k}" not in cols)
+
+
+def _minhash_aggs(k: int) -> list[Column]:
+    """The k seeded min-hash aggregates over a ``shingle`` column."""
+    return [F.expr(f"min({_hash60_sql('shingle', seed=i)})").alias(f"mh{i}")
+            for i in range(k)]
+
+
+def _agreement(pairs: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame,
+               id_col: str, a: str = "doc_a",
+               b: str = "doc_b") -> DataFrame:
+    """``pairs`` with ``n_agree``, the number of equal minhashes in the
+    signatures of ``a`` and ``b``. Each side's signature rejoins by id
+    once (a broadcast at small scale), never x bands through the bucket
+    join."""
+    sig = F.array(*[F.col(f"mh{i}") for i in range(_signature_k(sigs_a))])
+    return (pairs
+            .join(sigs_a.select(F.col(id_col).alias(a), sig.alias("sig_a")), a)
+            .join(sigs_b.select(F.col(id_col).alias(b), sig.alias("sig_b")), b)
+            .withColumn("n_agree", F.size(F.filter(
+                F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                lambda e: e))))
 
 
 # ---------------------------------------------------------------------------
@@ -156,21 +241,21 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
     use 128).
     """
     sh = exploded_shingles(docs, text_col, id_col, n)
-    aggs = [F.expr(f"min({_hash60_sql('shingle', seed=i)})").alias(f"mh{i}")
-            for i in range(k)]
-    return sh.groupBy(id_col).agg(*aggs)
+    return sh.groupBy(id_col).agg(*_minhash_aggs(k))
 
 
 def band_buckets(signatures: DataFrame, id_col: str = "doc_id",
-                 k: int = 8, bands: int = 4) -> DataFrame:
+                 bands: int = 4) -> DataFrame:
     """(id, band, bucket) rows from a minhash-signature table — the
     LSH index in its PERSISTABLE form. A band's bucket key is the md5 of
-    its ``k/bands`` concatenated minhashes; two docs are candidates iff
-    they share >=1 (band, bucket). Written to a ledger table, this is
-    what lets a new batch probe a 100 TB corpus without rescanning it
-    (see operators/curate.py incremental_curate)."""
+    its ``k/bands`` concatenated minhashes (k: the mh column count); two
+    docs are candidates iff they share >=1 (band, bucket). Written to a
+    ledger table, this is what lets a new batch probe a 100 TB corpus
+    without rescanning it (see operators/curate.py incremental_curate)."""
+    k = _signature_k(signatures)
+    if bands < 1 or k < 1 or k % bands:
+        raise ValueError(f"bands={bands} must divide the signature's k={k}")
     r = k // bands
-    assert bands * r == k, "k must be divisible by bands"
     structs = ",".join(
         "named_struct('band', {b}, 'bucket', md5(concat_ws(',', {cols})))"
         .format(b=b, cols=",".join(f"CAST(mh{i} AS STRING)"
@@ -182,8 +267,16 @@ def band_buckets(signatures: DataFrame, id_col: str = "doc_id",
     ).select(id_col, "bb.band", "bb.bucket")
 
 
+def _lsh_agreement(signatures: DataFrame, id_col: str,
+                   bands: int) -> DataFrame:
+    """The banded candidate pairs of ``signatures``, with n_agree."""
+    pairs = _bucket_pairs(band_buckets(signatures, id_col, bands), id_col,
+                          ("band", "bucket"))
+    return _agreement(pairs, signatures, signatures, id_col)
+
+
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
-                        k: int = 8, bands: int = 4,
+                        bands: int = 4,
                         min_est_jaccard: float = 0.5) -> DataFrame:
     """MinHash-LSH candidate pairs: signatures -> bands -> bucket join.
 
@@ -194,31 +287,9 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id",
     full-signature agreement fraction (the Jaccard estimate), filtered
     at ``min_est_jaccard``.
     """
-    # id-only band join: the bucket shuffle and pair dedup move
-    # (band, bucket, id); the k-wide signatures rejoin once per side for
-    # the agreement estimate (AQE broadcasts at small scale, one id-keyed
-    # shuffle at large) — never duplicated x bands through the join.
-    banded = band_buckets(signatures, id_col, k=k, bands=bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"))
-             .dropDuplicates(["doc_a", "doc_b"]))
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    sigs = signatures.select(F.col(id_col).alias("_sid"),
-                             sig_arr.alias("_sig"))
-    joined = (pairs
-              .join(sigs.select(F.col("_sid").alias("doc_a"),
-                                F.col("_sig").alias("sig_a")), "doc_a")
-              .join(sigs.select(F.col("_sid").alias("doc_b"),
-                                F.col("_sig").alias("sig_b")), "doc_b"))
-    agree = F.size(F.filter(
-        F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-        lambda e: e))
-    return (joined
-            .withColumn("est_jaccard", fround(agree / F.lit(float(k)), 2))
+    k = float(_signature_k(signatures))
+    return (_lsh_agreement(signatures, id_col, bands)
+            .withColumn("est_jaccard", fround(F.col("n_agree") / F.lit(k), 2))
             .where(F.col("est_jaccard") >= min_est_jaccard)
             .select("doc_a", "doc_b", "est_jaccard"))
 
@@ -229,7 +300,7 @@ def minhash_lsh_dedup(docs: DataFrame, text_col: str = "text",
                       min_est_jaccard: float = 0.5) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pair detection."""
     sigs = minhash_signatures(docs, text_col, id_col, n=n, k=k)
-    return lsh_candidate_pairs(sigs, id_col, k=k, bands=bands,
+    return lsh_candidate_pairs(sigs, id_col, bands=bands,
                                min_est_jaccard=min_est_jaccard)
 
 
@@ -261,26 +332,9 @@ def minhash_accuracy(docs: DataFrame, text_col: str = "text",
     if 10000 % k:
         raise ValueError(f"k={k} must divide 10000 for exact basis points")
     sigs = minhash_signatures(docs, text_col, id_col, n=n, k=k)
-    banded = band_buckets(sigs, id_col, k=k, bands=bands)
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"))
-             .dropDuplicates(["doc_a", "doc_b"]))
-    sig_arr = F.array(*[F.col(f"mh{i}") for i in range(k)])
-    sigs_n = sigs.select(F.col(id_col).alias("_sid"), sig_arr.alias("_sig"))
-    est = (pairs
-           .join(sigs_n.select(F.col("_sid").alias("doc_a"),
-                               F.col("_sig").alias("sig_a")), "doc_a")
-           .join(sigs_n.select(F.col("_sid").alias("doc_b"),
-                               F.col("_sig").alias("sig_b")), "doc_b")
+    est = (_lsh_agreement(sigs, id_col, bands)
            .withColumn("est_bp",
-                       (F.size(F.filter(F.zip_with("sig_a", "sig_b",
-                                                   lambda x, y: x == y),
-                                        lambda e: e))
-                        * F.lit(10000 // k)).cast("long"))
+                       (F.col("n_agree") * F.lit(10000 // k)).cast("long"))
            .where(F.col("est_bp") >= min_est_bp)
            .select("doc_a", "doc_b", "est_bp"))
     # Materialize the two SMALL intermediates executor-locally: est
@@ -301,15 +355,7 @@ def minhash_accuracy(docs: DataFrame, text_col: str = "text",
           .join(cand_ids, id_col, "left_semi")
           .localCheckpoint(eager=True))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    ok = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("pl"))
-            .where(F.col("pl") <= max_posting))
-    capped = sh.join(ok.select("shingle"), "shingle", "left_semi")
-    ca, cb = capped.alias("ca"), capped.alias("cb")
-    common = (ca.join(cb, (F.col("ca.shingle") == F.col("cb.shingle"))
-                      & (F.col(f"ca.{id_col}") < F.col(f"cb.{id_col}")))
-              .groupBy(F.col(f"ca.{id_col}").alias("doc_a"),
-                       F.col(f"cb.{id_col}").alias("doc_b"))
-              .agg(F.count(F.lit(1)).alias("common")))
+    common = _posting_pairs(sh, id_col, "shingle", max_posting)
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
     return (est
@@ -368,24 +414,13 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
           .select(F.col(id_col), wrapped)
           .select(F.col(id_col), F.col("_w.n").alias("sz"),
                   F.explode("_w.a").alias("shingle")))
-    if max_posting is not None:
-        ok = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("pl"))
-                .where(F.col("pl") <= max_posting))
-        sh = sh.join(ok.select("shingle"), "shingle", "left_semi")
-    a, b = sh.alias("a"), sh.alias("b")
-    return (a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .groupBy(F.col(f"a.{id_col}").alias("doc_a"),
-                      F.col(f"b.{id_col}").alias("doc_b"),
-                      F.col("a.sz").alias("sz_a"),
-                      F.col("b.sz").alias("sz_b"))
-             .agg(F.count(F.lit(1)).alias("common"))
-             .withColumn("jaccard",
-                         fround(F.col("common")
-                                / (F.col("sz_a") + F.col("sz_b")
-                                   - F.col("common")), 2))
-             .where(F.col("jaccard") >= threshold)
-             .select("doc_a", "doc_b", "jaccard"))
+    return (_posting_pairs(sh, id_col, "shingle", max_posting, carry=("sz",))
+            .withColumn("jaccard",
+                        fround(F.col("common")
+                               / (F.col("sz_a") + F.col("sz_b")
+                                  - F.col("common")), 2))
+            .where(F.col("jaccard") >= threshold)
+            .select("doc_a", "doc_b", "jaccard"))
 
 
 # ---------------------------------------------------------------------------
@@ -498,16 +533,9 @@ def simhash_near_pairs(signatures: DataFrame, id_col: str = "doc_id",
         F.col(id_col), F.col("simhash"),
         F.expr(f"explode(array({structs}))").alias("cb")
     ).select(id_col, "simhash", "cb.chunk", "cb.val")
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (a.join(b, (F.col("a.chunk") == F.col("b.chunk"))
-                    & (F.col("a.val") == F.col("b.val"))
-                    & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-             .select(F.col(f"a.{id_col}").alias("doc_a"),
-                     F.col(f"b.{id_col}").alias("doc_b"),
-                     F.col("a.simhash").alias("sig_a"),
-                     F.col("b.simhash").alias("sig_b"))
-             .dropDuplicates(["doc_a", "doc_b"]))
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    pairs = _bucket_pairs(banded, id_col, ("chunk", "val"),
+                          carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return (pairs.withColumn("hamming", hamming.cast("long"))
             .where(F.col("hamming") <= max_hamming)
             .select("doc_a", "doc_b", "hamming"))
@@ -538,10 +566,10 @@ def dedup_rate_report(docs: DataFrame, group_col: str = "source",
     with a distinct on (group, hash) — bounded by the distinct-content
     count, with map-side partial aggregation.
     """
-    h = F.expr(f"md5({_norm_sql(f'`{text_col}`')})")
     d = fan_out(docs.select(F.col(id_col), F.col(text_col),
                             F.col(group_col))) \
-        .select(F.col(id_col), F.col(group_col), h.alias("content_hash"))
+        .select(F.col(id_col), F.col(group_col),
+                content_hash(sql_ident(text_col)))
     w = Window.partitionBy("content_hash")
     tagged = d.withColumn(
         "keep", F.when(F.col(id_col) == F.min(id_col).over(w), 1)
@@ -553,9 +581,7 @@ def dedup_rate_report(docs: DataFrame, group_col: str = "source",
                  F.sum("keep").cast("long").alias("n_global_survivors"))
             .select(group_col, "n_docs", "n_unique",
                     "n_global_survivors",
-                    F.expr("CAST((CAST(n_docs - n_unique AS"
-                           " DECIMAL(38,0)) * 10000) DIV n_docs"
-                           " AS BIGINT)").alias("dup_rate_bp")))
+                    bp("n_docs - n_unique", "n_docs").alias("dup_rate_bp")))
 
 
 def ngram_novelty(docs: DataFrame, text_col: str = "text",
@@ -589,9 +615,7 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
             .agg(F.count(F.lit(1)).cast("long").alias("n_shingles"),
                  F.sum("novel").cast("long").alias("n_novel"))
             .select(F.col(id_col), "n_shingles", "n_novel",
-                    F.expr("CAST((CAST(n_novel AS DECIMAL(38,0)) * 10000)"
-                           " DIV n_shingles AS BIGINT)")
-                     .alias("novelty_bp")))
+                    bp("n_novel", "n_shingles").alias("novelty_bp")))
 
 
 def cross_source_overlap(docs: DataFrame, text_col: str = "text",
@@ -626,7 +650,7 @@ def cross_source_overlap(docs: DataFrame, text_col: str = "text",
     (|sources|^2 rows at most).
     """
     if unit is None:
-        unit = F.expr(f"md5({_norm_sql(f'`{text_col}`')})")
+        unit = content_hash(sql_ident(text_col))
     # Lineage cut: the distinct (unit, source) frame feeds THREE
     # consumers (both self-join sides + the per-source totals); without
     # it each consumer recomputes the unit expression over the corpus —
@@ -654,9 +678,7 @@ def cross_source_overlap(docs: DataFrame, text_col: str = "text",
                 F.col("src").alias("source_b"),
                 F.col("n_hashes").alias("ub"))), "source_b")
             .select("source_a", "source_b", "n_shared",
-                    F.expr("CAST((CAST(n_shared AS DECIMAL(38,0)) * 10000)"
-                           " DIV (ua + ub - n_shared) AS BIGINT)")
-                     .alias("jaccard_bp")))
+                    bp("n_shared", "ua + ub - n_shared").alias("jaccard_bp")))
 
 
 def quality_survivor_dedup(docs: DataFrame, text_col: str = "text",
@@ -788,6 +810,4 @@ def incremental_novelty(new_docs: DataFrame, ledger: DataFrame,
                  F.sum(F.when(F.col("_df") == 1, 1).otherwise(0))
                   .cast("long").alias("n_novel"))
             .select(F.col(id_col), "n_shingles", "n_novel",
-                    F.expr("CAST((CAST(n_novel AS DECIMAL(38,0)) * 10000)"
-                           " DIV n_shingles AS BIGINT)")
-                     .alias("novelty_bp")))
+                    bp("n_novel", "n_shingles").alias("novelty_bp")))

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import sql_ident, sql_str
+from w_userflow_featurestore_spark.functions import bp, sql_ident, sql_str
 from w_userflow_featurestore_spark.operators.dedup import text_hash60
 from w_userflow_featurestore_spark.operators.text import token_count_ws
 
@@ -572,9 +572,7 @@ def temperature_mix_weights(docs: DataFrame, budget_tokens: int,
     return (weights.crossJoin(F.broadcast(tot))
             .withColumn("_tot", guard)
             .select(source_col, "n_tokens", "weight_micro",
-                    F.expr("CAST((CAST(weight_micro AS DECIMAL(38,0))"
-                           " * 10000) DIV _tot AS BIGINT)")
-                     .alias("share_bp"),
+                    bp("weight_micro", "_tot").alias("share_bp"),
                     F.expr(f"CAST((CAST(weight_micro AS DECIMAL(38,0))"
                            f" * {int(budget_tokens)}) DIV _tot AS BIGINT)")
                      .alias("budget_tokens")))

@@ -17,10 +17,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from w_userflow_featurestore_spark.functions import (
-    exact_avg, fround, sql_ident,
+    bp, exact_avg, fround, sql_ident,
 )
 from w_userflow_featurestore_spark.operators.dedup import (
-    _hash60_sql, _norm_sql, _words_sql, normalize_text, text_hash60, words,
+    _hash60_sql, _norm_sql, _words_sql, content_hash, normalize_text,
+    text_hash60, words,
 )
 from w_userflow_featurestore_spark.sources import fan_out
 
@@ -166,7 +167,7 @@ def text_profile(docs: DataFrame, text_col: str = "text",
         lang_id(c).alias("lang_pred"),
         quality_score(c).alias("quality"),
         doc_fingerprint(c).alias("fingerprint"),
-        F.expr(f"md5({_norm_sql(c)})").alias("content_hash"),
+        content_hash(c),
     )
 
 
@@ -419,29 +420,21 @@ def fingerprint_pairs(docs: DataFrame, min_shared: int = 2,
     (<= max_doc_freq^2/2 per print, ~16 KiB of structs at the default
     cap), and one final exchange aggregates shared counts per pair.
     Pass ``max_doc_freq=None`` only for exhaustive runs on corpora
-    known to be bounded — that path is the classic inverted-index
-    self-join, quadratic in the hottest bucket."""
+    known to be bounded — it skips only the document-frequency filter,
+    so the hottest print's pair expansion is quadratic in its posting
+    list."""
     fp = winnow_fingerprints(docs, text_col, id_col, k, w)
-    if max_doc_freq is None:
-        a, b = fp.alias("a"), fp.alias("b")
-        return (a.join(b, (F.col("a.fingerprint") == F.col("b.fingerprint"))
-                       & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-                 .select(F.col(f"a.{id_col}").alias("doc_a"),
-                         F.col(f"b.{id_col}").alias("doc_b"))
-                 .groupBy("doc_a", "doc_b")
-                 .agg(F.count(F.lit(1)).alias("n_shared"))
-                 .where(F.col("n_shared") >= min_shared))
-    win = Window.partitionBy("fingerprint")
+    if max_doc_freq is not None:
+        win = Window.partitionBy("fingerprint")
+        fp = (fp.withColumn("_df", F.count(F.lit(1)).over(win))
+                .where(F.col("_df") <= max_doc_freq))
     ids = F.array_sort(F.collect_list(id_col)).alias("ids")
     arr, n = F.col("ids"), F.size("ids")
     pairs = F.flatten(F.transform(
         arr, lambda x, i: F.transform(
             F.slice(arr, i + 2, n),
             lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")))))
-    return (fp
-            .withColumn("_df", F.count(F.lit(1)).over(win))
-            .where(F.col("_df") <= max_doc_freq)
-            .groupBy("fingerprint").agg(ids)
+    return (fp.groupBy("fingerprint").agg(ids)
             .select(F.explode(pairs).alias("p"))
             .select(F.col("p.doc_a"), F.col("p.doc_b"))
             .groupBy("doc_a", "doc_b")
@@ -1252,9 +1245,7 @@ def bpe_apply(docs: DataFrame, merges: list[tuple],
                  F.sum(F.col("cnt") * F.col("n_syms")).cast("long")
                   .alias("n_tokens"))
             .select(F.col(id_col), "n_words", "n_tokens",
-                    F.expr("CAST((CAST(n_tokens AS DECIMAL(38,0))"
-                           " * 10000) DIV n_words AS BIGINT)")
-                     .alias("tokens_per_word_bp")))
+                    bp("n_tokens", "n_words").alias("tokens_per_word_bp")))
 
 BPE_MERGE_SCHEMA = ("tokenizer_version long, merge_rank long,"
                     " left_sym string, right_sym string,"
@@ -1450,17 +1441,13 @@ def quality_rule_report(docs: DataFrame, group_col: str = "source", *,
         F.sum(F.when(F.col("keep"), 1).otherwise(0))
          .cast("long").alias("_n_keep"))
 
-    def bp(src: str) -> Column:
-        return F.expr(f"CAST((CAST({src} AS DECIMAL(38,0)) * 10000)"
-                      f" DIV n_docs AS BIGINT)")
-
     return counts.select(
         group_col, "n_docs",
-        bp("_f_len").alias("fail_length_bp"),
-        bp("_f_q").alias("fail_quality_bp"),
-        bp("_f_rep").alias("fail_repetition_bp"),
-        bp("_f_lang").alias("fail_lang_bp"),
-        bp("_n_keep").alias("keep_bp"))
+        bp("_f_len", "n_docs").alias("fail_length_bp"),
+        bp("_f_q", "n_docs").alias("fail_quality_bp"),
+        bp("_f_rep", "n_docs").alias("fail_repetition_bp"),
+        bp("_f_lang", "n_docs").alias("fail_lang_bp"),
+        bp("_n_keep", "n_docs").alias("keep_bp"))
 
 
 def ccnet_curate(docs: DataFrame, *, middle_keep_bp: int = 500,
@@ -1570,8 +1557,6 @@ def bpe_version_drift(spark, table_path: str, docs: DataFrame,
                          F.size(_bpe_symbols(col_old)).cast("long"))
              .withColumn("_n_new",
                          F.size(_bpe_symbols(col_new)).cast("long")))
-    bp = ("CAST((CAST({tok} AS DECIMAL(38,0)) * 10000)"
-          " DIV n_words AS BIGINT)")
     return (enc.groupBy(id_col)
             .agg(F.sum("cnt").cast("long").alias("n_words"),
                  F.sum(F.col("cnt") * F.col("_n_old")).cast("long")
@@ -1579,8 +1564,8 @@ def bpe_version_drift(spark, table_path: str, docs: DataFrame,
                  F.sum(F.col("cnt") * F.col("_n_new")).cast("long")
                   .alias("new_tokens"))
             .select(F.col(id_col), "n_words", "old_tokens", "new_tokens",
-                    F.expr(bp.format(tok="old_tokens")).alias("old_bp"),
-                    F.expr(bp.format(tok="new_tokens")).alias("new_bp"))
+                    bp("old_tokens", "n_words").alias("old_bp"),
+                    bp("new_tokens", "n_words").alias("new_bp"))
             .withColumn("drift_bp",
                         (F.col("old_bp") - F.col("new_bp"))
                         .cast("long")))
@@ -1784,5 +1769,4 @@ def lang_id_confusion(docs: DataFrame, text_col: str = "text",
     w = Window.partitionBy("lang")
     return (g.withColumn("_tot", F.sum("n_docs").over(w))
             .select("lang", "lang_pred", "n_docs",
-                    F.expr("CAST((CAST(n_docs AS DECIMAL(38,0)) * 10000)"
-                           " DIV _tot AS BIGINT)").alias("share_bp")))
+                    bp("n_docs", "_tot").alias("share_bp")))
