@@ -578,6 +578,48 @@ def test_bpe_pair_counts_weighted_by_word_freq(spark):
     assert TX.bpe_pair_counts(single).count() == 0
 
 
+def test_bpe_pair_counts_are_the_unmerged_pair_stats(spark):
+    """bpe_pair_counts is bpe_pair_stats over bpe_train's unmerged
+    symbolization, printed "left right", cut to the top k by
+    (count DESC, pair ASC)."""
+    docs = spark.createDataFrame(
+        [(1, "abab abc ab"), (2, "cab cab b"), (3, "zz ba a")],
+        "doc_id long, text string")
+    _, unmerged = TX.bpe_train(docs, n_merges=0)
+    stats = sorted((-r["n_occurrences"], f"{r['left_sym']} {r['right_sym']}")
+                   for r in TX.bpe_pair_stats(unmerged).collect())
+    want = [(pair, -neg) for neg, pair in stats[:4]]
+    got = [(r["pair"], r["n_occurrences"])
+           for r in TX.bpe_pair_counts(docs, k=4).collect()]
+    assert got == want and len(stats) > 4
+
+
+def test_whole_bits_is_floor_log2(spark):
+    """functions.whole_bits(num, den) = floor(log2(num / den)) on hand
+    values and on DECIMAL(38,0) products shaped like
+    pmi_collocations'; a quotient of 0 (num < den) reads 0 bits."""
+    import math
+
+    from w_userflow_featurestore_spark.functions import whole_bits
+    hand = [(1, 1), (9, 8), (9, 1), (2 ** 40, 3)]
+    got = spark.createDataFrame(hand + [(3, 9)], "num long, den long") \
+        .select(whole_bits("num", "den").alias("b")).collect()
+    assert [r["b"] for r in got] == [
+        math.floor(math.log2(n / d)) for n, d in hand] + [0]
+    assert [r["b"] for r in got] == [0, 0, 3, 38, 0]
+    # (n_pair, t_total, c1, c2): products past BIGINT, quotient inside it
+    pmi = [(10 ** 9, 4 * 10 ** 18, 10 ** 9, 10 ** 9),
+           (10 ** 18, 4 * 10 ** 18, 10 ** 18, 10 ** 18),
+           (3, 4 * 10 ** 18, 2 * 10 ** 9, 3 * 10 ** 9)]
+    num = "CAST(a AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))"
+    den = "CAST(c1 AS DECIMAL(38,0)) * CAST(c2 AS DECIMAL(38,0))"
+    got = spark.createDataFrame(pmi, "a long, t long, c1 long, c2 long") \
+        .select(whole_bits(num, den).alias("b")).collect()
+    assert [r["b"] for r in got] == [
+        (a * t // (c1 * c2)).bit_length() - 1 for a, t, c1, c2 in pmi]
+    assert [r["b"] for r in got] == [31, 2, 1]
+
+
 # --------------------------------------------------------- persisted IVF
 
 def test_ivf_index_search_equals_inline_ivf(spark, tmp_path):
@@ -900,6 +942,41 @@ def test_bpe_save_reads_the_log_once_per_replayed_publish(spark, tmp_path):
     assert got["replay"] == got["new"] and got["new"][0] == 2
 
 
+def test_racing_bpe_save_publishes_each_version_once(spark, tmp_path,
+                                                     monkeypatch):
+    """A rival publish that lands between bpe_save's registry read and
+    its append makes the stale save raise ConcurrentCommitError instead
+    of stamping the rival's version a second time: the version stays
+    loadable, latest and pinned, and a re-run publishes the next one."""
+    from w_userflow_featurestore_spark.operators.text import (
+        bpe_load, bpe_save,
+    )
+    from w_userflow_featurestore_spark.sources import (
+        ConcurrentCommitError, LogTable,
+    )
+    path = str(tmp_path / "tokenizer")
+    mine = [(1, "a", "b", "ab", 3)]
+    rival = [(1, "c", "d", "cd", 5), (2, "cd", "e", "cde", 2)]
+    assert bpe_save(spark, path, mine)[0] == 1
+    real_state, published = LogTable.state, []
+
+    def state_then_rival_publish(self):
+        st = real_state(self)
+        if not published:
+            published.append(None)
+            published[0] = bpe_save(spark, path, rival)
+        return st
+
+    monkeypatch.setattr(LogTable, "state", state_then_rival_publish)
+    with pytest.raises(ConcurrentCommitError):
+        bpe_save(spark, path, mine)
+    monkeypatch.undo()
+    assert published[0][0] == 2
+    assert bpe_load(spark, path) == bpe_load(spark, path, 2) == rival
+    assert bpe_save(spark, path, mine)[0] == 3
+    assert bpe_load(spark, path) == mine
+
+
 def test_bpe_registry_empty_merge_list_is_a_real_version(spark, tmp_path):
     """A fully-fused (or n_merges=0) training run publishes a version
     with ZERO merges — that must load back as [], not read as 'version
@@ -975,6 +1052,31 @@ def test_bpe_version_drift_prefix_stability_and_sign(spark, tmp_path):
     assert out and all(r["drift_bp"] >= 0 for r in out)
     assert all(r["old_tokens"] >= r["new_tokens"] for r in out)
     assert any(r["drift_bp"] > 0 for r in out)   # the upgrade changed SOMETHING
+
+
+def test_bpe_version_drift_equals_two_bpe_apply_passes(spark, tmp_path):
+    """bpe_version_drift's n_words, old_tokens and new_tokens are two
+    bpe_apply passes, one per version, joined on doc_id; a doc with no
+    countable word has no row in either."""
+    from w_userflow_featurestore_spark.operators.text import (
+        bpe_apply, bpe_save, bpe_version_drift,
+    )
+    docs = spark.createDataFrame(
+        [(1, "abab abc ab"), (2, "cab cab b"), (3, ""), (4, "x")],
+        "doc_id long, text string")
+    old = [(1, "a", "b", "ab", 4)]
+    new = old + [(2, "ab", "c", "abc", 1)]
+    path = str(tmp_path / "tokenizer")
+    v_old, _ = bpe_save(spark, path, old)
+    v_new, _ = bpe_save(spark, path, new)
+    cols = ("doc_id", "n_words", "old_tokens", "new_tokens")
+    got = rows(bpe_version_drift(spark, path, docs, v_old, v_new), *cols)
+    a = bpe_apply(docs, old).select(
+        "doc_id", "n_words", F.col("n_tokens").alias("old_tokens"))
+    b = bpe_apply(docs, new).select(
+        "doc_id", F.col("n_tokens").alias("new_tokens"))
+    assert got == rows(a.join(b, "doc_id"), *cols)
+    assert got == [(1, 3, 5, 4), (2, 3, 5, 5), (4, 1, 1, 1)]
 
 
 def test_bpe_registry_streaming_publish_exactly_once(spark, tmp_path):

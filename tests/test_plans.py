@@ -624,10 +624,11 @@ def test_bigram_surprisal_builds_pairs_row_locally(spark):
     df = _q(spark, "bigram_surprisal")
     plan = physical_plan(df)
     assert "rangepartitioning" not in plan.lower()
-    # round 12: the (doc, w1, w2) partial aggregate is shared by the LM
+    # the (doc, w1, w2) partial aggregate is shared by the LM
     # re-aggregate and the scoring join (one bigram build pass, AQE
-    # ReusedExchange at runtime) — static exchange count rose by the
-    # duplicated-in-plan shared subtree, actual passes fell.
+    # ReusedExchange at runtime); the static plan prints the shared
+    # subtree in both branches, so its exchange count is higher than
+    # the passes that run.
     assert_plan(df, max_shuffles=9, max_sort_merge_joins=0)
 
 
@@ -1188,15 +1189,16 @@ def test_every_query_has_a_plan_pin():
 
 
 def test_shared_gram_aggregate_reuses_exchange_at_runtime(spark):
-    """Round-12 restructure of the surprisal/DSIR family: the
+    """In the surprisal/DSIR family the
     (doc, gram) partial aggregate feeds both the LM/weight re-aggregate
     and the scoring join, so the gram explode + hash map pass runs ONCE
     — provable only in the FINAL adaptive plan, where the second
     consumer must read a ReusedExchange/ReusedQueryStage instead of
     recomputing the subtree (the static plan prints the shared subtree
-    per branch, which is why these queries' static shuffle caps rose)."""
+    per branch, which is why these queries' static shuffle caps exceed
+    the passes that run)."""
     from w_userflow_featurestore_spark.plans import final_plan
-    # quantile_sketch joined the list in round 12: its repartition
+    # quantile_sketch: its repartition
     # establishes the datetime clustering BOTH aggregate branches need,
     # so the sessionize subtree executes once and the rank branch reads
     # the reused exchange.

@@ -14,7 +14,7 @@ import w_userflow_featurestore_spark.operators.experiment as EXP
 import w_userflow_featurestore_spark.operators.sampling as SMP
 import w_userflow_featurestore_spark.operators.similarity as SIM
 import w_userflow_featurestore_spark.operators.text as TX
-from w_userflow_featurestore_spark.functions import bp, sql_str
+from w_userflow_featurestore_spark.functions import bp, sql_str, whole_bits
 from w_userflow_featurestore_spark.operators.sketch import cms_build
 
 # a quote, a backslash that the SQL parser would read as ``\n``, and both
@@ -57,6 +57,7 @@ HELPERS = [
     (SIM.quantize, ()), (SIM.dot_q, ("b",)), (SIM.norm_q, ()),
     (SIM.bucket_q, ()), (SIM.l2_q, ("b",)),
     (SMP.hash_bucket, ()), (EXP.ab_assign, ()), (bp, ("a",)),
+    (whole_bits, ("a",)),
 ]
 
 

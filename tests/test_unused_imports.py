@@ -1,7 +1,9 @@
 """Lint: no library module imports a name it never uses, no library
 function takes a parameter it never reads, no library module uses an
-``assert`` statement, and only ``functions.bp`` spells out the
-basis-point expression.
+``assert`` statement, no function re-imports from a module its file
+already imports from at module level, and only ``functions.bp`` and
+``functions.whole_bits`` spell out the basis-point and whole-bit log
+expressions.
 
 Small AST passes instead of a linter dependency. An import counts as
 used when its name appears as an identifier anywhere in the module or
@@ -14,7 +16,9 @@ such as a ``foreachBatch`` batch id) are exempt. ``python -O`` strips
 every ``assert``, so a library check on its arguments raises instead.
 A string literal (adjacent literals and f-string pieces are joined by
 the parser) spells out a basis point when it holds the
-``BP_FRAGMENT`` of ``functions.bp``, whitespace ignored.
+``BP_FRAGMENT`` of ``functions.bp``, whitespace ignored; it spells
+out a whole-bit log when it holds ``length(bin(``, whitespace and case
+ignored, as does an ``F.length(F.bin(...))`` call.
 """
 
 from __future__ import annotations
@@ -90,6 +94,42 @@ def bp_spellings(source: str) -> list[int]:
                   and frag in re.sub(r"\s+", "", n.value))
 
 
+def redundant_local_imports(source: str) -> list[int]:
+    """Line of every function-local ``from X import`` whose module ``X``
+    the file already imports from at module level."""
+    tree = ast.parse(source)
+    top = {(n.module, n.level) for n in tree.body
+           if isinstance(n, ast.ImportFrom)}
+    return sorted({n.lineno for fn in ast.walk(tree)
+                   if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                   for n in ast.walk(fn)
+                   if isinstance(n, ast.ImportFrom)
+                   and (n.module, n.level) in top})
+
+
+WHOLE_BITS_FRAGMENT = "length(bin("
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def whole_bit_spellings(source: str) -> list[int]:
+    """Line of every string literal holding ``WHOLE_BITS_FRAGMENT`` and
+    of every ``length(bin(...))`` call."""
+    out = []
+    for n in ast.walk(ast.parse(source)):
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if WHOLE_BITS_FRAGMENT in re.sub(r"\s+", "", n.value).lower():
+                out.append(n.lineno)
+        elif (isinstance(n, ast.Call) and _callee(n) == "length" and n.args
+              and isinstance(n.args[0], ast.Call)
+              and _callee(n.args[0]) == "bin"):
+            out.append(n.lineno)
+    return sorted(out)
+
+
 def test_checker_flags_only_unused_names():
     src = ("from __future__ import annotations\n"
            "import os\nimport json\n"
@@ -132,6 +172,32 @@ def test_bp_checker_flags_each_spelled_out_basis_point():
     assert len(bp_spellings(BP_HOME.read_text())) == 1
 
 
+def test_local_import_checker_flags_only_repeated_modules():
+    src = ("from a import b\nimport c\n"
+           "def f():\n"
+           "    from a import d\n"
+           "    from e import g\n"
+           "    import c\n"
+           "    return b, c, d, g\n"
+           "class K:\n"
+           "    def m(self):\n"
+           "        from a import h\n"
+           "        from .a import i\n"
+           "        return h, i\n")
+    assert redundant_local_imports(src) == [4, 10]
+
+
+def test_whole_bits_checker_flags_both_spellings():
+    src = ('a = "length(bin(n DIV d)) - 1"\n'
+           'b = F.length(F.bin(F.expr("n DIV d"))) - 1\n'
+           'c = f"LENGTH( BIN({x}))"\n'
+           'd = "length(x) + bin(y)"\n'
+           'e = F.length(F.col("bin"))\n'
+           'f = length(bin(7))\n')
+    assert whole_bit_spellings(src) == [1, 2, 3, 6]
+    assert len(whole_bit_spellings(BP_HOME.read_text())) == 1
+
+
 @pytest.mark.parametrize("path", MODULES,
                          ids=[str(p.relative_to(PKG)) for p in MODULES])
 def test_library_module_has_no_unused_imports(path):
@@ -160,3 +226,15 @@ NOT_BP_HOME = [p for p in ALL_MODULES if p != BP_HOME]
                          ids=[str(p.relative_to(PKG)) for p in NOT_BP_HOME])
 def test_only_functions_bp_spells_out_a_basis_point(path):
     assert bp_spellings(path.read_text()) == []
+
+
+@pytest.mark.parametrize("path", ALL_MODULES,
+                         ids=[str(p.relative_to(PKG)) for p in ALL_MODULES])
+def test_no_function_reimports_a_module_level_import(path):
+    assert redundant_local_imports(path.read_text()) == []
+
+
+@pytest.mark.parametrize("path", NOT_BP_HOME,
+                         ids=[str(p.relative_to(PKG)) for p in NOT_BP_HOME])
+def test_only_functions_whole_bits_spells_out_a_whole_bit_log(path):
+    assert whole_bit_spellings(path.read_text()) == []

@@ -36,6 +36,15 @@ def bp(num: str, den: str) -> Column:
                   f" DIV ({den}) AS BIGINT)")
 
 
+def whole_bits(num: str, den: str) -> Column:
+    """floor(log2(num / den)) as INT for positive SQL fragments with
+    ``num >= den``, and 0 when ``num < den``: the bit length of
+    ``num DIV den`` minus one. Exact integer arithmetic (the binary
+    string's length, never a floating-point log whose last ulp differs
+    between engines); a DECIMAL(38,0) quotient must fit a BIGINT."""
+    return F.expr(f"length(bin(CAST(({num}) DIV ({den}) AS BIGINT))) - 1")
+
+
 def fround(col: Column, scale: int = 2) -> Column:
     """Deterministic cross-engine rounding: floor(x*10^s + 0.5)/10^s.
 

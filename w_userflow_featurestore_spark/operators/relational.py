@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import exact_sum
+from w_userflow_featurestore_spark.functions import (
+    exact_sum, fround, scaled_long,
+)
 
 
 def _day(ts_col: str) -> F.Column:
@@ -116,7 +118,6 @@ def above_group_avg(df: DataFrame, group_col: str, value_col: str,
     double-precision average on either side of the ``>``); the average
     is rescaled to a display column only after the filter.
     """
-    from w_userflow_featurestore_spark.functions import fround, scaled_long
     p = float(10 ** scale)
     per_group = df.groupBy(group_col).agg(
         F.sum(scaled_long(F.col(value_col), scale)).alias("__sum_c"),

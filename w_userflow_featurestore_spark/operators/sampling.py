@@ -16,9 +16,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import bp, sql_ident, sql_str
-from w_userflow_featurestore_spark.operators.dedup import text_hash60
-from w_userflow_featurestore_spark.operators.text import token_count_ws
+from w_userflow_featurestore_spark.functions import (
+    bp, sql_ident, sql_str, whole_bits,
+)
+from w_userflow_featurestore_spark.operators.dedup import (
+    _hash60_sql, _words_sql, connected_components, text_hash60,
+)
+from w_userflow_featurestore_spark.operators.text import (
+    token_count_ws, token_surprisal,
+)
 
 N_BUCKETS = 1000
 
@@ -201,9 +207,6 @@ def component_ledger(docs: DataFrame, pairs: DataFrame,
     batch WITHOUT recomputing corpus-internal near-dup pairs (see
     :func:`incremental_leakage_split`). group_key = the doc's connected
     component's smallest member id; singletons map to themselves."""
-    from w_userflow_featurestore_spark.operators.dedup import (
-        connected_components,
-    )
     comp = (connected_components(pairs, pair_a, pair_b)
             .select(F.col("doc_id").alias(id_col), "component"))
     # no cast on the group key: connected_components preserves the id
@@ -385,9 +388,6 @@ def split_leakage_audit(pairs: DataFrame,
     p = pairs.select(pair_a, pair_b)
     naive = cells(split_of(sql_ident(pair_a)), split_of(sql_ident(pair_b)),
                   "doc_hash", p)
-    from w_userflow_featurestore_spark.operators.dedup import (
-        connected_components,
-    )
     comp = connected_components(pairs, pair_a, pair_b)
     ca = comp.select(F.col("doc_id").alias(pair_a),
                      F.col("component").alias("_ga"))
@@ -593,8 +593,9 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     top-k cut.
 
     Exact cross-engine arithmetic: the log-ratio is quantized to
-    SIGNED WHOLE BITS, ``lb(num DIV den) - lb(den DIV num)`` with
-    ``lb(x) = bit_length(x) - 1`` (and lb(0) = 0), where
+    SIGNED WHOLE BITS, ``whole_bits(num, den) - whole_bits(den, num)``
+    (:func:`~w_userflow_featurestore_spark.functions.whole_bits`, which
+    is 0 when its quotient is 0), where
     num = (t_f + 1) * (R + n_features) and
     den = (r_f + 1) * (T + n_features) — add-one smoothed target/raw
     feature probabilities cross-multiplied into integers, widened to
@@ -619,9 +620,6 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     pass over the corpus, no token-grain materialization and no
     recomputation of the token-grain subtree per consumer.
     """
-    from w_userflow_featurestore_spark.operators.dedup import (
-        _hash60_sql, _words_sql,
-    )
     from w_userflow_featurestore_spark.sources import fan_out
 
     def grams(frame: DataFrame, *extra_cols: str) -> DataFrame:
@@ -680,19 +678,15 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
                          .alias("_T"))
     r_tot = r_counts.agg(F.coalesce(F.sum("r_f"), F.lit(0))
                          .alias("_R"))
-    lb = ("(length(bin({x})) - 1)")
-    num = (f"(CAST(coalesce(t_f, 0) + 1 AS DECIMAL(38,0))"
-           f" * (_R + {n_features}))")
-    den = (f"(CAST(coalesce(r_f, 0) + 1 AS DECIMAL(38,0))"
-           f" * (_T + {n_features}))")
+    num = (f"CAST(coalesce(t_f, 0) + 1 AS DECIMAL(38,0))"
+           f" * (_R + {n_features})")
+    den = (f"CAST(coalesce(r_f, 0) + 1 AS DECIMAL(38,0))"
+           f" * (_T + {n_features})")
     weights = (r_counts.join(t_counts, "f", "full_outer")
                .crossJoin(F.broadcast(t_tot))
                .crossJoin(F.broadcast(r_tot))
                .select("f",
-                       (F.expr(lb.format(x=f"CAST({num} DIV {den}"
-                                           f" AS BIGINT)"))
-                        - F.expr(lb.format(x=f"CAST({den} DIV {num}"
-                                             f" AS BIGINT)")))
+                       (whole_bits(num, den) - whole_bits(den, num))
                        .cast("long").alias("w_bits")))
     return (doc_feats.join(F.broadcast(weights), "f")
             .groupBy(id_col)
@@ -943,9 +937,6 @@ def curriculum_order(docs: DataFrame, n_stages: int = 4,
         raise ValueError("n_stages must be >= 2")
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    from w_userflow_featurestore_spark.operators.text import (
-        token_surprisal,
-    )
     scored = (token_surprisal(docs, text_col, id_col)
               .select(F.col(id_col), "mean_bits")
               .localCheckpoint(eager=True))

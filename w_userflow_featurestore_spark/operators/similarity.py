@@ -50,7 +50,7 @@ import hashlib
 import os
 
 from w_userflow_featurestore_spark.functions import bp, fround, sql_ident
-from w_userflow_featurestore_spark.sources import fan_out
+from w_userflow_featurestore_spark.sources import LogTable, fan_out
 
 SCALE = 1_000_000  # 1e6 quantization: 64-dim unit vectors -> |dot| <= 6.4e13
 
@@ -584,7 +584,6 @@ def ivf_index_build(corpus: DataFrame, table_path: str,
     query-time work is probe + dot products — no per-query corpus
     re-quantization. Returns the vectors table's snapshot id.
     """
-    from w_userflow_featurestore_spark.sources import LogTable
     spark = corpus.sparkSession
     ct = LogTable.create(spark, os.path.join(table_path, "centroids"), [])
     if ct.latest_snapshot_id() is not None:
@@ -608,7 +607,6 @@ def ivf_index_append(spark, table_path: str, new_vecs: DataFrame,
     exactly-once, so a foreachBatch can feed the index directly.
     The stored centroids are read back as the model (k rows, one
     small job) so the cell count and dims come off the data."""
-    from w_userflow_featurestore_spark.sources import LogTable
     stored = LogTable(spark, os.path.join(table_path, "centroids")).read()
     rows = sorted(stored.collect(), key=lambda r: r["cell"])
     model = _quantizer(spark, [r["cv"] for r in rows])
@@ -627,7 +625,6 @@ def ivf_index_search(spark, table_path: str, queries: DataFrame,
     materialization is the probed cell-id list — model-sized
     (<= n_centroids), needed to push the cell predicate into the
     MANIFEST before Spark lists the scan."""
-    from w_userflow_featurestore_spark.sources import LogTable
     cells = LogTable(spark, os.path.join(table_path, "centroids")).read()
     q = _quantized(queries, id_col, vec_col, "q_id", "q_vec",
                    with_norm="q_norm", spread=False)

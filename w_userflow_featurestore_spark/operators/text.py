@@ -1,11 +1,14 @@
-"""Text-analysis operators: language ID, quality scoring, token counts,
-document fingerprinting.
+"""Text-analysis operators: language ID, quality scoring, repetition and
+PII signals, document fingerprinting and span dedup, and corpus
+statistics (token counts, surprisal, BPE, TF-IDF, PMI).
 
-The per-document members of the 100 TB extension family (SURVEY.md §7.2
-M6). Everything here is ROW-LOCAL — pure column expressions, no shuffle,
-no UDF — so the ops scale linearly and pipeline into the same scan as
-any downstream filter (a quality-threshold filter composes into the
-parquet scan's predicate pushdown).
+The per-document signals (SURVEY.md §7.2 M6) are ROW-LOCAL — pure
+column expressions, no shuffle, no UDF — so they scale linearly and
+pipeline into the same scan as any downstream filter (a
+quality-threshold filter composes into the parquet scan's predicate
+pushdown). The corpus-statistics operators share one private path per
+step: ``_tokens``, ``_counts``, ``_top_tokens``, ``_bigrams``,
+``_surprisal_profile`` and the ``_bpe_*`` encoder.
 
 All primitives are engine-portable (split/filter/transform higher-order
 functions + md5 hashing) so each op has a full DuckDB value oracle.
@@ -17,13 +20,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from w_userflow_featurestore_spark.functions import (
-    bp, exact_avg, fround, sql_ident,
+    bp, exact_avg, fround, sql_ident, whole_bits,
 )
 from w_userflow_featurestore_spark.operators.dedup import (
     _hash60_sql, _norm_sql, _words_sql, content_hash, normalize_text,
     text_hash60, words,
 )
-from w_userflow_featurestore_spark.sources import fan_out
+from w_userflow_featurestore_spark.sources import LogTable, fan_out
 
 # Tiny per-language stopword profiles for the n-gram/stopword language-ID
 # heuristic. Order is the deterministic tie-break (earlier wins).
@@ -237,6 +240,19 @@ def _top_fracs(ws: str, n: str) -> tuple[Column, Column]:
     return top_word, top_bigram
 
 
+def _repetition(n: Column, n_distinct: Column, top_word: Column,
+                top_bigram: Column, top_word_max: float,
+                top_bigram_max: float,
+                distinct_min: float) -> tuple[Column, Column]:
+    """(distinct_ratio, repetitive): the distinct-word ratio and the
+    repetition flag, set when any of the three unrounded signals
+    crosses its threshold."""
+    distinct_ratio = n_distinct.cast("double") / n
+    return distinct_ratio, ((top_word > F.lit(top_word_max))
+                            | (top_bigram > F.lit(top_bigram_max))
+                            | (distinct_ratio < F.lit(distinct_min)))
+
+
 def repetition_profile(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", *,
                        top_word_max: float = 0.20,
@@ -262,7 +278,9 @@ def repetition_profile(docs: DataFrame, text_col: str = "text",
            .withColumn("__tw", top_word)
            .withColumn("__tb", top_bigram))
     n, tw, tb = F.col("__n"), F.col("__tw"), F.col("__tb")
-    distinct_ratio = F.col("__nd").cast("double") / n
+    distinct_ratio, repetitive = _repetition(
+        n, F.col("__nd"), tw, tb, top_word_max, top_bigram_max,
+        distinct_min)
     return out.select(
         F.col(id_col),
         n.cast("long").alias("n_words"),
@@ -270,10 +288,7 @@ def repetition_profile(docs: DataFrame, text_col: str = "text",
         fround(distinct_ratio, 4).alias("distinct_word_ratio"),
         fround(tw, 4).alias("top_word_frac"),
         fround(tb, 4).alias("top_bigram_frac"),
-        ((tw > F.lit(top_word_max))
-         | (tb > F.lit(top_bigram_max))
-         | (distinct_ratio < F.lit(distinct_min)))
-        .cast("int").alias("repetitive"))
+        repetitive.cast("int").alias("repetitive"))
 
 
 def corpus_language_stats(docs: DataFrame, text_col: str = "text",
@@ -302,6 +317,64 @@ def corpus_language_stats(docs: DataFrame, text_col: str = "text",
                   F.sum("n_tokens_ws").alias("total_tokens")))
 
 
+def _tokens(docs: DataFrame, text_col: str, *carry: str) -> DataFrame:
+    """(*carry, token): one row per non-empty normalized word of each
+    document, the ``carry`` columns riding along."""
+    return (fan_out(docs.select(*carry, text_col))
+            .select(*carry,
+                    F.explode(words(sql_ident(text_col))).alias("token"))
+            .where(F.col("token") != ""))
+
+
+def _counts(grams: DataFrame, n: str, *keys: str) -> DataFrame:
+    """(*keys, n): occurrences of each distinct ``keys`` tuple; the
+    map-side partial combine absorbs hot grams before the shuffle."""
+    return grams.groupBy(*keys).agg(F.count(F.lit(1)).alias(n))
+
+
+def _top_tokens(toks: DataFrame, k: int, n: str) -> DataFrame:
+    """The ``k`` most frequent (token, n) of a token stream as a
+    TakeOrdered top-k; ties break on the token, so the boundary is
+    deterministic in any engine."""
+    return (_counts(toks, n, "token")
+            .orderBy(F.desc(n), F.asc("token"))
+            .limit(k))
+
+
+def _bigrams(docs: DataFrame, text_col: str, *carry: str) -> DataFrame:
+    """(*carry, w1, w2): every adjacent word pair of each document,
+    built row-locally from its word array (no self-join, no window);
+    documents with fewer than two words yield none."""
+    ws = words(sql_ident(text_col))
+    pairs = F.transform(
+        F.sequence(F.lit(1), F.size(ws) - 1),
+        lambda i: F.struct(F.element_at(ws, i).alias("w1"),
+                           F.element_at(ws, i + 1).alias("w2")))
+    return (fan_out(docs.select(*carry, text_col))
+            .where(F.size(ws) >= 2)      # sequence(1,0) would descend
+            .select(*carry, F.explode(pairs).alias("p"))
+            .select(*carry, F.col("p.w1").alias("w1"),
+                    F.col("p.w2").alias("w2"))
+            .where((F.col("w1") != "") & (F.col("w2") != "")))
+
+
+def _surprisal_profile(counts: DataFrame, bits: DataFrame,
+                       on: list[str], id_col: str, n: str) -> DataFrame:
+    """(doc, n, sum_bits, mean_bits) from the (doc, *on, _c) gram counts
+    and the (*on, bits) whole-bit weights: joined on the gram, summed
+    per document, mean_bits = sum_bits / n rounded to 4 decimals (one
+    exact division of two integers)."""
+    return (counts.join(bits, on)
+            .groupBy(id_col)
+            .agg(F.sum("_c").alias(n),
+                 F.sum(F.col("_c") * F.col("bits")).alias("sum_bits"))
+            .select(F.col(id_col),
+                    F.col(n).cast("long"),
+                    F.col("sum_bits").cast("long"),
+                    fround(F.col("sum_bits") / F.col(n), 4)
+                     .alias("mean_bits")))
+
+
 def frequent_tokens(docs: DataFrame, k: int = 20,
                     text_col: str = "text") -> DataFrame:
     """Corpus-wide top-``k`` tokens by document-stream frequency — the
@@ -312,13 +385,7 @@ def frequent_tokens(docs: DataFrame, k: int = 20,
     never concentrate raw rows on one reducer), then a TakeOrdered top-k
     — no global sort materialization. Ties break on the token string so
     the boundary of the top-k set is deterministic in any engine."""
-    toks = (fan_out(docs.select(F.col(text_col)))
-            .select(F.explode(words(f"`{text_col}`")).alias("token"))
-            .where(F.col("token") != ""))
-    return (toks.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("n_occurrences"))
-            .orderBy(F.desc("n_occurrences"), F.asc("token"))
-            .limit(k))
+    return _top_tokens(_tokens(docs, text_col), k, "n_occurrences")
 
 
 def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
@@ -375,14 +442,8 @@ def vocab_coverage(docs: DataFrame, vocab_k: int = 100,
     engine-portable, so the value oracle holds exactly. Docs with zero
     tokens have no occurrences to cover and yield no row (mirrors the
     oracle's inner unnest)."""
-    toks = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-            .select(F.col(id_col),
-                    F.explode(words(f"`{text_col}`")).alias("token"))
-            .where(F.col("token") != ""))
-    vocab = (toks.groupBy("token")
-             .agg(F.count(F.lit(1)).alias("_n"))
-             .orderBy(F.desc("_n"), F.asc("token"))
-             .limit(vocab_k)
+    toks = _tokens(docs, text_col, id_col)
+    vocab = (_top_tokens(toks, vocab_k, "_n")
              .select("token", F.lit(1).alias("_v")))
     return (toks.join(F.broadcast(vocab), "token", "left")
             .groupBy(id_col)
@@ -778,9 +839,10 @@ def token_surprisal(docs: DataFrame, text_col: str = "text",
     boilerplate-ish, high-surprisal docs are noise), with surprisal
     QUANTIZED TO WHOLE BITS so the value is exact integer arithmetic:
     a token occurring n_t times in a corpus of N tokens contributes
-    ``bit_length(N div n_t) - 1`` = floor(log2(N/n_t)) bits, computed
-    via binary-string length — no floating-point log whose last-ulp
-    libm differences could break cross-engine parity.
+    ``whole_bits(N, n_t)`` = floor(log2(N/n_t)) bits
+    (:func:`~w_userflow_featurestore_spark.functions.whole_bits`) — no
+    floating-point log whose last-ulp libm differences could break
+    cross-engine parity.
 
     Returns (doc_id, n_tokens, sum_bits, mean_bits) with mean_bits =
     sum_bits / n_tokens rounded to 4 decimals (one exact division of
@@ -793,33 +855,20 @@ def token_surprisal(docs: DataFrame, text_col: str = "text",
     doc-keyed aggregate emits the profile. Token strings never carry
     vectors or doc text through the exchanges.
     """
-    toks = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-            .select(F.col(id_col),
-                    F.explode(words(f"`{text_col}`")).alias("token"))
-            .where(F.col("token") != ""))
     # (doc, token, count) grain FIRST: the LM aggregate and the scoring
     # join then read the SAME (id, token)-keyed partial aggregate, so
     # its exchange plans once and replays as a ReusedExchange — the
     # token explode + normalization runs ONE map pass instead of two
     # (operations keyed the same way share one exchange).
-    toks_cnt = (toks.groupBy(id_col, "token")
-                .agg(F.count(F.lit(1)).alias("_c")))
+    toks_cnt = _counts(_tokens(docs, text_col, id_col), "_c",
+                       id_col, "token")
     lm = toks_cnt.groupBy("token").agg(F.sum("_c").alias("n_t"))
     total = lm.agg(F.sum("n_t").alias("n_total"))
     bits = (lm.crossJoin(F.broadcast(total))
-              .withColumn("bits",
-                          (F.length(F.bin(F.expr("n_total DIV n_t")))
-                           - 1).cast("long"))
-              .select("token", "bits"))
-    return (toks_cnt.join(bits, "token")
-                .groupBy(id_col)
-                .agg(F.sum("_c").alias("n_tokens"),
-                     F.sum(F.col("_c") * F.col("bits")).alias("sum_bits"))
-                .select(F.col(id_col),
-                        F.col("n_tokens").cast("long"),
-                        F.col("sum_bits").cast("long"),
-                        fround(F.col("sum_bits") / F.col("n_tokens"), 4)
-                         .alias("mean_bits")))
+              .select("token", whole_bits("n_total", "n_t")
+                      .cast("long").alias("bits")))
+    return _surprisal_profile(toks_cnt, bits, ["token"], id_col,
+                              "n_tokens")
 
 
 def quality_filter_verdict(docs: DataFrame, *,
@@ -873,11 +922,9 @@ def quality_filter_verdict(docs: DataFrame, *,
                .withColumn("__q", quality_score(c))
                .withColumn("__lang", lang_id(c)))
     n = F.col("__n")
-    top_word, top_bigram = _top_fracs("__ws", "__n")
-    distinct_ratio = F.size(F.array_distinct("__ws")).cast("double") / n
-    repetitive = ((top_word > F.lit(top_word_max))
-                  | (top_bigram > F.lit(top_bigram_max))
-                  | (distinct_ratio < F.lit(distinct_min)))
+    _, repetitive = _repetition(
+        n, F.size(F.array_distinct("__ws")), *_top_fracs("__ws", "__n"),
+        top_word_max, top_bigram_max, distinct_min)
     # degenerate-doc guard: quality_score on an empty/whitespace text
     # divides by zero — Spark emits NULL where DuckDB emits NaN (and
     # DuckDB orders NaN ABOVE every number, so a bare `>=` would pass
@@ -912,8 +959,8 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
     unigram model can't see that "the the" is surprising), with the
     same whole-bit quantization: a bigram (a, b) occurring c2 times
     under a context ``a`` occurring c1 times contributes
-    ``bit_length(c1 div c2) - 1`` = floor(log2(c1/c2)) bits — exact
-    integer arithmetic via binary-string length, never a float log.
+    ``whole_bits(c1, c2)`` = floor(log2(c1/c2)) bits — exact integer
+    arithmetic, never a float log.
     c1 >= c2 always (every bigram occurrence contains its context), so
     bits >= 0.
 
@@ -930,42 +977,20 @@ def bigram_surprisal(docs: DataFrame, text_col: str = "text",
     counts reuse the same token stream (unigram hash-agg), joined into
     the LM on the context word.
     """
-    ws = words(f"`{text_col}`")
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 1),
-        lambda i: F.struct(F.element_at(ws, i).alias("w1"),
-                           F.element_at(ws, i + 1).alias("w2")))
-    big = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-           .where(F.size(ws) >= 2)      # sequence(1,0) would descend
-           .select(F.col(id_col), F.explode(pairs).alias("p"))
-           .select(F.col(id_col), F.col("p.w1").alias("w1"),
-                   F.col("p.w2").alias("w2"))
-           .where((F.col("w1") != "") & (F.col("w2") != "")))
-    uni = (fan_out(docs.select(F.col(text_col)))
-           .select(F.explode(words(f"`{text_col}`")).alias("w1"))
-           .where(F.col("w1") != "")
-           .groupBy("w1").agg(F.count(F.lit(1)).alias("c1")))
+    uni = (_counts(_tokens(docs, text_col), "c1", "token")
+           .withColumnRenamed("token", "w1"))
     # (doc, bigram, count) grain FIRST — the LM aggregate and the
     # scoring join share the (id, w1, w2) partial aggregate's exchange
     # (ReusedExchange), so the bigram build runs one map pass instead
     # of two (same shape as token_surprisal/dsir).
-    big_cnt = (big.groupBy(id_col, "w1", "w2")
-               .agg(F.count(F.lit(1)).alias("_c")))
+    big_cnt = _counts(_bigrams(docs, text_col, id_col), "_c",
+                      id_col, "w1", "w2")
     lm2 = big_cnt.groupBy("w1", "w2").agg(F.sum("_c").alias("c2"))
     bits = (lm2.join(uni, "w1")
-               .withColumn("bits",
-                           (F.length(F.bin(F.expr("c1 DIV c2"))) - 1)
-                            .cast("long"))
-               .select("w1", "w2", "bits"))
-    return (big_cnt.join(bits, ["w1", "w2"])
-               .groupBy(id_col)
-               .agg(F.sum("_c").alias("n_bigrams"),
-                    F.sum(F.col("_c") * F.col("bits")).alias("sum_bits"))
-               .select(F.col(id_col),
-                       F.col("n_bigrams").cast("long"),
-                       F.col("sum_bits").cast("long"),
-                       fround(F.col("sum_bits") / F.col("n_bigrams"), 4)
-                        .alias("mean_bits")))
+               .select("w1", "w2", whole_bits("c1", "c2")
+                       .cast("long").alias("bits")))
+    return _surprisal_profile(big_cnt, bits, ["w1", "w2"], id_col,
+                              "n_bigrams")
 
 
 def perplexity_buckets(docs: DataFrame, text_col: str = "text",
@@ -1040,8 +1065,9 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20,
     (symbols = characters, i.e. the first BPE iteration); a trainer
     loops it, applying the chosen merge between rounds.
 
-    Returns the top-``k`` (pair, n_occurrences) with deterministic
-    lexicographic tie-break, pair printed as "left right".
+    Returns the top-``k`` (pair, n_occurrences) of :func:`bpe_pair_stats`
+    over the unmerged words, with deterministic lexicographic
+    tie-break, pair printed as "left right".
 
     Scale shape: the pair explode runs over DISTINCT words (the
     standard BPE-training trick — corpus size only enters through the
@@ -1049,21 +1075,9 @@ def bpe_pair_counts(docs: DataFrame, k: int = 20,
     vocabulary explodes 10M words, not 1e12), one hash aggregate with
     map-side combine, TakeOrdered top-k. All row-local HOFs, no UDFs.
     """
-    word_freq = (fan_out(docs.select(F.col(text_col)))
-                 .select(F.explode(words(f"`{text_col}`")).alias("w"))
-                 .where(F.col("w") != "")
-                 .groupBy("w")
-                 .agg(F.count(F.lit(1)).alias("freq")))
-    w = F.col("w")
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.length(w) - 1),
-        lambda i: F.concat(w.substr(i, F.lit(1)), F.lit(" "),
-                           w.substr(i + 1, F.lit(1))))
-    return (word_freq
-            .where(F.length(w) >= 2)
-            .select(F.explode(pairs).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").alias("n_occurrences"))
+    return (bpe_pair_stats(_bpe_symbolized(docs, text_col))
+            .select(F.concat_ws(" ", "left_sym", "right_sym").alias("pair"),
+                    "n_occurrences")
             .orderBy(F.desc("n_occurrences"), F.asc("pair"))
             .limit(k))
 
@@ -1094,17 +1108,62 @@ def _bpe_symbols(syms: str) -> Column:
     return F.expr(_bpe_symbols_sql(syms))
 
 
+def _bpe_wrap_sql(word: str) -> str:
+    """The word fragment ``word`` as wrapped single-character symbols:
+    BPE's unmerged representation."""
+    return f"regexp_replace({word}, '(.)', '{BPE_OPEN}$1{BPE_CLOSE}')"
+
+
+def _bpe_merge(syms: str, merges: list[tuple]) -> str:
+    """The wrapped symbol fragment ``syms`` after ``merges`` in rank
+    order: one literal replace per merge, nested into one parsed
+    expression (not py4j round trips per merge)."""
+    S, E = BPE_OPEN, BPE_CLOSE
+    for _, a, b, _, _ in merges:
+        syms = f"replace({syms}, '{S}{a}{E}{S}{b}{E}', '{S}{a}{b}{E}')"
+    return syms
+
+
+def _bpe_symbolized(docs: DataFrame, text_col: str) -> DataFrame:
+    """(syms, freq): every distinct corpus word, unmerged, with its
+    corpus frequency — the state BPE training starts from. Corpus size
+    enters only through this one word-frequency aggregate."""
+    return (_counts(_tokens(docs, text_col), "freq", "token")
+            .select(F.expr(_bpe_wrap_sql("token")).alias("syms"), "freq"))
+
+
+def _bpe_doc_tokens(docs: DataFrame, text_col: str, id_col: str,
+                    encodings: dict[str, list[tuple]]) -> DataFrame:
+    """(doc, n_words, <name>, ...): each document's word count and its
+    token count under each named merge list. Words are encoded once per
+    (doc, distinct word) and multiplied by their count; the merge lists
+    ride the plan as literals. Docs with no countable word get no row."""
+    enc = _counts(_tokens(docs, text_col, id_col), "cnt", id_col, "token")
+    word = _bpe_wrap_sql("token")
+    for name, merges in encodings.items():
+        enc = enc.withColumn(
+            f"_n_{name}",
+            F.size(_bpe_symbols(_bpe_merge(word, merges))).cast("long"))
+    return enc.groupBy(id_col).agg(
+        F.sum("cnt").cast("long").alias("n_words"),
+        *[F.sum(F.col("cnt") * F.col(f"_n_{name}")).cast("long")
+          .alias(name) for name in encodings])
+
+
 def bpe_pair_stats(symbolized: DataFrame) -> DataFrame:
     """Corpus-wide adjacent-pair frequencies of a symbolized word-freq
     frame (syms, freq) — the quantity :func:`bpe_train` argmaxes each
     round. Returns (left_sym, right_sym, n_occurrences); one hash
     aggregate with map-side combine over the DISTINCT-word frame."""
-    arr = _bpe_symbols_sql("syms")
-    pairs = (f"transform(sequence(1, size({arr}) - 1),"
-             f" i -> named_struct('left_sym', element_at({arr}, i),"
-             f" 'right_sym', element_at({arr}, i + 1)))")
+    # the symbol array is split once per word, not once per position;
+    # a guard, not a filter: a filter on a word-frequency aggregate's
+    # key is pushed below it, to run once per corpus token
+    pairs = ("CASE WHEN size(_s) >= 2 THEN"     # sequence(1,0) descends
+             " transform(sequence(1, size(_s) - 1),"
+             " i -> named_struct('left_sym', element_at(_s, i),"
+             " 'right_sym', element_at(_s, i + 1))) END")
     return (symbolized
-            .where(F.expr(f"size({arr}) >= 2"))  # sequence(1,0) descends
+            .select(_bpe_symbols("syms").alias("_s"), "freq")
             .select(F.expr(f"explode({pairs})").alias("p"), "freq")
             .groupBy(F.col("p.left_sym").alias("left_sym"),
                      F.col("p.right_sym").alias("right_sym"))
@@ -1163,22 +1222,11 @@ def bpe_train(docs: DataFrame, n_merges: int = 8,
     """
     if n_merges < 0:
         raise ValueError("n_merges must be >= 0")
-    S, E = BPE_OPEN, BPE_CLOSE
-    word_freq = (fan_out(docs.select(F.col(text_col)))
-                 .select(F.explode(words(f"`{text_col}`")).alias("w"))
-                 .where(F.col("w") != "")
-                 .groupBy("w")
-                 .agg(F.count(F.lit(1)).cast("long").alias("freq")))
-    base = word_freq.select(
-        F.regexp_replace("w", "(.)", f"{S}$1{E}").alias("syms"), "freq") \
-        .localCheckpoint(eager=True)
+    base = _bpe_symbolized(docs, text_col).localCheckpoint(eager=True)
 
     def symbolize(upto: list[tuple]):
-        # one parsed expr per round, not 4 py4j roundtrips per merge
-        expr = "syms"
-        for _, a, b, _, _ in upto:
-            expr = f"replace({expr}, '{S}{a}{E}{S}{b}{E}', '{S}{a}{b}{E}')"
-        return base.select(F.expr(expr).alias("syms"), "freq")
+        return base.select(F.expr(_bpe_merge("syms", upto)).alias("syms"),
+                           "freq")
 
     # One merge per counting round, on purpose. Accepting several
     # top-K pairs per counting round is only
@@ -1228,22 +1276,7 @@ def bpe_apply(docs: DataFrame, merges: list[tuple],
     (per-(doc, word) counts -> per-doc rollup), zero joins, zero UDFs;
     the merge list rides the plan as literals.
     """
-    S, E = BPE_OPEN, BPE_CLOSE
-    col = f"regexp_replace(w, '(.)', '{S}$1{E}')"
-    for _, a, b, _, _ in merges:
-        col = f"replace({col}, '{S}{a}{E}{S}{b}{E}', '{S}{a}{b}{E}')"
-    dw = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-          .select(F.col(id_col),
-                  F.explode(words(f"`{text_col}`")).alias("w"))
-          .where(F.col("w") != "")
-          .groupBy(id_col, "w")
-          .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    enc = dw.withColumn("n_syms",
-                        F.size(_bpe_symbols(col)).cast("long"))
-    return (enc.groupBy(id_col)
-            .agg(F.sum("cnt").cast("long").alias("n_words"),
-                 F.sum(F.col("cnt") * F.col("n_syms")).cast("long")
-                  .alias("n_tokens"))
+    return (_bpe_doc_tokens(docs, text_col, id_col, {"n_tokens": merges})
             .select(F.col(id_col), "n_words", "n_tokens",
                     bp("n_tokens", "n_words").alias("tokens_per_word_bp")))
 
@@ -1276,6 +1309,17 @@ def _registry_max_version(live: dict) -> int | None:
     return int(hi)
 
 
+def _registry_version(live: dict, read) -> int | None:
+    """max(tokenizer_version) of the files in ``live``: their manifest
+    stats, else the max over ``read()``, the frame of their rows; None
+    when they hold no version."""
+    v = _registry_max_version(live)
+    if v is None:                        # manifest stats unusable
+        v = read().agg(
+            F.max("tokenizer_version").alias("v")).collect()[0]["v"]
+    return None if v is None else int(v)
+
+
 def bpe_save(spark, table_path: str, merges: list[tuple],
              txn: str | None = None) -> tuple[int, int]:
     """Persist a trained BPE merge list as a VERSIONED LogTable artifact
@@ -1294,6 +1338,9 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
     :func:`bpe_load` prune straight to one version's files, and
     LogTable's snapshot machinery gives rollback/time-travel for free.
     ``txn`` makes replayed saves idempotent (same token -> same commit).
+    The append commits only on the snapshot the version was read from:
+    a rival publish in between raises ``ConcurrentCommitError`` (re-run
+    to publish the next version), so no version is published twice.
 
     Every version carries a HEADER row (merge_rank = 0, n_occurrences =
     merge count) besides its merge rows — so an EMPTY merge list (a
@@ -1303,11 +1350,10 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
 
     Returns ``(tokenizer_version, snapshot_id)``. The merge list is the
     trained model — k driver-side rows, never row data."""
-    from w_userflow_featurestore_spark.sources import LogTable
     t = LogTable.create(spark, table_path, [],
                         stats_columns=["tokenizer_version"])
     # one log read serves the empty check, the txn lookup and the
-    # version stats; append() below reads it again to commit
+    # version stats; append() below reads it again to commit on it
     st = t.state()
     done = st.txn_commit(txn)
     if done is not None:
@@ -1316,20 +1362,13 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
         # computed max+1 would then LIE about which version the
         # original commit published — return ITS version, read off the
         # replayed commit's own manifest stats
-        v = _registry_max_version({f: done.stats.get(f, {})
-                                   for f in done.add})
-        if v is None:                    # manifest stats unusable
-            v = (t.read_increment(done.parent_id, done.snapshot_id)
-                  .agg(F.max("tokenizer_version").alias("v"))
-                  .collect()[0]["v"])
-        return int(v), done.snapshot_id
+        v = _registry_version(
+            {f: done.stats.get(f, {}) for f in done.add},
+            lambda: t.read_increment(done.parent_id, done.snapshot_id))
+        return v, done.snapshot_id
     version = 1
     if st.snapshot_id is not None:
-        prev = _registry_max_version(st.live)
-        if prev is None:                 # manifest stats unusable
-            prev = t.read().agg(
-                F.max("tokenizer_version").alias("v")).collect()[0]["v"]
-        version = int(prev or 0) + 1
+        version = (_registry_version(st.live, t.read) or 0) + 1
     rows = [(version, 0, None, None, None, len(merges))]
     rows += [(version, int(r), a, b, m, int(n))
              for r, a, b, m, n in merges]
@@ -1347,7 +1386,7 @@ def bpe_save(spark, table_path: str, merges: list[tuple],
         for tv, mr, ls, rs, mg, no in rows]
     df = spark.range(1).select(
         F.inline(F.array(*structs))).coalesce(1)
-    return version, t.append(df, txn=txn)
+    return version, t.append(df, txn=txn, expected_base=st.snapshot_id)
 
 
 def bpe_load(spark, table_path: str,
@@ -1359,16 +1398,11 @@ def bpe_load(spark, table_path: str,
     version; a pinned version replays exactly, via manifest-stat file
     pruning on ``tokenizer_version``. Model-sized driver work only
     (k rows per version, one scalar max for the latest-version probe)."""
-    from w_userflow_featurestore_spark.sources import LogTable
     t = LogTable(spark, table_path)
     if version is None:
-        latest = _registry_max_version(t.files_stats())
-        if latest is None:               # manifest stats unusable
-            latest = t.read().agg(
-                F.max("tokenizer_version").alias("v")).collect()[0]["v"]
-        if latest is None:
+        version = _registry_version(t.files_stats(), t.read)
+        if version is None:
             raise ValueError(f"no tokenizer versions at {table_path}")
-        version = int(latest)
     rows = (t.read(filters=[("tokenizer_version", "=", int(version))])
              .orderBy("merge_rank").collect())
     if not rows:
@@ -1526,8 +1560,8 @@ def bpe_version_drift(spark, table_path: str, docs: DataFrame,
     drift_bp = old_bp - new_bp (>= 0 when the new version extends the
     old merge list — more merges never split a word further).
 
-    Scale shape: ONE pass at the (doc, distinct-word) grain — both
-    versions' symbol counts are computed side by side in the same
+    Scale shape: ONE pass of :func:`bpe_apply`'s (doc, distinct-word)
+    encoder with both versions' symbol counts side by side in the same
     projection (the replace chains ride as literals; when the new
     version extends the old, codegen shares the old chain as the new
     chain's prefix subexpression), then one per-doc rollup, instead of
@@ -1535,34 +1569,10 @@ def bpe_version_drift(spark, table_path: str, docs: DataFrame,
     bit-identical to that form — same counts, same DECIMAL basis-point
     arithmetic.
     """
-    S, E = BPE_OPEN, BPE_CLOSE
-
-    def chain(merges: list[tuple]) -> str:
-        col = f"regexp_replace(w, '(.)', '{S}$1{E}')"
-        for _, a, b, _, _ in merges:
-            col = f"replace({col}, '{S}{a}{E}{S}{b}{E}', '{S}{a}{b}{E}')"
-        return col
-
-    col_old = chain(bpe_load(spark, table_path, v_old))
-    col_new = chain(bpe_load(spark, table_path, v_new))
-    from w_userflow_featurestore_spark.operators.dedup import words
-    from w_userflow_featurestore_spark.sources import fan_out
-    dw = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-          .select(F.col(id_col),
-                  F.explode(words(f"`{text_col}`")).alias("w"))
-          .where(F.col("w") != "")
-          .groupBy(id_col, "w")
-          .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
-    enc = (dw.withColumn("_n_old",
-                         F.size(_bpe_symbols(col_old)).cast("long"))
-             .withColumn("_n_new",
-                         F.size(_bpe_symbols(col_new)).cast("long")))
-    return (enc.groupBy(id_col)
-            .agg(F.sum("cnt").cast("long").alias("n_words"),
-                 F.sum(F.col("cnt") * F.col("_n_old")).cast("long")
-                  .alias("old_tokens"),
-                 F.sum(F.col("cnt") * F.col("_n_new")).cast("long")
-                  .alias("new_tokens"))
+    enc = _bpe_doc_tokens(docs, text_col, id_col, {
+        "old_tokens": bpe_load(spark, table_path, v_old),
+        "new_tokens": bpe_load(spark, table_path, v_new)})
+    return (enc
             .select(F.col(id_col), "n_words", "old_tokens", "new_tokens",
                     bp("old_tokens", "n_words").alias("old_bp"),
                     bp("new_tokens", "n_words").alias("new_bp"))
@@ -1580,7 +1590,7 @@ def tfidf_top_terms(docs: DataFrame, text_col: str = "text",
 
     IDF is quantized to whole bits so the score stays exact integer
     arithmetic cross-engine: a term appearing in ``df`` of the corpus's
-    ``N`` documents carries ``bit_length(N div df) - 1`` =
+    ``N`` documents carries ``whole_bits(N, df)`` =
     floor(log2(N/df)) idf bits (the :func:`token_surprisal` trick,
     applied to the document-frequency axis instead of the token axis);
     ``score_bits = tf * idf_bits``. A term in more than half the corpus
@@ -1597,28 +1607,22 @@ def tfidf_top_terms(docs: DataFrame, text_col: str = "text",
     idf joins back on the term key. The top-k window partitions by
     doc_id — doc-grain keys, no skew, no corpus-wide sort.
     """
-    tf = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-          .select(F.col(id_col),
-                  F.explode(words(f"`{text_col}`")).alias("term"))
-          .where(F.col("term") != "")
-          .groupBy(id_col, "term")
-          .agg(F.count(F.lit(1)).alias("tf")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    tf = _counts(_tokens(docs, text_col, id_col), "tf", id_col, "token")
     n_docs = docs.select(
         F.count(F.lit(1)).cast("long").alias("n_docs"))
-    idf = (dfreq.crossJoin(F.broadcast(n_docs))
-           .withColumn("idf_bits",
-                       (F.length(F.bin(F.expr("n_docs DIV df"))) - 1)
-                        .cast("long"))
-           .select("term", "idf_bits"))
-    scored = (tf.join(idf, "term")
+    idf = (_counts(tf, "df", "token")
+           .crossJoin(F.broadcast(n_docs))
+           .select("token", whole_bits("n_docs", "df")
+                   .cast("long").alias("idf_bits")))
+    scored = (tf.join(idf, "token")
               .withColumn("score_bits",
                           (F.col("tf") * F.col("idf_bits")).cast("long")))
     w = Window.partitionBy(id_col).orderBy(F.col("score_bits").desc(),
-                                           F.col("term").asc())
+                                           F.col("token").asc())
     return (scored.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= top_k)
-            .select(F.col(id_col), "term", F.col("tf").cast("long"),
+            .select(F.col(id_col), F.col("token").alias("term"),
+                    F.col("tf").cast("long"),
                     "idf_bits", "score_bits",
                     F.col("rank").cast("int")))
 
@@ -1645,7 +1649,7 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
     bigram count c_xy, unigram counts c_x/c_y and total bigram count T.
     The products run in DECIMAL(38,0) (c_xy*T overflows a BIGINT at
     the 100 TB design point: T ~ 1e13, c_xy up to T), and the whole-bit
-    value is bit_length(num DIV den) - 1 — the ratio is <= T (since
+    value is ``whole_bits(num, den)`` — the ratio is <= T (since
     c_xy <= c_x*c_y), so the DIV result always fits a BIGINT exactly.
     The envelope itself is ENFORCED: T > ``_PMI_T_MAX`` (4e18, where
     T*T approaches DECIMAL(38,0)'s 38 digits and non-ANSI overflow
@@ -1660,9 +1664,10 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
     rare-pair PMI explosion (a pair seen once between two hapaxes
     maxes the score), the standard collocation-mining guard.
 
-    Returns exactly ``top_k`` rows (w1, w2, n_pair, pmi_bits) ordered
+    Returns at most ``top_k`` rows (w1, w2, n_pair, pmi_bits) ordered
     by (pmi_bits DESC, n_pair DESC, w1, w2) — a fully deterministic
-    tie-break.
+    tie-break: fewer when fewer positive-PMI pairs reach
+    ``min_count``, none on an empty corpus.
 
     Scale shape: bigrams are built ROW-LOCALLY from each doc's word
     array (:func:`bigram_surprisal`'s transform-over-sequence — no
@@ -1672,22 +1677,9 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
     The final top-k is a LIMIT over the surviving pair frame — the
     orderBy feeds a TakeOrderedAndProject, never a full sort.
     """
-    ws = words(f"`{text_col}`")
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 1),
-        lambda i: F.struct(F.element_at(ws, i).alias("w1"),
-                           F.element_at(ws, i + 1).alias("w2")))
-    big = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-           .where(F.size(ws) >= 2)
-           .select(F.explode(pairs).alias("p"))
-           .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-           .where((F.col("w1") != "") & (F.col("w2") != "")))
-    uni = (fan_out(docs.select(F.col(text_col)))
-           .select(F.explode(words(f"`{text_col}`")).alias("w"))
-           .where(F.col("w") != "")
-           .groupBy("w").agg(F.count(F.lit(1)).alias("c")))
-    cxy_all = (big.groupBy("w1", "w2")
-               .agg(F.count(F.lit(1)).alias("n_pair")))
+    uni = _counts(_tokens(docs, text_col), "c", "token")
+    cxy_all = _counts(_bigrams(docs, text_col, id_col), "n_pair",
+                      "w1", "w2")
     # T is the total bigram EVENT count — summed before the min_count
     # filter (dropping rare pairs from the denominator would inflate
     # every survivor's PMI). Summed in DECIMAL(38,0) (a long sum wraps
@@ -1722,17 +1714,15 @@ def pmi_collocations(docs: DataFrame, text_col: str = "text",
                  "ELSE CAST(_t AS BIGINT) END").alias("t_total")))
     cxy = cxy_all.where(F.col("n_pair") >= min_count)
     joined = (cxy.crossJoin(F.broadcast(total))
-              .join(uni.select(F.col("w").alias("w1"),
+              .join(uni.select(F.col("token").alias("w1"),
                                F.col("c").alias("c1")), "w1")
-              .join(uni.select(F.col("w").alias("w2"),
+              .join(uni.select(F.col("token").alias("w2"),
                                F.col("c").alias("c2")), "w2"))
     num = "CAST(n_pair AS DECIMAL(38,0)) * CAST(t_total AS DECIMAL(38,0))"
     den = "CAST(c1 AS DECIMAL(38,0)) * CAST(c2 AS DECIMAL(38,0))"
     return (joined
             .where(F.expr(f"{num} >= {den}"))
-            .withColumn("pmi_bits",
-                        (F.length(F.bin(F.expr(f"({num}) DIV ({den})")))
-                         - 1).cast("long"))
+            .withColumn("pmi_bits", whole_bits(num, den).cast("long"))
             .select("w1", "w2", F.col("n_pair").cast("long"), "pmi_bits")
             .orderBy(F.col("pmi_bits").desc(), F.col("n_pair").desc(),
                      F.col("w1").asc(), F.col("w2").asc())

@@ -314,8 +314,9 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed between this operation's read of table
     state and its commit attempt. The operation's staged result may be
     based on stale files — re-run the operation (it will recompute from
-    the new current snapshot). Appends never raise this: they carry no
-    read-dependency, so the loser just takes the next sequence number."""
+    the new current snapshot). A plain append never raises this: it
+    carries no read-dependency, so the loser just takes the next
+    sequence number."""
 
 
 @dataclass(frozen=True)
@@ -1096,7 +1097,8 @@ class LogTable:
         os.rmdir(staging)
         return added
 
-    def append(self, df: DataFrame, txn: str | None = None) -> int:
+    def append(self, df: DataFrame, txn: str | None = None,
+               expected_base=_UNSET) -> int:
         """Append-only commit (the bronze write path, reference S4).
 
         ``txn`` makes the append IDEMPOTENT: if a commit carrying the
@@ -1107,11 +1109,14 @@ class LogTable:
         txnAppId/txnVersion idempotent-write protocol Delta documents
         and the role Iceberg's atomic snapshot commit plays for the
         reference's Kafka->Bronze hop (bronze_load_raw_data.py:84-90,
-        README 'exactly-once' §)."""
+        README 'exactly-once' §). An append whose rows were derived from
+        the table (a version stamped from its max) passes the snapshot
+        it read as ``expected_base``, as a rewrite does."""
         done = self.txn_commit(txn) if txn is not None else None
         if done is not None:
             return done.snapshot_id
-        return self._commit("append", self._stage_write(df), [], txn=txn)
+        return self._commit("append", self._stage_write(df), [], txn=txn,
+                            expected_base=expected_base)
 
     def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition overwrite as ONE atomic commit (reference

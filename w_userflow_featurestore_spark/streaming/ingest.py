@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
 from w_userflow_featurestore_spark.operators.sessionize import (
     DEFAULT_GAP_MS,
@@ -404,7 +404,6 @@ def parse_with_dead_letter(raw: DataFrame, schema: StructType | str,
     if isinstance(schema, str):
         full = schema + ", _corrupt string"
     else:
-        from pyspark.sql.types import StringType, StructField
         # StructType.add MUTATES (and returns) self — build a fresh
         # StructType so the caller's schema object stays untouched
         full = StructType(list(schema.fields)
