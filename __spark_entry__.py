@@ -1078,7 +1078,8 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     English-language target by importance score — exact top-k by
     (score_bits DESC, doc_id) WITHOUT a corpus sort: the cut threshold
     comes from a bounded (score_bits, count) histogram and only the
-    boundary score's ties pay a row_number (operators/sampling.py
+    boundary score's ties pay an id-ordered prefix count — the token
+    budget cut with a weight of 1 per doc (operators/sampling.py
     dsir_select). Completes score -> selection the way mixture_weights
     feeds token_budget_mix; the oracle is the dsir_importance pipeline
     + ORDER BY ... LIMIT, which is exactly the semantic the

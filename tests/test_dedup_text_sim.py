@@ -1148,7 +1148,7 @@ def test_remove_duplicate_spans_excises_exactly_the_spans(spark):
 
 
 def test_bpe_train_batched_equals_sequential_reference(spark):
-    """Round-12 batched argmax selection must reproduce the sequential
+    """Batched argmax selection must reproduce the sequential
     limit(1)-per-round loop EXACTLY — merge order, tie-breaks, and
     selection-time counts — on corpora exercising both regimes: skewed
     disjoint pairs (several merges accepted per counting round) and a

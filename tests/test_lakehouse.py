@@ -961,7 +961,7 @@ def test_delete_where_isnull_removes_null_rows(spark, tmp_path):
     assert sorted(r["id"] for r in t.read().collect()) == [1, 3]
 
 
-# --- round-11 review fixes: pruning soundness + maintenance races ----
+# --- pruning soundness + maintenance races ---------------------------
 
 
 def test_partition_prune_matches_spark_dir_formatting(spark, tmp_path):
@@ -970,7 +970,7 @@ def test_partition_prune_matches_spark_dir_formatting(spark, tmp_path):
     must match numerically (str(1) is '1' — the old comparison pruned
     EVERY file and returned an empty frame for a matching filter).
     Booleans USED to read back as STRING partition values (Spark's own
-    partition inference does not infer bool); since the round-12 typed
+    partition inference does not infer bool); with the typed
     read (``partition_types`` stamped at first write) they read back
     as genuine BOOLEAN — bool literals filter natively, and a string
     '=' literal still coerces (Spark casts across bool/string in
@@ -1217,15 +1217,14 @@ def test_empty_read_anchor_survives_missing_dead_files(spark, table):
 
 # ------------------------------------- randomized pruning soundness
 #
-# Round 11's DIRECTED review of the pruning layer found three
-# silent-row-loss bugs (partition str(val) vs Spark dir formatting,
-# date-vs-datetime lexicographic stats compare, raw tz-strip); round
-# 12's directed pass found three more (tz-aware literal isoformat,
-# decimal full-scale dirs, NaN equality). The round-11 verdict (Next
-# round #2) asks for the RESIDUAL class to be covered property-style:
-# seeded trials generating LogTables with randomly-typed partition and
-# data columns and random predicates, asserting the pruned read is
-# row-identical to the same predicate applied WITHOUT pruning.
+# Directed tests of the pruning layer cover six silent-row-loss
+# classes (partition str(val) vs Spark dir formatting,
+# date-vs-datetime lexicographic stats compare, raw tz-strip, tz-aware
+# literal isoformat, decimal full-scale dirs, NaN equality). The
+# RESIDUAL class is covered property-style here: seeded trials
+# generating LogTables with randomly-typed partition and data columns
+# and random predicates, asserting the pruned read is row-identical to
+# the same predicate applied WITHOUT pruning.
 #
 # Ground truth is Spark itself: `_apply_filters(read(), f)` evaluates
 # the predicate over EVERY live file with Spark's own coercion
@@ -1420,7 +1419,7 @@ def test_randomized_pruning_is_row_identical_to_unpruned(spark, tmp_path):
 # declarative predicate, including the rows it must NOT touch
 # (NULL-predicate rows, non-matching rows co-located in victim files).
 
-# Round 13: 5 -> 2 seeded sequences by default (env knob for deep runs)
+# 2 seeded sequences by default (env knob for deep runs)
 _MUT_SEQS = int(os.environ.get("SPARK_GRAFT_MUT_SEQS", "2"))
 _MUT_OPS = 14
 _MUT_DDL = "k bigint, p string, v bigint, s string"
@@ -1600,7 +1599,7 @@ def test_randomized_mutation_sequence_matches_model(spark, tmp_path):
 # outside rollback, no gaps.
 
 _CONC_THREADS = 4
-# Round 13: 6 -> 3 ops/thread by default (env knob for deep runs)
+# 3 ops/thread by default (env knob for deep runs)
 _CONC_OPS = int(os.environ.get("SPARK_GRAFT_CONC_OPS", "3"))
 
 

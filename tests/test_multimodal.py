@@ -114,7 +114,7 @@ def test_audio_windows_cover_clip_with_hop_overlap(spark):
 
 
 def test_fake_decode_batch_matches_row_form():
-    """Round-12 vectorization: the numpy batch decode must be
+    """The vectorized numpy batch decode must be
     value-identical to the per-row reference on every kind and on
     varied payload lengths (incl. the 6-byte minimum the dim bytes
     index)."""

@@ -308,9 +308,10 @@ def test_leakage_safe_split_keeps_clusters_together(spark):
 
 
 def test_leakage_safe_split_string_doc_ids(spark):
-    """Round-6 advice regression: a cast('long') on the group key turned
-    every non-numeric string id into NULL -> hash_bucket(NULL) = NULL ->
-    every doc fell through to split='test' with zero errors raised.
+    """String group keys keep their type: a cast('long') on the group
+    key would turn every non-numeric string id into NULL ->
+    hash_bucket(NULL) = NULL -> every doc falls through to split='test'
+    with zero errors raised.
     String ids must split like dataset_split (non-pair docs) and keep
     clusters together, with a non-degenerate split distribution."""
     from w_userflow_featurestore_spark.operators.sampling import (
@@ -498,3 +499,105 @@ def test_dsir_selectors_reject_nonpositive_budgets(spark):
         dsir_select(raw, target, 0)
     with pytest.raises(ValueError, match="budget_tokens"):
         dsir_select_tokens(raw, target, 0)
+
+
+def _exclusive_prefix_model(data, keyed):
+    """id -> sum of w over the rows before it in (_b, o, id) order
+    within its key group (one group when ``keyed`` is false)."""
+    out, acc = {}, {}
+    for k, b, o, i, w in sorted(data, key=lambda r: (r[1], r[2], r[3])):
+        g = k if keyed else None
+        out[i] = acc.get(g, 0)
+        acc[g] = acc.get(g, 0) + w
+    return out
+
+
+def test_bucketed_exclusive_sum_matches_prefix_model(spark):
+    """The shared two-phase prefix sum (within-bucket window + broadcast
+    bucket offsets) equals a plain exclusive running sum over (_b, o,
+    id) in every shape the sampling operators hit."""
+    from w_userflow_featurestore_spark.operators.sampling import (
+        _bucketed_exclusive_sum,
+    )
+    cases = {
+        # zero weights mixed in, two groups, several rows per bucket
+        "zero_weights": ([("a", 0, 1, 1, 0), ("a", 0, 2, 2, 3),
+                          ("a", 1, 0, 3, 0), ("a", 1, 5, 4, 4),
+                          ("b", 0, 9, 5, 2), ("b", 2, 1, 6, 0),
+                          ("b", 2, 1, 7, 5)], True),
+        # one bucket: the window alone carries the whole prefix
+        "one_bucket": ([("a", 0, o, o, o + 1) for o in range(5)], True),
+        # more buckets than rows: sparse bucket ids, offsets carry it all
+        "sparse_buckets": ([("a", 7, 0, 1, 4), ("a", 63, 0, 2, 1),
+                            ("a", 2, 0, 3, 6)], True),
+        # single-row partitions: every prefix is 0
+        "single_rows": ([(k, 0, 0, i, 9) for i, k in enumerate("abcd")],
+                        True),
+        # no key columns (the global catalog index shape)
+        "global": ([("a", 1, 0, 1, 1), ("b", 0, 3, 2, 1),
+                    ("c", 0, 1, 3, 1), ("d", 2, 0, 4, 1)], False),
+    }
+    for name, (data, keyed) in cases.items():
+        df = spark.createDataFrame(
+            data, "k string, _b long, o long, id long, w long")
+        got = dict(_bucketed_exclusive_sum(
+            df, ["k"] if keyed else [], ["o", "id"], F.col("w"), "cum")
+            .select("id", "cum").collect())
+        assert got == _exclusive_prefix_model(data, keyed), name
+
+
+def _quantile_model(scores, k):
+    """Stage of each score: first s with score <= t_s, t_s the smallest
+    score whose cumulative count reaches ceil(s*n/k); else k."""
+    vals = sorted(scores)
+    n = len(vals)
+    t = [vals[-(-s * n // k) - 1] for s in range(1, k)]
+    return [next((s for s, ts in enumerate(t, 1) if x <= ts), k)
+            for x in scores]
+
+
+def test_quantile_stage_matches_threshold_model(spark):
+    """The shared value-quantile cut, per group and global, equals the
+    Python threshold model for K in {2, 3, 5} with tied scores."""
+    from w_userflow_featurestore_spark.operators.text import (
+        _quantile_stage,
+    )
+    groups = {"g1": [3.0, 1.0, 1.0, 2.0, 5.0, 5.0, 5.0, 4.0, 0.5],
+              "g2": [7.0, 7.0, 7.0, 2.0]}
+    data = [(g, i * 10 + j, x) for i, (g, xs) in enumerate(groups.items())
+            for j, x in enumerate(xs)]
+    df = spark.createDataFrame(data, "g string, id long, score double")
+    for k in (2, 3, 5):
+        labels = list(range(1, k + 1))
+        got = dict(_quantile_stage(df, "score", labels, ["g"], "stage")
+                   .select("id", "stage").collect())
+        want = {}
+        for i, (g, xs) in enumerate(groups.items()):
+            want.update({i * 10 + j: s for j, s in
+                         enumerate(_quantile_model(xs, k))})
+        assert got == want, k
+        got_all = dict(_quantile_stage(df, "score", labels, [], "stage")
+                       .select("id", "stage").collect())
+        every = [x for _g, _i, x in data]
+        assert got_all == {i: s for (_g, i, _x), s in
+                           zip(data, _quantile_model(every, k))}, k
+
+
+def test_perplexity_buckets_are_the_three_stage_quantile_cut(spark):
+    """On a one-language corpus perplexity_buckets' head/middle/tail are
+    stages 1/2/3 of the shared value-quantile cut over token_surprisal's
+    scores."""
+    from w_userflow_featurestore_spark.operators.text import (
+        _quantile_stage, perplexity_buckets, token_surprisal,
+    )
+    texts = ["x y", "x x x", "zz qq", "y", "qq qq zz x", "x y",
+             "zz", "y y x"]
+    df = spark.createDataFrame([(i, "en", t) for i, t in enumerate(texts)],
+                               "doc_id long, lang string, text string")
+    got = dict(perplexity_buckets(df).select("doc_id", "bucket").collect())
+    stages = dict(_quantile_stage(token_surprisal(df).select(
+        "doc_id", "mean_bits"), "mean_bits", [1, 2, 3], [], "stage")
+        .select("doc_id", "stage").collect())
+    assert len(set(got.values())) > 1
+    assert got == {d: ["head", "middle", "tail"][s - 1]
+                   for d, s in stages.items()}

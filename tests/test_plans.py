@@ -90,10 +90,10 @@ def test_flagship_user_daily_shuffle_budget(spark):
 
 
 # --- plan pins for the bench's 5 slowest queries -----------------------
-# Round-2 lesson: a noisy sandbox made a 1.43x wall-clock swing look like
-# a regression. These pins make the STRUCTURE of the expensive plans a
-# test property, so bench deltas can be attributed: if the oracle stays
-# green and these pins hold, a slower bench run is environment, not code.
+# On a shared machine wall-clock swings of 1.4x are noise. These pins
+# make the STRUCTURE of the expensive plans a test property, so bench
+# deltas can be attributed: if the oracle stays green and these pins
+# hold, a slower bench run is environment, not code.
 # Budgets are the measured shapes (shuffle.partitions=4, AQE pre-plan)
 # with zero headroom on joins and broadcasts.
 
@@ -151,7 +151,7 @@ def test_lsh_band_join_shuffle_budget(spark):
 
 
 def test_new_curation_queries_plan_pins(spark):
-    # round-3 additions: corpus-side work must stay broadcast-joined —
+    # curation queries: corpus-side work must stay broadcast-joined —
     # zero sort-merge joins anywhere, shuffle budgets at measured shape
     # fingerprint_pairs' capped path is join-free by design: window
     # df-filter + partitioning-preserving collect_list + row-local
@@ -220,18 +220,18 @@ def test_span_removed_corpus_plan_pin(spark):
 def test_ann_recall_gate_plan_pin(spark):
     # three full ANN pipelines + two membership joins; the membership
     # joins themselves must not add sort-merge work beyond the two the
-    # underlying indexes already plan. Round 12: the IVF leg's vector
-    # rejoin disappeared (vectors ride the assignment aggregate), so
-    # the broadcast floor dropped with it.
+    # underlying indexes already plan. The IVF leg has no vector
+    # rejoin (vectors ride the assignment aggregate), which sets the
+    # broadcast floor.
     assert_plan(_q(spark, "ann_recall_gate"), max_shuffles=15,
                 min_broadcast_joins=8, max_sort_merge_joins=2)
 
 
 def test_round4_new_queries_plan_pins(spark):
-    # semantic_dedup: centroid model broadcast; round 12 removed the
-    # id-keyed vector rejoin (vectors ride the assignment aggregate as
-    # functionally-dependent group keys), so the sort-merge work left
-    # is the in-cell self-join + the victims anti-side (both linear in
+    # semantic_dedup: centroid model broadcast; there is no id-keyed
+    # vector rejoin (vectors ride the assignment aggregate as
+    # functionally-dependent group keys), so the sort-merge work is
+    # the in-cell self-join + the victims anti-side (both linear in
     # Σ|cell|²; cells stay bounded by scaling n_centroids with the
     # corpus)
     assert_plan(_q(spark, "semantic_dedup"), max_shuffles=10,
@@ -241,11 +241,11 @@ def test_round4_new_queries_plan_pins(spark):
     assert_plan(_q(spark, "line_dedup"), max_shuffles=6,
                 max_sort_merge_joins=0)
     # token_surprisal: the (doc, token) partial aggregate feeds BOTH
-    # the LM re-aggregate and the scoring join (round 12: one token
-    # explode+hash map pass instead of two) — its exchange appears in
-    # each branch statically and AQE replays the second as a
-    # ReusedExchange at runtime (pinned by the reuse test below); the
-    # static count therefore rose with the dedup of the compute pass.
+    # the LM re-aggregate and the scoring join (one token explode+hash
+    # map pass) — its exchange appears in each branch statically and
+    # AQE replays the second as a ReusedExchange at runtime (pinned by
+    # the reuse test below), so the static count exceeds the passes
+    # that run.
     assert_plan(_q(spark, "token_surprisal"), max_shuffles=10,
                 min_broadcast_joins=1, max_sort_merge_joins=0)
     # distribution_drift: everything after the (day, category) hash-agg
@@ -374,7 +374,7 @@ def test_promo_revenue_plan_pin(spark):
 
 
 def test_volume_shipping_plan_pin(spark):
-    # Q7 shape (round-6 rewrite): the 2-nation membership filter is
+    # Q7 shape: the 2-nation membership filter is
     # folded into BOTH dims before any fact join — the nation scans
     # carry a pushed In(n_name, …) filter, so lineitem shrinks ~2/25
     # before the orders shuffle and customer shrinks ~2/25 before its
@@ -443,8 +443,8 @@ def test_shuffle_and_mix_plan_pins(spark):
     assert "rangepartitioning" not in physical_plan(df).lower()
     # token_budget_mix: bucketed two-pass prefix sum. The BIG window
     # must partition by (source, _b) — never by source alone, which
-    # serializes each multi-TB source into one sorting task (round-6
-    # verdict, What's wrong #2). The only joins are the broadcast of
+    # serializes each multi-TB source into one sorting task. The only
+    # joins are the broadcast of
     # the tiny per-bucket offset frame; the extra exchanges are both
     # S*B-row side frames, not the corpus.
     import re as _re
@@ -641,12 +641,12 @@ def test_dsir_importance_broadcasts_the_weight_table(spark):
     df = _q(spark, "dsir_importance")
     plan = physical_plan(df)
     assert "rangepartitioning" not in plan.lower()
-    # round 12: the (doc, _tgt, f) partial aggregate is shared by the
-    # t_f target re-aggregate, the r_f re-aggregate AND the scoring
-    # join (ONE gram explode+hash pass over the corpus instead of two —
-    # the target side is a predicate over the same frame; AQE
-    # ReusedExchange at runtime) — the shared subtree prints per
-    # branch (3x), so the static cap rose with it.
+    # the (doc, _tgt, f) partial aggregate is shared by the t_f target
+    # re-aggregate, the r_f re-aggregate AND the scoring join (ONE gram
+    # explode+hash pass over the corpus — the target side is a
+    # predicate over the same frame; AQE ReusedExchange at runtime) —
+    # the shared subtree prints per branch (3x), which sets the static
+    # cap.
     assert_plan(df, max_shuffles=17, min_broadcast_joins=1,
                 max_sort_merge_joins=1)
 
@@ -744,15 +744,17 @@ def test_dedup_rate_report_plan_pin(spark):
 
 
 def test_tokenizer_drift_joins_at_doc_grain(spark):
-    """The upgrade report: two (doc, distinct-word)-grain encodes must
-    aggregate to doc grain BEFORE their join (the exchange moves two
-    integer columns per doc, never word-grain rows), merges ride as
-    literals (zero joins inside either encode), nothing range
+    """The upgrade report is ONE (doc, distinct-word)-grain encoder pass
+    over one documents scan: both versions' merge chains ride as
+    literals in the same projection and roll up to doc grain together,
+    so the plan holds no join at all (two encodes joined on the doc key
+    would scan the corpus twice and add a join), and nothing range
     partitions."""
     df = _q(spark, "tokenizer_drift")
     plan = physical_plan(df)
     assert "rangepartitioning" not in plan.lower()
-    assert_plan(df, max_sort_merge_joins=1)
+    assert "Join" not in plan
+    assert plan.count("documents.parquet") == 1
 
 
 def test_tfidf_top_terms_never_sorts_the_corpus(spark):

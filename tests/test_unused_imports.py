@@ -1,9 +1,9 @@
 """Lint: no library module imports a name it never uses, no library
 function takes a parameter it never reads, no library module uses an
 ``assert`` statement, no function re-imports from a module its file
-already imports from at module level, and only ``functions.bp`` and
+already imports from at module level, only ``functions.bp`` and
 ``functions.whole_bits`` spell out the basis-point and whole-bit log
-expressions.
+expressions, and no f-string quotes an identifier by hand.
 
 Small AST passes instead of a linter dependency. An import counts as
 used when its name appears as an identifier anywhere in the module or
@@ -18,7 +18,10 @@ A string literal (adjacent literals and f-string pieces are joined by
 the parser) spells out a basis point when it holds the
 ``BP_FRAGMENT`` of ``functions.bp``, whitespace ignored; it spells
 out a whole-bit log when it holds ``length(bin(``, whitespace and case
-ignored, as does an ``F.length(F.bin(...))`` call.
+ignored, as does an ``F.length(F.bin(...))`` call. An f-string quotes
+an identifier by hand when it places a formatted value directly between
+two backticks; ``functions.sql_ident`` is the one quoting, because it
+doubles an embedded backtick.
 """
 
 from __future__ import annotations
@@ -130,6 +133,23 @@ def whole_bit_spellings(source: str) -> list[int]:
     return sorted(out)
 
 
+def hand_quoted_identifiers(source: str) -> list[int]:
+    """Line of every f-string that places a formatted value directly
+    between two backticks."""
+    out = []
+    for n in ast.walk(ast.parse(source)):
+        if not isinstance(n, ast.JoinedStr):
+            continue
+        v = n.values
+        out += [n.lineno for i in range(1, len(v) - 1)
+                if isinstance(v[i], ast.FormattedValue)
+                and isinstance(v[i - 1], ast.Constant)
+                and v[i - 1].value.endswith("`")
+                and isinstance(v[i + 1], ast.Constant)
+                and v[i + 1].value.startswith("`")]
+    return sorted(out)
+
+
 def test_checker_flags_only_unused_names():
     src = ("from __future__ import annotations\n"
            "import os\nimport json\n"
@@ -198,6 +218,17 @@ def test_whole_bits_checker_flags_both_spellings():
     assert len(whole_bit_spellings(BP_HOME.read_text())) == 1
 
 
+def test_hand_quoting_checker_flags_backtick_wrapped_values():
+    src = ('a = f"`{x}`"\n'
+           'b = f"CAST(`{x}` AS STRING)"\n'
+           'c = f"{sql_ident(x)} {t}"\n'
+           'd = "`{x}`"\n'
+           'e = f"`a` {x}"\n'
+           'f = (f"sum(`{x}"\n'
+           '     f"`)")\n')
+    assert hand_quoted_identifiers(src) == [1, 2, 6]
+
+
 @pytest.mark.parametrize("path", MODULES,
                          ids=[str(p.relative_to(PKG)) for p in MODULES])
 def test_library_module_has_no_unused_imports(path):
@@ -238,3 +269,9 @@ def test_no_function_reimports_a_module_level_import(path):
                          ids=[str(p.relative_to(PKG)) for p in NOT_BP_HOME])
 def test_only_functions_whole_bits_spells_out_a_whole_bit_log(path):
     assert whole_bit_spellings(path.read_text()) == []
+
+
+@pytest.mark.parametrize("path", ALL_MODULES,
+                         ids=[str(p.relative_to(PKG)) for p in ALL_MODULES])
+def test_library_fstrings_quote_identifiers_with_sql_ident(path):
+    assert hand_quoted_identifiers(path.read_text()) == []

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from w_userflow_featurestore_spark.functions import fround
+from w_userflow_featurestore_spark.functions import fround, sql_ident
 from w_userflow_featurestore_spark.operators.dedup import (
     shingles, text_hash60)
 from w_userflow_featurestore_spark.sources import fan_out
@@ -46,13 +46,13 @@ def contamination_check(corpus: DataFrame, eval_set: DataFrame, *,
     """
     eval_grams = F.broadcast(
         eval_set.select(
-            F.explode(shingles(f"`{text_col}`", n)).alias("g"))
+            F.explode(shingles(sql_ident(text_col), n)).alias("g"))
         .select(text_hash60("g").alias("gh"))
         .distinct())
     doc_grams = (fan_out(corpus.select(F.col(id_col), F.col(text_col)))
                  .select(
         F.col(id_col).alias("doc_id"),
-        F.explode(shingles(f"`{text_col}`", n)).alias("g"))
+        F.explode(shingles(sql_ident(text_col), n)).alias("g"))
         .select("doc_id", text_hash60("g").alias("gh")))
     hits = (doc_grams.join(eval_grams.withColumn("_hit", F.lit(1)),
                            "gh", "left")

@@ -123,8 +123,9 @@ def exploded_shingles(docs: DataFrame, text_col: str, id_col: str,
     whole stage to one core (no-op at real scale — see sources.fan_out).
     """
     base = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    return base.select(F.col(id_col),
-                       F.explode(shingles(f"`{text_col}`", n)).alias("shingle"))
+    return base.select(
+        F.col(id_col),
+        F.explode(shingles(sql_ident(text_col), n)).alias("shingle"))
 
 
 # ---------------------------------------------------------------------------
@@ -407,7 +408,7 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text",
     # codegen's subexpression elimination evaluates it once; the
     # inferred filter for the real explode lands on the cheap struct
     # field instead.
-    a_sql = _shingles_sql(f"`{text_col}`", n)
+    a_sql = _shingles_sql(sql_ident(text_col), n)
     wrapped = F.expr(f"explode(array(struct({a_sql} AS a,"
                      f" size({a_sql}) AS n)))").alias("_w")
     sh = (fan_out(docs.select(F.col(id_col), F.col(text_col)))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import sql_ident
 from w_userflow_featurestore_spark.operators.text import token_count_ws
 from w_userflow_featurestore_spark.sources import fan_out
 
@@ -45,7 +46,7 @@ def pack_sequences(docs: DataFrame, budget: int = 2048,
                                F.col(text_col)))
     prev = (Window.partitionBy(*part_cols).orderBy(id_col)
             .rowsBetween(Window.unboundedPreceding, -1))
-    toks = token_count_ws(f"`{text_col}`").cast("long")
+    toks = token_count_ws(sql_ident(text_col)).cast("long")
     out = (docs.withColumn("n_tokens", toks)
            .withColumn("start_offset",
                        F.coalesce(F.sum("n_tokens").over(prev), F.lit(0))

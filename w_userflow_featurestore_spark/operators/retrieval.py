@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import sql_ident
 from w_userflow_featurestore_spark.operators.dedup import words
 
 __all__ = ["bm25_topk"]
@@ -55,7 +56,7 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], *,
     terms = sorted(set(query_terms))
     base = docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(F.filter(words(f"`{text_col}`"),
+        F.size(F.filter(words(sql_ident(text_col)),
                         lambda w: w != F.lit(""))).alias("dl"))
 
     # broadcast 1-row corpus stats: N docs, total token count
@@ -67,9 +68,9 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], *,
     # (doc_id, term), nothing keyed on the full document set
     postings = (docs.select(
         F.col(id_col).alias("doc_id"),
-        F.size(F.filter(words(f"`{text_col}`"),
+        F.size(F.filter(words(sql_ident(text_col)),
                         lambda w: w != F.lit(""))).alias("dl"),
-        F.explode(words(f"`{text_col}`")).alias("term"))
+        F.explode(words(sql_ident(text_col))).alias("term"))
         .where(F.col("term").isin(terms)))
     tf = (postings.groupBy("doc_id", "dl", "term")
           .agg(F.count("*").alias("tf")))

@@ -9,6 +9,14 @@ anywhere, and any engine — here DuckDB — can recompute it bit-for-bit).
 
 Hash = the repo-wide 60-bit md5 prefix (operators.dedup.text_hash60), so
 buckets are uniform and the oracle twin is one CAST expression.
+
+One selection core: the operators share one private path per step —
+the salted id hash (``_salted_hash``; ``hash_bucket`` takes it mod n),
+the split rule (``_split_of``), the hash-threshold keep (``_hash_keep``),
+the token count (``_n_tokens``), the sharded permutation
+(``_shard_order``), the bucketed exclusive prefix sum
+(``_bucketed_exclusive_sum``), the weighted budget cut (``_budget_cut``)
+and the value-quantile cut (``text._quantile_stage``).
 """
 
 from __future__ import annotations
@@ -23,8 +31,9 @@ from w_userflow_featurestore_spark.operators.dedup import (
     _hash60_sql, _words_sql, connected_components, text_hash60,
 )
 from w_userflow_featurestore_spark.operators.text import (
-    token_count_ws, token_surprisal,
+    _quantile_stage, token_count_ws, token_surprisal,
 )
+from w_userflow_featurestore_spark.sources import fan_out
 
 N_BUCKETS = 1000
 
@@ -34,8 +43,111 @@ def hash_bucket(col: str, n_buckets: int = N_BUCKETS,
     """Stable bucket in [0, n_buckets) of the SQL fragment ``col``: 60-bit
     md5 of "salt:value" mod n. The salt decorrelates this partition from
     every other hash use of the same id (dedup survivors, LSH bands, ...)."""
-    return F.pmod(text_hash60(f"CAST({col} AS STRING)", seed=salt),
-                  F.lit(n_buckets)).cast("long")
+    return F.pmod(_salted_hash(col, salt), F.lit(n_buckets)).cast("long")
+
+
+def _salted_hash(col: str, salt: str) -> Column:
+    """60-bit md5 hash of "salt:value" for the SQL fragment ``col``."""
+    return text_hash60(f"CAST({col} AS STRING)", seed=salt)
+
+
+def _split_of(bucket: Column, train: int, val: int) -> Column:
+    """[0,train) -> train, [train,train+val) -> val, rest -> test."""
+    return (F.when(bucket < train, "train")
+             .when(bucket < train + val, "val")
+             .otherwise("test"))
+
+
+def _hash_keep(df: DataFrame, id_col: str, n_buckets: int, salt: str,
+               threshold: Column) -> DataFrame:
+    """Rows of ``df`` whose salted id bucket is below ``threshold``."""
+    return df.where(hash_bucket(sql_ident(id_col), n_buckets, salt)
+                    < threshold)
+
+
+def _n_tokens(text_col: str) -> Column:
+    """Per-doc whitespace token count as BIGINT."""
+    return token_count_ws(sql_ident(text_col)).cast("long")
+
+
+def _shard_order(df: DataFrame, id_col: str, n_shards: int, seed: str,
+                 *keys: str) -> DataFrame:
+    """``df`` plus the salted id hash ``_h``, ``shard = _h % n_shards``
+    and ``shard_pos`` = row_number over (_h, id) inside each
+    (``keys``, shard) — independent in-shard sorts after one hash
+    exchange, never a global sort."""
+    w = Window.partitionBy(*keys, "shard").orderBy("_h", id_col)
+    return (df.withColumn("_h", _salted_hash(sql_ident(id_col), seed))
+              .withColumn("shard", (F.col("_h") % n_shards).cast("long"))
+              .withColumn("shard_pos", F.row_number().over(w).cast("long")))
+
+
+def _bucketed_exclusive_sum(df: DataFrame, keys: list[str],
+                            order: list[str], weight: Column,
+                            out: str) -> DataFrame:
+    """``df`` plus ``out``: the sum of ``weight`` over the rows before
+    each row in (``_b``, ``order``) order within its ``keys`` group.
+
+    ``df`` carries a bucket column ``_b``. Pass 1 is a window over
+    (keys, _b) — within-bucket exclusive prefix sums, one sorting task
+    per bucket instead of one per group; pass 2 sums each (keys, _b)
+    bucket, turns the tiny totals frame into exclusive per-bucket
+    offsets and broadcasts them back. out = offset + within-bucket
+    prefix, exact for any bucketing."""
+    w = (Window.partitionBy(*keys, "_b").orderBy(*order)
+               .rowsBetween(Window.unboundedPreceding, -1))
+    within = df.withColumn(
+        "_cumb", F.coalesce(F.sum(weight).over(w), F.lit(0)).cast("long"))
+    totals = df.groupBy(*keys, "_b").agg(F.sum(weight).alias("_bt"))
+    woff = (Window.partitionBy(*keys).orderBy("_b")
+                  .rowsBetween(Window.unboundedPreceding, -1))
+    offsets = totals.select(
+        *keys, "_b",
+        F.coalesce(F.sum("_bt").over(woff), F.lit(0)).cast("long")
+         .alias("_off"))
+    return (within.join(F.broadcast(offsets), [*keys, "_b"])
+                  .withColumn(out, (F.col("_off") + F.col("_cumb"))
+                                   .cast("long")))
+
+
+def _budget_cut(scores: DataFrame, id_col: str, weight: Column,
+                budget: int) -> DataFrame:
+    """Rows of ``scores`` kept by walking it in (score_bits DESC, id ASC)
+    order while the ``weight`` summed over the rows BEFORE each row is
+    under ``budget``; a frame whose total weight is under the budget is
+    kept whole. A unit weight keeps exactly the top ``budget`` rows.
+
+    No corpus sort: a (score_bits, weight mass) histogram and a
+    descending cumulative window over that value-domain-sized frame
+    find the one BOUNDARY score (mass strictly above it is under the
+    budget, adding its own mass crosses); higher scores keep whole,
+    lower ones drop whole, and only the boundary score's ties pay an
+    id-ordered prefix sum."""
+    hist = (scores.groupBy("score_bits")
+                  .agg(F.sum(weight).cast("long").alias("_tmass")))
+    wd = (Window.orderBy(F.desc("score_bits"))
+                .rowsBetween(Window.unboundedPreceding, -1))
+    cum = hist.withColumn(
+        "_above", F.coalesce(F.sum("_tmass").over(wd),
+                             F.lit(0)).cast("long"))
+    crosses = ((F.col("_above") < budget)
+               & (F.col("_above") + F.col("_tmass") >= budget))
+    bound = cum.agg(
+        F.max(F.when(crosses, F.col("score_bits"))).alias("_t"),
+        F.max(F.when(crosses, F.col("_above"))).alias("_gt"))
+    base = scores.crossJoin(F.broadcast(bound))
+    kept = base.where(F.col("_t").isNull()
+                      | (F.col("score_bits") > F.col("_t")))
+    wt = (Window.partitionBy("score_bits").orderBy(F.col(id_col).asc())
+                .rowsBetween(Window.unboundedPreceding, -1))
+    tie_kept = (base.where(F.col("score_bits") == F.col("_t"))
+                .withColumn("_cumb",
+                            F.col("_gt")
+                            + F.coalesce(F.sum(weight).over(wt),
+                                         F.lit(0)).cast("long"))
+                .where(F.col("_cumb") < budget))
+    cols = scores.columns
+    return kept.select(*cols).unionByName(tie_kept.select(*cols))
 
 
 def dataset_split(df: DataFrame, id_col: str = "doc_id",
@@ -48,11 +160,8 @@ def dataset_split(df: DataFrame, id_col: str = "doc_id",
     corpus grows, which incremental pipelines rely on (new docs land in
     the same proportions without reshuffling old ones)."""
     b = hash_bucket(sql_ident(id_col), n_buckets, salt)
-    return df.withColumn("bucket", b).withColumn(
-        "split",
-        F.when(F.col("bucket") < train, "train")
-         .when(F.col("bucket") < train + val, "val")
-         .otherwise("test"))
+    return (df.withColumn("bucket", b)
+              .withColumn("split", _split_of(F.col("bucket"), train, val)))
 
 
 def split_summary(df: DataFrame, id_col: str = "doc_id",
@@ -80,11 +189,11 @@ def stratified_sample(df: DataFrame, fractions: dict[str, float],
     Class rebalancing (downweight boilerplate, keep all rare positives)
     is the canonical 100 TB use.
     """
-    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
     thresholds = F.create_map(*[
         lit for k, frac in sorted(fractions.items())
         for lit in (F.lit(k), F.lit(int(round(frac * n_buckets))))])
-    return df.where(b < thresholds[F.col(strata_col)])
+    return _hash_keep(df, id_col, n_buckets, salt,
+                      thresholds[F.col(strata_col)])
 
 
 def weighted_sample(df: DataFrame, weight: Column, id_col: str = "doc_id",
@@ -102,9 +211,8 @@ def weighted_sample(df: DataFrame, weight: Column, id_col: str = "doc_id",
     engine and stable under corpus growth / reruns. Projection-only:
     composes into the scan with zero shuffles.
     """
-    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
-    thr = F.floor(weight * n_buckets + F.lit(0.5)).cast("long")
-    return df.where(b < thr)
+    return _hash_keep(df, id_col, n_buckets, salt,
+                      F.floor(weight * n_buckets + F.lit(0.5)).cast("long"))
 
 
 def cap_group_rows(df: DataFrame, group_cols: list[str], n: int,
@@ -122,8 +230,7 @@ def cap_group_rows(df: DataFrame, group_cols: list[str], n: int,
     the cap IS the skew fix for whatever follows it.
     """
     w = Window.partitionBy(*group_cols).orderBy(
-        text_hash60(f"CAST({sql_ident(id_col)} AS STRING)", seed=salt),
-        F.col(id_col))
+        _salted_hash(sql_ident(id_col), salt), F.col(id_col))
     return (df.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= n).drop("__rn"))
 
@@ -155,10 +262,9 @@ def source_balanced_sample(df: DataFrame, source_col: str = "source",
                              F.floor(F.lit(n_buckets) * F.col("_total")
                                      / (F.col("_nsrc") * F.col("_n")))
                               .cast("long")).alias("_keep_bp")))
-    b = hash_bucket(sql_ident(id_col), n_buckets, salt)
-    return (df.join(F.broadcast(rates), source_col)
-              .where(b < F.col("_keep_bp"))
-              .drop("_keep_bp"))
+    return (_hash_keep(df.join(F.broadcast(rates), source_col), id_col,
+                       n_buckets, salt, F.col("_keep_bp"))
+            .drop("_keep_bp"))
 
 
 def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
@@ -194,7 +300,8 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
     no global state.
     """
     ledger = component_ledger(docs, pairs, id_col, pair_a, pair_b)
-    return _split_columns(ledger, id_col, train, val, n_buckets, salt)
+    return (dataset_split(ledger, "group_key", train, val, n_buckets, salt)
+            .select(id_col, "group_key", "bucket", "split"))
 
 
 def component_ledger(docs: DataFrame, pairs: DataFrame,
@@ -219,20 +326,6 @@ def component_ledger(docs: DataFrame, pairs: DataFrame,
                 .withColumn("group_key",
                             F.coalesce("component", F.col(id_col)))
                 .select(id_col, "group_key"))
-
-
-def _split_columns(keyed: DataFrame, id_col: str, train: int, val: int,
-                   n_buckets: int, salt: str) -> DataFrame:
-    """Apply the hash-bucket split rule to a (doc_id, group_key) frame —
-    the shared tail of the full and incremental leakage-safe splits."""
-    b = hash_bucket("group_key", n_buckets, salt)
-    return (keyed.withColumn("bucket", b)
-                 .withColumn(
-                     "split",
-                     F.when(F.col("bucket") < train, "train")
-                      .when(F.col("bucket") < train + val, "val")
-                      .otherwise("test"))
-                 .select(id_col, "group_key", "bucket", "split"))
 
 
 def merge_component_ledger(ledger: DataFrame, batch_docs: DataFrame,
@@ -327,7 +420,7 @@ def incremental_leakage_split(ledger: DataFrame, batch_docs: DataFrame,
     # next ingest incremental too (see runner.run_split_ledger_update)
     keyed = merge_component_ledger(ledger, batch_docs, batch_pairs,
                                    id_col, pair_a, pair_b)
-    out = _split_columns(keyed, id_col, train, val, n_buckets, salt)
+    out = dataset_split(keyed, "group_key", train, val, n_buckets, salt)
     prev = ledger.select(F.col(id_col),
                          F.col("group_key").alias("_prev_gk"))
     return (out.join(prev, id_col, "left")
@@ -371,10 +464,7 @@ def split_leakage_audit(pairs: DataFrame,
     plus two label joins — no matter how large the corpus is.
     """
     def split_of(col: str) -> Column:
-        b = hash_bucket(col, n_buckets, salt)
-        return (F.when(b < train, "train")
-                 .when(b < train + val, "val")
-                 .otherwise("test"))
+        return _split_of(hash_bucket(col, n_buckets, salt), train, val)
 
     def cells(sa: Column, sb: Column, scheme: str,
               frame: DataFrame) -> DataFrame:
@@ -419,13 +509,8 @@ def corpus_shuffle(df: DataFrame, n_shards: int = 256,
     """
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    h = text_hash60(f"CAST(`{id_col}` AS STRING)", seed=seed)
-    w = Window.partitionBy("shard").orderBy("_h", id_col)
-    return (df.select(F.col(id_col), h.alias("_h"))
-              .withColumn("shard", (F.col("_h") % n_shards).cast("long"))
-              .withColumn("shard_pos",
-                          F.row_number().over(w).cast("long"))
-              .select(id_col, "shard", "shard_pos"))
+    return (_shard_order(df.select(id_col), id_col, n_shards, seed)
+            .select(id_col, "shard", "shard_pos"))
 
 
 def token_budget_mix(docs: DataFrame, budget_tokens: int,
@@ -451,30 +536,18 @@ def token_budget_mix(docs: DataFrame, budget_tokens: int,
     n_tokens, cum_before, kept) — so the selection boundary is
     auditable (and oracle-testable) rather than implicit.
 
-    Scale shape — BUCKETED TWO-PASS exclusive prefix sum. A training
-    mixture has a handful of sources, so a window partitioned by
-    ``source`` alone hash-routes each source's ENTIRE multi-TB row set
-    to one task and sorts it there — the common case, not a pathology.
+    Scale shape — :func:`_bucketed_exclusive_sum`. A training mixture
+    has a handful of sources, so a window partitioned by ``source``
+    alone would sort each source's ENTIRE multi-TB row set in one task.
     Instead the per-source hash order is range-bucketed:
-    ``_b = _h div ceil(2^60/B)`` is
-    order-preserving in ``_h`` (equal hashes share a bucket, so the
-    (_h, id) sort order never straddles a boundary), which decomposes
-    the prefix sum exactly:
-
-      pass 1 — window over (source, _b): within-bucket exclusive
-               prefix sums, B independent tasks per source instead
-               of 1 (the ONE big-side exchange);
-      pass 2 — per-(source, _b) token totals (map-side partial agg,
-               S*B rows out) -> exclusive per-bucket offsets via a
-               window over the TINY totals frame -> broadcast back.
-
-      cum_before = bucket offset + within-bucket prefix.
-
-    Same deterministic (_h, id) order, bit-identical result for any
-    ``n_range_buckets`` >= 1; budgets stay a literal CASE, never a
-    join. Max rows per sorting task drops from n_source to
-    ~n_source/B (uniform md5 buckets); raise ``n_range_buckets`` to
-    match cluster parallelism at larger scale.
+    ``_b = _h div ceil(2^60/B)`` is order-preserving in ``_h`` (equal
+    hashes share a bucket), so cum_before = per-bucket offset (a window
+    over the tiny S*B totals frame, broadcast back) + within-bucket
+    prefix (a window over (source, _b), the one big-side exchange).
+    The result is bit-identical for any ``n_range_buckets`` >= 1 and
+    budgets stay a literal CASE. Max rows per sorting task drops from
+    n_source to ~n_source/B; raise ``n_range_buckets`` to match
+    cluster parallelism at larger scale.
     """
     if n_range_buckets < 1:
         raise ValueError("n_range_buckets must be >= 1")
@@ -483,36 +556,17 @@ def token_budget_mix(docs: DataFrame, budget_tokens: int,
     for s, b in sorted(ov.items()):
         budget = F.when(F.col(source_col) == s,
                         F.lit(int(b)).cast("long")).otherwise(budget)
-    h = text_hash60(f"CAST(`{id_col}` AS STRING)", seed=seed)
     # integer div, not float /: _h spans 60 bits, past double's 53-bit
     # mantissa, so float bucketing could misplace boundary rows
     width = -(-(1 << 60) // n_range_buckets)
     base = (docs.select(F.col(id_col), F.col(source_col),
-                        token_count_ws(f"`{text_col}`").cast("long")
-                         .alias("n_tokens"),
-                        h.alias("_h"))
+                        _n_tokens(text_col).alias("n_tokens"),
+                        _salted_hash(sql_ident(id_col), seed).alias("_h"))
                 .withColumn("_b", F.expr(f"_h div {width}")))
-    w = Window.partitionBy(source_col, "_b").orderBy("_h", id_col)
-    within = base.withColumn(
-        "_cumb",
-        F.coalesce(F.sum("n_tokens").over(
-            w.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0)).cast("long"))
-    totals = (base.groupBy(source_col, "_b")
-                  .agg(F.sum("n_tokens").alias("_bt")))
-    woff = (Window.partitionBy(source_col).orderBy("_b")
-                  .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = totals.select(
-        source_col, "_b",
-        F.coalesce(F.sum("_bt").over(woff), F.lit(0)).cast("long")
-         .alias("_off"))
-    return (within.join(F.broadcast(offsets), [source_col, "_b"])
-                  .withColumn("cum_before",
-                              (F.col("_off") + F.col("_cumb"))
-                               .cast("long"))
-                  .withColumn("kept", F.col("cum_before") < budget)
-                  .select(id_col, source_col, "n_tokens", "cum_before",
-                          "kept"))
+    return (_bucketed_exclusive_sum(base, [source_col], ["_h", id_col],
+                                    F.col("n_tokens"), "cum_before")
+            .withColumn("kept", F.col("cum_before") < budget)
+            .select(id_col, source_col, "n_tokens", "cum_before", "kept"))
 
 
 def temperature_mix_weights(docs: DataFrame, budget_tokens: int,
@@ -547,8 +601,8 @@ def temperature_mix_weights(docs: DataFrame, budget_tokens: int,
     if tau < 1 or (tau & (tau - 1)):
         raise ValueError("tau must be a power of two (1, 2, 4, ...)")
     counts = (docs.groupBy(source_col)
-                  .agg(F.sum(token_count_ws(f"`{text_col}`").cast("long"))
-                        .cast("long").alias("n_tokens")))
+                  .agg(F.sum(_n_tokens(text_col)).cast("long")
+                        .alias("n_tokens")))
     scaled = F.col("n_tokens").cast("double")
     t = tau
     while t > 1:
@@ -620,12 +674,10 @@ def dsir_importance(docs: DataFrame, target: DataFrame | None,
     pass over the corpus, no token-grain materialization and no
     recomputation of the token-grain subtree per consumer.
     """
-    from w_userflow_featurestore_spark.sources import fan_out
-
     def grams(frame: DataFrame, *extra_cols: str) -> DataFrame:
         # single parsed expression per projection: a Column-API form
         # of this builder costs ~160 py4j roundtrips per construction
-        ws = _words_sql(f"`{text_col}`")
+        ws = _words_sql(sql_ident(text_col))
         bigrams = (f"transform(sequence(1, size({ws}) - 1),"
                    f" i -> concat_ws(' ', element_at({ws}, i),"
                    f" element_at({ws}, i + 1)))")
@@ -711,16 +763,16 @@ def dsir_select(docs: DataFrame, target: DataFrame | None,
 
     Scale shape — NO corpus-sized sort (the perplexity_buckets trick):
     score_bits is a whole-bit integer, so its value domain is small
-    and bounded. The cut threshold comes from a (score_bits, count)
-    HISTOGRAM — one bounded hash-aggregate, a descending cumulative
-    window over that tiny frame, and a 1-row aggregate broadcast back:
-    every doc scoring ABOVE the boundary value is kept outright, and
-    the exact-k remainder is resolved by doc_id among the BOUNDARY
-    SCORE'S ties only — the row_number window sees just the tie rows
-    (one score value), never the corpus, the same bounded-worst-case
-    trade TakeOrdered makes. The scored frame is lineage-cut (three
-    narrow columns per doc) because three consumers read it and its
-    subtree is the full DSIR scoring pipeline.
+    and bounded. The selection is :func:`_budget_cut` with a weight of
+    one per doc: a (score_bits, count) HISTOGRAM and a descending
+    cumulative window over that tiny frame find the boundary score;
+    every doc scoring ABOVE it is kept outright, and the exact-k
+    remainder is resolved by doc_id among the BOUNDARY SCORE'S ties
+    only — the id-ordered prefix window sees just the tie rows (one
+    score value), never the corpus, the same bounded-worst-case trade
+    TakeOrdered makes. The scored frame is lineage-cut (three narrow
+    columns per doc) because three consumers read it and its subtree
+    is the full DSIR scoring pipeline.
     """
     if budget_docs <= 0:
         raise ValueError("budget_docs must be > 0 — an empty selection "
@@ -728,30 +780,7 @@ def dsir_select(docs: DataFrame, target: DataFrame | None,
     scores = dsir_importance(docs, target, n_features, text_col,
                              id_col, target_pred=target_pred) \
         .localCheckpoint(eager=True)
-    hist = (scores.groupBy("score_bits")
-                  .agg(F.count(F.lit(1)).alias("_n")))
-    wd = (Window.orderBy(F.desc("score_bits"))
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = hist.withColumn("_cum", F.sum("_n").over(wd))
-    # boundary = the HIGHEST score whose desc-cumulative count reaches
-    # the budget; _gt = docs strictly above it (that row's _cum - _n —
-    # the min over qualifying rows, since lower scores only accumulate
-    # more). No qualifying row = corpus smaller than budget = keep all.
-    bound = cum.agg(
-        F.max(F.when(F.col("_cum") >= budget_docs,
-                     F.col("score_bits"))).alias("_t"),
-        F.min(F.when(F.col("_cum") >= budget_docs,
-                     F.col("_cum") - F.col("_n"))).alias("_gt"))
-    base = scores.crossJoin(F.broadcast(bound))
-    out_cols = [id_col, "n_feats", "score_bits"]
-    kept = base.where(F.col("_t").isNull()
-                      | (F.col("score_bits") > F.col("_t")))
-    wt = Window.partitionBy("score_bits").orderBy(F.col(id_col).asc())
-    tie_kept = (base.where(F.col("score_bits") == F.col("_t"))
-                .withColumn("_rk", F.row_number().over(wt))
-                .where(F.col("_rk") <= budget_docs - F.col("_gt")))
-    return (kept.select(*out_cols)
-                .unionByName(tie_kept.select(*out_cols)))
+    return _budget_cut(scores, id_col, F.lit(1), budget_docs)
 
 
 def dsir_select_tokens(docs: DataFrame, target: DataFrame | None,
@@ -771,64 +800,25 @@ def dsir_select_tokens(docs: DataFrame, target: DataFrame | None,
 
     Returns the selected rows (doc_id, n_feats, score_bits, n_tokens).
 
-    Scale shape — same histogram-threshold plan as :func:`dsir_select`,
-    with token mass instead of doc counts: the (score_bits,
-    sum(n_tokens), count) histogram is one bounded hash-agg; a
-    descending cumulative window over that tiny frame finds the single
-    BOUNDARY score (the highest score where tokens-strictly-above +
-    the score's own token mass reach the budget — every higher score
-    keeps whole, every lower score drops whole); only the boundary
-    score's ties pay a row_number-ordered token prefix sum, over one
-    score value's rows. The corpus never sorts; per-doc token counts
-    are a row-local projection joined onto the scored frame by doc_id.
+    Scale shape — the same :func:`_budget_cut` as :func:`dsir_select`,
+    weighted by token mass instead of one per doc: only the boundary
+    score's ties pay an id-ordered token prefix sum, and the corpus
+    never sorts; per-doc token counts are a row-local projection
+    joined onto the scored frame by doc_id.
     """
     if budget_tokens <= 0:
-        # the no-boundary case below means "the corpus fits the
+        # the no-boundary case of the cut means "the corpus fits the
         # budget"; a zero/negative budget would alias onto it and keep
         # everything — the exact opposite of what was asked
         raise ValueError("budget_tokens must be > 0")
     scores = (dsir_importance(docs, target, n_features,
                               text_col, id_col,
                               target_pred=target_pred)
-              .join(docs.select(
-                        F.col(id_col),
-                        token_count_ws(sql_ident(text_col)).cast("long")
-                         .alias("n_tokens")), id_col)
+              .join(docs.select(F.col(id_col),
+                                _n_tokens(text_col).alias("n_tokens")),
+                    id_col)
               .localCheckpoint(eager=True))
-    hist = (scores.groupBy("score_bits")
-                  .agg(F.sum("n_tokens").cast("long").alias("_tmass")))
-    wd = (Window.orderBy(F.desc("score_bits"))
-                .rowsBetween(Window.unboundedPreceding, -1))
-    cum = hist.withColumn(
-        "_above", F.coalesce(F.sum("_tmass").over(wd),
-                             F.lit(0)).cast("long"))
-    # the single boundary score: tokens strictly above it are under the
-    # budget, but adding its own mass crosses. No such score = the
-    # whole corpus fits (every group's above+mass < budget).
-    bound = cum.agg(
-        F.max(F.when((F.col("_above") < budget_tokens)
-                     & (F.col("_above") + F.col("_tmass")
-                        >= budget_tokens),
-                     F.col("score_bits"))).alias("_t"),
-        F.max(F.when((F.col("_above") < budget_tokens)
-                     & (F.col("_above") + F.col("_tmass")
-                        >= budget_tokens),
-                     F.col("_above"))).alias("_gt_tokens"))
-    base = scores.crossJoin(F.broadcast(bound))
-    out_cols = [id_col, "n_feats", "score_bits", "n_tokens"]
-    kept = base.where(F.col("_t").isNull()
-                      | (F.col("score_bits") > F.col("_t")))
-    wt = Window.partitionBy("score_bits").orderBy(F.col(id_col).asc())
-    tie_kept = (base.where(F.col("score_bits") == F.col("_t"))
-                .withColumn(
-                    "_cumb",
-                    F.col("_gt_tokens")
-                    + F.coalesce(F.sum("n_tokens").over(
-                        wt.rowsBetween(Window.unboundedPreceding, -1)),
-                        F.lit(0)).cast("long"))
-                .where(F.col("_cumb") < budget_tokens))
-    return (kept.select(*out_cols)
-                .unionByName(tie_kept.select(*out_cols)))
+    return _budget_cut(scores, id_col, F.col("n_tokens"), budget_tokens)
 
 
 def negative_samples(positives: DataFrame, user_col: str = "user_id",
@@ -846,9 +836,9 @@ def negative_samples(positives: DataFrame, user_col: str = "user_id",
     can replay the exact sample from the md5 expression (the DuckDB
     oracle does).
 
-    Scale shape: the catalog's dense 0..n-1 index is built with a
-    two-phase distributed dense rank (per-bucket row_number +
-    broadcast prefix offsets — never a single-partition global sort);
+    Scale shape: the catalog's dense 0..n-1 index is the bucketed
+    exclusive prefix sum of one per item (per-bucket prefix window +
+    broadcast bucket offsets — never a single-partition global sort);
     the k-way expansion is a row-local posexplode of a literal range
     (projection, no shuffle); the only other shuffles are the two
     distincts and the anti-join, all on the same (user, item)-family
@@ -859,26 +849,13 @@ def negative_samples(positives: DataFrame, user_col: str = "user_id",
     pos = positives.select(F.col(user_col).alias("_u"),
                            F.col(item_col).alias("_i")).distinct()
     # dense 0..n-1 catalog index WITHOUT a single-partition global
-    # sort: two-phase distributed dense rank — row_number within a
-    # hash bucket plus broadcast per-bucket prefix offsets (the
-    # offsets are |buckets| rows of driver-side metadata, the ranking
-    # work itself stays spread across buckets)
+    # sort: the bucketed exclusive prefix count of the distinct items
     n_rank_buckets = 64
     items = (pos.select("_i").distinct()
                 .withColumn("_b", F.pmod(text_hash60("CAST(_i AS STRING)"),
                                          F.lit(n_rank_buckets))))
-    wb = Window.partitionBy("_b").orderBy("_i")
-    bucket_sizes = (items.groupBy("_b")
-                         .agg(F.count(F.lit(1)).alias("_n")))
-    woff = (Window.orderBy("_b")
-                  .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = bucket_sizes.select(
-        "_b", F.coalesce(F.sum("_n").over(woff), F.lit(0)).alias("_off"))
-    catalog = (items
-               .withColumn("_rn", F.row_number().over(wb) - 1)
-               .join(F.broadcast(offsets), "_b")
-               .select(F.col("_i").alias("_cat_item"),
-                       (F.col("_off") + F.col("_rn")).alias("_idx")))
+    catalog = (_bucketed_exclusive_sum(items, [], ["_i"], F.lit(1), "_idx")
+               .select(F.col("_i").alias("_cat_item"), "_idx"))
     n_items = catalog.groupBy().agg(
         F.count(F.lit(1)).alias("_n_items"))
     draws = (pos.crossJoin(F.broadcast(n_items))
@@ -928,10 +905,12 @@ def curriculum_order(docs: DataFrame, n_stages: int = 4,
 
     Scale shape: surprisal is two token-grain hash aggregates; the
     scored frame is lineage-cut once and never globally sorts —
-    thresholds come from a value-domain histogram and ride a 1-row
-    broadcast; the within-stage permutation is ``n_stages x n_shards``
-    independent row_number sorts of ~n/(stages*shards) rows each after
-    ONE hash exchange. No RangePartitioning anywhere.
+    thresholds come from a value-domain histogram
+    (``text._quantile_stage``) and ride a 1-row broadcast; the
+    within-stage permutation (``_shard_order``, as in
+    :func:`corpus_shuffle`) is ``n_stages x n_shards`` independent
+    row_number sorts of ~n/(stages*shards) rows each after ONE hash
+    exchange. No RangePartitioning anywhere.
     """
     if n_stages < 2:
         raise ValueError("n_stages must be >= 2")
@@ -940,31 +919,7 @@ def curriculum_order(docs: DataFrame, n_stages: int = 4,
     scored = (token_surprisal(docs, text_col, id_col)
               .select(F.col(id_col), "mean_bits")
               .localCheckpoint(eager=True))
-    hist = scored.groupBy("mean_bits").agg(F.count(F.lit(1)).alias("_n"))
-    w = (Window.orderBy("mean_bits")
-               .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (hist.withColumn("_cum", F.sum("_n").over(w))
-               .crossJoin(F.broadcast(
-                   hist.agg(F.sum("_n").alias("_tot")))))
-    # ceil(s*tot/K) as (s*tot + K-1) DIV K — positive operands only
-    # (Spark DIV truncates toward zero, DuckDB // floors)
-    thresholds = cum.agg(*[
-        F.min(F.when(
-            F.expr(f"_cum >= ({s} * _tot + {n_stages - 1})"
-                   f" DIV {n_stages}"),
-            F.col("mean_bits"))).alias(f"_t{s}")
-        for s in range(1, n_stages)])
-    stage = F.lit(n_stages)
-    for s in range(n_stages - 1, 0, -1):
-        stage = F.when(F.col("mean_bits") <= F.col(f"_t{s}"),
-                       F.lit(s)).otherwise(stage)
-    h = text_hash60(f"CAST(`{id_col}` AS STRING)", seed=seed)
-    wsh = Window.partitionBy("stage", "shard").orderBy("_h", id_col)
-    return (scored.crossJoin(F.broadcast(thresholds))
-            .select(F.col(id_col), "mean_bits",
-                    stage.cast("int").alias("stage"),
-                    h.alias("_h"))
-            .withColumn("shard", (F.col("_h") % n_shards).cast("long"))
-            .withColumn("shard_pos",
-                        F.row_number().over(wsh).cast("long"))
+    staged = _quantile_stage(scored, "mean_bits",
+                             list(range(1, n_stages + 1)), [], "stage")
+    return (_shard_order(staged, id_col, n_shards, seed, "stage")
             .select(id_col, "mean_bits", "stage", "shard", "shard_pos"))

@@ -50,6 +50,7 @@ import hashlib
 import os
 
 from w_userflow_featurestore_spark.functions import bp, fround, sql_ident
+from w_userflow_featurestore_spark.operators.dedup import text_hash60
 from w_userflow_featurestore_spark.sources import LogTable, fan_out
 
 SCALE = 1_000_000  # 1e6 quantization: 64-dim unit vectors -> |dot| <= 6.4e13
@@ -142,10 +143,10 @@ def _quantized(df: DataFrame, id_col: str, vec_col: str, out_id: str,
     if spread:
         base = fan_out(base)
     out = base.select(F.col(id_col).alias(out_id),
-                      quantize(f"`{vec_col}`").alias(out_vec),
+                      quantize(sql_ident(vec_col)).alias(out_vec),
                       *[F.col(c).alias(a) for c, a in carry.items()])
     if with_norm:
-        out = out.withColumn(with_norm, norm_q(f"`{out_vec}`"))
+        out = out.withColumn(with_norm, norm_q(sql_ident(out_vec)))
     return out
 
 
@@ -282,11 +283,10 @@ def ivf_fit_centroids(corpus: DataFrame, n_centroids: int = 8,
     longs, independent of corpus size. Production would k-means-refine these seeds; the index
     structure (and this engine's plumbing) is identical either way.
     """
-    from w_userflow_featurestore_spark.operators.dedup import text_hash60
     h = text_hash60(f"CAST({sql_ident(id_col)} AS STRING)", seed="ivf")
     rows = (corpus
             .select(F.col(id_col).alias("_id"),
-                    quantize(f"`{vec_col}`").alias("cv"), h.alias("h"))
+                    quantize(sql_ident(vec_col)).alias("cv"), h.alias("h"))
             .orderBy("h", "_id").limit(n_centroids).collect())
     return [list(r["cv"]) for r in rows]
 
@@ -540,7 +540,6 @@ def cluster_balanced_sample(corpus: DataFrame, per_cluster: int = 5,
     in this family; raise ``n_centroids`` with the corpus exactly as
     ivf_topk does.
     """
-    from w_userflow_featurestore_spark.operators.dedup import text_hash60
     model = _fit(corpus, n_centroids, id_col, vec_col)
     n = _quantized(corpus, id_col, vec_col, "_sid", "_svec")
     assign = _assign_cells(n, "_sid", "_svec", model)

@@ -148,7 +148,7 @@ def winnow_fingerprints(docs: DataFrame, text_col: str = "text",
                  f" i -> array_min(slice(__winnow_hs, i, {w}))))"
                  f" ELSE array(array_min(__winnow_hs)) END")
     return (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-            .withColumn("__winnow_norm", normalize_text(f"`{text_col}`"))
+            .withColumn("__winnow_norm", normalize_text(sql_ident(text_col)))
             .withColumn("__winnow_hs", hs)
             .select(F.col(id_col), F.explode(fps).alias("fingerprint")))
 
@@ -159,7 +159,7 @@ def text_profile(docs: DataFrame, text_col: str = "text",
     (fan_out spreads the projection across cores when the input is a
     single split; no-op at scale)."""
     docs = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    c = f"`{text_col}`"
+    c = sql_ident(text_col)
     # long casts: DuckDB's len()/count() yield BIGINT, Spark's size()/
     # regexp_count() yield INT — align so schema comparison is width-proof
     return docs.select(
@@ -306,9 +306,9 @@ def corpus_language_stats(docs: DataFrame, text_col: str = "text",
     docs = fan_out(docs.select(*[F.col(c) for c in dims],
                                F.col(text_col)))
     p = docs.select(*dims,
-                    lang_id(f"`{text_col}`").alias("lang_pred"),
-                    quality_score(f"`{text_col}`").alias("quality"),
-                    token_count_ws(f"`{text_col}`").alias("n_tokens_ws"))
+                    lang_id(sql_ident(text_col)).alias("lang_pred"),
+                    quality_score(sql_ident(text_col)).alias("quality"),
+                    token_count_ws(sql_ident(text_col)).alias("n_tokens_ws"))
     return (p.groupBy(*dims, "lang_pred")
              .agg(F.count(F.lit(1)).alias("n_docs"),
                   # exact_avg: quality is 2-decimal; integer-scaled sum is
@@ -405,7 +405,7 @@ def chunk_documents(docs: DataFrame, chunk_tokens: int = 64,
         raise ValueError("need 0 <= overlap < chunk_tokens")
     stride = chunk_tokens - overlap
     docs = fan_out(docs.select(F.col(id_col), F.col(text_col)))
-    out = (docs.withColumn("__ws", words(f"`{text_col}`"))
+    out = (docs.withColumn("__ws", words(sql_ident(text_col)))
            .withColumn("__n", F.size(F.col("__ws"))))
     n, ws = F.col("__n"), F.col("__ws")
     n_chunks = F.when(n <= chunk_tokens, F.lit(1)).otherwise(
@@ -655,7 +655,7 @@ def _excise_spans(docs: DataFrame, spans: DataFrame, text_col: str,
                                  F.col("span_end").alias("e")))
                     .alias("_spans")))
     base = (fan_out(docs.select(F.col(id_col), F.col(text_col)))
-            .select(F.col(id_col), words(f"`{text_col}`").alias("_ws")))
+            .select(F.col(id_col), words(sql_ident(text_col)).alias("_ws")))
     j = (base.join(per_doc, id_col, "left")
              .withColumn("_spans",
                          F.coalesce(F.col("_spans"),
@@ -916,7 +916,7 @@ def quality_filter_verdict(docs: DataFrame, *,
     """
     docs = fan_out(docs.select(F.col(id_col), F.col(text_col),
                                *[F.col(c) for c in carry_cols]))
-    c = f"`{text_col}`"
+    c = sql_ident(text_col)
     out = (docs.withColumn("__ws", words(c))
                .withColumn("__n", F.size(F.col("__ws")))
                .withColumn("__q", quality_score(c))
@@ -1024,36 +1024,53 @@ def perplexity_buckets(docs: DataFrame, text_col: str = "text",
     shuffles beyond token_surprisal's own aggregates.
     """
     # Lineage cut: the scored frame feeds BOTH the histogram chain and
-    # the final bucket assignment; without it the whole surprisal
-    # subtree (two LM joins + a doc aggregate) runs twice. The
-    # materialized frame is three narrow columns per doc — the same
-    # bounded trade incremental_duplicate_spans makes for its postings.
+    # the final bucket assignment of _quantile_stage (K = 3); without
+    # it the whole surprisal subtree (two LM joins + a doc aggregate)
+    # runs twice. The materialized frame is three narrow columns per
+    # doc — the same bounded trade incremental_duplicate_spans makes
+    # for its postings.
     scored = (token_surprisal(docs, text_col, id_col)
               .join(docs.select(F.col(id_col), F.col(lang_col)), id_col)
               .select(F.col(id_col), F.col(lang_col).alias("lang"),
                       "mean_bits")
               .localCheckpoint(eager=True))
-    hist = (scored.groupBy("lang", "mean_bits")
-                  .agg(F.count(F.lit(1)).alias("_n")))
-    w = (Window.partitionBy("lang").orderBy("mean_bits")
+    return _quantile_stage(scored, "mean_bits", ["head", "middle", "tail"],
+                           ["lang"], "bucket")
+
+
+def _quantile_stage(scored: DataFrame, score: str, labels: list,
+                    keys: list[str], out: str) -> DataFrame:
+    """``scored``'s columns plus ``out``: within each ``keys`` group (the whole
+    frame when ``keys`` is empty), ``labels[s-1]`` for the first stage s
+    whose value threshold t_s >= ``score``, else the last label. With
+    K = len(labels), t_s is the smallest score whose cumulative row
+    count reaches ceil(s*n/K), so ties share a stage.
+
+    The thresholds come from a (keys, score) HISTOGRAM — one
+    value-domain-sized hash-aggregate, a cumulative window and a window
+    total over that tiny frame — and broadcast back onto ``scored``;
+    the scored frame itself never sorts."""
+    k = len(labels)
+    hist = scored.groupBy(*keys, score).agg(F.count(F.lit(1)).alias("_n"))
+    w = (Window.partitionBy(*keys).orderBy(score)
                .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    tot = Window.partitionBy("lang")
+    tot = Window.partitionBy(*keys)
     cum = (hist.withColumn("_cum", F.sum("_n").over(w))
                .withColumn("_tot", F.sum("_n").over(tot)))
-    # smallest value reaching ceil(n/3) / ceil(2n/3); ceiling as
-    # (n + 2) DIV 3 — POSITIVE operands only, because Spark's DIV
-    # truncates toward zero while DuckDB's // floors, and the two
-    # diverge exactly on negative operands
-    thresholds = (cum.groupBy("lang")
-                  .agg(F.min(F.when(F.expr("_cum >= (_tot + 2) DIV 3"),
-                                    F.col("mean_bits"))).alias("_t1"),
-                       F.min(F.when(F.expr("_cum >= (2 * _tot + 2) DIV 3"),
-                                    F.col("mean_bits"))).alias("_t2")))
-    return (scored.join(F.broadcast(thresholds), "lang")
-            .select(id_col, "lang", "mean_bits",
-                    F.when(F.col("mean_bits") <= F.col("_t1"), "head")
-                     .when(F.col("mean_bits") <= F.col("_t2"), "middle")
-                     .otherwise("tail").alias("bucket")))
+    # ceil(s*n/K) as (s*n + K-1) DIV K — POSITIVE operands only, because
+    # Spark's DIV truncates toward zero while DuckDB's // floors, and
+    # the two diverge exactly on negative operands
+    thresholds = cum.groupBy(*keys).agg(*[
+        F.min(F.when(F.expr(f"_cum >= ({s} * _tot + {k - 1}) DIV {k}"),
+                     F.col(score))).alias(f"_t{s}")
+        for s in range(1, k)])
+    stage = F.when(F.col(score) <= F.col("_t1"), labels[0])
+    for s in range(2, k):
+        stage = stage.when(F.col(score) <= F.col(f"_t{s}"), labels[s - 1])
+    joined = (scored.join(F.broadcast(thresholds), keys) if keys
+              else scored.crossJoin(F.broadcast(thresholds)))
+    return joined.select(*scored.columns,
+                         stage.otherwise(labels[-1]).alias(out))
 
 
 def bpe_pair_counts(docs: DataFrame, k: int = 20,
@@ -1753,7 +1770,7 @@ def lang_id_confusion(docs: DataFrame, text_col: str = "text",
     """
     p = (fan_out(docs.select(F.col(label_col), F.col(text_col)))
          .select(F.col(label_col).alias("lang"),
-                 lang_id(f"`{text_col}`").alias("lang_pred")))
+                 lang_id(sql_ident(text_col)).alias("lang_pred")))
     g = (p.groupBy("lang", "lang_pred")
           .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
     w = Window.partitionBy("lang")

@@ -35,6 +35,7 @@ Every step is re-runnable: a crashed run leaves the ledger uncommitted
 
 from __future__ import annotations
 
+import datetime as _dt
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -43,9 +44,16 @@ from pyspark.sql import functions as F
 from w_userflow_featurestore_spark.incremental import (
     IncrementalPlanner, LakehousePlanner,
 )
+# dedup is called through the module so its ledger steps stay
+# substitutable at call time (the concurrent-commit tests patch them)
+from w_userflow_featurestore_spark.operators import dedup
 from w_userflow_featurestore_spark.operators import metrics as M
 from w_userflow_featurestore_spark.operators.cleanse import (
     dedup_latest, drop_null_keys,
+)
+from w_userflow_featurestore_spark.operators.quality import quality_report
+from w_userflow_featurestore_spark.operators.sampling import (
+    component_ledger, merge_component_ledger,
 )
 from w_userflow_featurestore_spark.operators.sessionize import (
     DEFAULT_GAP_MS, sessionize,
@@ -91,9 +99,6 @@ def quality_gate(df: DataFrame, rules: list[dict]) -> None:
     aggregation pass; the error carries every failing rule with its
     violation count so the on-call sees the whole blast radius at once,
     not just the first failed assert."""
-    from w_userflow_featurestore_spark.operators.quality import (
-        quality_report,
-    )
     bad = [(r["rule"], r["n_violations"])
            for r in quality_report(df, rules).collect()
            if r["passed"] == 0]
@@ -341,9 +346,6 @@ def run_split_ledger_update(spark: SparkSession, ledger_dir: str,
     bucket the ledger by hash(doc_id) and rewrite only buckets holding
     changed rows (a ``LogTable.merge`` on doc_id).
     """
-    from w_userflow_featurestore_spark.operators.sampling import (
-        component_ledger, merge_component_ledger,
-    )
 
     def build(prev):
         if prev is None:
@@ -379,10 +381,7 @@ def score_batch_novelty(spark: SparkSession, ledger_dir: str,
     occurrences itself, so a ledger that already contains the batch
     would double-count them (the score-then-ingest order is the
     pipeline contract, demonstrated in the runner test)."""
-    from w_userflow_featurestore_spark.operators.dedup import (
-        incremental_novelty,
-    )
-    return incremental_novelty(
+    return dedup.incremental_novelty(
         batch_docs, read_novelty_ledger(spark, ledger_dir),
         n, text_col, id_col)
 
@@ -406,13 +405,11 @@ def run_novelty_ledger_update(spark: SparkSession, ledger_dir: str,
     Each commit rewrites the full (sh, n_docs) ledger, the same
     always-consistent-snapshot trade the component ledger makes.
     """
-    from w_userflow_featurestore_spark.operators.dedup import (
-        merge_shingle_ledger, shingle_ledger,
-    )
-    batch = shingle_ledger(batch_docs, n, text_col, id_col)
+    batch = dedup.shingle_ledger(batch_docs, n, text_col, id_col)
 
     def build(prev):
-        return batch if prev is None else merge_shingle_ledger(prev, batch)
+        return (batch if prev is None
+                else dedup.merge_shingle_ledger(prev, batch))
 
     return NoveltyLedgerResult(*_commit_ledger(spark, ledger_dir, build))
 
@@ -455,7 +452,6 @@ def run_daily_features(spark: SparkSession, silver_path: str, events: DataFrame,
         # to the events parquet scan instead of hiding behind a cast
         events = events.where(
             F.col("ts") < F.date_add(d, 1).cast("timestamp"))
-    import datetime as _dt
     completeness_gate(
         sessions, "datetime", min_rows_per_day,
         partitions=([_dt.date.fromisoformat(for_date)]

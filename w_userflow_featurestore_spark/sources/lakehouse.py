@@ -59,6 +59,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from w_userflow_featurestore_spark.functions import sql_ident
+
 __all__ = ["LogTable", "BrokenLineageError", "ConcurrentCommitError",
            "Snapshot"]
 
@@ -918,9 +920,9 @@ class LogTable:
             anchor = self.spark.read.parquet(paths[0]).schema
             present = {f.name for f in anchor.fields}
             ddl = ", ".join(
-                [f"`{f.name}` {f.dataType.simpleString()}"
+                [f"{sql_ident(f.name)} {f.dataType.simpleString()}"
                  for f in anchor.fields]
-                + [f"`{c}` {t}" for c, t in ptypes.items()
+                + [f"{sql_ident(c)} {t}" for c, t in ptypes.items()
                    if c not in present])
             reader = reader.schema(ddl)
         return reader.parquet(*paths)
